@@ -4,9 +4,14 @@
 ROUND ?= 0
 SF ?= sf0.01
 
-.PHONY: close-round test
+.PHONY: close-round test bench-test
 close-round:
 	python tools/close_round.py $(ROUND) --sf $(SF)
 
+# the tier-1 command of ROADMAP.md, verbatim
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# the benchmark's own tests (perfbench/README.md)
+bench-test:
+	python3 -m pytest perfbench/test_perfbench.py -q

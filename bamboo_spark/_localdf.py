@@ -1,4 +1,4 @@
-"""Arrow-native construction for METADATA-sized local DataFrames.
+"""Arrow-native construction for DataFrames of rows the driver holds.
 
 ``spark.createDataFrame(list, schema)`` parallelizes the rows into
 ``defaultParallelism`` pickled RDD slices — every materialization (or
@@ -6,16 +6,20 @@ broadcast build) of such a frame is a 32-task job on a 32-core local
 master, ~0.4 s of pure scheduling/pickling overhead for a frame that
 holds six rows of commit metadata (measured: 0.41 s per noop
 materialization, 0.6-0.7 s per broadcast-join build). Routing the same
-rows through one ``pyarrow.Table`` batch keeps the frame local-ish
-(partitions = O(rows), one Arrow batch, no per-row pickling): 0.09 s to
+rows through one ``pyarrow.Table`` batch keeps the frame local
+(a ``LocalTableScan``, one Arrow batch, no per-row pickling): 0.09 s to
 materialize, 0.22 s to broadcast — same schema, same values.
 
-``local_df`` is for frames that are metadata-sized BY CONTRACT (file
-lists, model grids, marker rows, fixpoint result vectors) — bounded
-state the driver already holds. Data-sized frames must never come
-through here (they belong in parquet/scans). Any conversion the Arrow
-path cannot express falls back to the classic builder, so behavior is
-value-identical by construction.
+``local_df`` is for rows the driver already holds: metadata (file
+lists, model grids, marker rows, fixpoint result vectors) and
+``from_object``/``from_json`` documents, which are parsed on the driver
+anyway. Data that lives in files must never come through here (it
+belongs in scans and the ``sources`` decoders). Any conversion the
+Arrow path cannot express falls back to the classic builder, so
+behavior is value-identical by construction — except for naive
+``datetime`` values, which Arrow reads as UTC where the classic builder
+reads local time: callers pin them to aware UTC first (``from_object``
+does).
 """
 
 from __future__ import annotations

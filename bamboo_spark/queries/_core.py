@@ -72,21 +72,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _load_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        # events.ts is TIMESTAMP(NANOS) parquet; Spark can only read it
-        # as a nano-count long — convert to a µs timestamp (floor), the
-        # same truncation DuckDB's epoch_us applies.
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:  # noqa: BLE001 — conf may be fixed; read will tell
-            pass
+        # events.ts is TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet
         df = spark.read.parquet("%s/%s.parquet" % (sf_dir, name))
         from pyspark.sql import types as T
 
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
+        if isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
             # parquet timestamp[us] with isAdjustedToUTC=false reads as
             # TIMESTAMP_NTZ under Spark 4's NTZ inference; DuckDB treats
             # the same naive value as epoch-UTC (epoch_us). Diff against

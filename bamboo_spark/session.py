@@ -59,9 +59,6 @@ def get_spark(
         # noise band). Codegen width is scale-independent.
         .config("spark.sql.codegen.maxFields", "256")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        # testdata events.ts is TIMESTAMP(NANOS) parquet, which Spark
-        # rejects by default; read as long and convert at load time
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "true" if ui else "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("BAMBOO_DRIVER_MEM", "8g"))

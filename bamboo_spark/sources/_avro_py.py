@@ -31,7 +31,7 @@ import io
 import json
 import struct
 import zlib
-from typing import Any, Dict, List, Tuple
+from typing import Any, Dict, Iterator, List, Tuple
 
 from pyspark.sql import types as T
 
@@ -692,52 +692,10 @@ def merge_avro_schemas(a: Any, b: Any, path: str = "root") -> Any:
     )
 
 
-def scan_header(data: bytes) -> Tuple[Any, str, bytes, int]:
-    """Parse container magic + metadata map → (schema JSON, codec, sync
-    marker, first-block offset). Block payloads are not touched."""
-    r = _Reader(data)
-    if r.read(4) != MAGIC:
-        raise AvroDecodeError("Not an Avro container file (bad magic)")
-    meta: Dict[str, bytes] = {}
-    while True:
-        count = r.read_long()
-        if count == 0:
-            break
-        if count < 0:
-            r.read_long()
-            count = -count
-        for _ in range(count):
-            key = r.read_utf8()
-            meta[key] = r.read_bytes()
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
-    if codec not in ("null", "deflate", "snappy"):
-        raise AvroDecodeError("Unsupported Avro codec: %s" % codec)
-    sync = r.read(16)
-    return schema, codec, sync, r.pos
-
-
-def scan_blocks(data: bytes, pos: int, sync: bytes) -> List[Tuple[int, int, int]]:
-    """Walk block headers collecting (payload offset, payload size,
-    record count) — the metadata pass. Payload bytes are skipped, not
-    read; each block is then independently decodable on an executor."""
-    r = _Reader(data)
-    r.pos = pos
-    blocks: List[Tuple[int, int, int]] = []
-    while not r.at_end():
-        n = r.read_long()
-        size = r.read_long()
-        blocks.append((r.pos, size, n))
-        r.skip(size)
-        if r.read(16) != sync:
-            raise AvroDecodeError("Sync marker mismatch")
-    return blocks
-
-
 def scan_header_stream(reader) -> Tuple[Any, str, bytes, int]:
-    """Streaming twin of ``scan_header`` over a ChunkedReader: reads
-    magic + metadata map + sync marker in bounded chunks. Returns
-    (schema JSON, codec, sync, first-block offset)."""
+    """Parse container magic + metadata map + sync marker over a
+    ChunkedReader, in bounded chunks; block payloads are not touched.
+    Returns (schema JSON, codec, sync, first-block offset)."""
     if reader.read(4) != MAGIC:
         raise AvroDecodeError("Not an Avro container file (bad magic)")
     meta: Dict[str, bytes] = {}
@@ -762,21 +720,39 @@ def scan_header_stream(reader) -> Tuple[Any, str, bytes, int]:
 
 
 def scan_blocks_stream(reader, sync: bytes) -> List[Tuple[int, int, int]]:
-    """Streaming twin of ``scan_blocks``: hop block headers, seeking past
+    """Walk block headers collecting (payload offset, payload size,
+    record count) — the metadata pass. Hops block headers, seeking past
     payloads (only the count/size varints and the 16-byte sync marker
     are ever read). Driver memory is O(n_blocks) header tuples plus one
     read buffer — never O(file)."""
     blocks: List[Tuple[int, int, int]] = []
     while not reader.eof():
-        n = reader.read_zigzag()
-        size = reader.read_zigzag()
-        if size < 0:
-            raise AvroDecodeError("Negative Avro block size")
+        n, size = _block_header(reader)
         blocks.append((reader.tell(), size, n))
         reader.skip(size)
         if reader.read(16) != sync:
             raise AvroDecodeError("Sync marker mismatch")
     return blocks
+
+
+def read_blocks(reader, sync: bytes, end: int) -> Iterator[Tuple[int, bytes]]:
+    """Executor-side walk of one split: yield ``(record count, payload)``
+    for every block whose header starts in ``[reader.tell(), end)``,
+    checking each block's sync marker. Memory is one block at a time."""
+    while reader.tell() < end:
+        n, size = _block_header(reader)
+        payload = reader.read(size)
+        if reader.read(16) != sync:
+            raise AvroDecodeError("Sync marker mismatch")
+        yield n, payload
+
+
+def _block_header(reader) -> Tuple[int, int]:
+    n = reader.read_zigzag()
+    size = reader.read_zigzag()
+    if size < 0:
+        raise AvroDecodeError("Negative Avro block size")
+    return n, size
 
 
 def decompress_block(payload: bytes, codec: str) -> bytes:
@@ -814,17 +790,6 @@ def decode_block(
     return [
         _decode_value(block, schema, names, fltr, implicit_root) for _ in range(n)
     ]
-
-
-def decode_container(data: bytes, fltr: Any = None, implicit_root: bool = True) -> Tuple[List[Any], Any]:
-    """Decode a whole container file → (records, parsed schema JSON)."""
-    schema, codec, sync, pos = scan_header(data)
-    records: List[Any] = []
-    for off, size, n in scan_blocks(data, pos, sync):
-        records.extend(
-            decode_block(data[off : off + size], n, codec, schema, fltr, implicit_root)
-        )
-    return records, schema
 
 
 # -- schema mapping ---------------------------------------------------------

@@ -21,7 +21,7 @@ pbd.hpp:195-199.
 
 Execution model: the driver parses only the descriptor header and scans
 record *boundaries* (varint length prefixes — no field decode); the wire
-decode itself runs on executors inside ``mapInPandas`` (see pbd.py).
+decode itself runs on executors inside ``mapInArrow`` (see pbd.py).
 Clusion pushdown happens at decode time: the descriptor tree is pruned
 *before* the wire walk, so excluded fields take the unknown-field fast
 path — their bytes are skipped positionally, never sliced, never parsed
@@ -567,7 +567,7 @@ def parse_header(data: bytes) -> Tuple[MessageDesc, int]:
 
 
 def parse_header_stream(reader) -> Tuple[MessageDesc, int]:
-    """Streaming twin of ``parse_header`` over a ChunkedReader: reads
+    """``parse_header`` over a ChunkedReader: reads
     magic + descriptors + root name in bounded chunks — the descriptor
     bytes themselves are materialized (they are KB-scale), record
     payloads never are. Returns (root desc, body offset)."""
@@ -661,42 +661,18 @@ def check_wire_compat(
             check_wire_compat(rf.message, wf.message, here)
 
 
-def scan_record_boundaries(data: bytes, pos: int) -> List[int]:
-    """Walk the length-prefixed record stream collecting byte boundaries
-    (including the final end offset). Metadata pass only — reads the
-    varint prefixes and jumps; no record bytes are sliced or decoded.
-    This is what lets the decode itself run on executors over byte
-    ranges: [b[i], b[i+1]) spans are independently decodable."""
-    bounds = [pos]
-    n = len(data)
-    append = bounds.append
-    while pos < n:
-        size = 0
-        shift = 0
-        while True:
-            b = data[pos]
-            pos += 1
-            size |= (b & 0x7F) << shift
-            if not (b & 0x80):
-                break
-            shift += 7
-            if shift > 70:
-                raise PbdDecodeError("Malformed varint")
-        pos += size
-        if pos > n:
-            raise PbdDecodeError("Truncated PBD record")
-        append(pos)
-    return bounds
-
-
 def decode_range(data: bytes, start: int, end: int, desc: MessageDesc) -> List[Dict[str, Any]]:
     """Decode every length-prefixed record in data[start:end) — the
-    executor-side kernel (each mapInPandas task gets one byte range)."""
+    executor-side kernel (each mapInArrow task gets one byte range)."""
     out = []
     pos = start
     append = out.append
     while pos < end:
         size, pos = _read_varint(data, pos)
+        if pos + size > end:
+            # read_pbd decodes whole files with no driver-side scan: a
+            # truncated last record must not decode as a shorter one
+            raise PbdDecodeError("Truncated PBD record")
         append(decode_message(data[pos : pos + size], desc))
         pos += size
     return out

@@ -8,6 +8,8 @@ the decode itself is executor-side. ``ChunkedReader`` holds at most one
 the same bounded-buffer discipline as the reference's 64 KiB buffered
 input stream (reference cpp/src/bind.cpp:131-168), sized larger here
 because a metadata pass over a remote FS wants fewer, bigger reads.
+``resolve_source`` / ``open_source`` put a path, bytes or stream source
+behind one file object, so the same reader pass serves all three.
 """
 
 from __future__ import annotations
@@ -137,6 +139,40 @@ class ChunkedReader:
         self.fh.seek(target)
         self.abs = target
         self.fill_hint = self.SEEK_FILL
+
+
+# bytes/stream sources at or under this are broadcast (works on any
+# cluster); larger ones are spilled to $BAMBOO_SPARK_SPILL_DIR (must be
+# cluster-visible on a real deployment) so the driver never holds a
+# whole huge container in memory.
+BROADCAST_MAX = 64 << 20
+
+
+def resolve_source(source, master: str):
+    """A path, bytes or stream source → ``(path, data)``, one of them
+    None. A path stays a path (each task re-reads its own byte range,
+    DFS-friendly); bytes or a stream of at most ``BROADCAST_MAX`` stay
+    in memory to be broadcast; a bigger one spills to a temp file (see
+    :func:`drain_or_spill`)."""
+    import os
+
+    if isinstance(source, str):
+        return os.path.abspath(source), None
+    if not hasattr(source, "read"):
+        source = bytes(source)
+        if len(source) <= BROADCAST_MAX:
+            return None, source
+        source = io.BytesIO(source)
+    spill_dir = os.environ.get("BAMBOO_SPARK_SPILL_DIR", "")
+    data, path = drain_or_spill(source, BROADCAST_MAX, spill_dir, master)
+    return path, data
+
+
+def open_source(path, data) -> io.IOBase:
+    """A binary file object over the file at ``path``, else over the
+    in-memory ``data`` — so one reader code path serves path sources and
+    bytes/stream sources alike."""
+    return open(path, "rb") if path is not None else io.BytesIO(data)
 
 
 def spill_to_temp(

@@ -8,9 +8,10 @@ Two paths:
   read-time clusion projection.
 * **Pure-Python fallback** (this module's ``from_avro``): a minimal Avro
   container decoder (null/deflate codecs) with the same execution shape
-  as the connector — the driver scans only block *headers*, and the
-  value decode runs on executors inside ``mapInArrow`` over block
-  ranges (Avro blocks are the spec's independent decode unit).
+  as the connector — the driver scans only block *headers* and plans
+  record-balanced block ranges, and the value decode runs on executors
+  inside one range-driven ``mapInArrow`` job (sources/_splits.py); Avro
+  blocks are the spec's independent decode unit.
 
 Read-time ``include``/``exclude`` follow the reference's pushdown
 semantics (avro_direct.cpp:107-166): pruned at decode time — excluded
@@ -24,7 +25,7 @@ from __future__ import annotations
 
 import io
 import os
-from typing import Any, Callable, Iterator, List, Optional, Tuple, Union
+from typing import Any, Iterator, Optional, Union
 
 from pyspark.sql import SparkSession, types as T
 
@@ -35,22 +36,14 @@ from bamboo_spark.sources._avro_py import (
     AvroDecodeError,
     avro_to_spark,
     decode_block,
-    scan_blocks,
+    decode_block_resolved,
+    read_blocks,
     scan_blocks_stream,
-    scan_header,
     scan_header_stream,
 )
-from bamboo_spark.sources._stream import ChunkedReader, drain_or_spill
+from bamboo_spark.sources._splits import decode_splits, plan_splits
+from bamboo_spark.sources._stream import ChunkedReader, open_source, resolve_source
 from bamboo_spark.sources.obj import DEFAULT_COLUMN
-
-# Records per decode task, upper bound (see pbd.py for rationale).
-_TARGET_RECORDS_PER_SPLIT = 2048
-
-# bytes/stream sources at or under this are broadcast; larger ones are
-# spilled to $BAMBOO_SPARK_SPILL_DIR (see pbd.py for the rationale and
-# the cluster-visibility caveat).
-_BROADCAST_MAX = 64 << 20
-
 
 def read_avro(
     path: str,
@@ -67,59 +60,28 @@ def read_avro(
     return Dataset(apply_column_filter(df, include, exclude))
 
 
-def _make_decoder(
-    avro_schema: Any,
+def _block_records(
+    reader: ChunkedReader,
+    end: int,
+    sync: bytes,
     codec: str,
-    out_schema: T.StructType,
-    record_root: bool,
+    schema: Any,
+    writer_schema: Any,
     fltr: Optional[ColumnFilter],
     implicit_root: bool,
-    path: Optional[str],
-    bc: Any,
-    writer_schema: Any = None,
-) -> Callable[[Iterator[Any]], Iterator[Any]]:
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(out_schema)
-    names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[Any]) -> Iterator[Any]:
-        import pyarrow as pa
-
-        from bamboo_spark.sources._avro_py import decode_block_resolved
-
-        for batch in batches:
-            offs = batch.column(0).to_pylist()
-            sizes = batch.column(1).to_pylist()
-            counts = batch.column(2).to_pylist()
-            for off, size, n in zip(offs, sizes, counts):
-                if path is not None:
-                    with open(path, "rb") as fh:
-                        fh.seek(off)
-                        payload = fh.read(size)
-                else:
-                    payload = bc.value[off : off + size]
-                if writer_schema is not None:
-                    records = decode_block_resolved(
-                        payload, n, codec, writer_schema, avro_schema,
-                        fltr, implicit_root,
-                    )
-                else:
-                    records = decode_block(
-                        payload, n, codec, avro_schema, fltr, implicit_root
-                    )
-                if record_root:
-                    arrays = [
-                        pa.array(
-                            [r[nm] for r in records], type=arrow_schema.field(i).type
-                        )
-                        for i, nm in enumerate(names)
-                    ]
-                else:
-                    arrays = [pa.array(records, type=arrow_schema.field(0).type)]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-    return fn
+) -> Iterator[list]:
+    """Decode the blocks whose headers lie in ``[reader.tell(), end)``,
+    one record list per block. With ``writer_schema`` the blocks were
+    written under it and resolve against the reader ``schema``."""
+    for n, payload in read_blocks(reader, sync, end):
+        if not n:
+            continue
+        if writer_schema is None:
+            yield decode_block(payload, n, codec, schema, fltr, implicit_root)
+        else:
+            yield decode_block_resolved(
+                payload, n, codec, writer_schema, schema, fltr, implicit_root
+            )
 
 
 def from_avro(
@@ -147,31 +109,14 @@ def from_avro(
     has_filter = include is not None or exclude is not None
     implicit_root = fltr.include.explicit or fltr.include.is_nothing()
 
-    spill_dir = os.environ.get("BAMBOO_SPARK_SPILL_DIR", "")
-    master = spark.sparkContext.master or "local"
-    path: Optional[str] = None
-    data: Optional[bytes] = None
-    if isinstance(source, str):
-        path = os.path.abspath(source)
-    elif hasattr(source, "read"):
-        data, path = drain_or_spill(source, _BROADCAST_MAX, spill_dir, master)
-    else:
-        data = bytes(source)
-        if len(data) > _BROADCAST_MAX:
-            data, path = drain_or_spill(
-                io.BytesIO(data), _BROADCAST_MAX, spill_dir, master
-            )
+    path, data = resolve_source(source, spark.sparkContext.master or "local")
 
-    if path is not None:
-        # bounded-memory metadata pass: header + block-header hops in
-        # O(buffer) chunks, payloads seek-skipped (see pbd.py)
-        with open(path, "rb") as fh:
-            reader = ChunkedReader(fh, error_cls=AvroDecodeError)
-            avro_schema, codec, sync, pos = scan_header_stream(reader)
-            all_blocks = scan_blocks_stream(reader, sync)
-    else:
-        avro_schema, codec, sync, pos = scan_header(data)
-        all_blocks = scan_blocks(data, pos, sync)
+    # bounded-memory metadata pass: header + block-header hops in
+    # O(buffer) chunks, payloads seek-skipped (see pbd.py)
+    with open_source(path, data) as fh:
+        reader = ChunkedReader(fh, error_cls=AvroDecodeError)
+        avro_schema, codec, sync, pos = scan_header_stream(reader)
+        blocks = scan_blocks_stream(reader, sync)
     writer_schema = None
     if reader_schema is not None:
         import json as _json
@@ -191,42 +136,29 @@ def from_avro(
     else:
         out_schema = T.StructType([T.StructField(DEFAULT_COLUMN, dtype, True)])
 
-    blocks = [b for b in all_blocks if b[2] > 0]
-    total = sum(n for _, _, n in blocks)
-    if total == 0:
+    # a block unit spans its header through its sync marker, so the
+    # planned ranges tile the file from the first block to EOF
+    units = []
+    for off, size, n in blocks:
+        units.append((pos, off + size + 16, n))
+        pos = off + size + 16
+    splits = plan_splits(units, spark.sparkContext.defaultParallelism)
+    if not splits:
         return Dataset(spark.createDataFrame([], out_schema))
 
-    n_splits = min(
-        max(spark.sparkContext.defaultParallelism, 1),
-        max(1, -(-total // _TARGET_RECORDS_PER_SPLIT)),
-        len(blocks),
-    )
     bc = None if path is not None else spark.sparkContext.broadcast(data)
-    block_df = spark.createDataFrame(
-        blocks,
-        T.StructType(
-            [
-                T.StructField("off", T.LongType()),
-                T.StructField("size", T.LongType()),
-                T.StructField("n", T.LongType()),
-            ]
-        ),
-    ).repartition(n_splits)
-    decoded = block_df.mapInArrow(
-        _make_decoder(
-            avro_schema,
-            codec,
-            out_schema,
-            record_root,
-            fltr if (record_root and has_filter) else None,
-            implicit_root,
-            path,
-            bc,
-            writer_schema,
-        ),
-        out_schema,
-    )
-    ds = Dataset(decoded)
+    use_fltr = fltr if (record_root and has_filter) else None
+
+    def decode(split):
+        start, end = split
+        with open_source(path, None if bc is None else bc.value) as fh:
+            reader = ChunkedReader(fh, start, error_cls=AvroDecodeError)
+            yield from _block_records(
+                reader, end, sync, codec, avro_schema, writer_schema,
+                use_fltr, implicit_root,
+            )
+
+    ds = Dataset(decode_splits(spark, splits, decode, out_schema, record_root))
     if has_filter and not record_root:
         ds = ds.select_columns(include, exclude)
     return ds
@@ -235,6 +167,7 @@ def from_avro(
 # above this many files the driver-side header sweep for schema merging
 # moves into a Spark job (headers are metadata-sized; payloads untouched)
 _MERGE_DRIVER_MAX_FILES = 64
+_SCHEMA_JSON = T.StructType([T.StructField("schema_json", T.StringType())])
 
 
 def _scan_file_header(path: str):
@@ -303,28 +236,17 @@ def read_avro_py(
                 s = _scan_file_header(p)[0]
                 uniq.setdefault(_json.dumps(s, sort_keys=True), s)
         else:
-            schema_df = spark.createDataFrame(
-                [(f,) for f in files],
-                T.StructType([T.StructField("path", T.StringType())]),
-            ).repartition(min(len(files), 256))
-
-            def _headers(batches):
-                import pyarrow as pa
-
-                for batch in batches:
-                    out = []
-                    for p in batch.column(0).to_pylist():
-                        s = _scan_file_header(p)[0]
-                        out.append(_json.dumps(s, sort_keys=True))
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(out)], names=["schema_json"]
-                    )
+            def _header(p):
+                yield [_json.dumps(_scan_file_header(p)[0], sort_keys=True)]
 
             # distinct() BEFORE collect: 100k files usually hold a
             # handful of schema versions — only those reach the driver
             keys = set(
                 r.schema_json
-                for r in schema_df.mapInArrow(_headers, "schema_json string")
+                for r in decode_splits(
+                    spark, files, _header, _SCHEMA_JSON, record_root=False,
+                    slices=256,
+                )
                 .distinct()
                 .collect()
             )
@@ -338,69 +260,22 @@ def read_avro_py(
         out_schema = T.StructType([T.StructField(DEFAULT_COLUMN, dtype, True)])
     schema_key = _json.dumps(avro_schema, sort_keys=True)
 
-    from pyspark.sql.pandas.types import to_arrow_schema
+    use_fltr = fltr if record_root and has_filter else None
 
-    arrow_schema_ref = to_arrow_schema(out_schema)
-    names = [f.name for f in out_schema.fields]
-    use_filter = record_root and has_filter
+    def decode(p):
+        with open(p, "rb") as fh:
+            reader = ChunkedReader(fh, error_cls=AvroDecodeError)
+            f_schema, f_codec, f_sync, _ = scan_header_stream(reader)
+            # an evolved file resolves its writer layout against the
+            # merged reader schema (promotions, default fill,
+            # writer-only wire-skip)
+            same = _json.dumps(f_schema, sort_keys=True) == schema_key
+            yield from _block_records(
+                reader, reader.size, f_sync, f_codec, avro_schema,
+                None if same else f_schema, use_fltr, implicit_root,
+            )
 
-    reader_schema = avro_schema
-
-    def fn(batches):
-        import pyarrow as pa
-
-        from bamboo_spark.sources._avro_py import decode_block_resolved
-
-        for batch in batches:
-            for p in batch.column(0).to_pylist():
-                with open(p, "rb") as fh:
-                    data = fh.read()
-                f_schema, f_codec, f_sync, f_pos = scan_header(data)
-                same = _json.dumps(f_schema, sort_keys=True) == schema_key
-                records = []
-                for off, size, n in scan_blocks(data, f_pos, f_sync):
-                    if same:
-                        records.extend(
-                            decode_block(
-                                data[off : off + size],
-                                n,
-                                f_codec,
-                                f_schema,
-                                fltr if use_filter else None,
-                                implicit_root,
-                            )
-                        )
-                    else:
-                        # evolved file: resolve writer layout against the
-                        # merged reader schema (promotions, default fill,
-                        # writer-only wire-skip)
-                        records.extend(
-                            decode_block_resolved(
-                                data[off : off + size],
-                                n,
-                                f_codec,
-                                f_schema,
-                                reader_schema,
-                                fltr if use_filter else None,
-                                implicit_root,
-                            )
-                        )
-                if record_root:
-                    arrays = [
-                        pa.array(
-                            [r[nm] for r in records],
-                            type=arrow_schema_ref.field(i).type,
-                        )
-                        for i, nm in enumerate(names)
-                    ]
-                else:
-                    arrays = [pa.array(records, type=arrow_schema_ref.field(0).type)]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema_ref)
-
-    path_df = spark.createDataFrame(
-        [(f,) for f in files], T.StructType([T.StructField("path", T.StringType())])
-    ).repartition(len(files))
-    ds = Dataset(path_df.mapInArrow(fn, out_schema))
+    ds = Dataset(decode_splits(spark, files, decode, out_schema, record_root))
     if has_filter and not record_root:
         ds = ds.select_columns(include, exclude)
     return ds

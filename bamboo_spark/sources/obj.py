@@ -11,7 +11,9 @@ Behavioral parity with the reference's pure-Python path
 * other objects with attributes → record over ``vars(obj)``.
 * ``int/float/bool/str/bytes/Enum`` → primitive; Enum ingests as its
   symbol name (string), matching the dictionary-to-string semantics of
-  the reference's ENUM type at the pandas boundary.
+  the reference's ENUM type at the pandas boundary. ``datetime``/``date``
+  → timestamp/date (a naive datetime is local time, as Spark reads it);
+  ``Decimal`` → decimal(38, 18), the type Spark itself infers.
 * records union their field sets across rows; missing fields → null.
 * kind mismatches across rows raise ``Inconsistent schema``; primitive
   mismatches raise ``Mismatched primitive types`` (int+float widens to
@@ -22,6 +24,8 @@ Behavioral parity with the reference's pure-Python path
 from __future__ import annotations
 
 import datetime as _dt
+import decimal as _decimal
+import time as _time
 from enum import Enum
 from typing import Any, Optional
 
@@ -32,6 +36,7 @@ try:
 except ImportError:  # pragma: no cover
     np = None
 
+from bamboo_spark._localdf import local_df
 from bamboo_spark.dataset import Dataset
 
 _PRIMITIVE_SPARK = {
@@ -43,6 +48,8 @@ _PRIMITIVE_SPARK = {
     bytearray: T.BinaryType(),
     _dt.datetime: T.TimestampType(),
     _dt.date: T.DateType(),
+    # Spark's own inference type for Python Decimals
+    _decimal.Decimal: T.DecimalType(38, 18),
 }
 
 
@@ -146,23 +153,31 @@ def merge_types(a: T.DataType, b: T.DataType) -> T.DataType:
     )
 
 
-def _normalize(obj: Any, dtype: T.DataType, dict_as_record: bool) -> Any:
-    """Convert to the tuple/list shape createDataFrame expects for dtype."""
+class _Unpinnable(Exception):
+    """A naive datetime whose UTC instant lies outside years 1..9999."""
+
+
+def _normalize(
+    obj: Any, dtype: T.DataType, dict_as_record: bool, pin: bool = True
+) -> Any:
+    """Convert to the tuple/list shape createDataFrame expects for dtype.
+    With ``pin``, naive datetimes become aware UTC (see below)."""
     if obj is None:
         return None
     if isinstance(dtype, T.ArrayType):
         return [
-            _normalize(item, dtype.elementType, dict_as_record)
+            _normalize(item, dtype.elementType, dict_as_record, pin)
             for item in _as_list(obj, dict_as_record)
         ]
     if isinstance(dtype, T.MapType):
         return {
-            k: _normalize(v, dtype.valueType, dict_as_record) for k, v in obj.items()
+            k: _normalize(v, dtype.valueType, dict_as_record, pin)
+            for k, v in obj.items()
         }
     if isinstance(dtype, T.StructType):
         fields = _fields(obj)
         return tuple(
-            _normalize(fields.get(f.name), f.dataType, dict_as_record)
+            _normalize(fields.get(f.name), f.dataType, dict_as_record, pin)
             if f.name in fields
             else None
             for f in dtype.fields
@@ -171,12 +186,21 @@ def _normalize(obj: Any, dtype: T.DataType, dict_as_record: bool) -> Any:
         return obj.name
     if np is not None and isinstance(obj, np.generic):
         obj = obj.item()
+    if pin and isinstance(dtype, T.TimestampType) and obj.tzinfo is None:
+        # a naive datetime is local wall time (the classic builder's
+        # time.mktime rule); pin the instant as UTC so the Arrow path,
+        # which would read a naive value as UTC, builds the same value
+        try:
+            secs = int(_time.mktime(obj.timetuple()))
+            return _dt.datetime.fromtimestamp(secs, _dt.timezone.utc).replace(
+                microsecond=obj.microsecond
+            )
+        except (OverflowError, OSError, ValueError):
+            raise _Unpinnable()
     if isinstance(dtype, T.DoubleType) and isinstance(obj, int) and not isinstance(obj, bool):
         return float(obj)
     if isinstance(dtype, T.DecimalType) and isinstance(obj, int):
-        import decimal
-
-        return decimal.Decimal(obj)
+        return _decimal.Decimal(obj)
     if isinstance(dtype, T.FloatType) and isinstance(obj, (int, float)):
         return float(obj)
     if isinstance(dtype, T.BinaryType) and isinstance(obj, bytearray):
@@ -196,6 +220,13 @@ def from_object(
     a single row; a root primitive becomes one row of a single
     ``value`` column (the reference leaves it unnamed — documented
     divergence, SURVEY.md §2 behavior 8).
+
+    The rows are already on the driver, so the frame is built from one
+    ``pyarrow.Table`` (``_localdf.local_df``): one local batch instead of
+    a pickled-row RDD. Values the Arrow path cannot express fall back to
+    the classic builder, as do naive datetimes whose UTC instant falls
+    outside years 1..9999 (they cannot be pinned to UTC, see
+    ``_normalize``).
     """
     if spark is None:
         from bamboo_spark.session import get_spark
@@ -204,25 +235,38 @@ def from_object(
 
     dtype = infer_type(obj, dict_as_record)
 
+    if isinstance(dtype, T.NullType):
+        return Dataset(spark.createDataFrame([], T.StructType([])))
+
     if isinstance(dtype, T.ArrayType):
         elem = dtype.elementType
         items = _as_list(obj, dict_as_record) if obj is not None else []
         if isinstance(elem, T.StructType):
             schema = elem
-            rows = [_normalize(item, elem, dict_as_record) for item in items]
+
+            def rows(pin):
+                return [_normalize(i, elem, dict_as_record, pin) for i in items]
+
         else:
             schema = T.StructType([T.StructField(DEFAULT_COLUMN, elem, True)])
-            rows = [(_normalize(item, elem, dict_as_record),) for item in items]
-        return Dataset(spark.createDataFrame(rows, schema))
 
-    if isinstance(dtype, T.StructType):
-        row = _normalize(obj, dtype, dict_as_record)
-        return Dataset(spark.createDataFrame([row], dtype))
+            def rows(pin):
+                return [(_normalize(i, elem, dict_as_record, pin),) for i in items]
 
-    if isinstance(dtype, T.NullType):
-        return Dataset(spark.createDataFrame([], T.StructType([])))
+    elif isinstance(dtype, T.StructType):
+        schema = dtype
 
-    schema = T.StructType([T.StructField(DEFAULT_COLUMN, dtype, True)])
-    return Dataset(
-        spark.createDataFrame([(_normalize(obj, dtype, dict_as_record),)], schema)
-    )
+        def rows(pin):
+            return [_normalize(obj, dtype, dict_as_record, pin)]
+
+    else:
+        schema = T.StructType([T.StructField(DEFAULT_COLUMN, dtype, True)])
+
+        def rows(pin):
+            return [(_normalize(obj, dtype, dict_as_record, pin),)]
+
+    try:
+        return Dataset(local_df(spark, rows(True), schema))
+    except _Unpinnable:
+        # the classic builder converts such a value without overflow
+        return Dataset(spark.createDataFrame(rows(False), schema))

@@ -20,110 +20,41 @@ Execution model (the 100 TB shape, reference parity at pbd_tests.py:42-58):
    (prune_message_desc): excluded fields hit the wire-skip fast path on
    executors, their bytes never parsed (reference pbd.cpp:50-83,
    pbd.hpp:176-207).
-3. Record byte-ranges are distributed and the wire decode runs inside
-   ``mapInPandas`` on executors — Arrow-batched, parallel across cores /
-   a cluster. A path source is re-read range-wise by each task (DFS-
-   friendly); a bytes/stream source is broadcast once.
+3. The boundary walk coalesces into at most ``defaultParallelism``
+   record-balanced byte ranges, and the wire decode runs on executors in
+   one ``spark.range(n, numPartitions=n).mapInArrow`` job — task ``i``
+   decodes range ``i`` (sources/_splits.py): Arrow-batched, parallel
+   across cores / a cluster, no shuffle, rows in file order. A path
+   source is re-read range-wise by each task (DFS-friendly); a
+   bytes/stream source is broadcast once.
 """
 
 from __future__ import annotations
 
 import io
 import os
-from typing import Any, Callable, Iterator, List, Optional, Tuple, Union
+from typing import Any, Optional, Union
 
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import SparkSession
 
 from bamboo_spark.clusions import ColumnFilter
 from bamboo_spark.dataset import Dataset
 from bamboo_spark.sources._pbd_py import (
-    MessageDesc,
     PbdDecodeError,
+    check_wire_compat,
     decode_range,
     parse_header,
     parse_header_stream,
     pbd_to_spark,
     prune_message_desc,
-    scan_record_boundaries,
     scan_record_splits,
 )
-from bamboo_spark.sources._stream import ChunkedReader, drain_or_spill
-
-# Records per decode task, upper bound — keeps tiny files on one task and
-# big files spread across the parallelism without over-splitting.
-_TARGET_RECORDS_PER_SPLIT = 2048
-
-# bytes/stream sources at or under this are broadcast (works on any
-# cluster); larger ones are spilled to $BAMBOO_SPARK_SPILL_DIR (must be
-# cluster-visible on a real deployment) so the driver never holds a
-# whole huge container in memory.
-_BROADCAST_MAX = 64 << 20
-
-
-def _make_decoder(
-    desc: MessageDesc,
-    schema: T.StructType,
-    path: Optional[str],
-    bc: Any,
-) -> Callable[[Iterator[Any]], Iterator[Any]]:
-    """mapInArrow kernel: decode a byte range, emit one Arrow RecordBatch
-    per split. Columnar pa.array construction from the decoded row dicts
-    is C-speed and skips pandas object inference entirely; pyarrow
-    converts int → decimal128 (uint64/fixed64 widening) and dict →
-    struct directly."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    names = [f.name for f in schema.fields]
-
-    def fn(batches: Iterator[Any]) -> Iterator[Any]:
-        import pyarrow as pa
-
-        for batch in batches:
-            starts = batch.column(0).to_pylist()
-            ends = batch.column(1).to_pylist()
-            for start, end in zip(starts, ends):
-                if path is not None:
-                    with open(path, "rb") as fh:
-                        fh.seek(start)
-                        buf = fh.read(end - start)
-                    records = decode_range(buf, 0, len(buf), desc)
-                else:
-                    records = decode_range(bc.value, start, end, desc)
-                arrays = [
-                    pa.array([r[nm] for r in records], type=arrow_schema.field(i).type)
-                    for i, nm in enumerate(names)
-                ]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-    return fn
-
-
-def _coalesce_splits(
-    raw: List[Tuple[int, int, int]], n_groups: int
-) -> List[Tuple[int, int]]:
-    """Merge adjacent (start, end, n) scan splits into n_groups balanced
-    byte ranges (raw splits carry ~equal record counts, so index-even
-    grouping is record-even)."""
-    m = len(raw)
-    out = []
-    for i in range(n_groups):
-        lo = i * m // n_groups
-        hi = (i + 1) * m // n_groups
-        if hi > lo:
-            out.append((raw[lo][0], raw[hi - 1][1]))
-    return out
-
-
-def _split_ranges(bounds: List[int], n_splits: int) -> List[Tuple[int, int]]:
-    n_records = len(bounds) - 1
-    splits = []
-    for i in range(n_splits):
-        lo = bounds[i * n_records // n_splits]
-        hi = bounds[(i + 1) * n_records // n_splits]
-        if hi > lo:
-            splits.append((lo, hi))
-    return splits
+from bamboo_spark.sources._splits import (
+    TARGET_RECORDS_PER_SPLIT,
+    decode_splits,
+    plan_splits,
+)
+from bamboo_spark.sources._stream import ChunkedReader, open_source, resolve_source
 
 
 def from_pbd(
@@ -140,64 +71,35 @@ def from_pbd(
     # conflict validation first (raises ClusionError before any Spark job)
     fltr = ColumnFilter.parse(include, exclude)
 
-    spill_dir = os.environ.get("BAMBOO_SPARK_SPILL_DIR", "")
-    master = spark.sparkContext.master or "local"
-    path: Optional[str] = None
-    data: Optional[bytes] = None
-    if isinstance(source, str):
-        path = os.path.abspath(source)
-    elif hasattr(source, "read"):
-        data, path = drain_or_spill(source, _BROADCAST_MAX, spill_dir, master)
-    else:
-        data = bytes(source)
-        if len(data) > _BROADCAST_MAX:
-            data, path = drain_or_spill(
-                io.BytesIO(data), _BROADCAST_MAX, spill_dir, master
-            )
+    path, data = resolve_source(source, spark.sparkContext.master or "local")
 
-    if path is not None:
-        # bounded-memory metadata pass: header + varint boundary walk in
-        # O(buffer) chunks, record payloads seek-skipped (reference
-        # analogue: the 64 KiB buffered stream, bind.cpp:131-168)
-        with open(path, "rb") as fh:
-            reader = ChunkedReader(fh, error_cls=PbdDecodeError)
-            root, _body = parse_header_stream(reader)
-            if include is not None or exclude is not None:
-                implicit_root = fltr.include.explicit or fltr.include.is_nothing()
-                root = prune_message_desc(root, fltr, implicit_root)
-            schema = pbd_to_spark(root)
-            raw_splits = scan_record_splits(reader, _TARGET_RECORDS_PER_SPLIT)
-        n_records = sum(s[2] for s in raw_splits)
-        if n_records == 0:
-            return Dataset(spark.createDataFrame([], schema))
-        n_splits = min(
-            max(spark.sparkContext.defaultParallelism, 1), len(raw_splits)
-        )
-        splits = _coalesce_splits(raw_splits, n_splits)
-    else:
-        root, body = parse_header(data)
+    # bounded-memory metadata pass: header + varint boundary walk in
+    # O(buffer) chunks, record payloads seek-skipped (reference
+    # analogue: the 64 KiB buffered stream, bind.cpp:131-168)
+    with open_source(path, data) as fh:
+        reader = ChunkedReader(fh, error_cls=PbdDecodeError)
+        root, _body = parse_header_stream(reader)
         if include is not None or exclude is not None:
             implicit_root = fltr.include.explicit or fltr.include.is_nothing()
             root = prune_message_desc(root, fltr, implicit_root)
         schema = pbd_to_spark(root)
-
-        bounds = scan_record_boundaries(data, body)
-        n_records = len(bounds) - 1
-        if n_records == 0:
-            return Dataset(spark.createDataFrame([], schema))
-
-        n_splits = min(
-            max(spark.sparkContext.defaultParallelism, 1),
-            max(1, -(-n_records // _TARGET_RECORDS_PER_SPLIT)),
-        )
-        splits = _split_ranges(bounds, n_splits)
+        raw_splits = scan_record_splits(reader, TARGET_RECORDS_PER_SPLIT)
+    splits = plan_splits(raw_splits, spark.sparkContext.defaultParallelism)
+    if not splits:
+        return Dataset(spark.createDataFrame([], schema))
 
     bc = None if path is not None else spark.sparkContext.broadcast(data)
-    split_df: DataFrame = spark.createDataFrame(
-        splits, T.StructType([T.StructField("start", T.LongType()), T.StructField("end", T.LongType())])
-    ).repartition(len(splits))
-    decoded = split_df.mapInArrow(_make_decoder(root, schema, path, bc), schema)
-    return Dataset(decoded)
+
+    def decode(split):
+        start, end = split
+        if bc is not None:
+            return [decode_range(bc.value, start, end, root)]
+        with open(path, "rb") as fh:
+            fh.seek(start)
+            buf = fh.read(end - start)
+        return [decode_range(buf, 0, len(buf), root)]
+
+    return Dataset(decode_splits(spark, splits, decode, schema))
 
 
 def read_pbd(
@@ -242,46 +144,22 @@ def read_pbd(
     if has_filter:
         root = prune_message_desc(root, fltr, implicit_root)
     schema = pbd_to_spark(root)
+    first = files[0]
 
-    from pyspark.sql.pandas.types import to_arrow_schema
+    def decode(p):
+        with open(p, "rb") as fh:
+            data = fh.read()
+        # schema evolution: decode with the READER descriptor. Protobuf
+        # resolution is by field number — writer-only fields wire-skip,
+        # reader-only fields default-fill, varint widenings
+        # (int32→int64) decode natively; the per-file descriptor is
+        # parsed only to reject wire-class changes up front
+        # (check_wire_compat docstring).
+        file_root, body = parse_header(data)
+        try:
+            check_wire_compat(root, file_root)
+        except PbdDecodeError as e:
+            raise PbdDecodeError("PBD file %s vs %s: %s" % (p, first, e))
+        return [decode_range(data, body, len(data), root)]
 
-    arrow_schema_ref = to_arrow_schema(schema)
-    names = [f.name for f in schema.fields]
-
-    def fn(batches: Iterator[Any]) -> Iterator[Any]:
-        import pyarrow as pa
-
-        from bamboo_spark.sources._pbd_py import (
-            PbdDecodeError,
-            check_wire_compat as _compat,
-            parse_header as _ph,
-        )
-
-        for batch in batches:
-            for p in batch.column(0).to_pylist():
-                with open(p, "rb") as fh:
-                    data = fh.read()
-                # schema evolution: decode with the READER descriptor.
-                # Protobuf resolution is by field number — writer-only
-                # fields wire-skip, reader-only fields default-fill,
-                # varint widenings (int32→int64) decode natively; the
-                # per-file descriptor is parsed only to reject wire-class
-                # changes up front (check_wire_compat docstring).
-                file_root, body = _ph(data)
-                try:
-                    _compat(root, file_root)
-                except PbdDecodeError as e:
-                    raise PbdDecodeError("PBD file %s vs %s: %s" % (p, files[0], e))
-                records = decode_range(data, body, len(data), root)
-                arrays = [
-                    pa.array(
-                        [r[nm] for r in records], type=arrow_schema_ref.field(i).type
-                    )
-                    for i, nm in enumerate(names)
-                ]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema_ref)
-
-    path_df = spark.createDataFrame(
-        [(f,) for f in files], T.StructType([T.StructField("path", T.StringType())])
-    ).repartition(len(files))
-    return Dataset(path_df.mapInArrow(fn, schema))
+    return Dataset(decode_splits(spark, files, decode, schema))

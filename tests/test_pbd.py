@@ -11,7 +11,7 @@ import pytest
 
 from bamboo_spark import from_pbd
 from bamboo_spark.clusions import ClusionError
-from tests.conftest import assert_frame
+from tests.conftest import assert_frame, assert_one_job_no_exchange, spy_split_tables
 
 GOLDEN = "/root/reference/python/bamboo_tests/data/example.pbd"
 
@@ -74,7 +74,7 @@ def _container(message_descs: list, root: str, records: list) -> bytes:
 
 def test_pbd_perf_gate_1m_records(spark, tmp_path):
     # Reference gate: 1M PBD records decode in < 5 s (pbd_tests.py:42-58,
-    # C++ decoder). Same budget here via executor-parallel mapInPandas
+    # C++ decoder). Same budget here via executor-parallel mapInArrow
     # decode — an order-of-magnitude gate (≥ 200k rec/s), not a ±20% one.
     desc = _message_desc(
         "Rec",
@@ -281,6 +281,42 @@ def test_read_pbd_multifile(spark, tmp_path):
     (tmp_path / "bad.pbd").write_bytes(_container([desc3], "t.Rec", []))
     with pytest.raises(Exception):
         read_pbd(str(tmp_path / "*.pbd"), spark=spark).flatten().to_pandas()
+
+
+def _rec_file(path, n):
+    desc = _message_desc("Rec", [_field_desc("a", 1, 3), _field_desc("s", 2, 9)])
+    recs = [_tag(1, 0) + _varint(i) + _ld(2, b"x%d" % (i % 9)) for i in range(n)]
+    data = _container([desc], "t.Rec", recs)
+    path.write_bytes(data)
+    return data
+
+
+def test_pbd_decode_is_one_job_without_exchange(spark, tmp_path):
+    from bamboo_spark import read_pbd
+
+    path = tmp_path / "recs.pbd"
+    data = _rec_file(path, 5000)
+    for ds in (
+        from_pbd(str(path), spark=spark),
+        from_pbd(data, exclude=["s"], spark=spark),
+        read_pbd([str(path), str(path)], spark=spark),
+    ):
+        assert_one_job_no_exchange(spark, ds.df)
+
+
+def test_pbd_keeps_file_order(spark, tmp_path, monkeypatch):
+    import bamboo_spark.sources.pbd as pbd_mod
+
+    seen = spy_split_tables(monkeypatch, pbd_mod)
+    n = 8 * 2048
+    path = tmp_path / "recs.pbd"
+    data = _rec_file(path, n)
+    for source in (str(path), data):
+        got = [r.a for r in from_pbd(source, spark=spark).df.select("a").collect()]
+        assert got == list(range(n))
+        # 8 x 2048 records: one split per core up to 8, as (start, end)
+        assert len(seen[-1]) == min(spark.sparkContext.defaultParallelism, 8)
+        assert all(len(split) == 2 for split in seen[-1])
 
 
 def test_pbd_split_singular_message_merges(spark):

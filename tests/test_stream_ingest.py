@@ -3,7 +3,7 @@
 The reference streams container files through a 64 KiB buffered input
 stream and never materializes them (reference cpp/src/bind.cpp:131-168);
 these tests pin the same discipline on our driver-side metadata passes
-(`ChunkedReader` + the *_stream scan twins) and pin the contract that
+(`ChunkedReader` + the *_stream scans) and pin the contract that
 corrupt bytes always surface as the typed decode error
 (PbdDecodeError / AvroDecodeError; reference truncation error
 pbd.hpp:195-199), never a bare IndexError/struct.error/UnicodeDecodeError
@@ -20,16 +20,16 @@ import pytest
 
 from bamboo_spark.sources._avro_py import (
     AvroDecodeError,
-    decode_container,
+    decode_block,
+    read_blocks,
     scan_blocks_stream,
     scan_header_stream,
 )
 from bamboo_spark.sources._pbd_py import (
     PbdDecodeError,
-    decode_message,
+    decode_range,
     parse_header,
     parse_header_stream,
-    scan_record_boundaries,
     scan_record_splits,
 )
 from bamboo_spark.sources._stream import ChunkedReader, drain_or_spill
@@ -245,14 +245,38 @@ def test_pbd_corrupt_bytes_raise_only_pbd_decode_error():
         data = bytearray(base)
         data[pos] = val
         data = bytes(data)
+        # PbdDecodeError is the only exception allowed to escape.
+        # from_pbd: the driver's split scan, then each split's decode
         try:
-            bounds = scan_record_boundaries(data, body)
-            for lo, hi in zip(bounds, bounds[1:]):
-                decode_message(data[lo:hi], root)
+            reader = ChunkedReader(io.BytesIO(data), error_cls=PbdDecodeError)
+            parse_header_stream(reader)
+            for start, end, _ in scan_record_splits(reader, 3):
+                decode_range(data, start, end, root)
         except PbdDecodeError:
-            pass  # the only exception allowed to escape
+            pass
+        # read_pbd: a task decodes its whole file with no driver scan
+        try:
+            decode_range(data, body, len(data), root)
+        except PbdDecodeError:
+            pass
 
     run()
+
+
+def test_pbd_truncated_file_never_decodes_a_short_record():
+    # read_pbd's task decodes a whole file body with no driver scan: a
+    # cut inside a record must raise, a cut on a record boundary is a
+    # valid shorter file
+    base = _pbd_hygiene_container()
+    root, body = parse_header(base)
+    reader = ChunkedReader(io.BytesIO(base), body, error_cls=PbdDecodeError)
+    ends = [end for _, end, _ in scan_record_splits(reader, 1)]
+    for cut in range(body + 1, len(base)):
+        if cut in ends:
+            assert len(decode_range(base[:cut], body, cut, root)) == ends.index(cut) + 1
+        else:
+            with pytest.raises(PbdDecodeError):
+                decode_range(base[:cut], body, cut, root)
 
 
 def test_avro_corrupt_bytes_raise_only_avro_decode_error():
@@ -274,9 +298,9 @@ def test_avro_corrupt_bytes_raise_only_avro_decode_error():
         block_size=3,
     )
     # body starts after the header (first sync marker ends it)
-    from bamboo_spark.sources._avro_py import scan_header
-
-    _, _, _, body = scan_header(base)
+    schema, codec, sync, body = scan_header_stream(
+        ChunkedReader(io.BytesIO(base), error_cls=AvroDecodeError)
+    )
 
     @settings(max_examples=200, deadline=None)
     @given(st.integers(0, len(base) - 1), st.integers(0, 255))
@@ -285,10 +309,22 @@ def test_avro_corrupt_bytes_raise_only_avro_decode_error():
             return
         data = bytearray(base)
         data[pos] = val
+        data = bytes(data)
+        # AvroDecodeError is the only exception allowed to escape.
+        # from_avro: the driver's block-header scan
         try:
-            decode_container(bytes(data))
+            reader = ChunkedReader(io.BytesIO(data), body, error_cls=AvroDecodeError)
+            scan_blocks_stream(reader, sync)
         except AvroDecodeError:
-            pass  # the only exception allowed to escape
+            pass
+        # a decode task's block walk; read_avro_py's task walks the
+        # whole body with no driver scan
+        try:
+            reader = ChunkedReader(io.BytesIO(data), body, error_cls=AvroDecodeError)
+            for n, payload in read_blocks(reader, sync, reader.size):
+                decode_block(payload, n, codec, schema)
+        except AvroDecodeError:
+            pass
 
     run()
 
