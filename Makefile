@@ -4,7 +4,7 @@
 ROUND ?= 0
 SF ?= sf0.01
 
-.PHONY: close-round test bench-test
+.PHONY: close-round test bench-test ab
 close-round:
 	python tools/close_round.py $(ROUND) --sf $(SF)
 
@@ -15,3 +15,12 @@ test:
 # the benchmark's own tests (perfbench/README.md)
 bench-test:
 	python3 -m pytest perfbench/test_perfbench.py -q
+
+# alternating perfbench pairs, git ref BASE against the working tree
+# (tools/ab_perfbench.py)
+#   make ab BASE=HEAD~1 WORKLOAD=nested_ingest SEEDS=501-510
+BASE ?= HEAD
+WORKLOAD ?= nested_ingest
+SEEDS ?= 501-510
+ab:
+	python3 tools/ab_perfbench.py --base $(BASE) --workload $(WORKLOAD) --seeds $(SEEDS)

@@ -16,10 +16,20 @@ The split table is O(parallelism) for a single file
 PySpark itself ships a pickled function past
 ``spark.broadcast.UDFCompressionThreshold`` (1 MB) as a broadcast, so a
 many-files table is not re-sent with every task, though each task still
-unpickles it. Measured on a 4-vCPU host (``local[4]``, ~30 ms per
-task), an explicit broadcast of the table ties at 1k and 10k entries,
-saves ~2.5 ms per task at 100k and costs ~6 ms per job; no benchmark
-workload reads that many files, so the table stays in the closure.
+unpickles it. An explicit broadcast of the table, measured on a 4-vCPU
+host (``local[4]``) while a task still cost ~30 ms wall with the zip
+re-read below inside it, tied at 1k and 10k entries, saved ~2.5 ms per
+task at 100k and cost ~6 ms per job; no benchmark workload reads that
+many files, so the table stays in the closure.
+
+Each task first drops the worker's cached zip finders. Before every
+task the PySpark worker calls ``importlib.invalidate_caches()``, which
+on CPython 3.10-3.12 makes each cached ``zipimporter`` re-read its
+archive's whole central directory; a worker holds 16 of them (pyspark
+and py4j are imported from zips), ~0.13 s per task on that host.
+Imported modules stay in ``sys.modules``, and a later import from a zip
+rebuilds its finder from ``zipimport``'s directory cache without
+reading the archive again.
 """
 
 from __future__ import annotations
@@ -65,6 +75,17 @@ def plan_splits(
     return out
 
 
+def _drop_zip_finders() -> None:
+    """Forget the worker's cached zip finders, so the next task's
+    ``importlib.invalidate_caches()`` has no archive to re-read."""
+    import sys
+    import zipimport
+
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+        del cache[path]
+
+
 def decode_splits(
     spark: SparkSession,
     splits: List[Any],
@@ -91,6 +112,7 @@ def decode_splits(
     def fn(batches):
         import pyarrow as pa
 
+        _drop_zip_finders()
         for batch in batches:
             for i in batch.column(0).to_pylist():
                 for records in decode(splits[i]):

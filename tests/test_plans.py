@@ -109,6 +109,30 @@ def test_ivf_pairs_no_cartesian_bounded_buckets(spark):
     assert sizes[1] == n  # single-probe: each vector exactly once
 
 
+def _final_plan(df) -> str:
+    df.collect()  # adaptive execution settles the plan as it runs
+    return simple_plan(df).split("== Initial Plan ==")[0]
+
+
+def _compiled(line: str) -> bool:
+    return line.lstrip(" +-").startswith("*(")
+
+
+def test_wide_stages_stay_in_codegen(spark):
+    # spark.sql.codegen.maxFields (session.py): past it a stage silently
+    # falls back to interpreted evaluation; the 129-field minhash
+    # signature aggregate is over Spark's default of 100
+    from bamboo_spark.operators.dedup import minhash_signatures
+    from bamboo_spark.queries._core import load
+
+    sig = minhash_signatures(load(spark, SF, "documents"))
+    aggs = [l for l in _final_plan(sig).splitlines() if "HashAggregate(" in l]
+    assert len(aggs) == 2 and all(map(_compiled, aggs)), aggs
+    wide = q.queries()["q_flatten_lineitem_wide"](spark, SF)
+    ops = [l for l in _final_plan(wide).splitlines() if "Generate " in l or "Project " in l]
+    assert ops and all(map(_compiled, ops)), ops
+
+
 def test_ann_pairs_planes_stay_in_codegen(spark):
     # hyperplane bucket ids are literal expressions — no UDF, no
     # Python round-trip for candidate generation; the only Python stage

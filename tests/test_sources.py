@@ -990,6 +990,91 @@ def test_plan_splits_balances_records():
     assert plan_splits([], 8) == []
 
 
+def _count_zip_finders(_split):
+    import os
+    import sys
+    import zipimport
+
+    cache = sys.path_importer_cache
+    yield [{"pid": os.getpid(), "zip_finders": sum(isinstance(f, zipimport.zipimporter) for f in cache.values())}]
+
+
+def test_decode_tasks_leave_no_zip_finders(spark):
+    # the Python worker imports pyspark from a zip; a cached zip finder
+    # makes every later task's importlib.invalidate_caches() re-read
+    # the archive's directory, so decode tasks keep none
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from bamboo_spark.sources._splits import decode_splits
+
+    schema = T.StructType([
+        T.StructField("pid", T.LongType()), T.StructField("zip_finders", T.LongType()),
+    ])
+    trimmed = set()
+    for _ in range(2):
+        rows = decode_splits(spark, list(range(8)), _count_zip_finders, schema).collect()
+        assert [r.zip_finders for r in rows] == [0] * 8
+        trimmed |= {r.pid for r in rows}
+
+    # and nothing puts them back between tasks: a later Python task in a
+    # trimmed worker, which does not drop them itself, finds none either
+    def count_only(batches):
+        import os
+        import sys
+        import zipimport
+
+        for _ in batches:
+            n = sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
+            yield pa.RecordBatch.from_pydict({"pid": [os.getpid()], "zip_finders": [n]})
+
+    later = spark.range(0, 4, 1, 4).mapInArrow(count_only, schema).collect()
+    seen = [r.zip_finders for r in later if r.pid in trimmed]
+    assert seen and seen == [0] * len(seen)
+
+
+def test_drop_zip_finders_keeps_zip_imports_working(tmp_path, monkeypatch):
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from bamboo_spark.sources._splits import _drop_zip_finders
+
+    def make_zip(name, files):
+        path = str(tmp_path / name)
+        with zipfile.ZipFile(path, "w") as zf:
+            for member, src in files.items():
+                zf.writestr(member, src)
+        return path
+
+    def zip_finders():
+        return {p for p, f in sys.path_importer_cache.items() if isinstance(f, zipimport.zipimporter)}
+
+    first = make_zip("first.zip", {
+        "zdrop_pkg/__init__.py": "",
+        "zdrop_pkg/a.py": "A = 1\n",
+        "zdrop_pkg/sub/__init__.py": "",
+        "zdrop_pkg/sub/b.py": "B = 2\n",
+    })
+    second = make_zip("second.zip", {"zdrop_late.py": "C = 3\n"})
+    monkeypatch.setattr(sys, "path", sys.path + [first])
+
+    assert importlib.import_module("zdrop_pkg.a").A == 1
+    assert first in zip_finders()
+    directory = zipimport._zip_directory_cache[first]
+    _drop_zip_finders()
+    assert not zip_finders()
+    # imported modules stay; the rest of the zip, its subpackage and a
+    # zip added afterwards still import
+    assert sys.modules["zdrop_pkg.a"].A == 1
+    assert importlib.import_module("zdrop_pkg.sub.b").B == 2
+    sys.path.append(second)
+    assert importlib.import_module("zdrop_late").C == 3
+    # the rebuilt finder reuses the directory read at first import
+    assert zipimport._zip_directory_cache[first] is directory
+
+
 # ------------------------------------------------------------- objects
 
 
