@@ -376,8 +376,8 @@ class _Lease:
                         "commit-lease wait exhausted after %d ms (%s). "
                         "This is commit-section CONTENTION (a pile-up "
                         "of committers on a loaded box), not a data "
-                        "conflict — the write is staged and untouched; "
-                        "retrying the commit is safe."
+                        "conflict — nothing was committed; retrying "
+                        "the commit is safe."
                         % (_now_ms() - start, holder)
                     ) from e
                 time.sleep(poll_ms / 1000.0)
@@ -527,7 +527,7 @@ def _write_seg(fs, table_dir: str, seg: str, data: dict) -> None:
 
 
 _DV = "_dv.json"
-_DVP = "_dvp"  # per-commit parquet sidecar dataset (v2 positions)
+_DVP = "dvp"  # per-commit parquet sidecar dataset ``<seg>/_dvp``
 _DV_CACHE: dict = {}  # abs path -> parsed dict (dv files are immutable)
 _DV_CACHE_MAX = 1024
 
@@ -915,7 +915,7 @@ def _dv_build(
     spark: SparkSession,
     fs,
     table_dir: str,
-    seg: str,
+    dsrel: str,
     addr_df,
     cand_files,
     dv0: dict,
@@ -930,8 +930,8 @@ def _dv_build(
     Row positions NEVER pass through the driver: addresses are mapped
     back to manifest refs with a broadcast file-level frame, unioned
     with the touched files' EXISTING vectors (sidecar/legacy reads),
-    deduplicated, and written as ONE parquet dataset
-    (``<seg>/_dvp``) by executors — the driver sees only per-file
+    deduplicated, and written as ONE parquet dataset (the commit's
+    sidecar at ``dsrel``) by executors — the driver sees only per-file
     COUNTS. Returns ``(new_refs {rel: {"ds","n"}}, n_fresh)`` where
     ``new_refs`` covers exactly the files whose vector GREW (a file
     whose every address was already deleted keeps its old ref, so
@@ -975,7 +975,6 @@ def _dv_build(
         return {}, 0
     old_sub = {f: dv0[f] for f in touched if dv0.get(f)}
     n_parts = max(1, min(len(touched), 64))
-    dsrel = "%s/%s" % (seg, _DVP)
     dsdir = _ref_path(fs, table_dir, dsrel)
     # positions pack into BITMAP chunk rows before hitting disk (v3 —
     # see _dv_pack): sidecar bytes scale with chunks, not deletions.
@@ -2114,15 +2113,11 @@ def atomic_publish(
     history iff its publish committed. ``read_published(version=k)``
     reads any retained snapshot; ``vacuum`` prunes history entries
     whose data directories it deletes."""
-    from pyspark.sql import Observation, functions as F
-
     fs = _fs_for(table_dir, df.sparkSession)
     fs.mkdirs(table_dir)
     lease = _lease or _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire()
     try:
         prev = _read_manifest(table_dir, fs)
-        seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, prev))
-        vdir = fs.join(table_dir, seg)
         # hidden partitioning: resolve layout + transform spec; df
         # stays LOGICAL (derived columns live only in directory names)
         # and the materialized twin is what hits the writer. A caller
@@ -2139,23 +2134,15 @@ def atomic_publish(
             parts, spec = _parse_partition_by(
                 partition_by, df.schema.json() if partition_by else None
             )
-        obs = Observation()
-        cnames, cmap, caggs = _constraint_aggs(prev)
         staged = _materialize_partition_cols(df, spec)
         if not _keep_layout:
             # callers that pre-laid-out the frame (compact's byte-sized
             # range layout, zorder clustering) pass _keep_layout=True
             staged = _pt_rebalance(staged, parts)
-        writer = staged.observe(
-            obs, F.count(F.lit(1)).alias("n"), *caggs
-        ).write
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(vdir)
-        _enforce_constraints(obs.get, cnames, cmap, "atomic_publish")
-        n_rows = int(obs.get["n"])
-        files, file_sizes = _scan_written(fs, vdir, seg)
-        seg_data = {"files": files, "file_sizes": file_sizes}
+        # a full rewrite starts the field-id space fresh (physical ==
+        # logical again) and resets the evolution flags — nothing of
+        # the old layout survives to resurrect
+        fids = {f.name: i + 1 for i, f in enumerate(df.schema.fields)}
         # WRITE-TIME indexes: distributed jobs over the files this
         # publish just produced — every backend; skip=/skip_eq= prune
         # from the first read. Explicit cols on a full publish DEFINE
@@ -2164,55 +2151,30 @@ def atomic_publish(
         explicit = _set_index_spec and (
             stats_cols is not None or bloom_cols is not None
         )
-        stats_cols, bloom_cols = _index_defaults(
-            prev, stats_cols, bloom_cols, df.schema.json()
-        )
-        _enrich_seg(
-            df.sparkSession, fs, table_dir, files, seg_data,
-            stats_cols, bloom_cols, df.schema.json(),
-        )
-        # a full rewrite starts the field-id space fresh (physical ==
-        # logical again) and resets the evolution flags — nothing of
-        # the old layout survives to resurrect
-        fids = {f.name: i + 1 for i, f in enumerate(df.schema.fields)}
-        _stamp_fields(seg_data, fids)
-        _write_seg(fs, table_dir, seg, seg_data)
-        entry = {
-            "segments": [seg],
-            "removed": [],
-            "n_rows": n_rows,
-            "n_files": len(files),
-            "size_bytes": sum(file_sizes.values()),
-            "schema": df.schema.json(),
-            "partition_by": parts,
-            "operation": operation,
-            "field_ids": fids,
-            "next_field_id": len(fids) + 1,
-            "schema_evolved": False,
-            "retired_names": [],
-        }
-        if spec:
-            entry["partition_spec"] = spec
-        if explicit:
-            entry["index_cols"] = {
-                "stats": list(stats_cols or []),
-                "bloom": list(bloom_cols or []),
-            }
-        if not data_change:
-            # pure-rewrite marker (Delta's dataChange=false): this
-            # commit re-cites existing ROWS in new files; incremental
-            # readers (read_appends, the streaming source) skip it
-            entry["data_change"] = False
-        if meta:
-            entry["meta"] = dict(meta)
-        version = (int(prev["version"]) if prev else 0) + 1
-        _commit(fs, table_dir, prev, version, entry, lease=lease)
-        # commit done: the staging dir now exists and is referenced,
-        # so the claim marker's job (name uniqueness + in-flight
-        # liveness for vacuum) is over — release it so vacuum can
-        # tell committed dirs from in-flight staging writes
-        fs.delete_file(fs.join(table_dir, seg + ".claim"))
-        return version
+        with _StagedCommit(
+            fs, table_dir, prev, "atomic_publish", lease_ttl_ms, lease=lease
+        ) as st:
+            st.write(staged, parts)
+            stats_cols, bloom_cols = st.stage(
+                df.schema.json(), fids, stats_cols, bloom_cols
+            )
+            entry = st.entry(None, operation, meta, data_change)
+            entry.update(
+                schema=df.schema.json(),
+                partition_by=parts,
+                field_ids=fids,
+                next_field_id=len(fids) + 1,
+                schema_evolved=False,
+                retired_names=[],
+            )
+            if spec:
+                entry["partition_spec"] = spec
+            if explicit:
+                entry["index_cols"] = {
+                    "stats": list(stats_cols or []),
+                    "bloom": list(bloom_cols or []),
+                }
+            return st.commit(lambda base: entry)
     finally:
         if _lease is None:
             lease.release()
@@ -2237,8 +2199,9 @@ def _claim_vdir(fs, table_dir: str, start: int) -> str:
     same directory. Directory names are now decoupled from snapshot
     version numbers — the snapshot version is assigned at COMMIT time
     (monotonic under the lease), while the claimed dir name just has to
-    be unique; under no contention they coincide. The claim marker
-    lives until ``vacuum`` removes the directory."""
+    be unique; under no contention they coincide. The directory itself
+    is created right after its claim, so a staging write always lands
+    in a directory that already exists (and is its writer's alone)."""
     existing = set(fs.listdir(table_dir))
     n = start
     for _ in range(100_000):  # bound: a persistent FS error (perms,
@@ -2247,6 +2210,7 @@ def _claim_vdir(fs, table_dir: str, start: int) -> str:
         if name not in existing and fs.create_exclusive(
             fs.join(table_dir, name + ".claim"), ""
         ):
+            fs.mkdirs(fs.join(table_dir, name))
             return name
         n += 1
     raise ConcurrentWriteError(
@@ -2308,10 +2272,26 @@ class _ClaimBeat:
             self._thread = None
 
 
+def _hidden(rel: str) -> bool:
+    """Spark's hidden-path rule over a path below a version directory:
+    any component starting with ``.``, or with ``_`` and holding no
+    ``=`` (a hive ``_col=v`` directory is data), hides what is under it
+    — staging sidecars (``_dvp``), committer temp dirs (``_temporary``)
+    and markers (``_SUCCESS``) are never data files."""
+    return any(
+        c.startswith(".") or (c.startswith("_") and "=" not in c)
+        for c in rel.split("/")
+    )
+
+
 def _scan_written(fs, vdir: str, vname: str):
-    """(manifest-relative file list, {path: bytes}) for a freshly
-    written version directory."""
-    rel = sorted(f for f in fs.walk_files(vdir) if f.endswith(".parquet"))
+    """(manifest-relative file list, {path: bytes}) for the data files
+    of a freshly written version directory — hidden paths excluded."""
+    rel = sorted(
+        f
+        for f in fs.walk_files(vdir)
+        if f.endswith(".parquet") and not _hidden(f)
+    )
     files = ["%s/%s" % (vname, f) for f in rel]
     sizes = {
         "%s/%s" % (vname, f): fs.file_size(fs.join(vdir, f))
@@ -2393,6 +2373,230 @@ def _commit(
     )
 
 
+class _StagedCommit:
+    """The ONE staging pipeline every table writer commits through:
+    claim, write, scan, index, rebase, commit and cleanup in one place.
+
+    Layout (owned here and nowhere else): entering claims a fresh
+    ``_v<N>`` directory (:func:`_claim_vdir` creates it with its
+    ``.claim`` marker) and keeps the claim fresh (:class:`_ClaimBeat`)
+    until the commit. The data write lands in it in APPEND mode — the
+    exclusive claim, not ``ErrorIfExists``, is what makes it fresh —
+    and a sidecar lands in ``<vdir>/_<name>``, a hidden path that
+    :func:`_scan_written` (Spark's own rule) never lists as data. So
+    the sidecar build runs concurrently with the data write without
+    colliding with it or being cited as a data file.
+
+    Flow: ``sidecar`` (optional; starts on a second driver thread when
+    ``write`` starts, or runs inline when nothing is written),
+    ``write`` (row count and CHECK violations observed in the same job,
+    enforced before anything is staged, then the scan), ``stage``
+    (write-time indexes and field-id stamp into ``_seg.json``),
+    ``commit`` (joins the sidecar, takes the short commit lease unless
+    the writer already holds one, and rebases onto a moved table when
+    :func:`_check_rebase` and the writer's ``still_valid`` allow it;
+    then :func:`_commit` and the claim release). A writer keeps only
+    its frame, its rebase-validity check and its entry delta.
+
+    One cleanup rule: leaving the block before :func:`_commit` is
+    entered — an exception, a lost race, a no-op return — joins the
+    sidecar, stops the beat, then deletes the staging dir and its
+    claim. Nothing is reclaimed after that point: the swap may have
+    landed, and an unreferenced dir is vacuum's to judge."""
+
+    def __init__(self, fs, table_dir: str, base, who: str,
+                 lease_ttl_ms: int = 300_000, lease=None):
+        # ``lease``: a lease the writer holds across plan + write (full
+        # rewrites, clones) — the base is then pinned, never rebased
+        self.fs, self.table_dir, self.base, self.who = (
+            fs, table_dir, base, who,
+        )
+        self._ttl = lease_ttl_ms
+        self._lease = lease
+        self.n_rows, self.files, self.sizes = 0, [], {}
+        self._spark = self._queued = self._pool = self._fut = None
+        self._committing = False
+
+    def __enter__(self) -> "_StagedCommit":
+        self.seg = _claim_vdir(
+            self.fs, self.table_dir,
+            _next_version(self.fs, self.table_dir, self.base),
+        )
+        self.vdir = self.fs.join(self.table_dir, self.seg)
+        self._beat = _ClaimBeat(
+            self.fs, self.table_dir, self.seg, self._ttl
+        ).start()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        if self._committing:
+            self._beat.stop()
+            return
+        self._queued = None
+        try:
+            self.sidecar_result()
+        except Exception:
+            pass  # the block's own outcome is what propagates
+        self._beat.stop()
+        for drop, path in (
+            (self.fs.rmtree, self.vdir),
+            (self.fs.delete_file, self.vdir + ".claim"),
+        ):
+            try:
+                drop(path)
+            except Exception:
+                pass
+
+    def sidecar(self, name: str, build) -> None:
+        """Queue ``build(rel)``, which writes a sidecar dataset at the
+        table-relative ``rel = <seg>/_<name>`` and returns what the
+        commit needs from it."""
+        self._queued = (build, "%s/_%s" % (self.seg, name))
+
+    def sidecar_result(self):
+        """Join the sidecar — running it inline when no ``write``
+        started it — and return its result (None without one)."""
+        if self._queued is not None:
+            build, rel = self._queued
+            self._queued = None
+            return build(rel)
+        if self._fut is None:
+            return None
+        fut, self._fut = self._fut, None
+        try:
+            return fut.result()
+        finally:
+            self._pool.shutdown(wait=True)
+
+    def write(self, df: DataFrame, parts=()) -> int:
+        """Write ``df`` into the staging dir with its row count and the
+        base's CHECK violation counters observed by the same job
+        (violations raise before anything is staged), then list the
+        written data files. A queued sidecar starts first, so its jobs
+        fill the executor slots the write's tail leaves idle. Returns
+        the row count."""
+        from pyspark.sql import Observation, functions as F
+
+        if self._queued is not None:
+            from concurrent.futures import ThreadPoolExecutor
+
+            build, rel = self._queued
+            self._queued = None
+            self._pool = ThreadPoolExecutor(max_workers=1)
+            self._fut = self._pool.submit(build, rel)
+        self._spark = df.sparkSession
+        obs = Observation()
+        names, cons, aggs = _constraint_aggs(self.base)
+        writer = df.observe(
+            obs, F.count(F.lit(1)).alias("n"), *aggs
+        ).write.mode("append")
+        if parts:
+            writer = writer.partitionBy(*parts)
+        writer.parquet(self.vdir)
+        _enforce_constraints(obs.get, names, cons, self.who)
+        self.n_rows = int(obs.get["n"])
+        self.files, self.sizes = _scan_written(self.fs, self.vdir, self.seg)
+        return self.n_rows
+
+    def stage(self, schema_json: str, fids: dict, stats_cols=None,
+              bloom_cols=None):
+        """Write the segment sidecar ``<seg>/_seg.json`` of the written
+        files: write-time indexes (explicit columns, else the table's
+        index spec — one distributed job over these files only) and the
+        ``{field id: physical name}`` stamp. No files, no segment.
+        Returns the index columns used."""
+        sc, bc = _index_defaults(
+            self.base, stats_cols, bloom_cols, schema_json
+        )
+        if self.files:
+            seg_data = {"files": self.files, "file_sizes": self.sizes}
+            _enrich_seg(
+                self._spark, self.fs, self.table_dir, self.files,
+                seg_data, sc, bc, schema_json,
+            )
+            _stamp_fields(seg_data, fids)
+            _write_seg(self.fs, self.table_dir, self.seg, seg_data)
+        return sc, bc
+
+    def entry(self, base, operation: str, meta=None,
+              data_change: bool = True) -> dict:
+        """The next snapshot entry: ``base`` plus this commit's written
+        files (a fresh table when ``base`` is None). The segment is
+        cited iff files were written. Writers edit their delta into
+        it."""
+        b = base or {}
+        segs, removed, n_files, size = [], [], 0, 0
+        if base is not None:
+            segs, removed = _segments_of(self.fs, self.table_dir, base)
+            n_files, size = _entry_counters(self.fs, self.table_dir, base)
+        entry = {
+            "segments": segs + [self.seg] if self.files else segs,
+            "removed": removed,
+            "n_rows": int(b.get("n_rows") or 0) + self.n_rows,
+            "n_files": n_files + len(self.files),
+            "size_bytes": size + sum(self.sizes.values()),
+            "schema": b.get("schema"),
+            "partition_by": b.get("partition_by") or [],
+            "operation": operation,
+        }
+        if b.get("partition_spec"):
+            entry["partition_spec"] = b["partition_spec"]
+        if meta:
+            entry["meta"] = dict(meta)
+        if not data_change:
+            # Delta's dataChange=false: the commit re-cites existing
+            # ROWS; incremental readers skip it
+            entry["data_change"] = False
+        return entry
+
+    def commit(self, entry_of, still_valid=None, swap=None):
+        """Join the sidecar, then under the commit lease: re-read the
+        manifest (it must not have vanished); if the table moved, rebase
+        iff :func:`_check_rebase` and ``still_valid(cur)`` pass (both
+        raise :class:`ConcurrentWriteError` otherwise); swap in
+        ``entry_of(base)`` with :func:`_commit` and release the claim.
+        Returns the committed version.
+
+        ``swap(cur, entry)`` commits to a ref other than main (a branch
+        head): main's version says nothing about that ref, so
+        ``still_valid`` always runs and ``swap``'s result is returned."""
+        self.sidecar_result()
+        lease = self._lease or _Lease(
+            self.fs, self.table_dir, ttl_ms=self._ttl
+        ).acquire_wait(wait_ms=_COMMIT_WAIT_MS)
+        try:
+            base = self.base
+            if self._lease is None:
+                cur = _read_manifest(self.table_dir, self.fs)
+                if cur is None:
+                    raise ConcurrentWriteError(
+                        "%s: manifest vanished mid-write" % self.who
+                    )
+                if swap is not None:
+                    still_valid(cur)
+                elif int(cur["version"]) != int(base["version"]):
+                    _check_rebase(base, cur, self.who)
+                    if still_valid is not None:
+                        still_valid(cur)
+                base = cur
+            entry = entry_of(base)
+            self._committing = True
+            if swap is not None:
+                out = swap(base, entry)
+            else:
+                out = (int(base["version"]) if base else 0) + 1
+                _commit(
+                    self.fs, self.table_dir, base, out, entry, lease=lease
+                )
+            # committed: the claim's job (name uniqueness, in-flight
+            # liveness for vacuum) is over
+            self.fs.delete_file(self.vdir + ".claim")
+            return out
+        finally:
+            if self._lease is None:
+                lease.release()
+
+
 def append_publish(
     df: DataFrame,
     table_dir: str,
@@ -2446,7 +2650,7 @@ def append_publish(
     partition layout); a concurrent schema/layout change raises
     :class:`ConcurrentWriteError`. Streaming ingest therefore commits
     concurrently with partition maintenance on other partitions."""
-    from pyspark.sql import Observation, functions as F
+    from pyspark.sql import functions as F
 
     fs = _fs_for(table_dir, df.sparkSession)
     fs.mkdirs(table_dir)
@@ -2539,11 +2743,8 @@ def append_publish(
                 "pass schema_mode='merge' to add nullable columns): "
                 "batch=%s table=%s" % (new_sig, old_sig)
             )
-    # ---- data-write phase: NO lease held. The batch stages into a
-    # CLAIMED directory (unique by exclusive-create), so concurrent
-    # writers never collide on disk; only the manifest swap contends.
-    # The claim heartbeat is the staging dir's liveness signal: vacuum
-    # never reclaims a dir whose claim is fresher than the lease TTL.
+    # the batch stages with NO lease held (the claimed dir is its
+    # writer's alone); only the manifest swap contends
     pspec = prev.get("partition_spec")
     df = _materialize_partition_cols(df, pspec)
     if cluster_by:
@@ -2559,96 +2760,33 @@ def append_publish(
         ).sortWithinPartitions(*cl)
     else:
         df = _pt_rebalance(df, parts)
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, prev))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    try:
-        vdir = fs.join(table_dir, seg)
-        obs = Observation()
-        cnames, cmap, caggs = _constraint_aggs(prev)
-        writer = df.observe(
-            obs, F.count(F.lit(1)).alias("n"), *caggs
-        ).write
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(vdir)
-        _enforce_constraints(obs.get, cnames, cmap, "append_publish")
-        new_files, new_sizes = _scan_written(fs, vdir, seg)
-        # O(delta) commit: carried files stay inside their segment
-        # sidecars BY REFERENCE — the commit writes ONE new sidecar
-        # (this batch's files) and a constant-size top-manifest entry;
-        # nothing existing is re-listed, re-read, or re-serialized
-        fids, nxt = _field_ids_of({**prev, "schema": prev["schema"]})
-        for name in [
-            f["name"] for f in json.loads(schema_json)["fields"]
-        ]:
-            if name not in fids:  # widened this commit: new id
-                fids[name] = nxt
-                nxt += 1
-        if new_files:
-            seg_data = {"files": new_files, "file_sizes": new_sizes}
-            sc, bc = _index_defaults(
-                prev, stats_cols, bloom_cols, schema_json
+    fids, nxt = _field_ids_of(prev)
+    for name in [f["name"] for f in json.loads(schema_json)["fields"]]:
+        if name not in fids:  # widened this commit: new id
+            fids[name] = nxt
+            nxt += 1
+    with _StagedCommit(
+        fs, table_dir, prev, "append_publish", lease_ttl_ms
+    ) as st:
+        st.write(df, parts)
+        st.stage(schema_json, fids, stats_cols, bloom_cols)
+
+        def entry_of(base):
+            # O(delta) commit: carried files stay inside their segment
+            # sidecars BY REFERENCE, and so do delete vectors — an
+            # append touches no existing file (zero IO)
+            entry = st.entry(base, "append", meta)
+            entry.update(
+                schema=schema_json, field_ids=fids, next_field_id=nxt
             )
-            _enrich_seg(
-                df.sparkSession, fs, table_dir, new_files, seg_data,
-                sc, bc, schema_json,
-            )
-            _stamp_fields(seg_data, fids)
-            _write_seg(fs, table_dir, seg, seg_data)
-        # ---- commit phase: short lease, optimistic rebase. An append
-        # adds files and removes none, so it commutes with ANY
-        # concurrent commit that kept the schema and partition layout —
-        # rebase and commit. acquire_wait: the lease only guards
-        # sub-second swaps now, so a contending writer polls briefly
-        # instead of aborting its write.
-        lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-            wait_ms=_COMMIT_WAIT_MS
-        )
-        with lease:
-            cur = _read_manifest(table_dir, fs)
-            if cur is None:
-                raise ConcurrentWriteError(
-                    "append_publish: table manifest vanished mid-append"
-                )
-            if int(cur["version"]) != int(prev["version"]):
-                _check_rebase(prev, cur, "append_publish")
-                prev = cur
-            segs, removed = _segments_of(fs, table_dir, prev)
-            if new_files:
-                segs = segs + [seg]
-            prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
-            entry = {
-                "segments": segs,
-                "removed": removed,
-                "n_rows": int(prev["n_rows"]) + int(obs.get["n"]),
-                "n_files": prev_nf + len(new_files),
-                "size_bytes": prev_sz + sum(new_sizes.values()),
-                "schema": schema_json,
-                "partition_by": parts,
-                "operation": "append",
-                "field_ids": fids,
-                "next_field_id": nxt,
-            }
-            if pspec:
-                entry["partition_spec"] = pspec
-            # delete vectors carry UNCHANGED by reference — an append
-            # adds files and touches none, so the prev snapshot's dv
-            # file is this snapshot's dv file (zero IO)
-            if prev.get("dv"):
-                entry["dv"] = prev["dv"]
-                entry["dv_rows"] = prev.get("dv_rows")
-            if meta:
-                entry["meta"] = dict(meta)
-            version = int(prev["version"]) + 1
-            _commit(fs, table_dir, prev, version, entry, lease=lease)
-            # commit done: the staging dir now exists and is referenced,
-            # so the claim marker's job (name uniqueness + in-flight
-            # liveness for vacuum) is over — release it so vacuum can
-            # tell committed dirs from in-flight staging writes
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return version
-    finally:
-        beat.stop()
+            if base.get("dv"):
+                entry["dv"] = base["dv"]
+                entry["dv_rows"] = base.get("dv_rows")
+            return entry
+
+        # an append adds files and removes none, so it commutes with
+        # ANY concurrent commit that kept the schema and layout
+        return st.commit(entry_of)
 
 
 def _check_rebase(base: dict, cur: dict, who: str) -> None:
@@ -2669,6 +2807,30 @@ def _check_rebase(base: dict, cur: dict, who: str) -> None:
         raise ConcurrentWriteError(
             "%s: concurrent partition-transform change — rebase refused"
             % who
+        )
+
+
+def _check_addressed(fs, table_dir: str, base: dict, cur: dict, files,
+                     who: str) -> None:
+    """Rebase validity of a commit planned against specific ``base``
+    files (the files a rewrite replaces, the files a delete vector
+    addresses): each must still be live in ``cur`` with the delete
+    vector it had in ``base`` — else the rows read or the positions
+    found are stale, and committing would drop or resurrect rows."""
+    if not set(files) <= set(_entry_files(fs, table_dir, cur)):
+        raise ConcurrentWriteError(
+            "%s: a concurrent commit rewrote file(s) this commit "
+            "addresses — re-run against the new snapshot" % who
+        )
+    base_dv = _load_dv(fs, table_dir, base)
+    cur_dv = _load_dv(fs, table_dir, cur)
+    if any(
+        (base_dv.get(f) or None) != (cur_dv.get(f) or None) for f in files
+    ):
+        raise ConcurrentWriteError(
+            "%s: a concurrent delete changed the delete vectors of a "
+            "file this commit addresses — re-run against the new "
+            "snapshot" % who
         )
 
 
@@ -2859,7 +3021,6 @@ def replace_partitions_publish(
     lease_ttl_ms: int = 300_000,
     stats_cols=None,
     bloom_cols=None,
-    _lease: Optional[_Lease] = None,
     _base: Optional[dict] = None,
     data_change: bool = True,
     operation: str = "replace_partitions",
@@ -2890,8 +3051,6 @@ def replace_partitions_publish(
     raises :class:`ConcurrentWriteError` — nothing is silently
     dropped. This is what lets streaming ingest commit concurrently
     with scheduled per-partition maintenance."""
-    from pyspark.sql import Observation, functions as F
-
     fs = _fs_for(table_dir, df.sparkSession)
     fs.mkdirs(table_dir)
     # _base: the SNAPSHOT THE CALLER'S REWRITE PLAN READ. Maintenance
@@ -2934,11 +3093,8 @@ def replace_partitions_publish(
     # "the files of partition X" would duplicate (compaction) or keep
     # (delete) those rows. Refuse until compact() rewrites the table
     # under the current layout.
-    n_mixed = sum(
-        1
-        for f in _resolve_entry(fs, table_dir, prev)["files"]
-        if _val_of(f) is None
-    )
+    live = _entry_files(fs, table_dir, prev)
+    n_mixed = sum(1 for f in live if _val_of(f) is None)
     if n_mixed:
         raise ValueError(
             "replace_partitions_publish: %d live file(s) predate the "
@@ -2947,138 +3103,83 @@ def replace_partitions_publish(
             "new layout before partition-level operations" % n_mixed
         )
 
-    # ---- data-write phase: no lease (claimed dir, collision-free)
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, prev))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    try:
-        vdir = fs.join(table_dir, seg)
-        obs = Observation()
-        cnames, cmap, caggs = _constraint_aggs(prev)
-        (
-            _pt_rebalance(
-                _materialize_partition_cols(df, prev.get("partition_spec")),
-                parts,
+    spec = prev.get("partition_spec")
+    touched = {f for f in live if _val_of(f) in vals}
+
+    def same_partitions(cur):
+        # a concurrent commit that added or removed a file in one of
+        # OUR partitions would lose its rows to this rewrite
+        if {
+            f for f in _entry_files(fs, table_dir, cur) if _val_of(f) in vals
+        } != touched:
+            raise ConcurrentWriteError(
+                "replace_partitions_publish: a concurrent commit changed "
+                "partition(s) %s between this rewrite's snapshot and its "
+                "commit — merging would drop those rows; re-run against "
+                "the new snapshot" % sorted(vals)
             )
-            .observe(obs, F.count(F.lit(1)).alias("n"), *caggs)
-            .write.partitionBy(*parts)
-            .parquet(vdir)
+
+    return _replace_publish(
+        _pt_rebalance(_materialize_partition_cols(df, spec), parts),
+        fs, table_dir, prev, touched, "replace_partitions_publish",
+        lease_ttl_ms, stats_cols, bloom_cols, data_change, operation, meta,
+        same_partitions,
+    )
+
+
+def _replace_publish(
+    df, fs, table_dir, prev, replace_set, who, lease_ttl_ms, stats_cols,
+    bloom_cols, data_change, operation, meta=None, still_valid=None,
+) -> int:
+    """The copy-on-write commit shared by the partition and file
+    replaces: stage ``df`` (already laid out for the write), then
+    commit ``prev``'s snapshot minus ``replace_set`` plus the new files.
+    Replaced rows are counted from parquet FOOTERS less their delete
+    vectors, never by a scan. Rebase: every replaced file must still be
+    live with its delete vector unchanged (plus the caller's
+    ``still_valid``) — a concurrent dv-delete on a replaced file would
+    otherwise be resurrected by a rewrite planned from the old mask."""
+    with _StagedCommit(fs, table_dir, prev, who, lease_ttl_ms) as st:
+        st.write(df, prev.get("partition_by") or [])
+        st.stage(
+            prev["schema"], _field_ids_of(prev)[0], stats_cols, bloom_cols
         )
-        _enforce_constraints(
-            obs.get, cnames, cmap, "replace_partitions_publish"
-        )
-        new_files, new_sizes = _scan_written(fs, vdir, seg)
-        if new_files:
-            seg_data = {"files": new_files, "file_sizes": new_sizes}
-            sc, bc = _index_defaults(
-                prev, stats_cols, bloom_cols, prev["schema"]
-            )
-            _enrich_seg(
-                df.sparkSession, fs, table_dir, new_files, seg_data,
-                sc, bc, prev["schema"],
-            )
-            _stamp_fields(seg_data, _field_ids_of(prev)[0])
-            _write_seg(fs, table_dir, seg, seg_data)
-        # ---- commit phase: short lease + disjointness-checked rebase
-        base_touched = {
-            f
-            for f in _resolve_entry(fs, table_dir, prev)["files"]
-            if _val_of(f) in vals
-        }
-        lease = _lease or _Lease(
-            fs, table_dir, ttl_ms=lease_ttl_ms
-        ).acquire_wait(wait_ms=_COMMIT_WAIT_MS)
-        try:
-            cur = _read_manifest(table_dir, fs)
-            if cur is None:
-                raise ConcurrentWriteError(
-                    "replace_partitions_publish: manifest vanished mid-write"
-                )
-            if int(cur["version"]) != int(prev["version"]):
-                _check_rebase(prev, cur, "replace_partitions_publish")
-                cur_touched = {
-                    f
-                    for f in _entry_files(fs, table_dir, cur)
-                    if _val_of(f) in vals
-                }
-                if cur_touched != base_touched:
-                    raise ConcurrentWriteError(
-                        "replace_partitions_publish: a concurrent commit "
-                        "changed partition(s) %s between this rewrite's "
-                        "snapshot and its commit — merging would drop those "
-                        "rows; re-run against the new snapshot"
-                        % sorted(vals)
-                    )
-                # same guard for DELETE VECTORS: a concurrent dv-delete on
-                # a touched file changed its live rows without changing the
-                # file set — committing this rewrite (planned from the
-                # pre-delete mask) would resurrect the deleted rows
-                base_dv = _load_dv(fs, table_dir, prev)
-                cur_dv = _load_dv(fs, table_dir, cur)
-                if any(
-                    (base_dv.get(f) or []) != (cur_dv.get(f) or [])
-                    for f in base_touched
-                ):
-                    raise ConcurrentWriteError(
-                        "replace_partitions_publish: a concurrent delete "
-                        "changed a touched partition's delete vectors — "
-                        "re-run against the new snapshot"
-                    )
-                prev = cur
-            res = _resolve_entry(fs, table_dir, prev)
-            prev_dv = _load_dv(fs, table_dir, prev)
-            replaced = [f for f in res["files"] if _val_of(f) in vals]
-            # live rows in a replaced file = footer rows − its delete-
-            # vector entries (the rewrite read the MASKED rows)
-            replaced_rows = sum(
-                fs.file_rows(_ref_path(fs, table_dir, f)) - _dv_val_n(prev_dv.get(f))
+
+        def valid(cur):
+            if still_valid is not None:
+                still_valid(cur)
+            _check_addressed(fs, table_dir, prev, cur, replace_set, who)
+
+        def entry_of(base):
+            entry = st.entry(base, operation, meta, data_change)
+            res = _resolve_entry(fs, table_dir, base)
+            base_dv = _load_dv(fs, table_dir, base)
+            replaced = [f for f in res["files"] if f in replace_set]
+            entry["n_rows"] -= sum(
+                fs.file_rows(_ref_path(fs, table_dir, f))
+                - _dv_val_n(base_dv.get(f))
                 for f in replaced
             )
-            replaced_bytes = sum(
+            entry["n_files"] -= len(replaced)
+            entry["size_bytes"] -= sum(
                 res["file_sizes"].get(f)
                 or fs.file_size(_ref_path(fs, table_dir, f))
                 for f in replaced
             )
-            segs, removed = _segments_of(fs, table_dir, prev)
-            removed = sorted(set(removed) | set(replaced))
-            if new_files:
-                segs = segs + [seg]
-            # prune segments whose files are now ALL removed (a compacted
-            # or fully-replaced version): drops the segment pointer and its
-            # entries from the removed list, keeping 'removed' bounded by
-            # the files replaced since the last fold, not table lifetime
-            segs, removed = _prune_segments(fs, table_dir, segs, removed)
-            prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
-            carried = set(res["files"]) - set(replaced)
-            entry = {
-                "segments": segs,
-                "removed": removed,
-                "n_rows": int(prev["n_rows"]) - replaced_rows + int(obs.get["n"]),
-                "n_files": prev_nf - len(replaced) + len(new_files),
-                "size_bytes": prev_sz - replaced_bytes + sum(new_sizes.values()),
-                "schema": prev["schema"],
-                "partition_by": parts,
-                "operation": operation,
-                **_carry_dv(fs, table_dir, prev, seg, carried),
-            }
-            if prev.get("partition_spec"):
-                entry["partition_spec"] = prev["partition_spec"]
-            if not data_change:
-                entry["data_change"] = False
-            if meta:
-                entry["meta"] = dict(meta)
-            version = int(prev["version"]) + 1
-            _commit(fs, table_dir, prev, version, entry, lease=lease)
-            # commit done: the staging dir now exists and is referenced,
-            # so the claim marker's job (name uniqueness + in-flight
-            # liveness for vacuum) is over — release it so vacuum can
-            # tell committed dirs from in-flight staging writes
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return version
-        finally:
-            if _lease is None:
-                lease.release()
-    finally:
-        beat.stop()
+            # prune segments whose files are now ALL removed: keeps
+            # 'removed' bounded by the files replaced since the last
+            # fold, not the table's lifetime
+            entry["segments"], entry["removed"] = _prune_segments(
+                fs, table_dir, entry["segments"],
+                sorted(set(entry["removed"]) | replace_set),
+            )
+            entry.update(
+                _carry_dv(fs, table_dir, base, st.seg,
+                          set(res["files"]) - replace_set)
+            )
+            return entry
+
+        return st.commit(entry_of, valid)
 
 
 def _entry_counters(fs, table_dir: str, entry: dict):
@@ -4385,8 +4486,6 @@ def append_branch(
     seq. Concurrent appends to the SAME branch: the loser's head-CAS
     raises ConcurrentWriteError; concurrent MAIN commits never
     conflict (disjoint state)."""
-    from pyspark.sql import Observation, functions as F
-
     fs = _fs_for(table_dir, df.sparkSession)
     manifest = _read_manifest(table_dir, fs)
     if manifest is None:
@@ -4410,106 +4509,72 @@ def append_branch(
             % (new_sig, old_sig)
         )
     parts = head.get("partition_by") or []
-    pspec = head.get("partition_spec")
     seen_seq = int(br.get("seq", 0))
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, manifest))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    try:
-        vdir = fs.join(table_dir, seg)
-        obs = Observation()
-        writer = _pt_rebalance(
-            _materialize_partition_cols(df, pspec), parts
-        ).observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).write
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(vdir)
-        new_files, new_sizes = _scan_written(fs, vdir, seg)
-        fids, nxt = _field_ids_of(head)
-        if new_files:
-            seg_data = {"files": new_files, "file_sizes": new_sizes}
-            sc, bc = _index_defaults(
-                manifest, stats_cols, bloom_cols, head["schema"]
-            )
-            _enrich_seg(
-                df.sparkSession, fs, table_dir, new_files, seg_data,
-                sc, bc, head["schema"],
-            )
-            _stamp_fields(seg_data, fids)
-            _write_seg(fs, table_dir, seg, seg_data)
-        lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-            wait_ms=_COMMIT_WAIT_MS
+    with _StagedCommit(
+        fs, table_dir, manifest, "append_branch", lease_ttl_ms
+    ) as st:
+        st.write(
+            _pt_rebalance(
+                _materialize_partition_cols(df, head.get("partition_spec")),
+                parts,
+            ),
+            parts,
         )
-        try:
-            fresh = _read_manifest(table_dir, fs)
-            if fresh is None:
-                raise ConcurrentWriteError(
-                    "append_branch: manifest vanished mid-write"
-                )
-            cur_br = (fresh.get("branches") or {}).get(name)
+        st.stage(
+            head["schema"], _field_ids_of(head)[0], stats_cols, bloom_cols
+        )
+
+        def same_seq(cur):
+            cur_br = (cur.get("branches") or {}).get(name)
             if cur_br is None:
                 raise ConcurrentWriteError(
-                    "append_branch: branch %r was dropped mid-write"
-                    % name
+                    "append_branch: branch %r was dropped mid-write" % name
                 )
             if int(cur_br.get("seq", 0)) != seen_seq:
                 raise ConcurrentWriteError(
                     "append_branch: a concurrent commit advanced "
                     "branch %r (seq %d -> %d) — re-run against its "
-                    "new head"
-                    % (name, seen_seq, int(cur_br.get("seq", 0)))
+                    "new head" % (name, seen_seq, int(cur_br.get("seq", 0)))
                 )
-            cur_head = cur_br["head"]
-            segs = list(cur_head.get("segments") or []) + (
-                [seg] if new_files else []
-            )
+
+        def head_of(cur):
+            cur_head = cur["branches"][name]["head"]
             new_head = {
                 **cur_head,
-                "segments": segs,
+                "segments": list(cur_head.get("segments") or [])
+                + ([st.seg] if st.files else []),
                 "removed": list(cur_head.get("removed") or []),
-                "n_rows": int(cur_head["n_rows"]) + int(obs.get["n"]),
+                "n_rows": int(cur_head["n_rows"]) + st.n_rows,
                 "n_files": int(cur_head.get("n_files") or 0)
-                + len(new_files),
+                + len(st.files),
                 "size_bytes": int(cur_head.get("size_bytes") or 0)
-                + sum(new_sizes.values()),
+                + sum(st.sizes.values()),
                 "operation": "branch_append",
                 "committed_at_ms": _now_ms(),
             }
             # a fork from a legacy inline entry carries "files" — once
             # appended the head is segment-shaped, drop the inline list
-            for k in ("files", "file_sizes"):
-                new_head.pop(k, None)
-            if not new_head.get("segments"):
-                # nothing staged and no prior segments: keep inline
-                new_head["segments"] = segs
-            branches = dict(fresh.get("branches") or {})
+            # (nothing staged and no prior segments: it stays inline)
+            if new_head["segments"]:
+                for k in ("files", "file_sizes"):
+                    new_head.pop(k, None)
+            return new_head
+
+        def swap(cur, new_head):
+            # advance ONLY the branch head: main's entry and version
+            # are byte-identical before and after
+            branches = dict(cur["branches"])
             branches[name] = {
-                **cur_br, "head": new_head, "seq": seen_seq + 1,
+                **branches[name], "head": new_head, "seq": seen_seq + 1,
             }
-            out = {**fresh, "branches": branches}
             fs.replace_with(
-                json.dumps(out),
+                json.dumps({**cur, "branches": branches}),
                 _manifest_path(table_dir, fs),
                 ".tmp.br.%s.%d" % (name.replace("/", "_"), seen_seq + 1),
             )
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
             return seen_seq + 1
-        finally:
-            lease.release()
-    except ConcurrentWriteError:
-        beat.stop()
-        try:
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-        except Exception:
-            pass
-        try:
-            fs.rmtree(fs.join(table_dir, seg))
-        except Exception:
-            pass
-        raise
-    finally:
-        beat.stop()
+
+        return st.commit(head_of, same_seq, swap=swap)
 
 
 def fast_forward_branch(
@@ -4663,6 +4728,67 @@ def clone_table(
     src_v, entry = _select_snapshot(src_manifest, version, as_of_ms)
     res = _resolve_entry(src_fs, src_dir, entry, rekey_stats=False)
     abs_of = {f: _ref_path(src_fs, src_dir, f) for f in res["files"]}
+    seg_data = {
+        "files": [abs_of[f] for f in res["files"]],
+        **{
+            k: {abs_of[f]: v for f, v in res[k].items() if f in abs_of}
+            for k in ("file_sizes", "file_stats", "file_blooms")
+        },
+    }
+    if res.get("file_fields"):
+        # files from MANY source segments land in ONE clone segment —
+        # per-FILE maps, not a segment-level one
+        seg_data["file_fields"] = {
+            abs_of[f]: m
+            for f, m in res["file_fields"].items()
+            if f in abs_of
+        }
+    nf = entry.get("n_files")
+    if nf is None:
+        nf = len(res["files"])
+    sz = entry.get("size_bytes")
+    if sz is None:
+        sz = sum(v for v in res["file_sizes"].values() if v)
+    new_entry = {
+        "removed": [],
+        "n_rows": int(entry["n_rows"]),
+        "n_files": int(nf),
+        "size_bytes": int(sz),
+        "schema": entry["schema"],
+        "partition_by": entry.get("partition_by") or [],
+        "operation": "clone",
+        "meta": {"cloned_from": src_dir, "cloned_version": int(src_v)},
+    }
+    # schema-evolution state forks with the snapshot: the clone's reads
+    # resolve renamed/dropped columns exactly as the source's. Layout
+    # (partition_spec) and table properties (index_cols, retention —
+    # Delta CLONE copies table properties) ride along: a clone that
+    # silently dropped the retention policy would give a bare vacuum on
+    # it the default horizon instead of the declared compliance one.
+    for k in (
+        "field_ids", "next_field_id", "schema_evolved", "retired_names",
+        "constraints", "index_cols", "partition_spec", "retention",
+    ):
+        if entry.get(k) is not None:
+            new_entry[k] = entry[k]
+    live = set(res["files"])
+    dv = {}
+    for f, v in _load_dv(src_fs, src_dir, entry).items():
+        if f not in live or not _dv_val_n(v):
+            continue
+        if isinstance(v, dict):
+            # v2/v3 sidecar ref: externalize the dataset path (zero
+            # copy, like the data refs) and pin the SIDECAR's own file
+            # key — its rows were written under the source's ref, which
+            # the clone's scan URIs still suffix-match
+            dv[abs_of[f]] = {
+                "ds": _ref_path(src_fs, src_dir, v["ds"]),
+                "n": int(v["n"]),
+                "key": v.get("key", f),
+                **({"fmt": v["fmt"]} if v.get("fmt") else {}),
+            }
+        else:
+            dv[abs_of[f]] = v
     fs = _fs_for(dst_dir, spark)
     fs.mkdirs(dst_dir)
     with _Lease(fs, dst_dir, ttl_ms=300_000) as lease:
@@ -4671,94 +4797,15 @@ def clone_table(
                 "clone_table: %s already holds a table — refusing to "
                 "overwrite its history" % dst_dir
             )
-        seg = _claim_vdir(fs, dst_dir, 1)
-        seg_data = {
-            "files": [abs_of[f] for f in res["files"]],
-            "file_sizes": {
-                abs_of[f]: sz
-                for f, sz in res["file_sizes"].items()
-                if f in abs_of
-            },
-            "file_stats": {
-                abs_of[f]: st
-                for f, st in res["file_stats"].items()
-                if f in abs_of
-            },
-            "file_blooms": {
-                abs_of[f]: b
-                for f, b in res["file_blooms"].items()
-                if f in abs_of
-            },
-        }
-        if res.get("file_fields"):
-            # files from MANY source segments land in ONE clone
-            # segment — per-FILE maps, not a segment-level one
-            seg_data["file_fields"] = {
-                abs_of[f]: m
-                for f, m in res["file_fields"].items()
-                if f in abs_of
-            }
-        _write_seg(fs, dst_dir, seg, seg_data)
-        nf = entry.get("n_files")
-        if nf is None:
-            nf = len(res["files"])
-        sz = entry.get("size_bytes")
-        if sz is None:
-            sz = sum(v for v in res["file_sizes"].values() if v)
-        new_entry = {
-            "segments": [seg],
-            "removed": [],
-            "n_rows": int(entry["n_rows"]),
-            "n_files": int(nf),
-            "size_bytes": int(sz),
-            "schema": entry["schema"],
-            "partition_by": entry.get("partition_by") or [],
-            "operation": "clone",
-            "meta": {
-                "cloned_from": src_dir,
-                "cloned_version": int(src_v),
-            },
-        }
-        # schema-evolution state forks with the snapshot: the clone's
-        # reads resolve renamed/dropped columns exactly as the source's.
-        # Layout (partition_spec) and table properties (index_cols,
-        # retention — Delta CLONE copies table properties) ride along:
-        # a clone that silently dropped the retention policy would give
-        # a bare vacuum on it the default horizon instead of the
-        # declared compliance one.
-        for k in (
-            "field_ids", "next_field_id", "schema_evolved",
-            "retired_names", "constraints", "index_cols",
-            "partition_spec", "retention",
-        ):
-            if entry.get(k) is not None:
-                new_entry[k] = entry[k]
-        src_dv = _load_dv(src_fs, src_dir, entry)
-        live = set(res["files"])
-        dv = {}
-        for f, v in src_dv.items():
-            if f not in live or not _dv_val_n(v):
-                continue
-            if isinstance(v, dict):
-                # v2/v3 sidecar ref: externalize the dataset path
-                # (zero copy, like the data refs) and pin the
-                # SIDECAR's own file key — its rows were written under
-                # the source's ref, which the clone's scan URIs still
-                # suffix-match
-                dv[abs_of[f]] = {
-                    "ds": _ref_path(src_fs, src_dir, v["ds"]),
-                    "n": int(v["n"]),
-                    "key": v.get("key", f),
-                    **({"fmt": v["fmt"]} if v.get("fmt") else {}),
-                }
-            else:
-                dv[abs_of[f]] = v
-        if dv:
-            new_entry["dv"] = _write_dv(fs, dst_dir, seg, dv)
-            new_entry["dv_rows"] = _dv_nrows(dv)
-        _commit(fs, dst_dir, None, 1, new_entry, lease=lease)
-        fs.delete_file(fs.join(dst_dir, seg + ".claim"))
-        return 1
+        with _StagedCommit(
+            fs, dst_dir, None, "clone_table", lease=lease
+        ) as st:
+            _write_seg(fs, dst_dir, st.seg, seg_data)
+            new_entry["segments"] = [st.seg]
+            if dv:
+                new_entry["dv"] = _write_dv(fs, dst_dir, st.seg, dv)
+                new_entry["dv_rows"] = _dv_nrows(dv)
+            return st.commit(lambda base: new_entry)
 
 
 def read_appends(
@@ -5808,17 +5855,23 @@ def fsck_table(
     job (orphans) or ``restore_table``'s (bad head).
 
     Returns ``{"ok": bool, "version": int, "snapshots_checked": int,
-    "files_checked": int, "missing_files": [...], "size_mismatches":
-    [...], "missing_dv": [...], "unreadable_segments": [...],
-    "orphan_dirs": [...], "in_flight_dirs": [...], "stray_claims":
-    [...], "external_refs": int}`` — ``ok`` is False iff a RETAINED
-    snapshot cites something unresolvable (orphans/claims are
-    informational; they cost bytes, not correctness).
+    "files_checked": int, "missing_files": [...], "hidden_files": [...],
+    "size_mismatches": [...], "missing_dv": [...],
+    "unreadable_segments": [...], "orphan_dirs": [...], "in_flight_dirs":
+    [...], "stray_claims": [...], "external_refs": int}`` — ``ok`` is
+    False iff a RETAINED snapshot cites something unresolvable or not
+    data (orphans/claims are informational; they cost bytes, not
+    correctness).
 
     ``check_sizes=True`` additionally compares each live file's size
     against the recorded ``file_sizes`` (catches silent truncation/
     overwrite outside the commit protocol) — O(files) stat calls,
     driver-side metadata only, no data IO either way.
+
+    ``hidden_files`` lists cited data files whose path below their
+    version dir passes through a hidden component (``.x`` or ``_x``
+    without ``=``, Spark's rule): a sidecar or temp file committed as
+    data, which reads would count as rows.
 
     ``lease_ttl_ms`` must match the longest TTL your writers run with
     (same default as every publish) — a claim younger than it is
@@ -5837,6 +5890,7 @@ def fsck_table(
         "snapshots_checked": 0,
         "files_checked": 0,
         "missing_files": [],
+        "hidden_files": [],
         "size_mismatches": [],
         "missing_dv": [],
         "unreadable_segments": [],
@@ -5895,6 +5949,13 @@ def fsck_table(
             seen_files.add(f)
             report["files_checked"] += 1
             p = _ref_path(fs, table_dir, f)
+            # a cited path below its version dir through a hidden
+            # component (``_v2/_dvp/part-…``) is a sidecar or temp
+            # file taken for data, even when it resolves
+            if _hidden(p[len(_ref_group(fs, table_dir, f)) + 1:]):
+                report["hidden_files"].append(
+                    {"snapshot": int(v), "file": f}
+                )
             if not _resolvable(p):
                 report["missing_files"].append(
                     {"snapshot": int(v), "file": f}
@@ -5960,6 +6021,7 @@ def fsck_table(
             report["stray_claims"].append(e)
     report["ok"] = not (
         report["missing_files"]
+        or report["hidden_files"]
         or report["size_mismatches"]
         or report["missing_dv"]
         or report["unreadable_segments"]
@@ -6494,182 +6556,70 @@ def _mor_commit(
     rewrote a matched file or changed its vectors raises instead of
     losing the race).
 
+    ``out_df=None`` is a pure delete (``delete_publish(delete_vectors=
+    True)``): no data write, the sidecar build runs inline.
+
     ``out_schema_json``/``out_fids`` (``(fids, next_id)``) carry a
     MERGE-widened schema (``merge_into(schema_evolution=True)``): the
     committed entry adopts them, new files stamp the extended ids, and
     pre-widening files read the added columns as NULL (schema-merge
     read semantics, same as append's merge mode)."""
-    from pyspark.sql import Observation, functions as F
-
-    # ---- data-write phase (no lease): the post-state rows
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, manifest))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    dv_fut = None
-    pool = None
-    try:
-        vdir = fs.join(table_dir, seg)
-        obs = Observation()
-        cnames, cmap, caggs = _constraint_aggs(manifest)
-        # ---- dv-write phase (no lease), CONCURRENT with the data
-        # write: the matched addresses (checkpointed upstream) and the
-        # post-state rows are independent pipelines that both must
-        # finish before the commit swap — submitting the sidecar build
-        # from a second driver thread lets its jobs back-fill executor
-        # slots left idle by the write's tail instead of running after
-        # it (optimization guide §2.6, overlap independent jobs). Both
-        # land in the same claimed staging dir (disjoint subpaths); on
-        # ANY failure the future is joined before cleanup so the
-        # reclaim never races an in-flight sidecar write.
-        dv0 = _load_dv(fs, table_dir, manifest)
+    dv0 = _load_dv(fs, table_dir, manifest)
+    schema_json = out_schema_json or manifest["schema"]
+    fids = out_fids[0] if out_fids else _field_ids_of(manifest)[0]
+    with _StagedCommit(fs, table_dir, manifest, who, lease_ttl_ms) as st:
         if addr_df is not None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(max_workers=1)
-            dv_fut = pool.submit(
-                _dv_build, spark, fs, table_dir, seg, addr_df,
-                cand_files, dv0,
-            )
-        writer = _pt_rebalance(
-            _materialize_partition_cols(
-                out_df, manifest.get("partition_spec")
-            ),
-            parts,
-        ).observe(
-            obs, F.count(F.lit(1)).alias("n"), *caggs
-        ).write
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(vdir)
-        _enforce_constraints(obs.get, cnames, cmap, who)
-        new_files, new_sizes = _scan_written(fs, vdir, seg)
-        n_new = int(obs.get["n"])
-        if n_new == 0:
-            # a zero-row post-state (all-delete or no-op merge) still
-            # leaves empty part files — never cite them; the staging
-            # dir becomes vacuum garbage
-            new_files, new_sizes = [], {}
-        new_refs: dict = {}
-        n_deleted = 0
-        if dv_fut is not None:
-            new_refs, n_deleted = dv_fut.result()
-            dv_fut = None
-        if not new_files and not new_refs:
-            # empty batch: nothing matched, nothing added — release the
-            # claim now rather than leaving it to vacuum's age reclaim
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return None
-        schema_json = out_schema_json or manifest["schema"]
-        fids = (
-            out_fids[0] if out_fids else _field_ids_of(manifest)[0]
-        )
-        if new_files:
-            seg_data = {"files": new_files, "file_sizes": new_sizes}
-            sc, bc = _index_defaults(
-                manifest, stats_cols, bloom_cols, schema_json
-            )
-            _enrich_seg(
-                spark, fs, table_dir, new_files, seg_data,
-                sc, bc, schema_json,
-            )
-            _stamp_fields(seg_data, fids)
-            _write_seg(fs, table_dir, seg, seg_data)
-        # ---- commit phase: short lease + address-validity rebase
-        prev = manifest
-        lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-            wait_ms=_COMMIT_WAIT_MS
-        )
-        try:
-            cur = _read_manifest(table_dir, fs)
-            if cur is None:
-                raise ConcurrentWriteError(
-                    "%s: manifest vanished" % who
-                )
-            if int(cur["version"]) != int(prev["version"]):
-                _check_rebase(prev, cur, who)
-                cur_live = set(_entry_files(fs, table_dir, cur))
-                if not set(new_refs) <= cur_live:
-                    raise ConcurrentWriteError(
-                        "%s: a concurrent commit "
-                        "rewrote file(s) holding matched keys — "
-                        "addresses are stale; re-run" % who
-                    )
-                cur_dv = _load_dv(fs, table_dir, cur)
-                if any(
-                    (dv0.get(f) or None) != (cur_dv.get(f) or None)
-                    for f in new_refs
-                ):
-                    raise ConcurrentWriteError(
-                        "%s: a concurrent delete "
-                        "changed a matched file's delete vectors — "
-                        "re-run" % who
-                    )
-                prev = cur
-            merged_dv = dict(_load_dv(fs, table_dir, prev))
-            merged_dv.update(new_refs)
-            segs, removed = _segments_of(fs, table_dir, prev)
-            if new_files:
-                segs = segs + [seg]
-            prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
-            entry = {
-                "segments": segs,
-                "removed": removed,
-                "n_rows": int(prev["n_rows"]) - n_deleted + n_new,
-                "n_files": prev_nf + len(new_files),
-                "size_bytes": prev_sz + sum(new_sizes.values()),
-                "schema": (
-                    out_schema_json if out_schema_json else prev["schema"]
+            # the matched addresses (checkpointed upstream) and the
+            # post-state rows are independent pipelines: the sidecar
+            # build runs beside the data write, its jobs back-filling
+            # executor slots the write's tail leaves idle (optimization
+            # guide §2.6, overlap independent jobs)
+            st.sidecar(
+                _DVP,
+                lambda rel: _dv_build(
+                    spark, fs, table_dir, rel, addr_df, cand_files, dv0
                 ),
-                "partition_by": parts,
-                "operation": operation,
-            }
-            if prev.get("partition_spec"):
-                entry["partition_spec"] = prev["partition_spec"]
+            )
+        if out_df is not None:
+            st.write(
+                _pt_rebalance(
+                    _materialize_partition_cols(
+                        out_df, manifest.get("partition_spec")
+                    ),
+                    parts,
+                ),
+                parts,
+            )
+            if st.n_rows == 0:
+                # a zero-row post-state (all-delete or no-op merge)
+                # still leaves empty part files — never cite them
+                st.files, st.sizes = [], {}
+        new_refs, n_deleted = st.sidecar_result() or ({}, 0)
+        if not st.files and not new_refs:
+            return None  # nothing matched, nothing added
+        st.stage(schema_json, fids, stats_cols, bloom_cols)
+
+        def entry_of(base):
+            entry = st.entry(base, operation, meta)
+            entry["n_rows"] -= n_deleted
+            if out_schema_json:
+                entry["schema"] = out_schema_json
             if out_fids:
-                entry["field_ids"] = out_fids[0]
-                entry["next_field_id"] = out_fids[1]
+                entry["field_ids"], entry["next_field_id"] = out_fids
+            merged_dv = {**_load_dv(fs, table_dir, base), **new_refs}
             if merged_dv:
-                entry["dv"] = _write_dv(fs, table_dir, seg, merged_dv)
+                entry["dv"] = _write_dv(fs, table_dir, st.seg, merged_dv)
                 entry["dv_rows"] = _dv_nrows(merged_dv)
-            if meta:
-                entry["meta"] = dict(meta)
-            version = int(prev["version"]) + 1
-            _commit(fs, table_dir, prev, version, entry, lease=lease)
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return version
-        finally:
-            lease.release()
-    except ConcurrentWriteError:
-        # callers with bounded retry (update_publish, merge re-runs)
-        # make lost races routine — reclaim the claimed _v<N> staging
-        # dir + claim marker now instead of leaving them to vacuum's
-        # TTL aging (best-effort; a crash still falls back to vacuum).
-        # Safe: every CWE raise above precedes the manifest swap, so
-        # nothing can reference this seg. Stop the heartbeat FIRST —
-        # a beat landing after the delete would recreate the claim —
-        # and join the in-flight sidecar build so the rmtree never
-        # races its writes.
-        beat.stop()
-        if dv_fut is not None:
-            try:
-                dv_fut.result()
-            except Exception:
-                pass
-        try:
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-        except Exception:
-            pass
-        try:
-            fs.rmtree(fs.join(table_dir, seg))
-        except Exception:
-            pass
-        raise
-    finally:
-        # joins any still-running sidecar build before unwinding (a
-        # write-phase failure must not leave a daemon thread writing
-        # into an abandoned staging dir)
-        if pool is not None:
-            pool.shutdown(wait=True)
-        beat.stop()
+            return entry
+
+        # address-validity rebase: the lease-less scan is safe iff no
+        # concurrent commit rewrote a matched file or changed its vectors
+        return st.commit(
+            entry_of,
+            lambda cur: _check_addressed(
+                fs, table_dir, manifest, cur, new_refs, who
+            ),
+        )
 
 
 def merge_into(
@@ -7597,11 +7547,8 @@ def _dv_delete(
     every dv'd file is still live, and no concurrent commit changed a
     touched file's vectors (that raises re-run — the sidecar union was
     built against the base state)."""
-    from pyspark.sql import functions as F
-
     parts = manifest.get("partition_by") or []
     res = _resolve_entry(fs, table_dir, manifest)
-    dv0 = _load_dv(fs, table_dir, manifest)
     candidates = (
         _prune_eq(res, res["files"], point) if point else res["files"]
     )
@@ -7615,90 +7562,11 @@ def _dv_delete(
         .where(condition)
         .select("_fp", "_ri")
     )
-    # the claimed dir hosts the dv manifest + this commit's sidecars
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, manifest))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    try:
-        new_refs, n_deleted = _dv_build(
-            spark, fs, table_dir, seg, addr, candidates, dv0
-        )
-        if not new_refs:
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return None
-        prev = manifest
-        lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-            wait_ms=_COMMIT_WAIT_MS
-        )
-        try:
-            cur = _read_manifest(table_dir, fs)
-            if cur is None:
-                raise ConcurrentWriteError(
-                    "delete_publish(dv): manifest vanished mid-delete"
-                )
-            if int(cur["version"]) != int(prev["version"]):
-                _check_rebase(prev, cur, "delete_publish(dv)")
-                cur_live = set(_entry_files(fs, table_dir, cur))
-                if not set(new_refs) <= cur_live:
-                    raise ConcurrentWriteError(
-                        "delete_publish(dv): a concurrent commit rewrote "
-                        "file(s) this delete addresses — positions are "
-                        "stale; re-run against the new snapshot"
-                    )
-                cur_dv = _load_dv(fs, table_dir, cur)
-                if any(
-                    (dv0.get(f) or None) != (cur_dv.get(f) or None)
-                    for f in new_refs
-                ):
-                    raise ConcurrentWriteError(
-                        "delete_publish(dv): a concurrent delete changed "
-                        "a touched file's delete vectors — re-run "
-                        "against the new snapshot"
-                    )
-                prev = cur
-            merged = dict(_load_dv(fs, table_dir, prev))
-            merged.update(new_refs)
-            segs, removed = _segments_of(fs, table_dir, prev)
-            prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
-            entry = {
-                "segments": segs,
-                "removed": removed,
-                "n_rows": int(prev["n_rows"]) - n_deleted,
-                "n_files": prev_nf,
-                "size_bytes": prev_sz,
-                "schema": prev["schema"],
-                "partition_by": parts,
-                "operation": "delete",
-                "dv": _write_dv(fs, table_dir, seg, merged),
-                "dv_rows": _dv_nrows(merged),
-            }
-            if prev.get("partition_spec"):
-                entry["partition_spec"] = prev["partition_spec"]
-            version = int(prev["version"]) + 1
-            _commit(fs, table_dir, prev, version, entry, lease=lease)
-            # commit done: the staging dir now exists and is referenced,
-            # so the claim marker's job (name uniqueness + in-flight
-            # liveness for vacuum) is over — release it so vacuum can
-            # tell committed dirs from in-flight staging writes
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return version
-        finally:
-            lease.release()
-    except ConcurrentWriteError:
-        # lost race: the bounded retry in delete_publish makes this
-        # ROUTINE, so don't leave the claimed _v<N> dir + staged _dvp
-        # sidecars to age out under vacuum's TTL — reclaim them now
-        # (best-effort; a crash here still falls back to vacuum)
-        try:
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-        except Exception:
-            pass
-        try:
-            fs.rmtree(fs.join(table_dir, seg))
-        except Exception:
-            pass
-        raise
-    finally:
-        beat.stop()
+    return _mor_commit(
+        spark, fs, table_dir, manifest, addr, candidates, None, parts,
+        lease_ttl_ms, None, None, None, who="delete_publish(dv)",
+        operation="delete",
+    )
 
 
 def compact_delete_vectors(
@@ -7749,82 +7617,53 @@ def compact_delete_vectors(
         # row-per-position v2 dataset still folds: the rewrite is the
         # upgrade path to the packed format)
         return None
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, manifest))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    try:
+    expected = {f: _dv_val_n(v) for f, v in dv0.items()}
+
+    def fold(rel):
         # fold in the CHUNK domain: v3 sidecars carry over as stored,
         # legacy refs pack in-plan; (file, chunk) is unique across the
         # union (each file's ref names one dataset) so no re-merge
-        merged = _dv_chunks_df(spark, fs, table_dir, dv0)
-        dsrel = "%s/%s" % (seg, _DVP)
-        dsdir = _ref_path(fs, table_dir, dsrel)
+        dsdir = _ref_path(fs, table_dir, rel)
         (
-            merged.repartition(max(1, min(len(dv0), 64)), "_dv_file")
+            _dv_chunks_df(spark, fs, table_dir, dv0)
+            .repartition(max(1, min(len(dv0), 64)), "_dv_file")
             .sortWithinPartitions("_dv_file", "_dv_chunk")
             .write.parquet(dsdir)
         )
         counts = _dv_ds_counts(spark, dsdir)
-        expected = {f: _dv_val_n(v) for f, v in dv0.items()}
         if counts != expected:
             raise RuntimeError(
                 "compact_delete_vectors: rewritten position counts "
                 "disagree with the manifest (%r vs %r) — aborting "
-                "before commit (staged dir is vacuum garbage)"
+                "before commit"
                 % (
                     {k: counts.get(k) for k in list(expected)[:3]},
                     {k: expected[k] for k in list(expected)[:3]},
                 )
             )
-        new_dv = {
-            f: {"ds": dsrel, "n": expected[f], "fmt": "bm"} for f in dv0
-        }
-        prev = manifest
-        lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-            wait_ms=_COMMIT_WAIT_MS
-        )
-        try:
-            cur = _read_manifest(table_dir, fs)
-            if cur is None:
-                raise ConcurrentWriteError(
-                    "compact_delete_vectors: manifest vanished"
-                )
-            if int(cur["version"]) != int(prev["version"]):
-                _check_rebase(prev, cur, "compact_delete_vectors")
-                cur_dv = _load_dv(fs, table_dir, cur)
-                cur_dv = {
-                    f: v for f, v in cur_dv.items() if _dv_val_n(v)
-                }
-                if cur_dv != dv0:
-                    raise ConcurrentWriteError(
-                        "compact_delete_vectors: a concurrent commit "
-                        "changed the delete vectors mid-fold — re-run"
-                    )
-                prev = cur
-            segs, removed = _segments_of(fs, table_dir, prev)
-            prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
-            entry = {
-                "segments": segs,
-                "removed": removed,
-                "n_rows": int(prev["n_rows"]),
-                "n_files": prev_nf,
-                "size_bytes": prev_sz,
-                "schema": prev["schema"],
-                "partition_by": prev.get("partition_by") or [],
-                "operation": "compact_dv",
-                "data_change": False,
-                "dv": _write_dv(fs, table_dir, seg, new_dv),
-                "dv_rows": _dv_nrows(new_dv),
-            }
-            if prev.get("partition_spec"):
-                entry["partition_spec"] = prev["partition_spec"]
-            version = int(prev["version"]) + 1
-            _commit(fs, table_dir, prev, version, entry, lease=lease)
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return version
-        finally:
-            lease.release()
-    finally:
-        beat.stop()
+        return {f: {"ds": rel, "n": expected[f], "fmt": "bm"} for f in dv0}
+
+    def same_dv(cur):
+        cur_dv = _load_dv(fs, table_dir, cur)
+        if {f: v for f, v in cur_dv.items() if _dv_val_n(v)} != dv0:
+            raise ConcurrentWriteError(
+                "compact_delete_vectors: a concurrent commit "
+                "changed the delete vectors mid-fold — re-run"
+            )
+
+    with _StagedCommit(
+        fs, table_dir, manifest, "compact_delete_vectors", lease_ttl_ms
+    ) as st:
+        st.sidecar(_DVP, fold)
+        new_dv = st.sidecar_result()
+
+        def entry_of(base):
+            entry = st.entry(base, "compact_dv", data_change=False)
+            entry["dv"] = _write_dv(fs, table_dir, st.seg, new_dv)
+            entry["dv_rows"] = _dv_nrows(new_dv)
+            return entry
+
+        return st.commit(entry_of, same_dv)
 
 
 def _footer_minmax(fs, path: str, cols) -> Optional[dict]:
@@ -8088,148 +7927,26 @@ def replace_files_publish(
     file being replaced is still live (nobody compacted or rewrote it
     meanwhile) — concurrent appends and disjoint rewrites merge
     cleanly, a conflicting rewrite raises."""
-    from pyspark.sql import Observation, functions as F
-
     fs = _fs_for(table_dir, df.sparkSession)
     prev = _base if _base is not None else _read_manifest(table_dir, fs)
     if prev is None:
         raise ValueError("replace_files_publish: no committed table here")
-    parts = prev.get("partition_by") or []
     replace_set = set(replace_files)
-    live = set(_entry_files(fs, table_dir, prev))
-    missing = replace_set - live
+    missing = replace_set - set(_entry_files(fs, table_dir, prev))
     if missing:
         raise ValueError(
             "replace_files_publish: not live in the current snapshot: %s"
             % sorted(missing)[:5]
         )
-    # ---- data-write phase: no lease
-    seg = _claim_vdir(fs, table_dir, _next_version(fs, table_dir, prev))
-    beat = _ClaimBeat(fs, table_dir, seg, lease_ttl_ms).start()
-    try:
-        vdir = fs.join(table_dir, seg)
-        obs = Observation()
-        cnames, cmap, caggs = _constraint_aggs(prev)
-        # NO _pt_rebalance here: replace_files callers (compact,
-        # compact_partitions, point deletes) hand in a frame whose
-        # partitioning IS the deliberate output layout (target file
-        # sizing); a rebalance by partition cols would collapse it
-        writer = _materialize_partition_cols(
-            df, prev.get("partition_spec")
-        ).observe(
-            obs, F.count(F.lit(1)).alias("n"), *caggs
-        ).write
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(vdir)
-        _enforce_constraints(
-            obs.get, cnames, cmap, "replace_files_publish"
-        )
-        new_files, new_sizes = _scan_written(fs, vdir, seg)
-        if new_files:
-            seg_data = {"files": new_files, "file_sizes": new_sizes}
-            sc, bc = _index_defaults(
-                prev, stats_cols, bloom_cols, prev["schema"]
-            )
-            _enrich_seg(
-                df.sparkSession, fs, table_dir, new_files, seg_data,
-                sc, bc, prev["schema"],
-            )
-            _stamp_fields(seg_data, _field_ids_of(prev)[0])
-            _write_seg(fs, table_dir, seg, seg_data)
-        # ---- commit phase: short lease + still-live rebase check
-        lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-            wait_ms=_COMMIT_WAIT_MS
-        )
-        try:
-            cur = _read_manifest(table_dir, fs)
-            if cur is None:
-                raise ConcurrentWriteError(
-                    "replace_files_publish: manifest vanished mid-write"
-                )
-            if int(cur["version"]) != int(prev["version"]):
-                _check_rebase(prev, cur, "replace_files_publish")
-                cur_live = set(_entry_files(fs, table_dir, cur))
-                if not replace_set <= cur_live:
-                    raise ConcurrentWriteError(
-                        "replace_files_publish: a concurrent commit rewrote "
-                        "file(s) this replace targets — re-run against the "
-                        "new snapshot"
-                    )
-                base_dv = _load_dv(fs, table_dir, prev)
-                cur_dv = _load_dv(fs, table_dir, cur)
-                if any(
-                    (base_dv.get(f) or []) != (cur_dv.get(f) or [])
-                    for f in replace_set
-                ):
-                    raise ConcurrentWriteError(
-                        "replace_files_publish: a concurrent delete changed "
-                        "a targeted file's delete vectors — re-run against "
-                        "the new snapshot"
-                    )
-                prev = cur
-            res = _resolve_entry(fs, table_dir, prev)
-            prev_dv = _load_dv(fs, table_dir, prev)
-            replaced = [f for f in res["files"] if f in replace_set]
-            replaced_rows = sum(
-                fs.file_rows(_ref_path(fs, table_dir, f)) - _dv_val_n(prev_dv.get(f))
-                for f in replaced
-            )
-            replaced_bytes = sum(
-                res["file_sizes"].get(f)
-                or fs.file_size(_ref_path(fs, table_dir, f))
-                for f in replaced
-            )
-            segs, removed = _segments_of(fs, table_dir, prev)
-            removed = sorted(set(removed) | replace_set)
-            if new_files:
-                segs = segs + [seg]
-            segs, removed = _prune_segments(fs, table_dir, segs, removed)
-            prev_nf, prev_sz = _entry_counters(fs, table_dir, prev)
-            carried = set(res["files"]) - replace_set
-            entry = {
-                "segments": segs,
-                "removed": removed,
-                "n_rows": int(prev["n_rows"]) - replaced_rows + int(obs.get["n"]),
-                "n_files": prev_nf - len(replaced) + len(new_files),
-                "size_bytes": prev_sz - replaced_bytes + sum(new_sizes.values()),
-                "schema": prev["schema"],
-                "partition_by": parts,
-                "operation": operation,
-                **_carry_dv(fs, table_dir, prev, seg, carried),
-            }
-            if prev.get("partition_spec"):
-                entry["partition_spec"] = prev["partition_spec"]
-            if not data_change:
-                entry["data_change"] = False
-            version = int(prev["version"]) + 1
-            _commit(fs, table_dir, prev, version, entry, lease=lease)
-            # commit done: the staging dir now exists and is referenced,
-            # so the claim marker's job (name uniqueness + in-flight
-            # liveness for vacuum) is over — release it so vacuum can
-            # tell committed dirs from in-flight staging writes
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-            return version
-        finally:
-            lease.release()
-    except ConcurrentWriteError:
-        # lost races are routine under the bounded re-run loops
-        # (update_publish CoW, replace_where_publish) — reclaim the
-        # staged dir + claim instead of aging them out under vacuum's
-        # TTL (best-effort; every CWE raise precedes the manifest swap).
-        # Stop the heartbeat FIRST so no beat recreates the claim.
-        beat.stop()
-        try:
-            fs.delete_file(fs.join(table_dir, seg + ".claim"))
-        except Exception:
-            pass
-        try:
-            fs.rmtree(fs.join(table_dir, seg))
-        except Exception:
-            pass
-        raise
-    finally:
-        beat.stop()
+    # NO _pt_rebalance here: replace_files callers (compact,
+    # compact_partitions, point deletes) hand in a frame whose
+    # partitioning IS the deliberate output layout (target file
+    # sizing); a rebalance by partition cols would collapse it
+    return _replace_publish(
+        _materialize_partition_cols(df, prev.get("partition_spec")),
+        fs, table_dir, prev, replace_set, "replace_files_publish",
+        lease_ttl_ms, stats_cols, bloom_cols, data_change, operation,
+    )
 
 
 def publish_clustered(

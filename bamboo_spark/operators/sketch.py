@@ -76,9 +76,14 @@ def cms_build(
     per occurrence (Zipf corpora repeat items thousands of times;
     cell sums are identical because sum(w) per cell is associative).
     Partial aggregation bounds the final shuffle at depth*width rows
-    per task, independent of corpus size; the item shuffle doubles as
-    the compute spreader, so no explicit fan-out is needed even on a
-    single-split source.
+    per task; the item shuffle doubles as the compute spreader, so no
+    explicit fan-out is needed even on a single-split source.
+
+    This shape ASSUMES a Zipf-like stream that repeats items heavily:
+    the distinct-item pre-aggregate shuffles O(distinct items) rows, so
+    its cost is NOT independent of corpus size — on a near-unique item
+    stream (ids, hashes) it is a full-corpus shuffle, where hashing
+    occurrences directly would shuffle only depth*width rows per task.
     """
     if depth < 1 or width < 1:
         raise ValueError("depth/width must be >= 1")
