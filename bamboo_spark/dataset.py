@@ -183,15 +183,8 @@ class Dataset:
         other_df = other.df if isinstance(other, Dataset) else other
         return self._wrap(self._df.intersect(other_df))
 
-    def with_column(self, name: str, col) -> "Dataset":
-        return self._wrap(self._df.withColumn(name, col))
-
     def drop(self, *cols) -> "Dataset":
         return self._wrap(self._df.drop(*cols))
-
-    def explode_outer_all(self) -> "FlatFrame":
-        """Convenience: flatten with OUTER join semantics."""
-        return self.flatten(join=JoinType.OUTER)
 
     # -- convenience -------------------------------------------------------
     def to_pandas(self, **kwargs) -> pd.DataFrame:

@@ -41,12 +41,6 @@ from bamboo_spark._localdf import local_df as _local_df
 from bamboo_spark.operators._cache import tracked_persist
 
 
-def _lit(s: str) -> str:
-    """DuckDB-side literal: standard SQL quote doubling ONLY — DuckDB
-    string literals do no backslash processing."""
-    return "'%s'" % s.replace("'", "''")
-
-
 def _lit_spark(s: str) -> str:
     """Spark-side literal: backslash FIRST (Spark SQL literals treat \\
     as an escape; a corpus symbol containing one would otherwise parse
@@ -172,26 +166,6 @@ def bpe_encode_counts(
         )
         .orderBy(id_col)
     )
-
-
-def _apply_merge_duck(lhs: str, rhs: str) -> Tuple[str, str]:
-    """(sel_expr, out_expr) over list column ``s`` (1-based DuckDB)."""
-    L, R = _lit(lhs), _lit(rhs)
-    cand = "(s[{j}] = %s AND s[{j} + 1] = %s)" % (L, R)
-    sel = (
-        "["
-        + cand.format(j="i")
-        + " AND ((i - (coalesce(list_max(list_filter(range(1, i + 1), j -> NOT "
-        + cand.format(j="j")
-        + ")), 0) + 1)) % 2 = 0) for i in range(1, len(s))]"
-    )
-    out = (
-        "list_filter([case when i < len(s) and sel[i] then %s "
-        "when i > 1 and sel[i - 1] then NULL "
-        "else s[i] end for i in range(1, len(s) + 1)], x -> x is not null)"
-        % _lit(lhs + rhs)
-    )
-    return sel, out
 
 
 def bpe_duck(n_merges: int, table: str = "documents", text_col: str = "text") -> str:

@@ -527,7 +527,7 @@ def _write_seg(fs, table_dir: str, seg: str, data: dict) -> None:
 
 
 _DV = "_dv.json"
-_DVP = "dvp"  # per-commit parquet sidecar dataset ``<seg>/_dvp``
+_DVP = "dvp"  # per-commit parquet sidecar dataset ``<seg>/_dvp/dvp``
 _DV_CACHE: dict = {}  # abs path -> parsed dict (dv files are immutable)
 _DV_CACHE_MAX = 1024
 
@@ -853,8 +853,9 @@ def _dv_ds_counts(spark, dsdir: str) -> dict:
 
 def _dv_positions_df(spark: SparkSession, fs, table_dir: str, dvmap: dict):
     """The positions of a dv (sub)manifest as a DataFrame
-    ``(_dv_file, _dv_base, _dv_sfx, _dv_pos)`` — the join side of every
-    merge-on-read mask. v1 entries build driver-side (legacy,
+    ``(_dv_file, _dv_base, _dv_sfx, _dv_pos)`` — how the mask's chunk
+    side (:func:`_dv_chunks_df`) reads refs stored row-per-position
+    before packing them. v1 entries build driver-side (legacy,
     point-delete-sized by that format's nature); v2 entries READ their
     parquet sidecar datasets distributively, so positions never pass
     through the driver at any scale. Returns None when ``dvmap`` is
@@ -1250,66 +1251,6 @@ def _rel_of(abs_uri: str, rel_files) -> Optional[str]:
     return None
 
 
-def _distributed_file_stats(
-    spark: SparkSession,
-    fs,
-    table_dir: str,
-    rel_files,
-    cols,
-    schema_json: Optional[str] = None,
-) -> dict:
-    """Per-file ``{relpath: {col: [min, max]}}`` via ONE distributed
-    Spark job per version dir: scan the files column-pruned to ``cols``,
-    group by ``input_file_name()``, min/max per file. Works on EVERY
-    backend (posix, ``file:``, ``hdfs:``, object stores) because the
-    executors read the files wherever they live — this is what lets
-    stats be recorded AT WRITE TIME (the cluster just produced the
-    files) instead of a posix-only driver loop after the fact. Hive
-    partition columns are real attributes under a basePath-anchored
-    read, so stats on partition columns work too (constant per file)."""
-    from pyspark.sql import functions as F, types as T
-
-    if not rel_files or not cols:
-        return {}
-    by_base: dict = {}
-    for f in rel_files:
-        by_base.setdefault(_ref_group(fs, table_dir, f), []).append(f)
-    out: dict = {}
-    for base, fl in by_base.items():
-        reader = spark.read
-        if schema_json:
-            reader = reader.schema(
-                T.StructType.fromJson(json.loads(schema_json))
-            )
-        df = reader.option(
-            "basePath", base
-        ).parquet(*[_ref_path(fs, table_dir, f) for f in fl])
-        cs = [c for c in cols if c in df.columns]
-        if not cs:
-            continue
-        rows = (
-            df.groupBy(F.input_file_name().alias("_f"))
-            .agg(
-                *[F.min(F.col(c)).alias("_mn%d" % i) for i, c in enumerate(cs)],
-                *[F.max(F.col(c)).alias("_mx%d" % i) for i, c in enumerate(cs)],
-            )
-            .collect()  # O(files in this version dir) — metadata-sized
-        )
-        for r in rows:
-            rel = _rel_of(r["_f"], fl)
-            if rel is None:
-                continue
-            st = {}
-            for i, c in enumerate(cs):
-                mn, mx = r["_mn%d" % i], r["_mx%d" % i]
-                if mn is None:
-                    continue
-                st[c] = [_json_stat(mn), _json_stat(mx)]
-            if st:
-                out[rel] = st
-    return out
-
-
 _BLOOM_M = 16384  # bits per file per column (2 KB) — plenty for the
 _BLOOM_K = 5      # ~128 MB-file distinct-value counts point lookups hit
 
@@ -1341,7 +1282,7 @@ def _bloom_canon_py(value) -> Optional[str]:
 
 def _bloom_positions_py(value, m_bits: int, k: int) -> Optional[List[int]]:
     """The k bloom bit positions for ``value`` — PURE-PYTHON twin of
-    the Spark expression in :func:`_distributed_file_blooms`. Both
+    the Spark expression in :func:`_distributed_file_indexes`. Both
     sides hash ``md5(canon(value) + ':' + str(i))`` (one canonical
     formatter, see :func:`_bloom_canon_py`) and take the first 60 bits
     mod m, so a position computed on the driver at planning time
@@ -1404,98 +1345,6 @@ def _bloom_canon_expr(df: DataFrame, c: str):
     )
 
 
-def _distributed_file_blooms(
-    spark: SparkSession,
-    fs,
-    table_dir: str,
-    rel_files,
-    cols,
-    schema_json: Optional[str] = None,
-    m_bits: int = _BLOOM_M,
-    k: int = _BLOOM_K,
-) -> dict:
-    """Per-file ``{relpath: {col: {m, k, b64}}}`` bloom filters, built
-    by ONE distributed job per version dir: each row contributes its k
-    md5-derived bit positions, collected as a per-file distinct set
-    (bounded by m bits) and packed into a bitset on the driver. The
-    collect is O(files × m/8) bytes — bounded by the BATCH being
-    published when called at write time (the intended path), never by
-    the table."""
-    import base64
-
-    from pyspark.sql import functions as F, types as T
-
-    if not rel_files or not cols:
-        return {}
-    by_base: dict = {}
-    for f in rel_files:
-        by_base.setdefault(_ref_group(fs, table_dir, f), []).append(f)
-    out: dict = {}
-    for base, fl in by_base.items():
-        reader = spark.read
-        if schema_json:
-            reader = reader.schema(
-                T.StructType.fromJson(json.loads(schema_json))
-            )
-        df = reader.option(
-            "basePath", base
-        ).parquet(*[_ref_path(fs, table_dir, f) for f in fl])
-        cs = [c for c in cols if c in df.columns]
-        if not cs:
-            continue
-        aggs = []
-        for ci, c in enumerate(cs):
-            for i in range(k):
-                # first 15 hex chars of md5 = 60 bits → fits a long;
-                # conv(..., 16, 10) matches Python int(hex, 16)
-                pos = F.pmod(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    _bloom_canon_expr(df, c),
-                                    F.lit(":%d" % i),
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long"),
-                    F.lit(m_bits),
-                ).cast("int")
-                aggs.append(
-                    F.collect_set(pos).alias("p_%d_%d" % (ci, i))
-                )
-        rows = (
-            df.groupBy(F.input_file_name().alias("_f"))
-            .agg(*aggs)
-            .collect()
-        )
-        for r in rows:
-            rel = _rel_of(r["_f"], fl)
-            if rel is None:
-                continue
-            per_col = {}
-            for ci, c in enumerate(cs):
-                bits = bytearray(m_bits // 8)
-                any_pos = False
-                for i in range(k):
-                    for pos in r["p_%d_%d" % (ci, i)] or []:
-                        bits[pos // 8] |= 1 << (pos % 8)
-                        any_pos = True
-                if any_pos:
-                    per_col[c] = {
-                        "m": m_bits,
-                        "k": k,
-                        "b64": base64.b64encode(bytes(bits)).decode(),
-                    }
-            if per_col:
-                out[rel] = per_col
-    return out
-
-
 def _distributed_file_indexes(
     spark: SparkSession,
     fs,
@@ -1507,12 +1356,22 @@ def _distributed_file_indexes(
     m_bits: int = _BLOOM_M,
     k: int = _BLOOM_K,
 ):
-    """Min/max stats AND bloom filters in ONE distributed job per
-    version dir: the same ``groupBy(input_file_name())`` scan carries
-    both the min/max aggregates and the bloom bit-position sets, so a
-    write that indexes both pays one pass over its delta files instead
-    of two. Returns ``(stats_dict, blooms_dict)`` shaped exactly like
-    :func:`_distributed_file_stats` / :func:`_distributed_file_blooms`."""
+    """The ONE per-file index scan, behind write-time indexing
+    (:func:`_enrich_seg`) and both backfills (:func:`_backfill_indexes`):
+    one distributed job per version dir scans the files column-pruned
+    to the index columns and groups by ``input_file_name()``; the same
+    aggregate carries the min/max of ``stats_cols`` and the bloom
+    bit-position sets of ``bloom_cols``. Works on every backend (the
+    executors read the files wherever they live); under the
+    basePath-anchored read hive partition columns are real attributes,
+    so they index too (constant per file).
+
+    Returns ``(stats, blooms)``: ``{rel: {col: [min, max]}}`` and
+    ``{rel: {col: {m, k, b64}}}`` — each row contributes its k
+    md5-derived bit positions (:func:`_bloom_positions_py` is the
+    driver-side twin), collected as a per-file distinct set bounded by
+    m bits and packed into a bitset on the driver: O(files × m/8)
+    bytes, bounded by the files indexed, never by the table."""
     import base64
 
     from pyspark.sql import functions as F, types as T
@@ -1545,6 +1404,8 @@ def _distributed_file_indexes(
             aggs.append(F.max(F.col(c)).alias("_mx%d" % i))
         for ci, c in enumerate(bcs):
             for i in range(k):
+                # first 15 hex chars of md5 = 60 bits → fits a long;
+                # conv(..., 16, 10) matches Python int(hex, 16)
                 pos = F.pmod(
                     F.conv(
                         F.substring(
@@ -2382,10 +2243,10 @@ class _StagedCommit:
     ``.claim`` marker) and keeps the claim fresh (:class:`_ClaimBeat`)
     until the commit. The data write lands in it in APPEND mode — the
     exclusive claim, not ``ErrorIfExists``, is what makes it fresh —
-    and a sidecar lands in ``<vdir>/_<name>``, a hidden path that
-    :func:`_scan_written` (Spark's own rule) never lists as data. So
-    the sidecar build runs concurrently with the data write without
-    colliding with it or being cited as a data file.
+    and a sidecar lands in ``<vdir>/_<name>/<name>``, below a hidden
+    dir that :func:`_scan_written` (Spark's own rule) never lists as
+    data. So the sidecar build runs concurrently with the data write
+    without colliding with it or being cited as a data file.
 
     Flow: ``sidecar`` (optional; starts on a second driver thread when
     ``write`` starts, or runs inline when nothing is written),
@@ -2449,9 +2310,13 @@ class _StagedCommit:
 
     def sidecar(self, name: str, build) -> None:
         """Queue ``build(rel)``, which writes a sidecar dataset at the
-        table-relative ``rel = <seg>/_<name>`` and returns what the
-        commit needs from it."""
-        self._queued = (build, "%s/_%s" % (self.seg, name))
+        table-relative ``rel = <seg>/_<name>/<name>`` and returns what
+        the commit needs from it. The hidden ``_<name>`` dir keeps the
+        dataset off the data scan; the dataset root itself is not
+        hidden, because Spark judges a read's root paths by their own
+        name and warns "All paths were ignored" for a hidden one (the
+        rows still read, but the warning says otherwise)."""
+        self._queued = (build, "%s/_%s/%s" % (self.seg, name, name))
 
     def sidecar_result(self):
         """Join the sidecar — running it inline when no ``write``
@@ -3442,15 +3307,12 @@ def _read_files(
     pruning predicates still hit the file index).
 
     ``dv`` = the snapshot's delete-vector manifest (see
-    :func:`_load_dv`): files carrying a vector are read with the
-    parquet ``_metadata`` row index and their deleted positions
-    anti-joined out (merge-on-read); files without vectors — almost
-    all of a 100 TB table — take the plain scan path with zero
-    overhead. The anti-join side is :func:`_dv_positions_df` — a
-    distributed sidecar read for v2 refs — equi-keyed on file basename
-    + row position (AQE broadcasts it when small; a billion-position
-    vector stays a shuffle join instead of a driver OOM)."""
-    from pyspark.sql import functions as F, types as T
+    :func:`_load_dv`): files carrying a vector are read through the
+    masked row-address read (:func:`_read_files_with_pos`) and their
+    deleted rows dropped (merge-on-read); files without vectors —
+    almost all of a 100 TB table — take the plain scan path with zero
+    overhead."""
+    from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(schema_json))
     if not files:
@@ -3477,20 +3339,11 @@ def _read_files(
     )
     if dv:
         # metadata columns resolve only on the scan relation itself
-        # (not across a union), so the position-projected read comes
-        # from the per-prefix helper
-        masked = _read_files_with_pos(
+        # (not across a union), so the masked files read separately
+        kept = _read_files_with_pos(
             spark, fs, table_dir, sorted(dv), schema_json, partitioned,
-            evo=evo,
-        ).withColumnsRenamed({"_fp": "_dv_fp", "_ri": "_dv_ri"})
-        # CHUNK-NATIVE mask (see _dv_mask): the join side is bitmap
-        # chunk rows read as stored — a billion-position vector joins
-        # as ~1M chunk rows, broadcastable, instead of a billion-row
-        # explode
-        chunks = _dv_chunks_df(spark, fs, table_dir, dv)
-        kept = _dv_mask(masked, "_dv_fp", "_dv_ri", chunks).drop(
-            "_dv_fp", "_dv_ri"
-        )
+            evo=evo, dv=dv,
+        ).drop("_fp", "_ri")
         out = kept if out is None else out.unionByName(kept)
     return _ordered(out)
 
@@ -3503,19 +3356,36 @@ def _read_files_with_pos(
     schema_json: str,
     partitioned: bool,
     evo: Optional[dict] = None,
+    dv: Optional[dict] = None,
 ) -> DataFrame:
-    """Plain (unmasked) scan of a manifest-relative file list with the
-    parquet ``_metadata`` projected to ``_fp`` (file URI) and ``_ri``
-    (row position in file) — the row-address read behind delete-vector
-    writes. Metadata columns must be selected per scan relation (they
-    don't survive a union), hence the dedicated helper."""
+    """Scan of a manifest-relative file list with the parquet
+    ``_metadata`` projected to ``_fp`` (file URI) and ``_ri`` (row
+    position in file) — the row-address read behind every row-level
+    writer and the masked half of :func:`_read_files`. Metadata columns
+    must be selected per scan relation (they don't survive a union),
+    hence the dedicated helper.
+
+    ``dv`` = the snapshot's delete-vector manifest: rows it deletes
+    never come back. Only the scanned files that carry a vector join
+    the mask — the CHUNK-NATIVE :func:`_dv_mask` against their bitmap
+    chunk rows read as stored (:func:`_dv_chunks_df`), so a
+    billion-position vector joins as ~1M chunk rows, broadcastable,
+    instead of a billion-row explode. No ``dv``: a plain unmasked
+    scan."""
     from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(schema_json))
-    return _scan_groups(
+    out = _scan_groups(
         spark, fs, table_dir, list(files), schema, partitioned, evo,
         with_pos=True,
     )
+    scanned = set(files)
+    dv = {f: v for f, v in (dv or {}).items() if f in scanned and v}
+    if dv:
+        out = _dv_mask(
+            out, "_fp", "_ri", _dv_chunks_df(spark, fs, table_dir, dv)
+        )
+    return out
 
 
 def _evo_of(entry: dict, res: dict) -> Optional[dict]:
@@ -6224,6 +6094,68 @@ def _prune_key_candidates(res: dict, candidates, col: str, key_vals):
     return kept
 
 
+def _probe_candidates(res: dict, keys, key_df) -> List[str]:
+    """The merge key probe: the snapshot's files that may hold a key of
+    ``key_df`` (the batch's distinct key frame). Range+bloom pruning
+    (:func:`_prune_key_candidates`) needs a single-column key and
+    per-file indexes, and runs only on a data-sized table —
+    ``_KEY_PRUNE_MIN_FILES`` files or ``_KEY_PRUNE_MIN_BYTES`` bytes:
+    the probe costs a key scan and a driver collect (2 jobs), and on a
+    handful of small files it can prune at most that handful of cheap
+    opens. It collects AT MOST cap+1 keys, never a table-sized batch's
+    whole key set, so ``#keys × #files`` stays driver-sized."""
+    candidates = list(res["files"])
+    if (
+        len(keys) == 1
+        and (res["file_blooms"] or res["file_stats"])
+        and (
+            len(candidates) >= _KEY_PRUNE_MIN_FILES
+            or sum(res["file_sizes"].get(f) or 0 for f in candidates)
+            >= _KEY_PRUNE_MIN_BYTES
+        )
+    ):
+        cap = 2_000_000 // len(candidates)
+        key_vals = [r[0] for r in key_df.limit(cap + 1).collect()]
+        if key_vals and len(key_vals) <= cap:
+            candidates = _prune_key_candidates(
+                res, candidates, keys[0], key_vals
+            )
+    return candidates
+
+
+def _merge_schema(df: DataFrame, manifest: dict, schema_evolution: bool,
+                  who: str, what: str):
+    """The merge writers' schema step: ``df`` must carry exactly the
+    table's columns — the merged rows land in new files read under the
+    MANIFEST schema, so a renamed/retyped column would corrupt quietly
+    at scan time. ``schema_evolution=True`` relaxes that to ADD-ONLY
+    widening (:func:`_widen_schema`) and aligns ``df`` to the (possibly
+    widened) column order, NULL-filling table columns it lacks.
+    Returns ``(df, out_schema_json, out_fids)``: the widened schema
+    (None unless a column was added or widened) and ``(fids, next_id)``
+    (None unless a column was added)."""
+    src_fields = json.loads(df.schema.json())["fields"]
+    new_sig = [(f["name"], f["type"]) for f in src_fields]
+    old_sig = [
+        (f["name"], f["type"])
+        for f in json.loads(manifest["schema"])["fields"]
+    ]
+    if new_sig == old_sig:
+        return df, None, None
+    if not schema_evolution:
+        raise ValueError(
+            "%s: %s schema differs from the committed table schema "
+            "(pass schema_evolution=True to add new nullable columns): "
+            "%s=%s table=%s" % (who, what, what, new_sig, old_sig)
+        )
+    out_schema_json, out_fids = _widen_schema(manifest, src_fields, who)
+    return (
+        _align_to(df, out_schema_json or manifest["schema"]),
+        out_schema_json,
+        out_fids,
+    )
+
+
 def merge_publish(
     changes: DataFrame,
     table_dir: str,
@@ -6316,8 +6248,13 @@ def merge_publish_incremental(
     collapsed per key by ``scale.cdc_apply`` against an empty base:
     last writer by ``version_cols`` wins, tombstones net to absent).
 
-    The address scan is bloom-pruned when the table has per-file
-    blooms on the (single) key column: only candidate files open.
+    The address scan opens only the files the key probe keeps — the
+    probe ``merge_into`` runs (:func:`_probe_candidates`): range+bloom
+    pruning on a single-column key with per-file indexes, gated to
+    tables of at least ``_KEY_PRUNE_MIN_FILES`` files or
+    ``_KEY_PRUNE_MIN_BYTES`` bytes; below that every live file is
+    scanned, which is cheaper than the probe's two jobs (a
+    ``publish_stream`` CDC sink pays them per micro-batch otherwise).
     Concurrency is optimistic like every publish: the scan runs
     lease-less; at commit the rebase succeeds iff the table kept its
     schema/layout, every matched file is still live, and their delete
@@ -6330,7 +6267,7 @@ def merge_publish_incremental(
     columns NULL-fills them — the upstream-added-a-column case a CDC
     pipeline hits first, same contract as
     ``merge_into(schema_evolution=True)``."""
-    from pyspark.sql import Observation, functions as F
+    from pyspark.sql import functions as F
 
     from bamboo_spark.operators.scale import cdc_apply
 
@@ -6363,54 +6300,15 @@ def merge_publish_incremental(
         base_empty, changes, keys, vers, op_col=op_col,
         delete_op=delete_op,
     )
-    # strict schema contract, same rule as append_publish: the merged
-    # rows land in new files read under the MANIFEST schema — a
-    # renamed/retyped column would corrupt quietly at scan time.
-    # schema_evolution=True relaxes it to ADD-ONLY widening (the
-    # upstream-added-a-column CDC case), _widen_schema's rules.
-    new_sig = [
-        (f["name"], f["type"])
-        for f in json.loads(upserts.schema.json())["fields"]
-    ]
-    old_sig = [
-        (f["name"], f["type"])
-        for f in json.loads(manifest["schema"])["fields"]
-    ]
-    out_schema_json = out_fids = None
-    if new_sig != old_sig:
-        if not schema_evolution:
-            raise ValueError(
-                "merge_publish_incremental: batch schema differs from "
-                "the committed table schema (pass schema_evolution="
-                "True to add new nullable columns): batch=%s table=%s"
-                % (new_sig, old_sig)
-            )
-        out_schema_json, out_fids = _widen_schema(
-            manifest,
-            json.loads(upserts.schema.json())["fields"],
-            "merge_publish_incremental",
-        )
-        upserts = _align_to(
-            upserts, out_schema_json or manifest["schema"]
-        )
+    upserts, out_schema_json, out_fids = _merge_schema(
+        upserts, manifest, schema_evolution,
+        "merge_publish_incremental", "batch",
+    )
     upserts = upserts.localCheckpoint(eager=True)  # write + key probe
     batch_keys = changes.select(*keys).distinct()
     # ---- address scan (no lease): where do the touched keys live NOW?
     res = _resolve_entry(fs, table_dir, manifest)
-    candidates = list(res["files"])
-    if (
-        candidates
-        and len(keys) == 1
-        and (res["file_blooms"] or res["file_stats"])
-    ):
-        # driver-side pruning is worth it only while #keys × #files is
-        # small — collect AT MOST cap+1 keys, never the whole batch
-        cap = 2_000_000 // len(candidates)
-        key_vals = [r[0] for r in batch_keys.limit(cap + 1).collect()]
-        if key_vals and len(key_vals) <= cap:
-            candidates = _prune_key_candidates(
-                res, candidates, keys[0], key_vals
-            )
+    candidates = _probe_candidates(res, keys, batch_keys)
     addr = None
     if candidates:
         # matched-row ADDRESSES as a DataFrame — never collected; the
@@ -6720,36 +6618,16 @@ def merge_into(
             operation="merge",
         )
     parts = manifest.get("partition_by") or []
-    src_fields = json.loads(source.schema.json())["fields"]
-    new_sig = [(f["name"], f["type"]) for f in src_fields]
-    old_fields = json.loads(manifest["schema"])["fields"]
-    old_sig = [(f["name"], f["type"]) for f in old_fields]
-    out_schema_json: Optional[str] = None
-    out_fids: Optional[tuple] = None
-    if new_sig != old_sig:
-        if not schema_evolution:
-            raise ValueError(
-                "merge_into: source schema differs from the committed "
-                "table schema (pass schema_evolution=True to add new "
-                "nullable columns): source=%s table=%s"
-                % (new_sig, old_sig)
-            )
-        # ADD-ONLY widening (shared rules, see _widen_schema), then
-        # align the source to the (possibly widened) table column
-        # order, NULL-filling table columns the source lacks
-        out_schema_json, out_fids = _widen_schema(
-            manifest, src_fields, "merge_into"
-        )
-        source = _align_to(
-            source, out_schema_json or manifest["schema"]
-        )
+    source, out_schema_json, out_fids = _merge_schema(
+        source, manifest, schema_evolution, "merge_into", "source"
+    )
     cols = [
         f["name"]
         for f in json.loads(out_schema_json or manifest["schema"])[
             "fields"
         ]
     ]
-    tgt_cols = {n for n, _ in old_sig}
+    tgt_cols = {f["name"] for f in json.loads(manifest["schema"])["fields"]}
     src_typed = {
         f.name: f.dataType for f in source.schema.fields
     }
@@ -6759,48 +6637,24 @@ def merge_into(
     res = _resolve_entry(fs, table_dir, manifest)
     dv0 = _load_dv(fs, table_dir, manifest)
     nmbs = when_not_matched_by_source_delete
-    candidates = list(res["files"])
-    if nmbs is None and len(keys) == 1 and (
-        res["file_blooms"] or res["file_stats"]
-    ) and (
-        len(candidates) >= _KEY_PRUNE_MIN_FILES
-        or sum(
-            res["file_sizes"].get(f) or 0 for f in candidates
-        ) >= _KEY_PRUNE_MIN_BYTES
-    ):
-        # range+bloom-prune the probe to files that may hold source
-        # keys — valid only while no clause targets rows ABSENT from
-        # the source; collect AT MOST cap+1 keys, never a table-sized
-        # source's whole key set. Gated on candidate-set size: the
-        # probe costs a source key scan + a driver collect (2 jobs),
-        # and on a table of a handful of small files it can prune at
-        # most that handful of cheap opens — strictly overhead. Any
-        # data-sized table (many files OR real bytes) keeps the probe,
-        # which is where it turns a table scan into a few file opens.
-        cap = 2_000_000 // len(candidates)
-        key_vals = [r[0] for r in src_keys.limit(cap + 1).collect()]
-        if key_vals and len(key_vals) <= cap:
-            candidates = _prune_key_candidates(
-                res, candidates, keys[0], key_vals
-            )
+    # the key probe prunes only while no clause targets rows ABSENT
+    # from the source
+    candidates = (
+        _probe_candidates(res, keys, src_keys)
+        if nmbs is None
+        else list(res["files"])
+    )
     delete_cond = when_matched_delete_condition
     update_cond = when_matched_update_condition or "true"
     fired_m = None  # matched rows where any clause fires, with address
     matched_keys = None
     tgt = None
     if candidates:
+        # already-deleted rows never match (merge-on-read mask)
         tgt = _read_files_with_pos(
             spark, fs, table_dir, candidates, manifest["schema"],
-            bool(parts), evo=_evo_of(manifest, res),
+            bool(parts), evo=_evo_of(manifest, res), dv=dv0,
         )
-        dv_scanned = {f: v for f, v in dv0.items() if f in set(candidates)}
-        if dv_scanned:
-            # already-deleted rows never match (merge-on-read mask) —
-            # chunk-native bit test against the stored bitmap rows
-            tgt = _dv_mask(
-                tgt, "_fp", "_ri",
-                _dv_chunks_df(spark, fs, table_dir, dv_scanned),
-            )
         # ---- the matched join, materialized ONCE (r13): the dup
         # check, the fired-row addresses (_dv_build), the UPDATE
         # post-state and the insert anti-join key set all consume this
@@ -7102,6 +6956,35 @@ def _keep_pred(condition: str) -> str:
     return "not coalesce(cast((%s) as boolean), false)" % condition
 
 
+_CONFLICT_ATTEMPTS = 3  # runs of a row-level writer before a lost race raises
+
+
+def _retry_on_conflict(fs, table_dir: str, manifest: dict, run):
+    """``run(manifest)``, re-run against a freshly read snapshot when
+    it loses an optimistic race (:class:`ConcurrentWriteError`), at
+    most ``_CONFLICT_ATTEMPTS`` runs; then the caller sees the
+    conflict."""
+    for attempt in range(_CONFLICT_ATTEMPTS):
+        try:
+            return run(manifest)
+        except ConcurrentWriteError:
+            if attempt == _CONFLICT_ATTEMPTS - 1:
+                raise
+            manifest = _read_manifest(table_dir, fs)
+            if manifest is None:
+                raise
+
+
+def _matched_files(addr_df: DataFrame, files) -> List[str]:
+    """The manifest refs among ``files`` holding a row of ``addr_df``
+    (a row-address frame, :func:`_read_files_with_pos`): one distinct
+    collect of file URIs, O(matched files)."""
+    uris = [r[0] for r in addr_df.select("_fp").distinct().collect()]
+    return sorted(
+        {rel for rel in (_rel_of(u, files) for u in uris) if rel is not None}
+    )
+
+
 def delete_publish(
     spark: SparkSession,
     table_dir: str,
@@ -7156,52 +7039,35 @@ def delete_publish(
         # no-op), so a lost optimistic race retries against the fresh
         # snapshot automatically — bounded, then the caller sees the
         # conflict (same policy Delta applies to commutable commits)
-        for attempt in range(3):
-            try:
-                return _dv_delete(
-                    spark, fs, table_dir, manifest, condition, point,
-                    lease_ttl_ms,
-                )
-            except ConcurrentWriteError:
-                if attempt == 2:
-                    raise
-                manifest = _read_manifest(table_dir, fs)
-                if manifest is None:
-                    raise
+        return _retry_on_conflict(
+            fs, table_dir, manifest,
+            lambda m: _dv_delete(
+                spark, fs, table_dir, m, condition, point, lease_ttl_ms
+            ),
+        )
     if point:
         # INDEXED point delete: ``point`` = {col: value} names equality
         # predicates IMPLIED by ``condition`` (caller's contract — e.g.
         # condition="user_id = 4", point={"user_id": 4}). Per-file
         # blooms/stats shrink the candidate set WITHOUT opening files;
-        # one scan of the candidates finds the files actually holding
-        # matches; only THOSE files are rewritten (file-granular
-        # replace). Erasing one user costs a few file opens + a few
-        # file rewrites, not a partition — or table — rewrite.
+        # one masked scan of the candidates finds the files actually
+        # holding live matches (a row a delete vector already erased
+        # matches nothing); only THOSE files are rewritten (file-
+        # granular replace). Erasing one user costs a few file opens +
+        # a few file rewrites, not a partition — or table — rewrite.
         # Conservative: unindexed files stay candidates.
         res = _resolve_entry(fs, table_dir, manifest)
         candidates = _prune_eq(res, res["files"], point)
         if not candidates:
             return None
         dv0 = _load_dv(fs, table_dir, manifest)
-        cand_df = _read_files(
-            spark, fs, table_dir, candidates, manifest["schema"],
-            bool(parts), evo=_evo_of(manifest, res),
-        )
-        matched_abs = [
-            r[0]
-            for r in cand_df.where(condition)
-            .select(F.input_file_name())
-            .distinct()
-            .collect()
-        ]
-        matched = sorted(
-            {
-                rel
-                for rel in (
-                    _rel_of(a, candidates) for a in matched_abs
-                )
-                if rel is not None
-            }
+        evo = _evo_of(manifest, res)
+        matched = _matched_files(
+            _read_files_with_pos(
+                spark, fs, table_dir, candidates, manifest["schema"],
+                bool(parts), evo=evo, dv=dv0,
+            ).where(condition),
+            candidates,
         )
         if not matched:
             return None
@@ -7210,7 +7076,7 @@ def delete_publish(
         # its dv'd rows
         kept = _read_files(
             spark, fs, table_dir, matched, manifest["schema"],
-            bool(parts), dv=dv0, evo=_evo_of(manifest, res),
+            bool(parts), dv=dv0, evo=evo,
         ).where(_keep_pred(condition))
         return replace_files_publish(
             kept, table_dir, matched, lease_ttl_ms=lease_ttl_ms,
@@ -7310,118 +7176,90 @@ def update_publish(
     manifest = _read_manifest(table_dir, fs)
     if manifest is None:
         raise ValueError("update_publish: no committed table here")
-    for attempt in range(3):
-        try:
-            schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-            names = [f.name for f in schema.fields]
-            unknown = sorted(c for c in set_map if c not in names)
-            if unknown:
-                raise ValueError(
-                    "update_publish: SET names unknown column(s) %s "
-                    "(schema: %s) — add columns via evolve/merge "
-                    "schema_evolution first" % (unknown, names)
-                )
-            parts = manifest.get("partition_by") or []
-            res = _resolve_entry(fs, table_dir, manifest)
-            candidates = (
-                _prune_eq(res, res["files"], point)
-                if point
-                else res["files"]
+
+    def run(manifest: dict) -> Optional[int]:
+        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        names = [f.name for f in schema.fields]
+        unknown = sorted(c for c in set_map if c not in names)
+        if unknown:
+            raise ValueError(
+                "update_publish: SET names unknown column(s) %s "
+                "(schema: %s) — add columns via evolve/merge "
+                "schema_evolution first" % (unknown, names)
             )
-            if not candidates:
+        parts = manifest.get("partition_by") or []
+        res = _resolve_entry(fs, table_dir, manifest)
+        candidates = (
+            _prune_eq(res, res["files"], point) if point else res["files"]
+        )
+        if not candidates:
+            return None
+        dv0 = _load_dv(fs, table_dir, manifest)
+        evo = _evo_of(manifest, res)
+        # rows already dv-deleted must never match — an UPDATE that
+        # re-emitted them would resurrect erased rows
+        matched = _read_files_with_pos(
+            spark, fs, table_dir, candidates, manifest["schema"],
+            bool(parts), evo=evo, dv=dv0,
+        ).where(condition)
+        typed = {f.name: f.dataType for f in schema.fields}
+        if not delete_vectors:
+            # COPY-ON-WRITE: rewrite exactly the files that contain
+            # matches; unmatched rows of those files carry into the
+            # rewrite (masked — a file's dv'd rows must never
+            # resurrect), everything else carries by reference
+            mfiles = _matched_files(matched, candidates)
+            if not mfiles:
                 return None
-            dv0 = _load_dv(fs, table_dir, manifest)
-            tgt = _read_files_with_pos(
-                spark, fs, table_dir, candidates, manifest["schema"],
-                bool(parts), evo=_evo_of(manifest, res),
+            rw = _read_files(
+                spark, fs, table_dir, mfiles, manifest["schema"],
+                bool(parts), dv=dv0, evo=evo,
             )
-            cset = {c for c in candidates}
-            dv_scanned = {f: v for f, v in dv0.items() if f in cset}
-            if dv_scanned:
-                # rows already dv-deleted must never match — an UPDATE
-                # that re-emitted them would resurrect erased rows
-                tgt = _dv_mask(
-                    tgt, "_fp", "_ri",
-                    _dv_chunks_df(spark, fs, table_dir, dv_scanned),
-                )
-            matched = tgt.where(condition)
-            typed = {f.name: f.dataType for f in schema.fields}
-            if not delete_vectors:
-                # COPY-ON-WRITE: rewrite exactly the files that contain
-                # matches; unmatched rows of those files carry into the
-                # rewrite (masked — a file's dv'd rows must never
-                # resurrect), everything else carries by reference
-                matched_abs = [
-                    r[0]
-                    for r in matched.select("_fp").distinct().collect()
-                ]
-                mfiles = sorted(
-                    {
-                        rel
-                        for rel in (
-                            _rel_of(a, candidates) for a in matched_abs
-                        )
-                        if rel is not None
-                    }
-                )
-                if not mfiles:
-                    return None
-                rw = _read_files(
-                    spark, fs, table_dir, mfiles, manifest["schema"],
-                    bool(parts), dv=dv0, evo=_evo_of(manifest, res),
-                )
-                cond = F.expr(condition)
-                out = rw.select(
-                    *[
-                        (
-                            F.when(
-                                cond,
-                                F.expr(set_map[c]).cast(typed[c]),
-                            )
-                            .otherwise(F.col(c))
-                            .alias(c)
-                            if c in set_map
-                            else F.col(c)
-                        )
-                        for c in names
-                    ]
-                )
-                return replace_files_publish(
-                    out, table_dir, mfiles, lease_ttl_ms=lease_ttl_ms,
-                    stats_cols=stats_cols, bloom_cols=bloom_cols,
-                    _base=manifest, operation="update",
-                )
-            # both the post-SET write and the address build derive
-            # from `matched` — persist the DELTA-sized frame so the
-            # candidate files scan once, not twice (at 100 TB with a
-            # selective condition the candidate scan is the dominant
-            # cost; `matched` is O(updated rows) by definition)
-            matched = matched.persist()
-            addr = matched.select("_fp", "_ri")
-            out = matched.select(
+            cond = F.expr(condition)
+            out = rw.select(
                 *[
                     (
-                        F.expr(set_map[c]).cast(typed[c]).alias(c)
+                        F.when(cond, F.expr(set_map[c]).cast(typed[c]))
+                        .otherwise(F.col(c))
+                        .alias(c)
                         if c in set_map
                         else F.col(c)
                     )
                     for c in names
                 ]
             )
-            try:
-                return _mor_commit(
-                    spark, fs, table_dir, manifest, addr, candidates,
-                    out, parts, lease_ttl_ms, stats_cols, bloom_cols,
-                    None, who="update_publish", operation="update",
+            return replace_files_publish(
+                out, table_dir, mfiles, lease_ttl_ms=lease_ttl_ms,
+                stats_cols=stats_cols, bloom_cols=bloom_cols,
+                _base=manifest, operation="update",
+            )
+        # both the post-SET write and the address build derive from
+        # `matched` — persist the DELTA-sized frame so the candidate
+        # files scan once, not twice (at 100 TB with a selective
+        # condition the candidate scan is the dominant cost; `matched`
+        # is O(updated rows) by definition)
+        matched = matched.persist()
+        addr = matched.select("_fp", "_ri")
+        out = matched.select(
+            *[
+                (
+                    F.expr(set_map[c]).cast(typed[c]).alias(c)
+                    if c in set_map
+                    else F.col(c)
                 )
-            finally:
-                matched.unpersist()
-        except ConcurrentWriteError:
-            if attempt == 2:
-                raise
-            manifest = _read_manifest(table_dir, fs)
-            if manifest is None:
-                raise
+                for c in names
+            ]
+        )
+        try:
+            return _mor_commit(
+                spark, fs, table_dir, manifest, addr, candidates,
+                out, parts, lease_ttl_ms, stats_cols, bloom_cols,
+                None, who="update_publish", operation="update",
+            )
+        finally:
+            matched.unpersist()
+
+    return _retry_on_conflict(fs, table_dir, manifest, run)
 
 
 def replace_where_publish(
@@ -7457,8 +7295,6 @@ def replace_where_publish(
     column scans only its slice. ``df`` is evaluated once for the
     out-of-slice guard and once per attempt for the write — persist or
     localCheckpoint an expensive recompute before passing it in."""
-    from pyspark.sql import functions as F
-
     spark = df.sparkSession
     fs = _fs_for(table_dir, spark)
     manifest = _read_manifest(table_dir, fs)
@@ -7471,58 +7307,37 @@ def replace_where_publish(
             "condition %r (first: %s) — a backfill must stay inside "
             "its declared slice" % (condition, stray[0])
         )
-    for attempt in range(3):
-        try:
-            parts = manifest.get("partition_by") or []
-            res = _resolve_entry(fs, table_dir, manifest)
-            dv0 = _load_dv(fs, table_dir, manifest)
-            aligned = _align_to(df, manifest["schema"])
-            tgt = _read_files_with_pos(
+
+    def run(manifest: dict) -> int:
+        parts = manifest.get("partition_by") or []
+        res = _resolve_entry(fs, table_dir, manifest)
+        dv0 = _load_dv(fs, table_dir, manifest)
+        evo = _evo_of(manifest, res)
+        aligned = _align_to(df, manifest["schema"])
+        mfiles = _matched_files(
+            _read_files_with_pos(
                 spark, fs, table_dir, res["files"], manifest["schema"],
-                bool(parts), evo=_evo_of(manifest, res),
+                bool(parts), evo=evo, dv=dv0,
+            ).where(condition),
+            res["files"],
+        )
+        if not mfiles:
+            return append_publish(
+                aligned, table_dir, lease_ttl_ms=lease_ttl_ms,
+                stats_cols=stats_cols, bloom_cols=bloom_cols,
             )
-            if dv0:
-                tgt = _dv_mask(
-                    tgt, "_fp", "_ri",
-                    _dv_chunks_df(spark, fs, table_dir, dv0),
-                )
-            matched_abs = [
-                r[0]
-                for r in tgt.where(condition)
-                .select("_fp")
-                .distinct()
-                .collect()
-            ]
-            mfiles = sorted(
-                {
-                    rel
-                    for rel in (
-                        _rel_of(a, res["files"]) for a in matched_abs
-                    )
-                    if rel is not None
-                }
-            )
-            if not mfiles:
-                return append_publish(
-                    aligned, table_dir, lease_ttl_ms=lease_ttl_ms,
-                    stats_cols=stats_cols, bloom_cols=bloom_cols,
-                )
-            kept = _read_files(
-                spark, fs, table_dir, mfiles, manifest["schema"],
-                bool(parts), dv=dv0, evo=_evo_of(manifest, res),
-            ).where(_keep_pred(condition))
-            return replace_files_publish(
-                kept.unionByName(aligned), table_dir, mfiles,
-                lease_ttl_ms=lease_ttl_ms, stats_cols=stats_cols,
-                bloom_cols=bloom_cols, _base=manifest,
-                operation="replace_where",
-            )
-        except ConcurrentWriteError:
-            if attempt == 2:
-                raise
-            manifest = _read_manifest(table_dir, fs)
-            if manifest is None:
-                raise
+        kept = _read_files(
+            spark, fs, table_dir, mfiles, manifest["schema"],
+            bool(parts), dv=dv0, evo=evo,
+        ).where(_keep_pred(condition))
+        return replace_files_publish(
+            kept.unionByName(aligned), table_dir, mfiles,
+            lease_ttl_ms=lease_ttl_ms, stats_cols=stats_cols,
+            bloom_cols=bloom_cols, _base=manifest,
+            operation="replace_where",
+        )
+
+    return _retry_on_conflict(fs, table_dir, manifest, run)
 
 
 def _dv_delete(
@@ -7758,6 +7573,51 @@ def _phys_backfill_groups(manifest: dict, seg_data: dict, cols):
     return out
 
 
+def _backfill_indexes(
+    spark: SparkSession,
+    fs,
+    table_dir: str,
+    manifest: dict,
+    cols,
+    blooms: bool,
+    m_bits: int = _BLOOM_M,
+    k: int = _BLOOM_K,
+) -> int:
+    """The backfill loop of :func:`collect_file_stats` (segmented
+    manifests) and :func:`collect_file_blooms` — min/max stats, or
+    blooms when ``blooms``: per live segment, resolve the logical
+    ``cols`` to each file's PHYSICAL names
+    (:func:`_phys_backfill_groups` — evolved tables backfill exactly),
+    run the index scan (:func:`_distributed_file_indexes`), merge what
+    it found into the segment sidecar and rewrite it in place (an
+    atomic replace; index additions are monotone and conservative, and
+    every snapshot citing the segment sees them). Returns the number of
+    files indexed."""
+    key = "file_blooms" if blooms else "file_stats"
+    n = 0
+    for seg in manifest.get("segments") or []:
+        sdata = _load_seg(fs, table_dir, seg)
+        got: dict = {}
+        for fl, pcols, pschema in _phys_backfill_groups(
+            manifest, sdata, list(cols)
+        ):
+            st, bl = _distributed_file_indexes(
+                spark, fs, table_dir, fl,
+                None if blooms else pcols, pcols if blooms else None,
+                schema_json=pschema, m_bits=m_bits, k=k,
+            )
+            got.update(bl if blooms else st)
+        if not got:
+            continue
+        merged = dict(sdata.get(key) or {})
+        for f, idx in got.items():
+            merged[f] = {**merged.get(f, {}), **idx}
+            n += 1
+        sdata[key] = merged
+        _write_seg(fs, table_dir, seg, sdata)
+    return n
+
+
 def collect_file_stats(
     table_dir: str,
     stats_cols,
@@ -7788,44 +7648,17 @@ def collect_file_stats(
             raise ValueError("collect_file_stats: no committed table here")
         if manifest.get("files") is None:
             # segmented manifest: stats live in the per-version segment
-            # sidecars — update each referenced sidecar in place (an
-            # atomic replace; stats addition is monotone + conservative,
-            # and every snapshot citing the segment sees them for free).
-            # Collection is a DISTRIBUTED job per segment, so it works
-            # on every backend — but prefer stats_cols= on the publish
-            # itself (write-time, no second scan).
+            # sidecars, backfilled in place by a distributed job per
+            # segment (every backend)
             spark = spark or SparkSession.getActiveSession()
             if spark is None:
                 raise RuntimeError(
                     "collect_file_stats needs an active SparkSession "
                     "(stats collection is a distributed job)"
                 )
-            n = 0
-            for seg in manifest.get("segments") or []:
-                s = _load_seg(fs, table_dir, seg)
-                # resolve logical index cols to each file's PHYSICAL
-                # names by field id (evolved tables backfill exactly;
-                # never-evolved tables get identity + a column-pruned
-                # read schema for free)
-                got: dict = {}
-                for fl, pcols, pschema in _phys_backfill_groups(
-                    manifest, s, list(stats_cols)
-                ):
-                    got.update(
-                        _distributed_file_stats(
-                            spark, fs, table_dir, fl, pcols,
-                            schema_json=pschema,
-                        )
-                    )
-                if not got:
-                    continue
-                seg_stats = dict(s.get("file_stats") or {})
-                for f, mm in got.items():
-                    seg_stats[f] = {**seg_stats.get(f, {}), **mm}
-                    n += 1
-                s["file_stats"] = seg_stats
-                _write_seg(fs, table_dir, seg, s)
-            return n
+            return _backfill_indexes(
+                spark, fs, table_dir, manifest, stats_cols, blooms=False
+            )
         # legacy inline manifest: stats embed in the manifest itself
         stats = dict(manifest.get("file_stats") or {})
         n = 0
@@ -7878,30 +7711,10 @@ def collect_file_blooms(
             raise RuntimeError(
                 "collect_file_blooms needs an active SparkSession"
             )
-        n = 0
-        for seg in manifest.get("segments") or []:
-            sdata = _load_seg(fs, table_dir, seg)
-            # physical-name resolution by field id (see
-            # _phys_backfill_groups) — evolved tables backfill exactly
-            got: dict = {}
-            for fl, pcols, pschema in _phys_backfill_groups(
-                manifest, sdata, list(bloom_cols)
-            ):
-                got.update(
-                    _distributed_file_blooms(
-                        spark, fs, table_dir, fl, pcols,
-                        schema_json=pschema, m_bits=m_bits, k=k,
-                    )
-                )
-            if not got:
-                continue
-            seg_blooms = dict(sdata.get("file_blooms") or {})
-            for f, bl in got.items():
-                seg_blooms[f] = {**seg_blooms.get(f, {}), **bl}
-                n += 1
-            sdata["file_blooms"] = seg_blooms
-            _write_seg(fs, table_dir, seg, sdata)
-        return n
+        return _backfill_indexes(
+            spark, fs, table_dir, manifest, bloom_cols, blooms=True,
+            m_bits=m_bits, k=k,
+        )
 
 
 def replace_files_publish(

@@ -155,21 +155,6 @@ def cms_estimate(
     )
 
 
-def cms_build_duck(
-    item_sql_rows: str, depth: int = 4, width: int = 8192
-) -> str:
-    """DuckDB oracle twin of :func:`cms_build`: ``item_sql_rows`` is a
-    query producing one row per occurrence with column ``it`` (varchar).
-    Returns SQL for the (hash_row, bucket, n) grid — with the same
-    null/empty-item drop rule as the engine side."""
-    return """
-select r hash_row, {b} bucket, count(*)::BIGINT n
-from (select it from ({src}) where it is not null and it <> '') occ,
-     (select unnest(range(0, {d})) r)
-group by 1, 2
-""".format(src=item_sql_rows, b=bucket_duck("it", "r", width), d=depth)
-
-
 # ------------------------------------------------- HyperLogLog registers
 #
 # The distinct-count twin of the CMS grid (Flajolet et al. 2007,

@@ -81,13 +81,6 @@ def token_count(col: str = "text") -> Column:
     return F.size(tokens(col)).cast("bigint")
 
 
-def distinct_token_ratio(col: str = "text") -> Column:
-    t = tokens(col)
-    return F.round(
-        F.size(F.array_distinct(t)).cast("double") / F.size(t).cast("double"), 6
-    )
-
-
 def stopword_count_arr(lang: str, toks: Column) -> Column:
     words = STOPWORDS[lang]
     arr = F.array(*[F.lit(w) for w in words])
@@ -96,10 +89,6 @@ def stopword_count_arr(lang: str, toks: Column) -> Column:
 
 def stopword_count(lang: str, col: str = "text") -> Column:
     return stopword_count_arr(lang, tokens(col))
-
-
-def lang_scores(col: str = "text") -> dict:
-    return {lang: stopword_count(lang, col) for lang in STOPWORDS}
 
 
 def lang_id_arr(toks: Column) -> Column:

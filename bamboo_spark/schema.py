@@ -71,12 +71,6 @@ def navigate(dtype: T.DataType, name: str) -> T.DataType:
     raise AttributeError("Primitive nodes do not have sub-nodes (field %r)" % name)
 
 
-def navigate_path(dtype: T.DataType, path: Tuple[str, ...]) -> T.DataType:
-    for seg in path:
-        dtype = navigate(dtype, seg)
-    return dtype
-
-
 def dtype_at(dtype: T.DataType, logical_path: Tuple[str, ...]) -> T.DataType:
     """Resolve a logical path that may contain explicit ELEM hops."""
     for token in logical_path:

@@ -56,9 +56,6 @@ class _Reader:
         self.pos += n
         return out
 
-    def at_end(self) -> bool:
-        return self.pos >= len(self.buf)
-
     def read_long(self) -> int:
         buf = self.buf
         pos = self.pos

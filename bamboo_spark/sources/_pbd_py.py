@@ -678,16 +678,6 @@ def decode_range(data: bytes, start: int, end: int, desc: MessageDesc) -> List[D
     return out
 
 
-def parse_container(data: bytes) -> Tuple[MessageDesc, List[bytes]]:
-    root, pos = parse_header(data)
-    messages = []
-    while pos < len(data):
-        size, pos = _read_varint(data, pos)
-        messages.append(data[pos : pos + size])
-        pos += size
-    return root, messages
-
-
 # ---------------------------------------------------------- spark schema
 
 _SPARK_TYPES = {
@@ -722,13 +712,6 @@ def pbd_to_spark(desc: MessageDesc) -> T.StructType:
             inner = T.ArrayType(inner, True)
         fields.append(T.StructField(f.name, inner, True))
     return T.StructType(fields)
-
-
-def decode_pbd(data: bytes) -> Tuple[List[Dict[str, Any]], T.StructType]:
-    root, payloads = parse_container(data)
-    schema = pbd_to_spark(root)
-    records = [decode_message(p, root) for p in payloads]
-    return records, schema
 
 
 # --------------------------------------------------------------- writer

@@ -84,10 +84,6 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 
-def _is_remote_uri(table_dir: str) -> bool:
-    return "://" in table_dir and not table_dir.startswith("file:")
-
-
 def _join(table_dir: str, rel: str) -> str:
     # EXTERNAL absolute refs (a shallow clone's manifest re-citing the
     # source's files; publish._is_ext) are already full paths/URIs

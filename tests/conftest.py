@@ -41,25 +41,42 @@ def assert_frame(expected: dict, pdf):
                 assert g == e, (name, got, values)
 
 
+def _jobs_of(spark, fn) -> list:
+    """Run ``fn()`` in a fresh job group on the calling thread and
+    return the ids of the Spark jobs it ran there (read back through
+    the group's status tracker)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = "jobs-%s" % uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def assert_one_job_no_exchange(spark, df) -> None:
     """Decode-shape guard for the binary sources: the executed plan has
     no shuffle, and materializing ``df`` runs exactly one Spark job of
     one stage (counted through the job group's status tracker)."""
-    import uuid
-
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-    sc = spark.sparkContext
-    group = "one-job-%s" % uuid.uuid4().hex
-    sc.setJobGroup(group, group)
-    try:
-        df.write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
+    jobs = _jobs_of(
+        spark, lambda: df.write.format("noop").mode("overwrite").save()
+    )
     assert len(jobs) == 1, jobs
-    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+    info = spark.sparkContext.statusTracker().getJobInfo(jobs[0])
+    assert len(info.stageIds) == 1
+
+
+def count_jobs(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` runs on the calling thread, counted
+    like :func:`assert_one_job_no_exchange`. Jobs ``fn`` starts on
+    other threads (a commit's concurrent sidecar build) run outside the
+    group and are not counted."""
+    return len(_jobs_of(spark, fn))
 
 
 def spy_split_tables(monkeypatch, module) -> list:
