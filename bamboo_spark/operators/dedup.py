@@ -1876,16 +1876,19 @@ def kcore_duck(
     graph the Spark side can finish within budget the oracle reaches
     the identical fixpoint (a deeper-than-budget graph would fail
     parity loudly on both sides rather than silently truncate)."""
+    # MATERIALIZED is load-bearing: each round references the previous
+    # edge list three times (directly and twice through n{j}); inlined
+    # CTEs re-evaluate the whole chain per reference (3^rounds expansions)
     lines = [
         "with pr as materialized (%s)," % pairs_sql.strip().rstrip(";"),
-        "e0 as (select doc_a a, doc_b b from pr"
+        "e0 as materialized (select doc_a a, doc_b b from pr"
         " union select doc_b, doc_a from pr)",
     ]
     for i in range(rounds):
         lines.append(
-            ", n{j} as (select a from e{i} group by a"
+            ", n{j} as materialized (select a from e{i} group by a"
             " having count(*) >= {k})"
-            ", e{j} as (select e.a, e.b from e{i} e"
+            ", e{j} as materialized (select e.a, e.b from e{i} e"
             " join n{j} x on e.a = x.a"
             " join n{j} y on e.b = y.a)".format(i=i, j=i + 1, k=k)
         )

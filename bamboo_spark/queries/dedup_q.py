@@ -886,9 +886,7 @@ def q_dup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dup_kcore_duck() -> str:
-    peeled = dedup.kcore_duck(
-        dedup.jaccard_pairs_duck(threshold=0.7), k=2, rounds=8
-    )
+    peeled = dedup.kcore_duck(dedup.jaccard_pairs_duck(threshold=0.7), k=2)
     return """
 with core as materialized (
 {peeled}

