@@ -11,15 +11,15 @@ rows through one ``pyarrow.Table`` batch keeps the frame local
 materialize, 0.22 s to broadcast — same schema, same values.
 
 ``local_df`` is for rows the driver already holds: metadata (file
-lists, model grids, marker rows, fixpoint result vectors) and
-``from_object``/``from_json`` documents, which are parsed on the driver
-anyway. Data that lives in files must never come through here (it
-belongs in scans and the ``sources`` decoders). Any conversion the
-Arrow path cannot express falls back to the classic builder, so
-behavior is value-identical by construction — except for naive
-``datetime`` values, which Arrow reads as UTC where the classic builder
-reads local time: callers pin them to aware UTC first (``from_object``
-does).
+lists, model grids, marker rows, fixpoint result vectors). Data that
+lives in files must never come through here (it belongs in scans and
+the ``sources`` decoders); ``from_object``/``from_json`` documents build
+their own Arrow table from the schema they infer
+(``sources/obj.py``). Any conversion the Arrow path cannot express
+falls back to the classic builder, so behavior is value-identical by
+construction — except for naive ``datetime`` values, which Arrow reads
+as UTC where the classic builder reads local time: callers pin them to
+aware UTC first.
 """
 
 from __future__ import annotations

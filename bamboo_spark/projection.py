@@ -29,17 +29,19 @@ def apply_column_filter(df: DataFrame, include: Any, exclude: Any) -> DataFrame:
     fltr = ColumnFilter.parse(include, exclude)
     if fltr.include.is_nothing() and fltr.exclude.is_nothing():
         return df
-    implicit_root = fltr.include.explicit or fltr.include.is_nothing()
+    # the root's own flags count as for any record (an explicit empty
+    # exclusion drops every column), as in prune_schema and flatten
+    included = _included(fltr, fltr.include.explicit or fltr.include.is_nothing())
     out = []
     for field in df.schema.fields:
         child = fltr.child(field.name)
-        if not _keeps(field.dataType, child, implicit_root):
+        if not _keeps(field.dataType, child, included):
             continue
         from bamboo_spark.flatten import quote_col
 
         out.append(
             _project(
-                F.col(quote_col(field.name)), field.dataType, child, implicit_root
+                F.col(quote_col(field.name)), field.dataType, child, included
             ).alias(field.name)
         )
     return df.select(*out)

@@ -13,11 +13,16 @@ on the classpath (see avro.py). Execution model: the driver scans only
 block headers (count/size varints — payloads skipped), then the value
 decode runs on executors inside ``mapInArrow`` over block ranges; Avro
 blocks are the natural split unit (spec: each block is independently
-decodable after the header). Clusion pushdown happens at decode time:
-excluded fields are *walked but never materialized* (``_skip_value`` —
-Avro's data-dependent sizes force the walk, but skipped strings/bytes/
-subtrees allocate nothing), mirroring the reference's reader-schema
-pruning (avro_direct.cpp:107-166).
+decodable after the header). Each decode task compiles the schema once
+(``compile_decoder``): the writer schema, the reader schema it resolves
+against and the clusion filter become one tree of closures, so no
+record pays for type dispatch, named-type lookup or keep/skip
+decisions — bamboo's schema-driven pre-typing (avro_direct.cpp:81-166).
+Clusion pushdown happens in that compile: excluded fields get skip
+closures and are *walked but never materialized* (Avro's data-dependent
+sizes force the walk, but skipped strings/bytes/subtrees allocate
+nothing), mirroring the reference's reader-schema pruning
+(avro_direct.cpp:107-166).
 
 Reference behaviors matched (decoder-level): enum → symbol string,
 fixed/bytes → bytes, nullable union → None/value
@@ -27,11 +32,12 @@ non-nullable unions raise, as in the reference (avro.hpp:56).
 
 from __future__ import annotations
 
-import io
+import copy
+import decimal as _dec
 import json
 import struct
 import zlib
-from typing import Any, Dict, Iterator, List, Tuple
+from typing import Any, Callable, Dict, Iterator, List, Optional, Tuple
 
 from pyspark.sql import types as T
 
@@ -40,55 +46,6 @@ MAGIC = b"Obj\x01"
 
 class AvroDecodeError(ValueError):
     pass
-
-
-class _Reader:
-    __slots__ = ("buf", "pos")
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.pos = 0
-
-    def read(self, n: int) -> bytes:
-        out = self.buf[self.pos : self.pos + n]
-        if len(out) != n:
-            raise AvroDecodeError("Unexpected end of Avro data")
-        self.pos += n
-        return out
-
-    def read_long(self) -> int:
-        buf = self.buf
-        pos = self.pos
-        n = len(buf)
-        shift = 0
-        acc = 0
-        while True:
-            if pos >= n:
-                raise AvroDecodeError("Unexpected end of Avro data")
-            b = buf[pos]
-            pos += 1
-            acc |= (b & 0x7F) << shift
-            if not (b & 0x80):
-                break
-            shift += 7
-            if shift > 70:
-                raise AvroDecodeError("Malformed varint in Avro data")
-        self.pos = pos
-        return (acc >> 1) ^ -(acc & 1)  # zigzag
-
-    def skip(self, n: int) -> None:
-        if self.pos + n > len(self.buf):
-            raise AvroDecodeError("Unexpected end of Avro data")
-        self.pos += n
-
-    def read_bytes(self) -> bytes:
-        return self.read(self.read_long())
-
-    def read_utf8(self) -> str:
-        try:
-            return self.read_bytes().decode("utf-8")
-        except UnicodeDecodeError as e:
-            raise AvroDecodeError("Invalid UTF-8 in Avro string: %s" % e) from e
 
 
 def _resolve_named(schema: Any, names: Dict[str, Any]) -> Any:
@@ -122,189 +79,6 @@ def _keeps_avro(schema: Any, fltr: Any, parent_included: bool, names: Dict[str, 
     return included
 
 
-def _skip_value(r: _Reader, schema: Any, names: Dict[str, Any]) -> None:
-    """Advance the reader past one value without materializing anything —
-    the decode-time half of clusion pushdown (the walk is forced by
-    Avro's data-dependent sizes; allocation is not)."""
-    schema = _resolve_named(schema, names)
-    if isinstance(schema, list):  # union
-        idx = r.read_long()
-        if not 0 <= idx < len(schema):
-            raise AvroDecodeError("Union branch index %d out of range" % idx)
-        _skip_value(r, schema[idx], names)
-        return
-    if isinstance(schema, dict):
-        stype = schema["type"]
-        if stype == "record":
-            if "name" in schema:
-                names[schema["name"]] = schema
-            for f in schema["fields"]:
-                _skip_value(r, f["type"], names)
-            return
-        if stype == "enum":
-            names.setdefault(schema.get("name", ""), schema)
-            r.read_long()
-            return
-        if stype == "fixed":
-            names.setdefault(schema.get("name", ""), schema)
-            r.skip(schema["size"])
-            return
-        if stype == "array":
-            while True:
-                count = r.read_long()
-                if count == 0:
-                    return
-                if count < 0:
-                    # negative count: block byte size follows — jump it
-                    r.skip(r.read_long())
-                    continue
-                for _ in range(count):
-                    _skip_value(r, schema["items"], names)
-        if stype == "map":
-            while True:
-                count = r.read_long()
-                if count == 0:
-                    return
-                if count < 0:
-                    r.skip(r.read_long())
-                    continue
-                for _ in range(count):
-                    r.skip(r.read_long())  # key
-                    _skip_value(r, schema["values"], names)
-        _skip_value(r, stype, names)
-        return
-    if schema == "null":
-        return
-    if schema == "boolean":
-        r.skip(1)
-        return
-    if schema in ("int", "long"):
-        r.read_long()
-        return
-    if schema == "float":
-        r.skip(4)
-        return
-    if schema == "double":
-        r.skip(8)
-        return
-    if schema in ("bytes", "string"):
-        r.skip(r.read_long())
-        return
-    raise AvroDecodeError("Unsupported Avro schema: %r" % (schema,))
-
-
-def _decode_value(
-    r: _Reader,
-    schema: Any,
-    names: Dict[str, Any],
-    fltr: Any = None,
-    parent_included: bool = True,
-) -> Any:
-    schema = _resolve_named(schema, names)
-    if isinstance(schema, list):  # union
-        idx = r.read_long()
-        if not 0 <= idx < len(schema):
-            raise AvroDecodeError("Union branch index %d out of range" % idx)
-        return _decode_value(r, schema[idx], names, fltr, parent_included)
-    if isinstance(schema, dict):
-        stype = schema["type"]
-        logical = schema.get("logicalType")
-        if logical is not None:
-            # logical types decode to Arrow-ready representations with
-            # the SAME semantics spark-avro applies (so the fallback and
-            # connector paths agree): date → epoch days, timestamps →
-            # epoch µs, decimal → two's-complement unscaled → Decimal
-            if logical == "date" and stype == "int":
-                return r.read_long()
-            if logical == "timestamp-micros" and stype == "long":
-                return r.read_long()
-            if logical == "timestamp-millis" and stype == "long":
-                return r.read_long() * 1000
-            if logical == "decimal" and stype in ("bytes", "fixed"):
-                import decimal as _dec
-
-                raw = (
-                    r.read_bytes()
-                    if stype == "bytes"
-                    else r.read(schema["size"])
-                )
-                unscaled = int.from_bytes(raw, "big", signed=True)
-                return _dec.Decimal(unscaled).scaleb(-schema.get("scale", 0))
-            # unknown/unsupported logical annotations fall through to
-            # the underlying type (spark-avro behavior)
-        if stype == "record":
-            if "name" in schema:
-                names[schema["name"]] = schema
-            if fltr is None:
-                return {
-                    f["name"]: _decode_value(r, f["type"], names)
-                    for f in schema["fields"]
-                }
-            included = fltr.include.explicit or (
-                parent_included and not fltr.exclude.explicit
-            )
-            out = {}
-            for f in schema["fields"]:
-                child = fltr.child(f["name"])
-                if _keeps_avro(f["type"], child, included, names):
-                    out[f["name"]] = _decode_value(r, f["type"], names, child, included)
-                else:
-                    _skip_value(r, f["type"], names)
-            return out
-        if stype == "enum":
-            names.setdefault(schema.get("name", ""), schema)
-            idx = r.read_long()
-            if not 0 <= idx < len(schema["symbols"]):
-                raise AvroDecodeError("Enum index %d out of range" % idx)
-            return schema["symbols"][idx]
-        if stype == "fixed":
-            names.setdefault(schema.get("name", ""), schema)
-            return r.read(schema["size"])
-        if stype == "array":
-            out = []
-            while True:
-                count = r.read_long()
-                if count == 0:
-                    break
-                if count < 0:
-                    r.read_long()  # block byte size; unused
-                    count = -count
-                for _ in range(count):
-                    out.append(
-                        _decode_value(r, schema["items"], names, fltr, parent_included)
-                    )
-            return out
-        if stype == "map":
-            out = {}
-            while True:
-                count = r.read_long()
-                if count == 0:
-                    break
-                if count < 0:
-                    r.read_long()
-                    count = -count
-                for _ in range(count):
-                    key = r.read_utf8()
-                    out[key] = _decode_value(r, schema["values"], names)
-            return out
-        return _decode_value(r, stype, names, fltr, parent_included)
-    if schema == "null":
-        return None
-    if schema == "boolean":
-        return r.read(1) != b"\x00"
-    if schema in ("int", "long"):
-        return r.read_long()
-    if schema == "float":
-        return struct.unpack("<f", r.read(4))[0]
-    if schema == "double":
-        return struct.unpack("<d", r.read(8))[0]
-    if schema == "bytes":
-        return r.read_bytes()
-    if schema == "string":
-        return r.read_utf8()
-    raise AvroDecodeError("Unsupported Avro schema: %r" % (schema,))
-
-
 # -- schema resolution (reader vs writer) -----------------------------------
 #
 # Multi-file Avro corpora evolve: files written under an old schema must
@@ -317,19 +91,6 @@ def _decode_value(
 # float→double), string↔bytes interconvert, enums fall back to the
 # reader's enum default for unknown symbols, unions resolve the written
 # branch against the first matching reader branch.
-
-# (writer type, reader type) pairs the spec allows beyond identity
-_PROMOTABLE = {
-    ("int", "long"),
-    ("int", "float"),
-    ("int", "double"),
-    ("long", "float"),
-    ("long", "double"),
-    ("float", "double"),
-    ("string", "bytes"),
-    ("bytes", "string"),
-}
-
 
 def _type_name(schema: Any) -> Any:
     """The schema's type tag: primitive name, complex kind, or list for
@@ -389,165 +150,663 @@ def _branch_matches(w: Any, cand: Any, w_names: Dict[str, Any], r_names: Dict[st
     wt, ct = _type_name(w), _type_name(cand)
     if isinstance(wt, list) or isinstance(ct, list):
         return False
-    return wt == ct or (wt, ct) in _PROMOTABLE
+    return wt == ct or (wt, ct) in _PROMOTIONS
 
 
-def _pick_branch(w: Any, rd_union: list, w_names: Dict[str, Any], r_names: Dict[str, Any]) -> Any:
-    """First reader-union branch the written value resolves against
-    (spec: 'the first schema in the reader's union that matches')."""
-    for cand in rd_union:
-        if _branch_matches(w, cand, w_names, r_names):
-            return cand
-    raise AvroDecodeError(
-        "No reader union branch matches writer schema %r" % (_type_name(w),)
-    )
+# -- compiled decoder ---------------------------------------------------------
+#
+# The schema work happens once: ``compile_decoder`` walks the (writer,
+# reader, clusion filter) triple a single time and returns a tree of
+# closures, one per schema node, each ``(buf, pos) -> (value, pos)``
+# (skippers ``(buf, pos) -> pos``). Named-type lookup, the keep/skip
+# decision of every field (``_keeps_avro``), union branch choice, enum
+# symbol mapping, default values and promotions are all settled in that
+# walk, so decoding a record runs no schema dispatch at all. Errors that
+# only some data reaches (an unmatched writer union branch, an unknown
+# enum symbol, an unresolvable promotion, an unknown type name) compile
+# to closures that raise when a value reaches them. The closures index
+# ``buf`` directly: a read past the end surfaces as IndexError or
+# struct.error, which the block loop turns into AvroDecodeError.
+
+_UNPACK_DOUBLE = struct.Struct("<d").unpack_from
+_UNPACK_FLOAT = struct.Struct("<f").unpack_from
+_TRUNCATED = "Unexpected end of Avro data"
 
 
-def _decode_resolved(
-    r: _Reader,
-    w: Any,
-    rd: Any,
-    w_names: Dict[str, Any],
-    r_names: Dict[str, Any],
-    fltr: Any = None,
-    parent_included: bool = True,
-) -> Any:
-    """Decode one value laid out per the WRITER schema, producing the
-    READER schema's representation."""
-    w = _resolve_named(w, w_names)
-    rd = _resolve_named(rd, r_names)
-    if isinstance(w, list):  # writer union: index picks the written branch
-        idx = r.read_long()
-        if not 0 <= idx < len(w):
-            raise AvroDecodeError("Union branch index %d out of range" % idx)
-        return _decode_resolved(r, w[idx], rd, w_names, r_names, fltr, parent_included)
-    if isinstance(rd, list):  # writer non-union vs reader union
-        branch = _pick_branch(w, rd, w_names, r_names)
-        return _decode_resolved(r, w, branch, w_names, r_names, fltr, parent_included)
+def _long(buf: bytes, pos: int) -> Tuple[int, int]:
+    """Zigzag varint at ``pos`` → (value, next position)."""
+    b = buf[pos]
+    if b < 0x80:
+        return (b >> 1) ^ -(b & 1), pos + 1
+    acc = b & 0x7F
+    shift = 7
+    while True:
+        pos += 1
+        b = buf[pos]
+        acc |= (b & 0x7F) << shift
+        if b < 0x80:
+            return (acc >> 1) ^ -(acc & 1), pos + 1
+        shift += 7
+        if shift > 70:
+            raise AvroDecodeError("Malformed varint in Avro data")
 
-    wt, rt = _type_name(w), _type_name(rd)
-    if wt == "record" and rt == "record":
-        if isinstance(w, dict) and "name" in w:
-            w_names[w["name"]] = w
-        if isinstance(rd, dict) and "name" in rd:
-            r_names[rd["name"]] = rd
-        r_by_name = {f["name"]: f for f in rd["fields"]}
-        if fltr is None:
-            included = True
-        else:
-            included = fltr.include.explicit or (
-                parent_included and not fltr.exclude.explicit
-            )
-        out: Dict[str, Any] = {}
-        present = set()
-        for wf in w["fields"]:
-            rf = r_by_name.get(wf["name"])
-            if rf is None:  # writer-only field: wire-skip
-                _skip_value(r, wf["type"], w_names)
-                continue
-            present.add(wf["name"])
-            child = fltr.child(rf["name"]) if fltr is not None else None
-            if fltr is not None and not _keeps_avro(rf["type"], child, included, r_names):
-                _skip_value(r, wf["type"], w_names)
-                continue
-            out[rf["name"]] = _decode_resolved(
-                r, wf["type"], rf["type"], w_names, r_names, child, included
-            )
-        # reader-only fields: default-fill (error if the schema has none)
-        for rf in rd["fields"]:
-            if rf["name"] in present:
-                continue
-            child = fltr.child(rf["name"]) if fltr is not None else None
-            if fltr is not None and not _keeps_avro(rf["type"], child, included, r_names):
-                continue
-            if "default" not in rf:
-                raise AvroDecodeError(
-                    "Field %s missing in writer schema and has no default"
-                    % rf["name"]
-                )
-            out[rf["name"]] = _default_value(rf["type"], rf["default"], r_names)
-        # emit in reader field order (dict order feeds the Arrow arrays)
-        return {
-            f["name"]: out[f["name"]] for f in rd["fields"] if f["name"] in out
-        }
-    if wt == "enum" and rt == "enum":
-        idx = r.read_long()
-        if not 0 <= idx < len(w["symbols"]):
+
+def _span(buf: bytes, pos: int) -> Tuple[int, int]:
+    """A length-prefixed value's (start, end), checked against ``buf``."""
+    b = buf[pos]
+    if b < 0x80:
+        n = (b >> 1) ^ -(b & 1)
+        pos += 1
+    else:
+        n, pos = _long(buf, pos)
+    end = pos + n
+    if n < 0 or end > len(buf):
+        raise AvroDecodeError(_TRUNCATED)
+    return pos, end
+
+
+def _null(buf, pos):
+    return None, pos
+
+
+def _boolean(buf, pos):
+    return buf[pos] != 0, pos + 1
+
+
+def _float(buf, pos):
+    return _UNPACK_FLOAT(buf, pos)[0], pos + 4
+
+
+def _double(buf, pos):
+    return _UNPACK_DOUBLE(buf, pos)[0], pos + 8
+
+
+def _bytes(buf, pos):
+    start, end = _span(buf, pos)
+    return buf[start:end], end
+
+
+def _string(buf, pos):
+    start, end = _span(buf, pos)
+    return buf[start:end].decode("utf-8"), end
+
+
+def _long_as_float(buf, pos):
+    v, pos = _long(buf, pos)
+    return float(v), pos
+
+
+def _times_1000(read):
+    """timestamp-millis → the epoch microseconds a Spark timestamp holds."""
+
+    def millis(buf, pos):
+        v, pos = read(buf, pos)
+        return v * 1000, pos
+
+    return millis
+
+
+_READERS = {
+    "null": _null,
+    "boolean": _boolean,
+    "int": _long,
+    "long": _long,
+    "float": _float,
+    "double": _double,
+    "bytes": _bytes,
+    "string": _string,
+}
+# writer → reader promotions the spec allows (identity excluded)
+_PROMOTIONS = {
+    ("int", "long"): _long,
+    ("int", "float"): _long_as_float,
+    ("int", "double"): _long_as_float,
+    ("long", "float"): _long_as_float,
+    ("long", "double"): _long_as_float,
+    ("float", "double"): _float,
+    ("string", "bytes"): _bytes,
+    ("bytes", "string"): _string,
+}
+
+
+def _fail(message: str):
+    """A node no value can decode through: raises when one reaches it."""
+
+    def fail(buf, pos):
+        raise AvroDecodeError(message)
+
+    return fail
+
+
+def _then_fail(read, message: str):
+    """Read the value, then refuse it (a promotion the reader's logical
+    type cannot take)."""
+
+    def fail(buf, pos):
+        read(buf, pos)
+        raise AvroDecodeError(message)
+
+    return fail
+
+
+def _fixed(size: int):
+    def fixed(buf, pos):
+        end = pos + size
+        if end > len(buf):
+            raise AvroDecodeError(_TRUNCATED)
+        return buf[pos:end], end
+
+    return fixed
+
+
+# scaleb rounds to its context's precision: the default 28 digits would
+# cut a decimal(38, s) value
+_EXACT = _dec.Context(prec=_dec.MAX_PREC)
+
+
+def _decimal(size: Optional[int], scale: int):
+    raw = _bytes if size is None else _fixed(size)
+
+    def decimal(buf, pos):
+        b, pos = raw(buf, pos)
+        unscaled = _dec.Decimal(int.from_bytes(b, "big", signed=True))
+        return unscaled.scaleb(-scale, _EXACT), pos
+
+    return decimal
+
+
+def _enum(table: list, symbols: list):
+    """Index → ``table`` entry; ``None`` entries are writer symbols the
+    reader neither knows nor defaults."""
+    n = len(table)
+
+    def enum(buf, pos):
+        idx, pos = _long(buf, pos)
+        if not 0 <= idx < n:
             raise AvroDecodeError("Enum index %d out of range" % idx)
-        sym = w["symbols"][idx]
-        if sym in rd["symbols"]:
-            return sym
-        if "default" in rd:
-            return rd["default"]
-        raise AvroDecodeError(
-            "Writer enum symbol %s not in reader enum and no default" % sym
-        )
-    if wt == "fixed" and rt == "fixed":
-        if w["size"] != rd["size"]:
+        sym = table[idx]
+        if sym is None:
             raise AvroDecodeError(
-                "Fixed size mismatch: writer %d vs reader %d"
-                % (w["size"], rd["size"])
+                "Writer enum symbol %s not in reader enum and no default"
+                % symbols[idx]
             )
-        return r.read(rd["size"])
-    if wt == "array" and rt == "array":
-        out_l: List[Any] = []
-        while True:
-            count = r.read_long()
-            if count == 0:
-                return out_l
-            if count < 0:
-                r.read_long()
-                count = -count
-            for _ in range(count):
-                out_l.append(
-                    _decode_resolved(
-                        r, w["items"], rd["items"], w_names, r_names, fltr, parent_included
-                    )
-                )
-    if wt == "map" and rt == "map":
-        out_m: Dict[str, Any] = {}
-        while True:
-            count = r.read_long()
-            if count == 0:
-                return out_m
-            if count < 0:
-                r.read_long()
-                count = -count
-            for _ in range(count):
-                key = r.read_utf8()
-                out_m[key] = _decode_resolved(
-                    r, w["values"], rd["values"], w_names, r_names
-                )
-    if wt == rt:
-        # identical underlying type — reader's logical annotation (if any)
-        # drives the representation
-        return _decode_value(r, rd, r_names)
-    # numeric / string-bytes promotions (resolution acts on raw types;
-    # the reader's logical annotation applies AFTER, spec order)
-    def _logicalize(val):
-        if isinstance(rd, dict):
-            logical = rd.get("logicalType")
-            if logical == "timestamp-millis":
-                return val * 1000
-            if logical == "decimal":
-                raise AvroDecodeError(
-                    "Cannot promote writer %r into a decimal reader type" % (wt,)
-                )
-        return val
+        return sym, pos
 
-    if wt == "int" and rt == "long":
-        return _logicalize(r.read_long())
-    if wt in ("int", "long") and rt in ("float", "double"):
-        return _logicalize(float(r.read_long()))
-    if wt == "float" and rt == "double":
-        return _logicalize(struct.unpack("<f", r.read(4))[0])
-    if wt == "string" and rt == "bytes":
-        return _logicalize(r.read_bytes())
-    if wt == "bytes" and rt == "string":
-        return _logicalize(r.read_utf8())
-    raise AvroDecodeError(
-        "Cannot resolve writer schema %r against reader schema %r" % (wt, rt)
+    return enum
+
+
+def _union(branches: list):
+    n = len(branches)
+
+    def union(buf, pos):
+        b = buf[pos]
+        if b < 0x80:
+            idx = (b >> 1) ^ -(b & 1)
+            pos += 1
+        else:
+            idx, pos = _long(buf, pos)
+        if 0 <= idx < n:
+            return branches[idx](buf, pos)
+        raise AvroDecodeError("Union branch index %d out of range" % idx)
+
+    return union
+
+
+def _array(item):
+    def array(buf, pos):
+        out = []
+        append = out.append
+        while True:
+            b = buf[pos]
+            if b < 0x80:
+                count = (b >> 1) ^ -(b & 1)
+                pos += 1
+            else:
+                count, pos = _long(buf, pos)
+            if count == 0:
+                return out, pos
+            if count < 0:
+                pos = _long(buf, pos)[1]  # block byte size; unused
+                count = -count
+            for _ in range(count):
+                v, pos = item(buf, pos)
+                append(v)
+
+    return array
+
+
+def _map(value):
+    def map_(buf, pos):
+        out = {}
+        while True:
+            count, pos = _long(buf, pos)
+            if count == 0:
+                return out, pos
+            if count < 0:
+                pos = _long(buf, pos)[1]
+                count = -count
+            for _ in range(count):
+                key, pos = _string(buf, pos)
+                out[key], pos = value(buf, pos)
+
+    return map_
+
+
+# the leaf decoders a record decodes inline, without a call
+_INLINE = {_long: 1, _string: 2, _double: 3}
+
+
+def _record(steps: list, fills: list, order: Optional[list]):
+    """``steps``: (name, decoder) per written field, name None for a
+    skipper; ``fills``: (name, default factory) per reader-only field;
+    ``order``: the reader's field order when the emitted order differs."""
+    steps = tuple(
+        (name, -1 if name is None else _INLINE.get(dec, 0), dec)
+        for name, dec in steps
     )
+
+    def record(buf, pos):
+        out = {}
+        for name, kind, dec in steps:
+            if kind == 2:  # string
+                b = buf[pos]
+                if b < 0x80:
+                    n = (b >> 1) ^ -(b & 1)
+                    pos += 1
+                else:
+                    n, pos = _long(buf, pos)
+                end = pos + n
+                if n < 0 or end > len(buf):
+                    raise AvroDecodeError(_TRUNCATED)
+                out[name] = buf[pos:end].decode("utf-8")
+                pos = end
+            elif kind == 1:  # int/long
+                b = buf[pos]
+                if b < 0x80:
+                    out[name] = (b >> 1) ^ -(b & 1)
+                    pos += 1
+                else:
+                    out[name], pos = _long(buf, pos)
+            elif kind == 3:  # double
+                out[name] = _UNPACK_DOUBLE(buf, pos)[0]
+                pos += 8
+            elif kind == 0:
+                out[name], pos = dec(buf, pos)
+            else:
+                pos = dec(buf, pos)
+        for name, fill in fills:
+            out[name] = fill()
+        if order is not None:
+            out = {name: out[name] for name in order}
+        return out, pos
+
+    return record
+
+
+def _fill(value: Any):
+    if isinstance(value, (list, dict)):
+        return lambda: copy.deepcopy(value)
+    return lambda: value
+
+
+def _fill_fail(error: Exception):
+    def fail():
+        raise error
+
+    return fail
+
+
+# skippers: advance past one value, materializing nothing
+
+
+def _skip_long(buf, pos):
+    return _long(buf, pos)[1]
+
+
+def _skip_span(buf, pos):
+    return _span(buf, pos)[1]
+
+
+def _skip_fixed(size: int):
+    def skip(buf, pos):
+        end = pos + size
+        if end > len(buf):
+            raise AvroDecodeError(_TRUNCATED)
+        return end
+
+    return skip
+
+
+_SKIPPERS = {
+    "null": lambda buf, pos: pos,
+    "boolean": _skip_fixed(1),
+    "int": _skip_long,
+    "long": _skip_long,
+    "float": _skip_fixed(4),
+    "double": _skip_fixed(8),
+    "bytes": _skip_span,
+    "string": _skip_span,
+}
+
+
+def _skip_record(skips: list):
+    skips = tuple(skips)
+
+    def skip(buf, pos):
+        for s in skips:
+            pos = s(buf, pos)
+        return pos
+
+    return skip
+
+
+def _skip_blocks(item, keyed: bool):
+    """Array (``keyed`` False) or map items; a negative count's block
+    byte size lets the whole block be jumped."""
+
+    def skip(buf, pos):
+        while True:
+            count, pos = _long(buf, pos)
+            if count == 0:
+                return pos
+            if count < 0:
+                pos = _skip_span(buf, pos)
+                continue
+            for _ in range(count):
+                if keyed:
+                    pos = _skip_span(buf, pos)
+                pos = item(buf, pos)
+
+    return skip
+
+
+def _later(cell: list):
+    """A reference to a record whose closure is still being built (a
+    recursive schema): look the closure up when a value arrives."""
+    return lambda buf, pos: cell[0](buf, pos)
+
+
+class _Compiler:
+    """One schema walk that builds the closures of one (writer, reader,
+    filter) triple. Named types register in schema order, writer and
+    reader names apart; each record is built once per (writer, reader,
+    filter node) and shared, which also closes recursive schemas."""
+
+    def __init__(self) -> None:
+        self.w_names: Dict[str, Any] = {}
+        self.r_names: Dict[str, Any] = {}
+        self.built: Dict[Any, list] = {}
+
+    def decoder(self, w: Any, r: Any, fltr: Any, included: bool):
+        """Closure decoding a value written as ``w`` into the reader
+        schema ``r`` (``r`` None: read as written)."""
+        w = _resolve_named(w, self.w_names)
+        if r is None:
+            return self.written(w, fltr, included, self.w_names)
+        r = _resolve_named(r, self.r_names)
+        if isinstance(w, list):  # writer union: the index picks the branch
+            return _union([self.decoder(b, r, fltr, included) for b in w])
+        if isinstance(r, list):  # first reader branch the written type matches
+            for cand in r:
+                if _branch_matches(w, cand, self.w_names, self.r_names):
+                    return self.decoder(w, cand, fltr, included)
+            return _fail(
+                "No reader union branch matches writer schema %r" % (_type_name(w),)
+            )
+        wt, rt = _type_name(w), _type_name(r)
+        if wt == "record" and rt == "record":
+            return self.record(w, r, fltr, included)
+        if wt == "enum" and rt == "enum":
+            self.register(w, self.w_names)
+            self.register(r, self.r_names)
+            default = r.get("default")
+            table = [
+                s if s in r["symbols"] else default for s in w["symbols"]
+            ]
+            return _enum(table, w["symbols"])
+        if wt == "fixed" and rt == "fixed":
+            self.register(w, self.w_names)
+            self.register(r, self.r_names)
+            if w["size"] != r["size"]:
+                return _fail(
+                    "Fixed size mismatch: writer %d vs reader %d"
+                    % (w["size"], r["size"])
+                )
+            return _fixed(r["size"])
+        if wt == "array" and rt == "array":
+            return _array(self.decoder(w["items"], r["items"], fltr, included))
+        if wt == "map" and rt == "map":
+            return _map(self.decoder(w["values"], r["values"], None, True))
+        if wt == rt:
+            # same underlying type: the reader's logical annotation (if
+            # any) drives the representation
+            return self.written(r, None, True, self.r_names)
+        # promotions act on raw types; the reader's logical annotation
+        # applies after (spec order)
+        read = (
+            _PROMOTIONS.get((wt, rt))
+            if isinstance(wt, str) and isinstance(rt, str)
+            else None
+        )
+        if read is None:
+            return _fail(
+                "Cannot resolve writer schema %r against reader schema %r" % (wt, rt)
+            )
+        logical = r.get("logicalType") if isinstance(r, dict) else None
+        if logical == "timestamp-millis":
+            return _times_1000(read)
+        if logical == "decimal":
+            return _then_fail(
+                read, "Cannot promote writer %r into a decimal reader type" % (wt,)
+            )
+        return read
+
+    @staticmethod
+    def register(schema: Any, names: Dict[str, Any]) -> None:
+        if isinstance(schema, dict):
+            names.setdefault(schema.get("name", ""), schema)
+
+    def written(self, schema: Any, fltr: Any, included: bool, names: Dict[str, Any]):
+        """Closure decoding ``schema`` as written (names: its registry)."""
+        schema = _resolve_named(schema, names)
+        if isinstance(schema, list):
+            return _union([self.written(b, fltr, included, names) for b in schema])
+        if isinstance(schema, dict):
+            stype = schema["type"]
+            logical = schema.get("logicalType")
+            # logical types decode to Arrow-ready representations with the
+            # SAME semantics spark-avro applies (so the fallback and
+            # connector paths agree): date → epoch days, timestamps →
+            # epoch µs, decimal → two's-complement unscaled → Decimal.
+            # Unknown/unsupported annotations fall through to the
+            # underlying type (spark-avro behavior).
+            if logical == "date" and stype == "int":
+                return _long
+            if logical == "timestamp-micros" and stype == "long":
+                return _long
+            if logical == "timestamp-millis" and stype == "long":
+                return _times_1000(_long)
+            if logical == "decimal" and stype in ("bytes", "fixed"):
+                size = schema["size"] if stype == "fixed" else None
+                return _decimal(size, schema.get("scale", 0))
+            if stype == "record":
+                return self.record(schema, None, fltr, included, names)
+            if stype == "enum":
+                self.register(schema, names)
+                symbols = list(schema["symbols"])
+                return _enum(symbols, symbols)
+            if stype == "fixed":
+                self.register(schema, names)
+                return _fixed(schema["size"])
+            if stype == "array":
+                return _array(self.written(schema["items"], fltr, included, names))
+            if stype == "map":
+                return _map(self.written(schema["values"], None, True, names))
+            return self.written(stype, fltr, included, names)
+        read = _READERS.get(schema) if isinstance(schema, str) else None
+        return read or _fail("Unsupported Avro schema: %r" % (schema,))
+
+    def record(self, w, r, fltr, included, names=None):
+        """A record read as written (``r`` None) or resolved by field
+        name against the reader record ``r``."""
+        key = (
+            id(w),
+            id(r),
+            None if fltr is None else (id(fltr.include), id(fltr.exclude)),
+            included,
+        )
+        cell = self.built.get(key)
+        if cell is not None:
+            return cell[0] or _later(cell)
+        cell = self.built[key] = [None]
+        if r is None:
+            if "name" in w:
+                names[w["name"]] = w
+            fields, k_names = w["fields"], names
+        else:
+            if "name" in w:
+                self.w_names[w["name"]] = w
+            if "name" in r:
+                self.r_names[r["name"]] = r
+            fields, k_names = r["fields"], self.r_names
+        if fltr is not None:
+            included = fltr.include.explicit or (included and not fltr.exclude.explicit)
+
+        def child(name):
+            return None if fltr is None else fltr.child(name)
+
+        def kept(f, sub):
+            return fltr is None or _keeps_avro(f["type"], sub, included, k_names)
+
+        steps, fills = [], []
+        if r is None:
+            for f in fields:
+                sub = child(f["name"])
+                if kept(f, sub):
+                    dec = self.written(f["type"], sub, included, names)
+                    steps.append((f["name"], dec))
+                else:
+                    steps.append((None, self.skipper(f["type"], names)))
+            order = None
+        else:
+            by_name = {f["name"]: f for f in fields}
+            for wf in w["fields"]:
+                rf = by_name.pop(wf["name"], None)
+                sub = None if rf is None else child(rf["name"])
+                if rf is None or not kept(rf, sub):  # wire-skip
+                    steps.append((None, self.skipper(wf["type"], self.w_names)))
+                else:
+                    dec = self.decoder(wf["type"], rf["type"], sub, included)
+                    steps.append((rf["name"], dec))
+            # reader-only fields: default-fill (error if the schema has none)
+            for rf in fields:
+                if rf["name"] not in by_name or not kept(rf, child(rf["name"])):
+                    continue
+                if "default" not in rf:
+                    fill = _fill_fail(
+                        AvroDecodeError(
+                            "Field %s missing in writer schema and has no default"
+                            % rf["name"]
+                        )
+                    )
+                else:
+                    try:
+                        fill = _fill(
+                            _default_value(rf["type"], rf["default"], self.r_names)
+                        )
+                    except Exception as e:  # noqa: BLE001 — raised per record
+                        fill = _fill_fail(e)
+                fills.append((rf["name"], fill))
+            # emit in reader field order (dict order feeds the Arrow arrays)
+            emitted = [n for n, _ in steps if n is not None] + [n for n, _ in fills]
+            order = [f["name"] for f in fields if f["name"] in set(emitted)]
+            if order == emitted:
+                order = None
+        cell[0] = _record(steps, fills, order)
+        return cell[0]
+
+    def skipper(self, schema: Any, names: Dict[str, Any]):
+        """Closure advancing past one value of ``schema`` — the
+        decode-time half of clusion pushdown (the walk is forced by
+        Avro's data-dependent sizes; allocation is not)."""
+        schema = _resolve_named(schema, names)
+        if isinstance(schema, list):
+            return _union([self.skipper(b, names) for b in schema])
+        if isinstance(schema, dict):
+            stype = schema["type"]
+            if stype == "record":
+                key = ("skip", id(schema))
+                cell = self.built.get(key)
+                if cell is not None:
+                    return cell[0] or _later(cell)
+                cell = self.built[key] = [None]
+                if "name" in schema:
+                    names[schema["name"]] = schema
+                cell[0] = _skip_record(
+                    [self.skipper(f["type"], names) for f in schema["fields"]]
+                )
+                return cell[0]
+            if stype == "enum":
+                self.register(schema, names)
+                return _skip_long
+            if stype == "fixed":
+                self.register(schema, names)
+                return _skip_fixed(schema["size"])
+            if stype == "array":
+                return _skip_blocks(self.skipper(schema["items"], names), False)
+            if stype == "map":
+                return _skip_blocks(self.skipper(schema["values"], names), True)
+            return self.skipper(stype, names)
+        skip = _SKIPPERS.get(schema) if isinstance(schema, str) else None
+        return skip or _fail("Unsupported Avro schema: %r" % (schema,))
+
+
+def compile_decoder(
+    schema: Any,
+    writer_schema: Any = None,
+    fltr: Any = None,
+    implicit_root: bool = True,
+) -> Callable[[bytes, int], List[Any]]:
+    """Compile the block decoder for records read under ``schema``:
+    ``decode(payload, n)`` decodes a decompressed block's ``n`` records.
+    With ``writer_schema`` the records were written under it and resolve
+    against ``schema`` (Avro spec "Schema Resolution"); with ``fltr``
+    fields outside the clusion are wire-skipped. Compile once per decode
+    task and reuse the decoder for every block."""
+    if writer_schema is None:
+        root = _Compiler().decoder(schema, None, fltr, implicit_root)
+    else:
+        root = _Compiler().decoder(writer_schema, schema, fltr, implicit_root)
+
+    def decode(payload: bytes, n: int) -> List[Any]:
+        out = []
+        append = out.append
+        pos = 0
+        try:
+            for _ in range(n):
+                v, pos = root(payload, pos)
+                append(v)
+        except (IndexError, struct.error):
+            raise AvroDecodeError(_TRUNCATED) from None
+        except UnicodeDecodeError as e:
+            raise AvroDecodeError("Invalid UTF-8 in Avro string: %s" % e) from e
+        return out
+
+    return decode
+
+
+def decode_block(
+    payload: bytes,
+    n: int,
+    codec: str,
+    schema: Any,
+    fltr: Any = None,
+    implicit_root: bool = True,
+) -> List[Any]:
+    """Decode one block's records — the executor-side kernel. A decode
+    task compiles once (``compile_decoder``) and reuses it per block."""
+    decode = compile_decoder(schema, None, fltr, implicit_root)
+    return decode(decompress_block(payload, codec), n)
 
 
 def decode_block_resolved(
@@ -560,22 +819,9 @@ def decode_block_resolved(
     implicit_root: bool = True,
 ) -> List[Any]:
     """Executor-side kernel for a block written under an evolved schema."""
-    payload = decompress_block(payload, codec)
-    block = _Reader(payload)
-    w_names: Dict[str, Any] = {}
-    r_names: Dict[str, Any] = {}
-    return [
-        _decode_resolved(
-            block,
-            writer_schema,
-            reader_schema,
-            w_names,
-            r_names,
-            fltr,
-            implicit_root,
-        )
-        for _ in range(n)
-    ]
+    decode = compile_decoder(reader_schema, writer_schema, fltr, implicit_root)
+    return decode(decompress_block(payload, codec), n)
+
 
 
 def _nullable(schema: Any) -> Any:
@@ -769,24 +1015,6 @@ def decompress_block(payload: bytes, codec: str) -> bytes:
         return out
     return payload
 
-
-def decode_block(
-    payload: bytes,
-    n: int,
-    codec: str,
-    schema: Any,
-    fltr: Any = None,
-    implicit_root: bool = True,
-) -> List[Any]:
-    """Decode one block's records — the executor-side kernel."""
-    payload = decompress_block(payload, codec)
-    block = _Reader(payload)
-    names: Dict[str, Any] = {}
-    if fltr is None:
-        return [_decode_value(block, schema, names) for _ in range(n)]
-    return [
-        _decode_value(block, schema, names, fltr, implicit_root) for _ in range(n)
-    ]
 
 
 # -- schema mapping ---------------------------------------------------------

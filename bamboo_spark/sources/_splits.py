@@ -99,31 +99,32 @@ def decode_splits(
     ``decode`` yields lists of decoded records; each list becomes one
     Arrow batch. With ``record_root`` the records are dicts keyed by
     ``schema``'s field names, otherwise bare values of its single
-    column. Columnar ``pa.array`` construction from the records is
-    C-speed and skips pandas object inference; pyarrow converts int →
-    decimal128 (uint64/fixed64 widening) and dict → struct directly.
+    column. One ``pa.array`` call converts a list at C speed and skips
+    pandas object inference; pyarrow converts int → decimal128
+    (uint64/fixed64 widening) and dict → struct directly.
     ``slices`` caps the task count (several splits per task).
     """
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
-    names = schema.fieldNames()
 
     def fn(batches):
         import pyarrow as pa
 
         _drop_zip_finders()
+        row_type = pa.struct(arrow_schema)
         for batch in batches:
             for i in batch.column(0).to_pylist():
                 for records in decode(splits[i]):
                     if record_root:
-                        arrays = [
-                            pa.array([r[nm] for r in records], type=f.type)
-                            for nm, f in zip(names, arrow_schema)
-                        ]
+                        # one struct conversion; the batch keeps the record
+                        # count even when a clusion leaves no column
+                        yield pa.RecordBatch.from_struct_array(
+                            pa.array(records, type=row_type)
+                        )
                     else:
                         arrays = [pa.array(records, type=arrow_schema.field(0).type)]
-                    yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+                        yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     n = len(splits)
     return spark.range(0, n, 1, min(slices or n, n)).mapInArrow(fn, schema)

@@ -14,11 +14,12 @@ Two paths:
   blocks are the spec's independent decode unit.
 
 Read-time ``include``/``exclude`` follow the reference's pushdown
-semantics (avro_direct.cpp:107-166): pruned at decode time — excluded
-fields are walked but never materialized (``_avro_py._skip_value``) and
-the output schema is pruned with the exact rule the Catalyst nested
-projection uses (projection.prune_schema), so both paths select the
-same columns.
+semantics (avro_direct.cpp:107-166): pruned at decode time — each decode
+task compiles the schema and filter once (``_avro_py.compile_decoder``),
+excluded fields compile to skip closures that walk but never
+materialize — and the output schema is pruned with the exact rule the
+Catalyst nested projection uses (projection.prune_schema), so both
+paths select the same columns.
 """
 
 from __future__ import annotations
@@ -35,8 +36,8 @@ from bamboo_spark.projection import apply_column_filter, prune_schema
 from bamboo_spark.sources._avro_py import (
     AvroDecodeError,
     avro_to_spark,
-    decode_block,
-    decode_block_resolved,
+    compile_decoder,
+    decompress_block,
     read_blocks,
     scan_blocks_stream,
     scan_header_stream,
@@ -72,16 +73,15 @@ def _block_records(
 ) -> Iterator[list]:
     """Decode the blocks whose headers lie in ``[reader.tell(), end)``,
     one record list per block. With ``writer_schema`` the blocks were
-    written under it and resolve against the reader ``schema``."""
+    written under it and resolve against the reader ``schema``. The
+    decoder is compiled once, at the first block that holds records."""
+    decode = None
     for n, payload in read_blocks(reader, sync, end):
         if not n:
             continue
-        if writer_schema is None:
-            yield decode_block(payload, n, codec, schema, fltr, implicit_root)
-        else:
-            yield decode_block_resolved(
-                payload, n, codec, writer_schema, schema, fltr, implicit_root
-            )
+        if decode is None:
+            decode = compile_decoder(schema, writer_schema, fltr, implicit_root)
+        yield decode(decompress_block(payload, codec), n)
 
 
 def from_avro(

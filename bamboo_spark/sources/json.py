@@ -3,7 +3,9 @@
 Parity with the reference (python/bamboo/core.py:49-54,
 cpp/src/json.cpp:25-77): type per value — null→unknown, array→repetition,
 object→record, scalar→primitive (string/bool/int/double). Field sets
-union across rows; type mismatches raise.
+union across rows; type mismatches raise. ``from_json`` types and
+builds the parsed document the way ``from_object`` does (one inference
+walk, one Arrow table).
 
 Scale path: ``read_json`` delegates to ``spark.read.json`` so schema
 inference and parsing run distributed on the executors — use it for
@@ -21,7 +23,7 @@ from typing import Any, Optional, Union
 from pyspark.sql import SparkSession
 
 from bamboo_spark.dataset import Dataset
-from bamboo_spark.sources.obj import from_object
+from bamboo_spark.sources.obj import _frame
 
 
 def from_json(
@@ -36,8 +38,12 @@ def from_json(
         s = s.read()
     if isinstance(s, (bytes, bytearray)):
         s = s.decode("utf-8")
-    data = json.loads(s)
-    return from_object(data, dict_as_record=True, spark=spark)
+    if spark is None:
+        from bamboo_spark.session import get_spark
+
+        spark = get_spark()
+    # parsed JSON is plain already: no pre-pass, straight to inference
+    return Dataset(_frame(spark, json.loads(s)))
 
 
 def read_json(

@@ -117,3 +117,17 @@ def test_summary_unresolved_when_the_base_spreads_past_the_bound():
     assert (row["wins"], row["verdict"]) == (10, "same")
     # a narrow base never makes a metric unresolved
     assert _row(_runs([1.0] * 10, [1.05] * 10, "op_s"))["verdict"] == "same"
+
+
+def test_summary_gain_inside_the_bound_is_not_a_gain():
+    # wins every pair and clears the base's quartiles, but moves the
+    # median by 20% of a metric whose bound is 25%
+    row = _row(_runs([1.0] * 10, [0.8] * 10, "op_s"))
+    assert (row["wins"], row["verdict"]) == (10, "gain<bound")
+    row = _row(_runs([100.0] * 10, [125.0] * 10, "ops_per_min"), "ops_per_min")
+    assert row["verdict"] == "gain<bound"
+    row = _row(_runs([100.0] * 10, [126.0] * 10, "ops_per_min"), "ops_per_min")
+    assert row["verdict"] == "gain"
+    # a per-layer metric has no bound: any resolved gain is a gain
+    row = _row(_runs([1.0] * 10, [0.9] * 10, "decode_s"), "decode_s")
+    assert row["verdict"] == "gain"

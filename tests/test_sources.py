@@ -476,6 +476,201 @@ def test_avro_roundtrip_fuzz(spark):
     run()
 
 
+def test_avro_decimal_keeps_all_38_digits():
+    # a decimal(38, 2) value past the default 28-digit decimal context
+    import decimal
+
+    from bamboo_spark.sources._avro_py import decode_block
+
+    unscaled = -12345678901234567890123456789012345678
+    raw = unscaled.to_bytes(16, "big", signed=True)
+    schema = {
+        "type": "record",
+        "name": "t",
+        "fields": [
+            {
+                "name": "d",
+                "type": {
+                    "type": "bytes",
+                    "logicalType": "decimal",
+                    "precision": 38,
+                    "scale": 2,
+                },
+            }
+        ],
+    }
+    payload = bytes([len(raw) << 1]) + raw  # zigzag length, then the bytes
+    (row,) = decode_block(payload, 1, "null", schema)
+    assert row["d"] == decimal.Decimal("-123456789012345678901234567890123456.78")
+
+
+def test_avro_pruned_roundtrip_matches_projection(spark):
+    # avro.py promises that decode-time pruning selects what the Catalyst
+    # nested projection selects: a random include/exclude on from_avro
+    # must equal apply_column_filter over the full decode
+    from hypothesis import assume, given, settings, strategies as st
+
+    from bamboo_spark.clusions import ClusionError, ColumnFilter
+    from bamboo_spark.projection import apply_column_filter
+
+    schema = {
+        "type": "record",
+        "name": "t",
+        "fields": [
+            {"name": "i", "type": "long"},
+            {"name": "s", "type": "string"},
+            {"name": "n", "type": ["null", "double"]},
+            {
+                "name": "u",
+                "type": {
+                    "type": "record",
+                    "name": "U",
+                    "fields": [
+                        {"name": "a", "type": "string"},
+                        {"name": "b", "type": ["null", "long"]},
+                    ],
+                },
+            },
+            {
+                "name": "items",
+                "type": {
+                    "type": "array",
+                    "items": {
+                        "type": "record",
+                        "name": "It",
+                        "fields": [
+                            {"name": "k", "type": "string"},
+                            {"name": "q", "type": "long"},
+                            {"name": "tags", "type": {"type": "array", "items": "string"}},
+                        ],
+                    },
+                },
+            },
+            {"name": "m", "type": {"type": "map", "values": "long"}},
+        ],
+    }
+    paths = ["i", "s", "n", "u", "u.a", "u.b", "items", "items.k", "items.q",
+             "items.tags", "m"]
+    clusion = st.one_of(st.none(), st.lists(st.sampled_from(paths), max_size=3))
+
+    @settings(max_examples=12, deadline=None)
+    @given(
+        st.lists(
+            st.tuples(
+                st.integers(-(2**40), 2**40),
+                st.text(max_size=6),
+                st.one_of(st.none(), st.floats(allow_nan=False)),
+                st.text(max_size=4),
+                st.one_of(st.none(), st.integers(-9, 9)),
+                st.lists(
+                    st.tuples(
+                        st.text(max_size=3),
+                        st.integers(0, 99),
+                        st.lists(st.text(max_size=3), max_size=2),
+                    ),
+                    max_size=3,
+                ),
+            ),
+            min_size=1,
+            max_size=5,
+        ),
+        clusion,
+        clusion,
+    )
+    def run(rows, include, exclude):
+        try:
+            ColumnFilter.parse(include, exclude)
+        except ClusionError:
+            assume(False)  # a path both included and excluded
+        records = [
+            {
+                "i": i,
+                "s": s,
+                "n": n,
+                "u": {"a": a, "b": b},
+                "items": [{"k": k, "q": q, "tags": tags} for k, q, tags in items],
+                "m": {"x": i},
+            }
+            for i, s, n, a, b, items in rows
+        ]
+        data = _avro_bytes(schema, records, block_size=2)
+        pruned = from_avro(data, include=include, exclude=exclude).df
+        full = apply_column_filter(from_avro(data).df, include, exclude)
+        assert pruned.schema == full.schema
+        assert pruned.collect() == full.collect()
+
+    run()
+
+
+def test_avro_pruning_costs_schema_not_records(monkeypatch):
+    # the clusion filter is resolved once per decode, not per record:
+    # ColumnFilter.child runs as often for 1,000 records as for one
+    from bamboo_spark.clusions import ColumnFilter
+    from bamboo_spark.sources._avro_py import decode_block, encode_value
+
+    schema = {
+        "type": "record",
+        "name": "o",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {
+                "name": "user",
+                "type": {
+                    "type": "record",
+                    "name": "u",
+                    "fields": [
+                        {"name": "name", "type": "string"},
+                        {"name": "age", "type": ["null", "int"]},
+                    ],
+                },
+            },
+            {
+                "name": "items",
+                "type": {
+                    "type": "array",
+                    "items": {
+                        "type": "record",
+                        "name": "it",
+                        "fields": [
+                            {"name": "sku", "type": "string"},
+                            {"name": "tags", "type": {"type": "array", "items": "string"}},
+                        ],
+                    },
+                },
+            },
+            {"name": "payload", "type": "string"},
+        ],
+    }
+    record = {
+        "id": 1,
+        "user": {"name": "n", "age": 30},
+        "items": [{"sku": "k", "tags": ["a", "b"]}],
+        "payload": "p" * 20,
+    }
+    calls = []
+    child = ColumnFilter.child
+
+    def counting_child(self, name):
+        calls.append(name)
+        return child(self, name)
+
+    monkeypatch.setattr(ColumnFilter, "child", counting_child)
+
+    def child_calls(n):
+        payload = bytearray()
+        names = {}
+        for _ in range(n):
+            encode_value(payload, schema, record, names)
+        fltr = ColumnFilter.parse(None, ["payload", "items.tags"])
+        del calls[:]
+        out = decode_block(bytes(payload), n, "null", schema, fltr, True)
+        assert len(out) == n
+        assert out[-1] == {"id": 1, "user": record["user"], "items": [{"sku": "k"}]}
+        return len(calls)
+
+    assert child_calls(1) == child_calls(1000) > 0
+
+
 def test_avro_logical_types(spark):
     # spark-avro's logical-type mapping on the fallback path: date →
     # DateType, timestamp-millis/micros → TimestampType (UTC), decimal
@@ -1086,6 +1281,11 @@ def test_object_arrow_path_matches_classic_builder(spark, monkeypatch):
 
     import bamboo_spark.sources.obj as obj_mod
 
+    def _no_arrow(*args):
+        # refuse the Arrow table: the frame comes from the classic
+        # spark.createDataFrame(rows, schema) builder
+        raise ValueError("classic builder")
+
     class Color(enum.Enum):
         RED = 1
         BLUE = 2
@@ -1118,7 +1318,7 @@ def test_object_arrow_path_matches_classic_builder(spark, monkeypatch):
         arrow_df = from_object(rows, spark=spark).df
         assert "LocalTableScan" in arrow_df._jdf.queryExecution().executedPlan().toString()
         with monkeypatch.context() as m:
-            m.setattr(obj_mod, "local_df", lambda s, r, sch: s.createDataFrame(r, sch))
+            m.setattr(obj_mod, "_arrow_table", _no_arrow)
             classic_df = from_object(rows, spark=spark).df
         assert arrow_df.schema == classic_df.schema
         assert arrow_df.collect() == classic_df.collect()
@@ -1131,7 +1331,7 @@ def test_object_arrow_path_matches_classic_builder(spark, monkeypatch):
         assert "LocalTableScan" not in edge_df._jdf.queryExecution().executedPlan().toString()
         assert edge_df.selectExpr("unix_micros(ts)").first()[0] == 253402315200000000
         with monkeypatch.context() as m:
-            m.setattr(obj_mod, "local_df", lambda s, r, sch: s.createDataFrame(r, sch))
+            m.setattr(obj_mod, "_arrow_table", _no_arrow)
             assert from_object(edge, spark=spark).df.collect() == edge_df.collect()
     finally:
         monkeypatch.undo()

@@ -18,9 +18,11 @@ import tracemalloc
 
 import pytest
 
+from bamboo_spark.clusions import ColumnFilter
 from bamboo_spark.sources._avro_py import (
     AvroDecodeError,
     decode_block,
+    decode_block_resolved,
     read_blocks,
     scan_blocks_stream,
     scan_header_stream,
@@ -301,6 +303,24 @@ def test_avro_corrupt_bytes_raise_only_avro_decode_error():
     schema, codec, sync, body = scan_header_stream(
         ChunkedReader(io.BytesIO(base), error_cls=AvroDecodeError)
     )
+    # the skip closures: a pruned decode wire-skips the long and the string
+    pruned = ColumnFilter.parse(None, ["i", "s"])
+    # the resolution closures: long promoted to double, a defaulted field
+    evolved = {
+        "type": "record",
+        "name": "r",
+        "fields": [
+            {"name": "i", "type": "double"},
+            {"name": "s", "type": "string"},
+            {"name": "d", "type": "double"},
+            {"name": "extra", "type": "long", "default": 7},
+        ],
+    }
+    decodes = [
+        lambda payload, n: decode_block(payload, n, codec, schema),
+        lambda payload, n: decode_block(payload, n, codec, schema, pruned, True),
+        lambda payload, n: decode_block_resolved(payload, n, codec, schema, evolved),
+    ]
 
     @settings(max_examples=200, deadline=None)
     @given(st.integers(0, len(base) - 1), st.integers(0, 255))
@@ -318,15 +338,40 @@ def test_avro_corrupt_bytes_raise_only_avro_decode_error():
         except AvroDecodeError:
             pass
         # a decode task's block walk; read_avro_py's task walks the
-        # whole body with no driver scan
-        try:
-            reader = ChunkedReader(io.BytesIO(data), body, error_cls=AvroDecodeError)
-            for n, payload in read_blocks(reader, sync, reader.size):
-                decode_block(payload, n, codec, schema)
-        except AvroDecodeError:
-            pass
+        # whole body with no driver scan — as written, pruned, resolved
+        for decode in decodes:
+            try:
+                reader = ChunkedReader(
+                    io.BytesIO(data), body, error_cls=AvroDecodeError
+                )
+                for n, payload in read_blocks(reader, sync, reader.size):
+                    decode(payload, n)
+            except AvroDecodeError:
+                pass
 
     run()
+    # every strict prefix of a block is a truncated block: each decode
+    # must report it, wherever the cut falls (varint, string, double)
+    reader = ChunkedReader(io.BytesIO(base), body, error_cls=AvroDecodeError)
+    for n, payload in read_blocks(reader, sync, reader.size):
+        for cut in range(len(payload)):
+            for decode in decodes:
+                with pytest.raises(AvroDecodeError):
+                    decode(payload[:cut], n)
+
+
+def test_avro_negative_length_in_skipped_field_raises():
+    # a corrupt negative string length in a wire-skipped field must not
+    # move the reader backwards (a silent bogus record, or an endless loop)
+    schema = {
+        "type": "record",
+        "name": "r",
+        "fields": [{"name": "i", "type": "long"}, {"name": "s", "type": "string"}],
+    }
+    pruned = ColumnFilter.parse(None, ["s"])
+    # i = 5 (zigzag 0x0a), then a string length of -2 (zigzag 0x03)
+    with pytest.raises(AvroDecodeError):
+        decode_block(b"\x0a\x03", 1, "null", schema, pruned, True)
 
 
 def test_spill_requires_shared_dir_on_cluster_master():

@@ -19,6 +19,9 @@ pairs run, and a verdict in the terms of ``BENCHMARK.json``:
   of them, its median is better by more than the distance between the
   base's quartiles, and it failed no more ops than the base. A pair in
   which either side crashed or failed an op counts as not won.
+- ``gain<bound``: all of ``gain``, but the median moved by no more
+  than the metric's bound (a share of the base median): inside the
+  range a change may also lose, so too small to claim.
 - ``worse``: its median is worse than the base median by more than the
   metric's bound.
 - ``unresolved``: the base's quartiles lie further apart than the bound
@@ -159,7 +162,7 @@ def summarize(runs: List[dict], spec: dict) -> List[dict]:
         bound = m.get("bound")
         if (len(pairs) >= MIN_PAIRS and wins >= math.ceil(WIN_SHARE * len(pairs))
                 and gain > b_q3 - b_q1 and not more_failed):
-            verdict = "gain"
+            verdict = "gain" if bound is None or gain > bound * abs(b_med) else "gain<bound"
         elif bound is not None and -gain > bound * abs(b_med):
             verdict = "worse"
         elif (bound is not None and b_q3 - b_q1 > bound * abs(b_med)
