@@ -463,6 +463,9 @@ def current_version(
 
 
 _FORMAT_VERSION = 1  # manifest protocol this reader/writer speaks
+# format-1 keys of removed features: a table that still uses one is
+# refused rather than read without them
+_REMOVED_KEYS = ("tags", "branches", "constraints")
 
 
 class UnsupportedFormatError(RuntimeError):
@@ -484,6 +487,14 @@ def _read_manifest(table_dir: str, fs) -> Optional[dict]:
             "speaks <=%d — upgrade the library to read it"
             % (table_dir, fv, _FORMAT_VERSION)
         )
+    for key in _REMOVED_KEYS:
+        if man.get(key):
+            raise UnsupportedFormatError(
+                "table at %s carries manifest key %r (tags, branches and "
+                "CHECK constraints are no longer supported); reading it "
+                "would skip its constraints and let vacuum delete the "
+                "files its refs pin" % (table_dir, key)
+            )
     return man
 
 
@@ -1123,44 +1134,6 @@ def _json_stat(v):
     if isinstance(v, decimal.Decimal):
         return float(v)
     return v
-
-
-def _constraint_aggs(prev: Optional[dict]):
-    """``(names, exprs, aggregate columns)`` for write-time CHECK
-    enforcement: one violation counter per table constraint, attached
-    to the SAME ``observe`` that already counts the batch's rows — the
-    check rides the write job, zero extra scans at any batch size.
-    SQL CHECK semantics: a row violates only when the expression is
-    FALSE (NULL/unknown passes)."""
-    from pyspark.sql import functions as F
-
-    cons = (prev or {}).get("constraints") or {}
-    names = sorted(cons)
-    aggs = []
-    for i, name in enumerate(names):
-        viol = ~F.coalesce(
-            F.expr(cons[name]).cast("boolean"), F.lit(True)
-        )
-        aggs.append(
-            F.sum(F.when(viol, 1).otherwise(0))
-            .cast("long")
-            .alias("_c%d" % i)
-        )
-    return names, cons, aggs
-
-
-def _enforce_constraints(obs_row, names, cons, who: str) -> None:
-    """Raise BEFORE the commit when any violation counter is nonzero —
-    the staged files become vacuum garbage, the table never sees the
-    bad rows."""
-    for i, name in enumerate(names):
-        bad = int(obs_row.get("_c%d" % i) or 0)
-        if bad:
-            raise ValueError(
-                "%s: CHECK constraint %r (%s) violated by %d row(s) — "
-                "nothing committed (staged files are vacuum garbage)"
-                % (who, name, cons[name], bad)
-            )
 
 
 def _field_ids_of(entry: dict):
@@ -1948,7 +1921,6 @@ def atomic_publish(
     _lease: Optional[_Lease] = None,
     data_change: bool = True,
     operation: str = "overwrite",
-    _set_index_spec: bool = True,
     _partition_spec=None,
     _keep_layout: bool = False,
 ) -> int:
@@ -1957,7 +1929,7 @@ def atomic_publish(
     count is observed during the write — no second scan.
 
     ``operation`` labels the commit in the snapshot history (see
-    :func:`table_history`) — composite flavors (merge/compact/cluster)
+    :func:`table_history`) — composite flavors (merge/compact)
     pass their own name.
 
     ``partition_by`` hive-partitions the snapshot's data files
@@ -1997,8 +1969,8 @@ def atomic_publish(
             )
         staged = _materialize_partition_cols(df, spec)
         if not _keep_layout:
-            # callers that pre-laid-out the frame (compact's byte-sized
-            # range layout, zorder clustering) pass _keep_layout=True
+            # a caller that pre-laid-out the frame (compact's
+            # byte-sized range layout) passes _keep_layout=True
             staged = _pt_rebalance(staged, parts)
         # a full rewrite starts the field-id space fresh (physical ==
         # logical again) and resets the evolution flags — nothing of
@@ -2009,9 +1981,7 @@ def atomic_publish(
         # from the first read. Explicit cols on a full publish DEFINE
         # the table's index spec (persisted; every later write flavor
         # defaults to it); absent args inherit the previous spec.
-        explicit = _set_index_spec and (
-            stats_cols is not None or bloom_cols is not None
-        )
+        explicit = stats_cols is not None or bloom_cols is not None
         with _StagedCommit(
             fs, table_dir, prev, "atomic_publish", lease_ttl_ms, lease=lease
         ) as st:
@@ -2205,7 +2175,7 @@ def _commit(
     # which reset it — a rewrite leaves nothing to resurrect)
     for k in (
         "field_ids", "next_field_id", "schema_evolved", "retired_names",
-        "constraints", "tags", "index_cols", "retention", "branches",
+        "index_cols", "retention",
     ):
         if entry.get(k) is None and prev and prev.get(k) is not None:
             entry[k] = prev[k]
@@ -2250,8 +2220,8 @@ class _StagedCommit:
 
     Flow: ``sidecar`` (optional; starts on a second driver thread when
     ``write`` starts, or runs inline when nothing is written),
-    ``write`` (row count and CHECK violations observed in the same job,
-    enforced before anything is staged, then the scan), ``stage``
+    ``write`` (row count observed in the same job, then the scan),
+    ``stage``
     (write-time indexes and field-id stamp into ``_seg.json``),
     ``commit`` (joins the sidecar, takes the short commit lease unless
     the writer already holds one, and rebases onto a moved table when
@@ -2334,12 +2304,10 @@ class _StagedCommit:
             self._pool.shutdown(wait=True)
 
     def write(self, df: DataFrame, parts=()) -> int:
-        """Write ``df`` into the staging dir with its row count and the
-        base's CHECK violation counters observed by the same job
-        (violations raise before anything is staged), then list the
-        written data files. A queued sidecar starts first, so its jobs
-        fill the executor slots the write's tail leaves idle. Returns
-        the row count."""
+        """Write ``df`` into the staging dir with its row count observed
+        by the same job, then list the written data files. A queued
+        sidecar starts first, so its jobs fill the executor slots the
+        write's tail leaves idle. Returns the row count."""
         from pyspark.sql import Observation, functions as F
 
         if self._queued is not None:
@@ -2351,14 +2319,12 @@ class _StagedCommit:
             self._fut = self._pool.submit(build, rel)
         self._spark = df.sparkSession
         obs = Observation()
-        names, cons, aggs = _constraint_aggs(self.base)
-        writer = df.observe(
-            obs, F.count(F.lit(1)).alias("n"), *aggs
-        ).write.mode("append")
+        writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "append"
+        )
         if parts:
             writer = writer.partitionBy(*parts)
         writer.parquet(self.vdir)
-        _enforce_constraints(obs.get, names, cons, self.who)
         self.n_rows = int(obs.get["n"])
         self.files, self.sizes = _scan_written(self.fs, self.vdir, self.seg)
         return self.n_rows
@@ -2414,17 +2380,13 @@ class _StagedCommit:
             entry["data_change"] = False
         return entry
 
-    def commit(self, entry_of, still_valid=None, swap=None):
+    def commit(self, entry_of, still_valid=None):
         """Join the sidecar, then under the commit lease: re-read the
         manifest (it must not have vanished); if the table moved, rebase
         iff :func:`_check_rebase` and ``still_valid(cur)`` pass (both
         raise :class:`ConcurrentWriteError` otherwise); swap in
         ``entry_of(base)`` with :func:`_commit` and release the claim.
-        Returns the committed version.
-
-        ``swap(cur, entry)`` commits to a ref other than main (a branch
-        head): main's version says nothing about that ref, so
-        ``still_valid`` always runs and ``swap``'s result is returned."""
+        Returns the committed version."""
         self.sidecar_result()
         lease = self._lease or _Lease(
             self.fs, self.table_dir, ttl_ms=self._ttl
@@ -2437,22 +2399,15 @@ class _StagedCommit:
                     raise ConcurrentWriteError(
                         "%s: manifest vanished mid-write" % self.who
                     )
-                if swap is not None:
-                    still_valid(cur)
-                elif int(cur["version"]) != int(base["version"]):
+                if int(cur["version"]) != int(base["version"]):
                     _check_rebase(base, cur, self.who)
                     if still_valid is not None:
                         still_valid(cur)
                 base = cur
             entry = entry_of(base)
             self._committing = True
-            if swap is not None:
-                out = swap(base, entry)
-            else:
-                out = (int(base["version"]) if base else 0) + 1
-                _commit(
-                    self.fs, self.table_dir, base, out, entry, lease=lease
-                )
+            out = (int(base["version"]) if base else 0) + 1
+            _commit(self.fs, self.table_dir, base, out, entry, lease=lease)
             # committed: the claim's job (name uniqueness, in-flight
             # liveness for vacuum) is over
             self.fs.delete_file(self.vdir + ".claim")
@@ -2499,13 +2454,12 @@ def append_publish(
     committed schema.
 
     ``cluster_by=[cols]`` range-partitions and sorts the BATCH on the
-    given columns before writing (``publish_clustered``, applied to the
-    delta): each new file covers a narrow value range, so the write-time
-    min/max stats are TIGHT and ``skip=`` range pruning on the landing
-    table actually skips — the difference between "stats recorded" and
-    "stats that prune" on an append-only ingest path. Batch-local
-    ordering only; a periodic ``publish_clustered``/``zorder`` rewrite
-    remains the cross-batch clustering move.
+    given columns before writing: each new file covers a narrow value
+    range, so the write-time min/max stats are TIGHT and ``skip=`` range
+    pruning on the landing table actually skips — the difference between
+    "stats recorded" and "stats that prune" on an append-only ingest
+    path. Batch-local ordering only: files of different batches may
+    still overlap.
 
     CONCURRENCY (optimistic, write-serializable): the batch write runs
     with NO lease held — the commit lease guards only the final
@@ -2720,8 +2674,8 @@ def describe_table(
     Returns ``{"version", "committed_at_ms", "operation", "n_rows",
     "n_files", "size_bytes", "partition_by", "partition_spec"
     (hidden-partitioning transforms), "schema" (DDL string),
-    "schema_evolved", "retired_names", "constraints", "tags",
-    "index_cols", "retention", "meta", "dv_files" (files carrying
+    "schema_evolved", "retired_names", "index_cols", "retention",
+    "meta", "dv_files" (files carrying
     delete vectors), "dv_rows" (masked row count), "n_snapshots",
     "external_refs" (shallow-clone refs), "format_version"}``."""
     from pyspark.sql import types as T
@@ -2747,16 +2701,6 @@ def describe_table(
         "schema": st.simpleString(),
         "schema_evolved": bool(m.get("schema_evolved")),
         "retired_names": list(m.get("retired_names") or []),
-        "constraints": dict(m.get("constraints") or {}),
-        "tags": dict(m.get("tags") or {}),
-        "branches": {
-            n: {
-                "base": int(b.get("base", 0)),
-                "seq": int(b.get("seq", 0)),
-                "n_rows": int((b.get("head") or {}).get("n_rows", 0)),
-            }
-            for n, b in (m.get("branches") or {}).items()
-        },
         "index_cols": dict(m.get("index_cols") or {}),
         "retention": dict(m.get("retention") or {}),
         "meta": dict(m.get("meta") or {}),
@@ -3155,7 +3099,6 @@ def read_published(
     skip: Optional[dict] = None,
     skip_eq: Optional[dict] = None,
     as_of_ms: Optional[int] = None,
-    ref: Optional[str] = None,
 ) -> DataFrame:
     """Read exactly the committed snapshot's manifest-listed files —
     the latest by default, or any retained ``version`` (time travel).
@@ -3191,27 +3134,7 @@ def read_published(
     manifest = _read_manifest(table_dir, fs)
     if manifest is None:
         raise ValueError("no committed table at %s" % table_dir)
-    entry = None
-    if ref is not None:
-        if version is not None or as_of_ms is not None:
-            raise ValueError(
-                "read_published: ref excludes version/as_of_ms"
-            )
-        tags = manifest.get("tags") or {}
-        branches = manifest.get("branches") or {}
-        if ref in tags:
-            version = int(tags[ref])
-        elif ref in branches:
-            # branch heads live OUTSIDE the snapshots map (their
-            # versions never collide with main's) — resolve directly
-            entry = branches[ref]["head"]
-        else:
-            raise KeyError(
-                "read_published: no tag or branch %r (have: %s)"
-                % (ref, sorted(tags) + sorted(branches))
-            )
-    if entry is None:
-        _, entry = _select_snapshot(manifest, version, as_of_ms)
+    _, entry = _select_snapshot(manifest, version, as_of_ms)
     res = _resolve_entry(fs, table_dir, entry)
     entry = {**entry, "files": res["files"]}
     if skip:
@@ -3617,20 +3540,6 @@ def _evolve_schema(
                 new_parts = tail
         else:
             new_st, fids, newly_retired = out
-        import re as _re
-
-        for cname, cexpr in (manifest.get("constraints") or {}).items():
-            hit = [
-                r
-                for r in newly_retired
-                if _re.search(r"\b%s\b" % _re.escape(r), cexpr)
-            ]
-            if hit:
-                raise ValueError(
-                    "%s: column(s) %s are referenced by CHECK "
-                    "constraint %r (%s) — drop the constraint first"
-                    % (operation, hit, cname, cexpr)
-                )
         segs, removed = _segments_of(fs, table_dir, manifest)
         prev_nf, prev_sz = _entry_counters(fs, table_dir, manifest)
         entry = {
@@ -3937,7 +3846,7 @@ def _metadata_commit(
     """Commit a PURE-METADATA snapshot: every segment carried by
     reference, counters unchanged. ``mutate(manifest) -> extra`` runs
     INSIDE the commit lease against the freshly re-read manifest —
-    single-key mutations of shared dicts (tags, constraints) apply to
+    single-key mutations of shared dicts (retention, index columns) apply to
     the state another writer may have just committed, instead of
     last-writer-winning a dict computed from a stale read. The lease is
     WAITED for (these commits are milliseconds): concurrent metadata
@@ -3980,75 +3889,6 @@ def _metadata_commit(
         lease.release()
 
 
-def add_constraint(
-    table_dir: str,
-    name: str,
-    expr_sql: str,
-    spark: Optional[SparkSession] = None,
-    validate: bool = True,
-    lease_ttl_ms: int = 300_000,
-) -> int:
-    """Add a CHECK constraint (Delta parity): from this commit on,
-    EVERY publish flavor — overwrite, append, partition/file replace,
-    CDC merge, predicate merge, streaming sinks — counts violations of
-    ``expr_sql`` inside the write job it already runs (zero extra
-    scans; SQL CHECK semantics, NULL passes) and REFUSES to commit a
-    batch containing a violating row. ``validate=True`` (default) first
-    proves the EXISTING table satisfies the constraint (one scan);
-    ``validate=False`` skips that scan but still analysis-checks the
-    expression against the schema. Renaming or dropping a column an
-    active constraint references is refused — drop the constraint
-    first."""
-    from pyspark.sql import functions as F, types as T
-
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    fs = _fs_for(table_dir, spark)
-    manifest = _read_manifest(table_dir, fs)
-    if manifest is None:
-        raise ValueError("add_constraint: no committed table here")
-    cons = dict(manifest.get("constraints") or {})
-    if name in cons:
-        raise ValueError(
-            "add_constraint: constraint %r already exists (%s)"
-            % (name, cons[name])
-        )
-    # analysis-check the expression against the table schema (raises
-    # on unknown columns / bad syntax) — always, even validate=False
-    schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-    _local_df(spark, [], schema).where(F.expr(expr_sql)).count()
-    if validate:
-        bad = (
-            read_published(spark, table_dir)
-            .where(
-                ~F.coalesce(
-                    F.expr(expr_sql).cast("boolean"), F.lit(True)
-                )
-            )
-            .limit(1)
-            .count()
-        )
-        if bad:
-            raise ValueError(
-                "add_constraint: existing rows violate %r (%s) — fix "
-                "the data first or add with validate=False at your own "
-                "risk" % (name, expr_sql)
-            )
-    def _mutate(fresh: dict) -> dict:
-        cur = dict(fresh.get("constraints") or {})
-        if name in cur:
-            raise ValueError(
-                "add_constraint: constraint %r already exists (%s)"
-                % (name, cur[name])
-            )
-        cur[name] = expr_sql
-        return {"constraints": cur}
-
-    return _metadata_commit(
-        table_dir, spark, lease_ttl_ms, "add_constraint", _mutate
-    )
-
-
 def set_index_columns(
     table_dir: str,
     stats_cols=None,
@@ -4057,8 +3897,8 @@ def set_index_columns(
     lease_ttl_ms: int = 300_000,
 ) -> int:
     """Persist the table's INDEX SPEC — the columns every subsequent
-    write of ANY flavor (append, merge, update, replaceWhere, compact,
-    clustered publish) records per-file min/max stats and equality
+    write of ANY flavor (append, merge, update, replaceWhere, compact)
+    records per-file min/max stats and equality
     blooms for, without each caller passing ``stats_cols``/
     ``bloom_cols`` (Delta's dataSkippingStatsColumns as a table
     property). One forgotten arg on a micro-batch ingest means
@@ -4144,361 +3984,6 @@ def set_retention(
     )
 
 
-def drop_constraint(
-    table_dir: str,
-    name: str,
-    spark: Optional[SparkSession] = None,
-    lease_ttl_ms: int = 300_000,
-) -> int:
-    """Remove a CHECK constraint — pure metadata commit."""
-    fs = _fs_for(table_dir, spark)
-    manifest = _read_manifest(table_dir, fs)
-    if manifest is None:
-        raise ValueError("drop_constraint: no committed table here")
-    def _mutate(fresh: dict) -> dict:
-        cur = dict(fresh.get("constraints") or {})
-        if name not in cur:
-            raise KeyError("drop_constraint: no constraint %r" % name)
-        cur.pop(name)
-        return {"constraints": cur}
-
-    return _metadata_commit(
-        table_dir, spark, lease_ttl_ms, "drop_constraint", _mutate
-    )
-
-
-def tag_version(
-    table_dir: str,
-    name: str,
-    version: Optional[int] = None,
-    spark: Optional[SparkSession] = None,
-    lease_ttl_ms: int = 300_000,
-) -> int:
-    """Tag a retained snapshot with a NAME (Iceberg-style ref): the tag
-    rides the manifest, ``read_published(ref=name)`` /
-    ``clone_table(ref=name)`` resolve it, and ``vacuum`` RETAINS tagged
-    snapshots regardless of its keep-count — an audit freeze
-    ("q3-close", "pre-migration") costs one metadata commit and
-    protects its data files until the tag drops. Defaults to tagging
-    the current version."""
-    fs = _fs_for(table_dir, spark)
-    manifest = _read_manifest(table_dir, fs)
-    if manifest is None:
-        raise ValueError("tag_version: no committed table here")
-
-    def _mutate(fresh: dict) -> dict:
-        # version=None means "the current version" — resolved from the
-        # IN-LEASE re-read, not the pre-lease snapshot, so a concurrent
-        # data commit landing before lease acquisition can't make the
-        # tag silently pin the now-older version
-        v = int(version) if version is not None else int(
-            fresh["version"]
-        )
-        snaps = fresh.get("snapshots", {})
-        if str(v) not in snaps and v != int(fresh["version"]):
-            raise KeyError(
-                "tag_version: version %d is not a retained snapshot" % v
-            )
-        tags = dict(fresh.get("tags") or {})
-        if name in tags:
-            raise ValueError(
-                "tag_version: tag %r already points at version %d — "
-                "drop_tag first (tags are immutable by design)"
-                % (name, tags[name])
-            )
-        tags[name] = v
-        return {"tags": tags}
-
-    return _metadata_commit(
-        table_dir, spark, lease_ttl_ms, "tag", _mutate
-    )
-
-
-def drop_tag(
-    table_dir: str,
-    name: str,
-    spark: Optional[SparkSession] = None,
-    lease_ttl_ms: int = 300_000,
-) -> int:
-    """Remove a tag — its snapshot becomes ordinary history again
-    (reclaimable by the next ``vacuum`` past the keep-count)."""
-    fs = _fs_for(table_dir, spark)
-    manifest = _read_manifest(table_dir, fs)
-    if manifest is None:
-        raise ValueError("drop_tag: no committed table here")
-    def _mutate(fresh: dict) -> dict:
-        tags = dict(fresh.get("tags") or {})
-        if name not in tags:
-            raise KeyError("drop_tag: no tag %r" % name)
-        tags.pop(name)
-        return {"tags": tags}
-
-    return _metadata_commit(
-        table_dir, spark, lease_ttl_ms, "drop_tag", _mutate
-    )
-
-
-# ---------------------------------------------------------------------------
-# BRANCHES (Iceberg-style snapshot refs, write side): a branch is a
-# named lineage forked from a retained snapshot. Writes on the branch
-# advance ONLY the branch head — main's committed entry, version number
-# and history are untouched, so readers of the table never see branch
-# data until ``fast_forward_branch`` adopts the head as main's next
-# version. The safe-backfill-rehearsal primitive: fork, rebuild a slice
-# on the branch, validate with ``read_published(ref=branch)``, then
-# fast-forward (one metadata commit) or drop the branch (zero cleanup —
-# unreferenced staging dirs are ordinary vacuum garbage).
-#
-# Representation: ``manifest["branches"][name] = {"head": <entry
-# dict>, "base": <main version at fork>, "seq": <branch commit
-# count>}``. The head entry is DENORMALIZED (it lives outside the
-# snapshots map) so branch versions can never collide with main's
-# monotone version numbers; vacuum pins every branch head's files like
-# a tag. Fast-forward REFUSES when main moved past the fork point —
-# the branch would silently drop main's concurrent commits; rebase by
-# re-forking. Branch writes are append-only by design (the rehearsal
-# shape); richer branch surgery composes from clone_table.
-# ---------------------------------------------------------------------------
-
-
-def create_branch(
-    table_dir: str,
-    name: str,
-    version: Optional[int] = None,
-    spark: Optional[SparkSession] = None,
-    lease_ttl_ms: int = 300_000,
-) -> int:
-    """Fork branch ``name`` from the current snapshot (or retained
-    ``version``). One metadata commit; zero data IO at any size."""
-    fs = _fs_for(table_dir, spark)
-    if _read_manifest(table_dir, fs) is None:
-        raise ValueError("create_branch: no committed table here")
-
-    def _mutate(fresh: dict) -> dict:
-        branches = dict(fresh.get("branches") or {})
-        if name in branches:
-            raise ValueError(
-                "create_branch: branch %r already exists (head seq %d)"
-                % (name, int(branches[name].get("seq", 0)))
-            )
-        if name in (fresh.get("tags") or {}):
-            raise ValueError(
-                "create_branch: %r is already a tag — refs share one "
-                "namespace" % name
-            )
-        v, src = _select_snapshot(fresh, version)
-        head = {
-            k: src[k]
-            for k in (
-                "files", "file_sizes", "file_stats", "segments",
-                "removed", "n_rows", "n_files", "size_bytes", "schema",
-                "partition_by", "partition_spec", "dv", "dv_rows",
-                "field_ids", "next_field_id", "schema_evolved",
-                "retired_names",
-            )
-            if src.get(k) is not None
-        }
-        head["operation"] = "branch_fork"
-        branches[name] = {
-            "head": head,
-            # base = the version the create commit ITSELF produces
-            # (fresh is the pre-commit manifest): fast-forward compares
-            # main's version against this to detect commits since the
-            # fork, and the fork commit is not "since"
-            "base": int(fresh["version"]) + 1,
-            "forked_from": int(v),
-            "seq": 0,
-        }
-        return {"branches": branches}
-
-    return _metadata_commit(
-        table_dir, spark, lease_ttl_ms, "create_branch", _mutate
-    )
-
-
-def drop_branch(
-    table_dir: str,
-    name: str,
-    spark: Optional[SparkSession] = None,
-    lease_ttl_ms: int = 300_000,
-) -> int:
-    """Delete a branch ref — its head's exclusive files become ordinary
-    vacuum garbage (main's files were always shared by reference)."""
-    fs = _fs_for(table_dir, spark)
-    if _read_manifest(table_dir, fs) is None:
-        raise ValueError("drop_branch: no committed table here")
-
-    def _mutate(fresh: dict) -> dict:
-        branches = dict(fresh.get("branches") or {})
-        if name not in branches:
-            raise KeyError("drop_branch: no branch %r" % name)
-        branches.pop(name)
-        return {"branches": branches}
-
-    return _metadata_commit(
-        table_dir, spark, lease_ttl_ms, "drop_branch", _mutate
-    )
-
-
-def append_branch(
-    df: DataFrame,
-    table_dir: str,
-    name: str,
-    lease_ttl_ms: int = 300_000,
-    stats_cols=None,
-    bloom_cols=None,
-) -> int:
-    """Append a batch to BRANCH ``name`` — the write stages like any
-    optimistic append (claimed dir, no lease, heartbeat), then under
-    the commit lease advances ONLY the branch head (main's entry and
-    version are byte-identical before and after). Strict schema check
-    against the BRANCH head's schema. Returns the branch's new commit
-    seq. Concurrent appends to the SAME branch: the loser's head-CAS
-    raises ConcurrentWriteError; concurrent MAIN commits never
-    conflict (disjoint state)."""
-    fs = _fs_for(table_dir, df.sparkSession)
-    manifest = _read_manifest(table_dir, fs)
-    if manifest is None:
-        raise ValueError("append_branch: no committed table here")
-    br = (manifest.get("branches") or {}).get(name)
-    if br is None:
-        raise KeyError("append_branch: no branch %r" % name)
-    head = br["head"]
-    new_sig = [
-        (f["name"], f["type"])
-        for f in json.loads(df.schema.json())["fields"]
-    ]
-    old_sig = [
-        (f["name"], f["type"])
-        for f in json.loads(head["schema"])["fields"]
-    ]
-    if new_sig != old_sig:
-        raise ValueError(
-            "append_branch: batch schema differs from the branch "
-            "head's (names AND types must match): batch=%s branch=%s"
-            % (new_sig, old_sig)
-        )
-    parts = head.get("partition_by") or []
-    seen_seq = int(br.get("seq", 0))
-    with _StagedCommit(
-        fs, table_dir, manifest, "append_branch", lease_ttl_ms
-    ) as st:
-        st.write(
-            _pt_rebalance(
-                _materialize_partition_cols(df, head.get("partition_spec")),
-                parts,
-            ),
-            parts,
-        )
-        st.stage(
-            head["schema"], _field_ids_of(head)[0], stats_cols, bloom_cols
-        )
-
-        def same_seq(cur):
-            cur_br = (cur.get("branches") or {}).get(name)
-            if cur_br is None:
-                raise ConcurrentWriteError(
-                    "append_branch: branch %r was dropped mid-write" % name
-                )
-            if int(cur_br.get("seq", 0)) != seen_seq:
-                raise ConcurrentWriteError(
-                    "append_branch: a concurrent commit advanced "
-                    "branch %r (seq %d -> %d) — re-run against its "
-                    "new head" % (name, seen_seq, int(cur_br.get("seq", 0)))
-                )
-
-        def head_of(cur):
-            cur_head = cur["branches"][name]["head"]
-            new_head = {
-                **cur_head,
-                "segments": list(cur_head.get("segments") or [])
-                + ([st.seg] if st.files else []),
-                "removed": list(cur_head.get("removed") or []),
-                "n_rows": int(cur_head["n_rows"]) + st.n_rows,
-                "n_files": int(cur_head.get("n_files") or 0)
-                + len(st.files),
-                "size_bytes": int(cur_head.get("size_bytes") or 0)
-                + sum(st.sizes.values()),
-                "operation": "branch_append",
-                "committed_at_ms": _now_ms(),
-            }
-            # a fork from a legacy inline entry carries "files" — once
-            # appended the head is segment-shaped, drop the inline list
-            # (nothing staged and no prior segments: it stays inline)
-            if new_head["segments"]:
-                for k in ("files", "file_sizes"):
-                    new_head.pop(k, None)
-            return new_head
-
-        def swap(cur, new_head):
-            # advance ONLY the branch head: main's entry and version
-            # are byte-identical before and after
-            branches = dict(cur["branches"])
-            branches[name] = {
-                **branches[name], "head": new_head, "seq": seen_seq + 1,
-            }
-            fs.replace_with(
-                json.dumps({**cur, "branches": branches}),
-                _manifest_path(table_dir, fs),
-                ".tmp.br.%s.%d" % (name.replace("/", "_"), seen_seq + 1),
-            )
-            return seen_seq + 1
-
-        return st.commit(head_of, same_seq, swap=swap)
-
-
-def fast_forward_branch(
-    table_dir: str,
-    name: str,
-    spark: Optional[SparkSession] = None,
-    lease_ttl_ms: int = 300_000,
-    drop: bool = True,
-) -> int:
-    """MAIN adopts branch ``name``'s head as its next version — one
-    metadata commit, zero data movement (the head's segments are
-    already on disk). REFUSES (ConcurrentWriteError) when main moved
-    past the branch's fork point: the head was built on a stale base,
-    so adopting it would silently erase main's concurrent commits —
-    re-fork and replay instead (same contract as Iceberg's
-    fast-forward). ``drop`` removes the ref in the same commit
-    (default); keep it to continue writing on the branch from the new
-    shared base."""
-    fs = _fs_for(table_dir, spark)
-    lease = _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-        wait_ms=_COMMIT_WAIT_MS
-    )
-    try:
-        fresh = _read_manifest(table_dir, fs)
-        if fresh is None:
-            raise ValueError("fast_forward_branch: no committed table")
-        br = (fresh.get("branches") or {}).get(name)
-        if br is None:
-            raise KeyError("fast_forward_branch: no branch %r" % name)
-        if int(fresh["version"]) != int(br["base"]):
-            raise ConcurrentWriteError(
-                "fast_forward_branch: main moved from version %d to %d "
-                "since branch %r forked — adopting the head would drop "
-                "those commits; re-fork from the current version and "
-                "replay"
-                % (int(br["base"]), int(fresh["version"]), name)
-            )
-        entry = dict(br["head"])
-        entry["operation"] = "fast_forward"
-        entry.pop("committed_at_ms", None)
-        entry["meta"] = {"fast_forwarded_from": name}
-        version = int(fresh["version"]) + 1
-        branches = dict(fresh.get("branches") or {})
-        if drop:
-            branches.pop(name)
-        else:
-            branches[name] = {**br, "base": version}
-        entry["branches"] = branches
-        _commit(fs, table_dir, fresh, version, entry, lease=lease)
-        return version
-    finally:
-        lease.release()
-
-
 def restore_table(
     table_dir: str,
     version: int,
@@ -4558,7 +4043,6 @@ def clone_table(
     dst_dir: str,
     version: Optional[int] = None,
     as_of_ms: Optional[int] = None,
-    ref: Optional[str] = None,
 ) -> int:
     """SHALLOW CLONE: fork ``src_dir``'s committed snapshot (or any
     retained ``version`` / ``as_of_ms`` state) into a NEW table at
@@ -4590,11 +4074,6 @@ def clone_table(
     src_manifest = _read_manifest(src_dir, src_fs)
     if src_manifest is None:
         raise ValueError("clone_table: no committed table at %s" % src_dir)
-    if ref is not None:
-        tags = src_manifest.get("tags") or {}
-        if ref not in tags:
-            raise KeyError("clone_table: no tag %r" % ref)
-        version = int(tags[ref])
     src_v, entry = _select_snapshot(src_manifest, version, as_of_ms)
     res = _resolve_entry(src_fs, src_dir, entry, rekey_stats=False)
     abs_of = {f: _ref_path(src_fs, src_dir, f) for f in res["files"]}
@@ -4637,7 +4116,7 @@ def clone_table(
     # it the default horizon instead of the declared compliance one.
     for k in (
         "field_ids", "next_field_id", "schema_evolved", "retired_names",
-        "constraints", "index_cols", "partition_spec", "retention",
+        "index_cols", "partition_spec", "retention",
     ):
         if entry.get(k) is not None:
             new_entry[k] = entry[k]
@@ -5206,8 +4685,8 @@ def read_changes(
 
     Needs every version in (from, to] retained (else KeyError — a
     vacuumed step can't prove its delta). Columns of map type can't be
-    diffed (not groupable); tables with map columns should diff via
-    :func:`diff_versions` on an id column instead."""
+    diffed (not groupable); tables with map columns should join two
+    ``read_published(version=)`` snapshots on an id column instead."""
     from pyspark.sql import functions as F, types as T
 
     fs = _fs_for(table_dir, spark)
@@ -5285,8 +4764,9 @@ def read_changes(
         raise ValueError(
             "read_changes: a full rewrite re-assigned field ids inside "
             "(v%d, v%d] of this renamed/dropped-column table — exact "
-            "cross-era column resolution is impossible; diff with "
-            "diff_versions() on an id column instead" % (from_v, to_v)
+            "cross-era column resolution is impossible; join two "
+            "read_published(version=) snapshots on an id column "
+            "instead" % (from_v, to_v)
         )
 
     def _evo_end(res: dict) -> Optional[dict]:
@@ -5601,11 +5081,6 @@ def vacuum(
         by_v = sorted(int(v) for v in snaps)
         retained = set(by_v[-keep:]) if keep else set()
         retained.add(committed)
-        # tagged snapshots are PINNED — an audit freeze survives any
-        # keep-count until its tag drops
-        retained |= {
-            int(v) for v in (manifest.get("tags") or {}).values()
-        }
         if older_than_ms is not None:
             now = _now_ms()
             retained |= {
@@ -5627,19 +5102,9 @@ def vacuum(
                 )
         # reference set AFTER pruning: every dir a retained snapshot
         # (incl. the committed one) cites a data file or its delete-
-        # vector file in must survive. BRANCH HEADS are pinned like
-        # tags — their entries live outside the snapshots map, so they
-        # join the walk explicitly.
+        # vector file in must survive.
         referenced = set()
-        for e in (
-            [manifest]
-            + list((manifest.get("snapshots") or {}).values())
-            + [
-                b["head"]
-                for b in (manifest.get("branches") or {}).values()
-                if isinstance(b.get("head"), dict)
-            ]
-        ):
+        for e in [manifest, *(manifest.get("snapshots") or {}).values()]:
             for f in _entry_files(fs, table_dir, e):
                 if not _is_ext(f):
                     referenced.add(f.split("/", 1)[0])
@@ -5929,7 +5394,7 @@ def compact(
     ``repartition(n)`` — perfectly even files, no sort.
 
     The ingest pattern this serves: many small appended publishes
-    (micro-batch ``foreachBatch`` publishes, ``merge_publish`` deltas)
+    (micro-batch ``foreachBatch`` publishes, merge deltas)
     accumulate file counts that degrade planning at 100 TB — the
     task-per-file floor and driver listing memory both scale with file
     count, not bytes. A periodic ``compact()`` keeps files O(bytes /
@@ -6156,71 +5621,6 @@ def _merge_schema(df: DataFrame, manifest: dict, schema_evolution: bool,
     )
 
 
-def merge_publish(
-    changes: DataFrame,
-    table_dir: str,
-    key_cols,
-    version_cols,
-    op_col: Optional[str] = None,
-    delete_op: str = "delete",
-    partition_by=None,
-    lease_ttl_ms: int = 300_000,
-) -> int:
-    """MERGE INTO with snapshot isolation: apply a CDC change batch
-    onto the committed snapshot (``scale.cdc_apply`` — last-writer-wins
-    upserts + tombstone deletes in ONE map-combined max-struct
-    aggregate, no window) and publish the result as the next version.
-    Readers see the pre-merge or post-merge snapshot, never a mix, and
-    time travel retains the pre-merge version.
-
-    The FIRST merge into an empty table runs the same ``cdc_apply``
-    against an empty base (not a raw insert), so an intra-batch
-    duplicate key collapses to its last writer and an upsert-then-
-    delete of one key nets to absent — identical semantics to every
-    later merge, and the 'key_cols unique in base' contract holds from
-    version 1. The snapshot KEEPS the version columns (the next
-    merge's base side needs them), dropping only the op marker.
-
-    The table's hive partition layout is PRESERVED: ``partition_by``
-    is read from the committed manifest (or taken from the parameter
-    on first merge) and passed through to the republish, so merging
-    never silently drops partition pruning from the new snapshot.
-
-    Commit concurrency: the whole read-merge-publish runs under the
-    table's commit lease, so two mergers can't both read version N and
-    race their N+1 manifests (lost update) — the loser raises
-    :class:`ConcurrentWriteError`. The merge rewrites the table — the
-    right shape while snapshots are repartition-light; at petabyte
-    scale a format keeps deltas and compacts, which is ``cdc_apply``
-    run lazily instead of eagerly."""
-    from bamboo_spark.operators.scale import cdc_apply
-
-    spark = changes.sparkSession
-    fs = _fs_for(table_dir, spark)
-    fs.mkdirs(table_dir)
-    vers = [version_cols] if isinstance(version_cols, str) else list(version_cols)
-    with _Lease(
-        fs, table_dir, ttl_ms=lease_ttl_ms, heartbeat=True
-    ) as lease:
-        prev = _read_manifest(table_dir, fs)
-        if prev is None:
-            base = changes.limit(0)
-            if op_col:
-                base = base.drop(op_col)
-            parts, pspec = partition_by, None
-        else:
-            base = read_published(spark, table_dir)
-            parts = prev.get("partition_by") or None
-            pspec = prev.get("partition_spec")
-        merged = cdc_apply(
-            base, changes, key_cols, vers, op_col=op_col, delete_op=delete_op
-        )
-        return atomic_publish(
-            merged, table_dir, partition_by=parts, _lease=lease,
-            operation="merge", _partition_spec=pspec,
-        )
-
-
 def merge_publish_incremental(
     changes: DataFrame,
     table_dir: str,
@@ -6238,15 +5638,14 @@ def merge_publish_incremental(
     """MERGE-ON-READ upsert: apply a CDC batch in ONE commit that
     (a) delete-vectors the old rows of every key the batch touches —
     found by row ADDRESS, no file rewritten — and (b) appends the
-    batch's post-state rows as new files. This is ``merge_publish``
-    without the table rewrite: commit IO is O(batch) regardless of
-    table size (the Delta merge + deletion-vectors shape). The eager
-    rewrite remains the right call when churn has accumulated —
-    ``compact`` folds the vectors away.
+    batch's post-state rows as new files. No table rewrite: commit IO
+    is O(batch) regardless of table size (the Delta merge +
+    deletion-vectors shape). When churn has accumulated, ``compact``
+    folds the vectors away.
 
-    Intra-batch semantics match ``merge_publish`` exactly (the batch is
-    collapsed per key by ``scale.cdc_apply`` against an empty base:
-    last writer by ``version_cols`` wins, tombstones net to absent).
+    Intra-batch semantics: the batch is collapsed per key by
+    ``scale.cdc_apply`` against an empty base — last writer by
+    ``version_cols`` wins, tombstones net to absent.
 
     The address scan opens only the files the key probe keeps — the
     probe ``merge_into`` runs (:func:`_probe_candidates`): range+bloom
@@ -6284,8 +5683,8 @@ def merge_publish_incremental(
         base_empty = base_empty.drop(op_col)
     manifest = _read_manifest(table_dir, fs)
     if manifest is None:
-        # first batch seeds the table: same cdc_apply-against-empty
-        # semantics as merge_publish's first merge
+        # first batch seeds the table: the same cdc_apply-against-empty
+        # collapse as every later batch
         seeded = cdc_apply(
             base_empty, changes, keys, vers, op_col=op_col,
             delete_op=delete_op,
@@ -6777,72 +6176,6 @@ def merge_into(
         lease_ttl_ms, stats_cols, bloom_cols, meta, who="merge_into",
         out_schema_json=out_schema_json, out_fids=out_fids,
     )
-
-
-def diff_versions(
-    spark: SparkSession,
-    table_dir: str,
-    old_version: int,
-    new_version: Optional[int] = None,
-    id_col: str = "id",
-    content_col: Optional[str] = None,
-) -> DataFrame:
-    """Audit what changed between two retained snapshots: per id,
-    'added' / 'removed' / 'changed' / 'unchanged' via
-    ``scale.snapshot_diff`` (digest-only shuffle). ``content_col``
-    defaults to every non-id column packed into one struct, so any
-    payload change counts as 'changed'.
-
-    On RENAMED/DROPPED-column tables the two snapshots are compared
-    under the NEW version's schema by FIELD ID: a column that merely
-    changed its name between the versions compares value-to-value
-    (never a spurious whole-table 'changed'), a column added after
-    ``old_version`` reads as NULL there, and a dropped one leaves the
-    comparison — the same end-schema rule as :func:`read_changes`.
-    ``id_col`` names the NEW version's column."""
-    from pyspark.sql import functions as F
-
-    from bamboo_spark.operators.scale import snapshot_diff
-
-    old = read_published(spark, table_dir, version=old_version)
-    new = read_published(spark, table_dir, version=new_version)
-    if old.columns != new.columns:
-        # align OLD onto the NEW schema by field id (metadata-only):
-        # renamed columns line up, later-added ones read NULL
-        fs = _fs_for(table_dir, spark)
-        manifest = _read_manifest(table_dir, fs)
-        snaps = manifest.get("snapshots", {})
-
-        def _entry(v):
-            if v is None or int(v) == int(manifest["version"]):
-                return manifest
-            return snaps[str(int(v))]
-
-        old_ids = _field_ids_of(_entry(old_version))[0]
-        new_ids = _field_ids_of(_entry(new_version))[0]
-        old_by_id = {i: n for n, i in old_ids.items()}
-        old = old.select(
-            *[
-                (
-                    F.col(old_by_id[new_ids[c]]).alias(c)
-                    if new_ids.get(c) in old_by_id
-                    else F.lit(None)
-                    .cast(dict(new.dtypes)[c])
-                    .alias(c)
-                )
-                for c in new.columns
-            ]
-        )
-    if content_col is None:
-        content_col = "_payload"
-        pack = lambda df: df.select(  # noqa: E731
-            F.col(id_col),
-            F.to_json(
-                F.struct(*[c for c in df.columns if c != id_col])
-            ).alias("_payload"),
-        )
-        old, new = pack(old), pack(new)
-    return snapshot_diff(old, new, id_col=id_col, content_col=content_col)
 
 
 def compact_partitions(
@@ -7759,38 +7092,6 @@ def replace_files_publish(
         _materialize_partition_cols(df, prev.get("partition_spec")),
         fs, table_dir, prev, replace_set, "replace_files_publish",
         lease_ttl_ms, stats_cols, bloom_cols, data_change, operation,
-    )
-
-
-def publish_clustered(
-    df: DataFrame,
-    table_dir: str,
-    cluster_by,
-    target_files: Optional[int] = None,
-    partition_by=None,
-) -> int:
-    """OPTIMIZE-style clustered publish: range-repartition and sort the
-    snapshot on ``cluster_by`` (compose with ``scale.zorder_key`` for a
-    multi-dimensional key) and publish it with the cluster columns'
-    per-file min/max recorded AT WRITE TIME (``stats_cols`` on the
-    publish — a distributed job, every backend) — so every
-    ``read_published(skip=...)`` bound on a clustered column opens only
-    the files whose range intersects. The write-side half of data
-    skipping: clustering makes per-file ranges TIGHT, the stats make
-    them VISIBLE to the reader, and both ride the ordinary atomic
-    commit — no post-hoc stats pass. Returns the committed version."""
-    cols = [cluster_by] if isinstance(cluster_by, str) else list(cluster_by)
-    from pyspark.sql import functions as F
-
-    exprs = [F.col(c) for c in cols]
-    out = (
-        df.repartitionByRange(target_files, *exprs)
-        if target_files
-        else df.repartitionByRange(*exprs)
-    ).sortWithinPartitions(*exprs)
-    return atomic_publish(
-        out, table_dir, partition_by=partition_by, stats_cols=cols,
-        operation="cluster", _set_index_spec=False, _keep_layout=True,
     )
 
 

@@ -31,10 +31,11 @@ schema node becomes a Spark type once; ``pyarrow.array`` converts the
 whole document against that type in C, and ``createDataFrame`` takes
 the ``pyarrow.Table`` as one local batch. Whatever the Arrow build
 cannot express (an int outside int64, a Decimal finer than 18 places,
-a string with lone surrogates, a null root record, a naive datetime
-whose UTC instant falls outside years 1..9999) goes to the classic
+a string with lone surrogates, a naive datetime whose UTC instant
+falls outside years 1..9999) goes to the classic
 ``createDataFrame(rows, schema)`` builder instead, so such documents
-build exactly as that builder builds them.
+build exactly as that builder builds them. A root list that mixes
+records and nulls raises a ``ValueError`` naming the null item.
 """
 
 from __future__ import annotations
@@ -222,8 +223,6 @@ def _arrow_table(rows: list, schema: T.StructType, record: bool):
 
     asch = to_arrow_schema(schema)
     if record:
-        if None in rows:
-            raise ValueError("a null record has no row")
         columns = pa.array(rows, type=pa.struct(asch)).flatten()
     else:
         columns = [pa.array(rows, type=asch[0].type)]
@@ -239,6 +238,13 @@ def _frame(spark: SparkSession, doc: Any, arrow: bool = True) -> DataFrame:
     # a root list holds the rows; anything else is one row
     items, row = (doc, tag[0]) if type(tag) is tuple else ([doc], tag)
     record = type(row) is dict
+    if record and None in items:
+        # neither builder may see it: the classic one would accept it
+        # and fail at the frame's first action
+        raise ValueError(
+            "root list item %d is null: a null record has no row"
+            % items.index(None)
+        )
     schema = _spark_type(row if record else {DEFAULT_COLUMN: row})
     if arrow:
         data = [_rows(v, row) for v in items] if widened else items

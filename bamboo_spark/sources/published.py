@@ -792,18 +792,15 @@ class PublishedTableDataSource(DataSource):
                 _resolve_entry,
             )
 
-            table_dir = self._table_dir()
-            fs, native, man = _driver_manifest(table_dir)
             from bamboo_spark.operators.publish import (
                 _evo_of,
                 _select_snapshot,
             )
 
             # time travel as load options (Delta's versionAsOf /
-            # timestampAsOf; plus ref= for tags) — resolved here, once
+            # timestampAsOf) — resolved here, once
             version = None
             as_of = None
-            branch_entry = None
             for k, v in (self.options or {}).items():
                 lk = str(k).lower()
                 if lk == "versionasof":
@@ -811,21 +808,14 @@ class PublishedTableDataSource(DataSource):
                 elif lk == "timestampasof":
                     as_of = int(v)
                 elif lk == "ref":
-                    tags = man.get("tags") or {}
-                    branches = man.get("branches") or {}
-                    if str(v) in tags:
-                        version = int(tags[str(v)])
-                    elif str(v) in branches:
-                        # branch heads live outside the snapshots map
-                        branch_entry = branches[str(v)]["head"]
-                    else:
-                        raise ValueError(
-                            "bamboo_published: no tag or branch %r" % v
-                        )
-            if branch_entry is not None:
-                ver, entry = int(man["version"]), branch_entry
-            else:
-                ver, entry = _select_snapshot(man, version, as_of)
+                    raise ValueError(
+                        "bamboo_published: the ref option is not "
+                        "supported (tags and branches were removed); "
+                        "use versionAsOf or timestampAsOf"
+                    )
+            table_dir = self._table_dir()
+            fs, native, man = _driver_manifest(table_dir)
+            ver, entry = _select_snapshot(man, version, as_of)
             res = _resolve_entry(fs, native, entry)
             self._pinned = {
                 "version": int(ver),

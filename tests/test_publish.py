@@ -159,15 +159,15 @@ def test_vacuum_prunes_time_travel_history(spark, tmp_path):
 
 
 def test_merge_publish_upserts_with_snapshot_isolation(spark, tmp_path):
-    from bamboo_spark.operators.publish import merge_publish
+    from bamboo_spark.operators.publish import merge_publish_incremental
 
     t = str(tmp_path / "tbl")
-    # first merge into an empty table = insert (version/op cols dropped)
+    # first merge into an empty table = insert
     ch1 = spark.createDataFrame(
         [(1, "a", 1, "upsert"), (2, "b", 1, "upsert")],
         "id long, val string, ver long, op string",
     )
-    v1 = merge_publish(ch1, t, "id", ["ver"], op_col="op")
+    v1 = merge_publish_incremental(ch1, t, "id", ["ver"], op_col="op")
     assert v1 == 1
     assert sorted(
         (r["id"], r["val"]) for r in read_published(spark, t).collect()
@@ -182,7 +182,7 @@ def test_merge_publish_upserts_with_snapshot_isolation(spark, tmp_path):
         ],
         "id long, val string, ver long, op string",
     )
-    v2 = merge_publish(ch2, t, "id", ["ver"], op_col="op")
+    v2 = merge_publish_incremental(ch2, t, "id", ["ver"], op_col="op")
     assert v2 == 2
     now = sorted(
         (r["id"], r["val"]) for r in read_published(spark, t).collect()
@@ -193,29 +193,6 @@ def test_merge_publish_upserts_with_snapshot_isolation(spark, tmp_path):
         (r["id"], r["val"]) for r in read_published(spark, t, version=1).collect()
     )
     assert before == [(1, "a"), (2, "b")]
-
-
-def test_diff_versions_statuses(spark, tmp_path):
-    from bamboo_spark.operators.publish import diff_versions
-
-    t = str(tmp_path / "tbl")
-    atomic_publish(
-        spark.createDataFrame(
-            [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "id long, s string, x long"
-        ),
-        t,
-    )
-    atomic_publish(
-        spark.createDataFrame(
-            [(2, "b", 20), (3, "c9", 30), (4, "d", 40)], "id long, s string, x long"
-        ),
-        t,
-    )
-    st = {
-        r["id"]: r["status"]
-        for r in diff_versions(spark, t, 1, 2).collect()
-    }
-    assert st == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
 
 
 @pytest.mark.parametrize("backend", BACKENDS)
@@ -323,7 +300,7 @@ def test_merge_publish_first_batch_full_cdc_semantics(spark, tmp_path):
     # last-writer-wins + tombstone semantics as every later merge:
     # an intra-batch duplicate key collapses to its highest version,
     # and an upsert-then-delete of one key nets to absent
-    from bamboo_spark.operators.publish import merge_publish
+    from bamboo_spark.operators.publish import merge_publish_incremental
 
     t = str(tmp_path / "tbl")
     ch = spark.createDataFrame(
@@ -336,7 +313,7 @@ def test_merge_publish_first_batch_full_cdc_semantics(spark, tmp_path):
         ],
         "id long, val string, ver long, op string",
     )
-    merge_publish(ch, t, "id", ["ver"], op_col="op")
+    merge_publish_incremental(ch, t, "id", ["ver"], op_col="op")
     got = sorted(
         (r["id"], r["val"]) for r in read_published(spark, t).collect()
     )
@@ -345,7 +322,7 @@ def test_merge_publish_first_batch_full_cdc_semantics(spark, tmp_path):
     ch2 = spark.createDataFrame(
         [(1, "n2", 3, "upsert")], "id long, val string, ver long, op string"
     )
-    merge_publish(ch2, t, "id", ["ver"], op_col="op")
+    merge_publish_incremental(ch2, t, "id", ["ver"], op_col="op")
     got = sorted(
         (r["id"], r["val"]) for r in read_published(spark, t).collect()
     )
@@ -353,23 +330,30 @@ def test_merge_publish_first_batch_full_cdc_semantics(spark, tmp_path):
 
 
 def test_merge_publish_preserves_partition_layout(spark, tmp_path):
-    # merging into a hive-partitioned table must republish WITH the
-    # partition layout (read from the manifest), keeping pruning alive
-    from bamboo_spark.operators.publish import merge_publish
+    # merging into a hive-partitioned table must write the batch WITH
+    # the partition layout (read from the manifest), keeping pruning
+    # alive
+    from bamboo_spark.operators.publish import merge_publish_incremental
 
     t = str(tmp_path / "ptbl")
     ch1 = spark.createDataFrame(
         [(i, i % 3, "v%d" % i, 1, "upsert") for i in range(30)],
         "id long, k long, val string, ver long, op string",
     )
-    merge_publish(ch1, t, "id", ["ver"], op_col="op", partition_by="k")
+    merge_publish_incremental(
+        ch1, t, "id", ["ver"], op_col="op", partition_by="k"
+    )
     assert os.path.isdir(os.path.join(t, "_v1", "k=2"))
     ch2 = spark.createDataFrame(
         [(0, 0, "upd", 2, "upsert")],
         "id long, k long, val string, ver long, op string",
     )
-    v2 = merge_publish(ch2, t, "id", ["ver"], op_col="op")
-    assert os.path.isdir(os.path.join(t, "_v%d" % v2, "k=1"))
+    v2 = merge_publish_incremental(ch2, t, "id", ["ver"], op_col="op")
+    # the merged row lands in its partition of the table's layout
+    assert {
+        n for n in os.listdir(os.path.join(t, "_v%d" % v2))
+        if n.startswith("k=")
+    } == {"k=0"}
     got = read_published(spark, t).where("k = 1")
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "k" in plan.split(
@@ -817,13 +801,14 @@ def test_file_stats_skipping_prunes_files(spark, tmp_path, backend):
 def test_publish_clustered_enables_skipping(spark, tmp_path):
     # OPTIMIZE shape: clustered publish tightens per-file ranges AND
     # records their stats — a bounded read opens few files
-    from bamboo_spark.operators.publish import publish_clustered
-
     t = str(tmp_path / "cl")
     df = spark.range(8000).selectExpr(
         "pmod(id * 2654435761, 8000) as v", "id as payload"
     )  # scrambled order: clustering must impose the layout
-    publish_clustered(df, t, cluster_by="v", target_files=8)
+    atomic_publish(
+        df.repartitionByRange(8, "v").sortWithinPartitions("v"), t,
+        stats_cols=["v"],
+    )
     full = read_published(spark, t)
     assert len(full.inputFiles()) == 8
     pruned = read_published(spark, t, skip={"v": (0, 999)})
@@ -891,3 +876,51 @@ def test_optimize_table_one_call_maintenance(spark, tmp_path):
     pruned = read_published(spark, t, skip={"v": (85, None)})
     assert 0 < len(pruned.inputFiles()) <= len(got.inputFiles())
     assert pruned.where("v >= 85").count() == 5
+
+
+def test_public_publish_defs_have_callers_outside_tests():
+    """Test-only API must not grow back into the table format: every
+    public top-level def of ``publish.py`` is referenced by code in the
+    package, perfbench, tools, examples or ``__spark_entry__.py`` (a def's
+    references inside its own body do not count), except the two kept
+    on purpose. Code references only — docstrings name defs freely."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    pub = root / "bamboo_spark" / "operators" / "publish.py"
+    tree = ast.parse(pub.read_text())
+    defs = {
+        n.name: n
+        for n in tree.body
+        if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+        and not n.name.startswith("_")
+    }
+    paths = [root / "__spark_entry__.py"] + [
+        p
+        for d in ("bamboo_spark", "perfbench", "tools", "examples")
+        for p in sorted((root / d).rglob("*.py"))
+    ]
+    used = set()
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name.rsplit(".", 1)[-1]
+            else:
+                continue
+            own = defs.get(name)
+            if own is None or (
+                path == pub
+                and own.lineno <= getattr(node, "lineno", 0) <= own.end_lineno
+            ):
+                continue
+            used.add(name)
+    # table_history: the commit-metrics observability work builds on it.
+    # read_appends: the batch entry to _append_delta_files, which the
+    # streaming source runs; four test files pin that delta algebra
+    # through it.
+    assert set(defs) - used == {"table_history", "read_appends"}

@@ -348,15 +348,13 @@ def test_legacy_inline_manifest_migrates_on_next_commit(spark, tmp_path):
 
 
 def test_segmented_stats_skipping_still_prunes(spark, tmp_path):
-    from bamboo_spark.operators.publish import (
-        collect_file_stats,
-        publish_clustered,
-    )
+    from bamboo_spark.operators.publish import collect_file_stats
 
     t = str(tmp_path / "tbl")
-    publish_clustered(
-        spark.range(10000).selectExpr("id", "id as v"), t, "v",
-        target_files=10,
+    atomic_publish(
+        spark.range(10000).selectExpr("id", "id as v")
+        .repartitionByRange(10, "v").sortWithinPartitions("v"),
+        t, stats_cols=["v"],
     )
     full = read_published(spark, t)
     pruned = read_published(spark, t, skip={"v": (0, 500)})
@@ -387,11 +385,10 @@ def test_write_time_stats_prune_on_both_backends(spark, tmp_path, backend):
     no stats and skipping silently degraded to a no-op)."""
     local = str(tmp_path / "tbl")
     t = "file://" + local if backend == "hadoop-file-uri" else local
-    from bamboo_spark.operators.publish import publish_clustered
-
-    publish_clustered(
-        spark.range(8000).selectExpr("id", "id as v"), t, "v",
-        target_files=8,
+    atomic_publish(
+        spark.range(8000).selectExpr("id", "id as v")
+        .repartitionByRange(8, "v").sortWithinPartitions("v"),
+        t, stats_cols=["v"],
     )
     full = read_published(spark, t)
     pruned = read_published(spark, t, skip={"v": (0, 400)})
@@ -909,12 +906,13 @@ def test_skip_and_skip_eq_compose(spark, tmp_path):
     import pyspark.sql.functions as F
 
     t = str(tmp_path / "tbl")
-    from bamboo_spark.operators.publish import publish_clustered
-
     df = spark.range(4000).select(
         F.col("id").alias("v"), (F.col("id") % 997).alias("uid")
     )
-    publish_clustered(df, t, "v", target_files=8)
+    atomic_publish(
+        df.repartitionByRange(8, "v").sortWithinPartitions("v"), t,
+        stats_cols=["v"],
+    )
     from bamboo_spark.operators.publish import collect_file_blooms
 
     collect_file_blooms(t, ["uid"], spark)

@@ -641,112 +641,6 @@ def test_publish_stream_merge_into_mode(spark, tmp_path):
         q.stop()
 
 
-def test_check_constraints_enforced_on_every_flavor(spark, tmp_path):
-    d = str(tmp_path / "t")
-    atomic_publish(_kv(spark, [(1, 10), (2, 20)]), d)
-    P.add_constraint(d, "v_positive", "v > 0", spark=spark)
-    # violating append refused, nothing committed
-    from bamboo_spark.operators.publish import current_version
-
-    v0 = current_version(d, spark=spark)
-    with pytest.raises(ValueError, match="v_positive"):
-        append_publish(_kv(spark, [(3, -1)]), d)
-    assert current_version(d, spark=spark) == v0
-    assert read_published(spark, d).count() == 2
-    # clean append lands
-    append_publish(_kv(spark, [(3, 30)]), d)
-    # merge_into whose UPDATED row violates is refused atomically
-    with pytest.raises(ValueError, match="v_positive"):
-        P.merge_into(
-            _kv(spark, [(1, 100)]),
-            d,
-            "k",
-            when_matched_update={"v": "t.v - s.v"},  # 10-100 < 0
-            when_not_matched_insert=False,
-        )
-    assert {r.k: r.v for r in read_published(spark, d).collect()} == {
-        1: 10,
-        2: 20,
-        3: 30,
-    }
-    # overwrite is checked too
-    with pytest.raises(ValueError, match="v_positive"):
-        atomic_publish(_kv(spark, [(9, 0)]), d)
-    # null passes (SQL CHECK semantics)
-    append_publish(
-        spark.createDataFrame([(4, None)], "k: long, v: long"), d
-    )
-    # history labels + constraint survives compact and clone
-    compact(spark, d)
-    with pytest.raises(ValueError, match="v_positive"):
-        append_publish(_kv(spark, [(5, -5)]), d)
-    c = str(tmp_path / "c")
-    P.clone_table(spark, d, c)
-    with pytest.raises(ValueError, match="v_positive"):
-        append_publish(_kv(spark, [(5, -5)]), c)
-    ops = {
-        r.version: r.operation for r in table_history(spark, d).collect()
-    }
-    assert "add_constraint" in ops.values()
-
-
-def test_add_constraint_validates_existing_and_drop(spark, tmp_path):
-    d = str(tmp_path / "t")
-    atomic_publish(_kv(spark, [(1, 10), (2, -2)]), d)
-    with pytest.raises(ValueError, match="existing rows violate"):
-        P.add_constraint(d, "v_pos", "v > 0", spark=spark)
-    # bad expression is an analysis error even with validate=False
-    with pytest.raises(Exception):
-        P.add_constraint(
-            d, "bad", "no_such_col > 0", spark=spark, validate=False
-        )
-    P.add_constraint(d, "v_pos", "v > 0", spark=spark, validate=False)
-    with pytest.raises(ValueError, match="v_pos"):
-        append_publish(_kv(spark, [(3, -3)]), d)
-    P.drop_constraint(d, "v_pos", spark=spark)
-    append_publish(_kv(spark, [(3, -3)]), d)  # gone: lands
-    assert read_published(spark, d).count() == 3
-
-
-def test_constraint_blocks_rename_of_referenced_column(spark, tmp_path):
-    d = str(tmp_path / "t")
-    atomic_publish(_kv(spark, [(1, 10)]), d)
-    P.add_constraint(d, "v_pos", "v > 0", spark=spark)
-    with pytest.raises(ValueError, match="drop the constraint first"):
-        P.rename_column(d, "v", "amount", spark=spark)
-    with pytest.raises(ValueError, match="drop the constraint first"):
-        P.drop_column(d, "v", spark=spark)
-    P.drop_constraint(d, "v_pos", spark=spark)
-    P.rename_column(d, "v", "amount", spark=spark)
-    assert read_published(spark, d).columns == ["k", "amount"]
-
-
-def test_tags_pin_snapshots_and_resolve(spark, tmp_path):
-    d = str(tmp_path / "t")
-    atomic_publish(_kv(spark, [(1, 10)]), d)                    # v1
-    append_publish(_kv(spark, [(2, 20)]), d)                    # v2
-    P.tag_version(d, "freeze", spark=spark)                     # v3 (tags v2)
-    for lo in (3, 4, 5, 6):
-        append_publish(_kv(spark, [(lo, lo * 10)]), d)
-    P.vacuum(d, keep=1, spark=spark)
-    # the tagged snapshot survived a keep=1 vacuum and reads by name
-    got = {r.k: r.v for r in read_published(spark, d, ref="freeze").collect()}
-    assert got == {1: 10, 2: 20}
-    # clone from the tag
-    c = str(tmp_path / "c")
-    P.clone_table(spark, d, c, ref="freeze")
-    assert read_published(spark, c).count() == 2
-    # tags are immutable; drop releases the pin
-    with pytest.raises(ValueError, match="immutable"):
-        P.tag_version(d, "freeze", spark=spark)
-    P.drop_tag(d, "freeze", spark=spark)
-    P.vacuum(d, keep=1, spark=spark)
-    with pytest.raises(KeyError):
-        read_published(spark, d, ref="freeze")
-    ops = [r.operation for r in table_history(spark, d).collect()]
-    assert "drop_tag" in ops
-
-
 def test_streaming_source_over_clone(spark, tmp_path):
     """The clone is a first-class table for the streaming source too:
     offsets are the CLONE's own versions; post-clone appends to the
@@ -843,6 +737,50 @@ def test_format_version_guard(spark, tmp_path):
         read_published(spark, d).collect()
     with pytest.raises(UnsupportedFormatError):
         append_publish(_kv(spark, [(2, 20)]), d)
+
+
+@pytest.mark.parametrize("key", ["tags", "branches", "constraints"])
+def test_manifest_with_removed_feature_is_refused(spark, tmp_path, key):
+    """Tags, branches and CHECK constraints are gone, but format-1
+    tables written before may still carry them: every reader refuses
+    such a manifest by name rather than ignoring the key — unenforced
+    constraints, or a vacuum that deletes a branch head's files."""
+    import json as _json
+    import os
+
+    from bamboo_spark.operators.publish import UnsupportedFormatError
+    from bamboo_spark.sources.published import register
+
+    d = str(tmp_path / "t")
+    atomic_publish(_kv(spark, [(1, 10)]), d)                    # v1
+    for k in (2, 3, 4):
+        append_publish(_kv(spark, [(k, k * 10)]), d)            # v2-v4
+    man_path = os.path.join(d, "manifest.json")
+    man = _json.load(open(man_path))
+    man[key] = {
+        "tags": {"freeze": 1},
+        "branches": {
+            "b": {"head": man["snapshots"]["1"], "base": 1, "seq": 1}
+        },
+        "constraints": {"v_pos": "v > 0"},
+    }[key]
+    _json.dump(man, open(man_path, "w"))
+    on_disk = sorted(os.listdir(d))
+    with pytest.raises(UnsupportedFormatError, match=repr(key)):
+        append_publish(_kv(spark, [(5, 50)]), d)
+    with pytest.raises(UnsupportedFormatError, match=repr(key)):
+        P.vacuum(d, keep=1, spark=spark)
+    assert sorted(os.listdir(d)) == on_disk  # vacuum deleted nothing
+    with pytest.raises(UnsupportedFormatError, match=repr(key)):
+        read_published(spark, d)
+    register(spark)
+    with pytest.raises(Exception, match=repr(key)):
+        spark.read.format("bamboo_published").load(d).count()
+    # a ref load never silently reads main
+    with pytest.raises(Exception, match="ref option is not supported"):
+        spark.read.format("bamboo_published").option(
+            "ref", "freeze"
+        ).load(d).count()
 
 
 def test_read_changes_update_pairing(spark, tmp_path):

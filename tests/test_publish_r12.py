@@ -1,18 +1,16 @@
 """Round-12 table-format suite: the r11 ADVICE fixes (CDF resolution
-across rename-then-compact, dv race staging reclaim, in-lease
-tag_version default), type widening, partition-spec evolution, the
-merge x dv race matrix, bitmap dv sidecars — plus this round's new
-write surface and its contracts: update_publish (MOR + CoW),
-replace_where_publish, overwrite_partitions_publish, compact_files,
-fsck_table, vacuum dry-run, the persisted index spec, NULL-condition
-three-valued-logic semantics, and staging reclaim on every lost
-optimistic race.
+across rename-then-compact, dv race staging reclaim), type widening,
+partition-spec evolution, the merge x dv race matrix, bitmap dv
+sidecars — plus this round's new write surface and its contracts:
+update_publish (MOR + CoW), replace_where_publish,
+overwrite_partitions_publish, compact_files, fsck_table, vacuum
+dry-run, the persisted index spec, NULL-condition three-valued-logic
+semantics, and staging reclaim on every lost optimistic race.
 
 Reference parity: the reference (mvilim/bamboo) has no table format;
 this suite pins the Delta-style contracts re-expressed Spark-first.
 """
 
-import threading
 import time
 from pathlib import Path
 
@@ -171,40 +169,6 @@ def test_dv_retry_conflict_reclaims_staging(spark, tmp_path, monkeypatch):
     )
     got = sorted(r.k for r in read_published(spark, d).collect())
     assert got == [k for k in range(300) if k % 5 not in (0, 1)]
-
-
-# ------------------------------------------------------- tag_version(None)
-
-
-def test_tag_version_default_resolves_inside_lease(spark, tmp_path):
-    """ADVICE r11 (low): ``tag_version(version=None)`` means "tag the
-    CURRENT version" — resolved from the in-lease re-read, so a
-    concurrent data commit that lands while the tagger waits for the
-    lease is what gets tagged, not the pre-lease snapshot."""
-    d = str(tmp_path / "t")
-    atomic_publish(_rows(spark, 0, 10), d)                  # v1
-    fs = _fs()
-    lease = P._Lease(fs, d).acquire()
-    err = []
-
-    def tagger():
-        try:
-            P.tag_version(d, "cur", spark=spark)
-        except Exception as e:  # pragma: no cover - diagnostic
-            err.append(e)
-
-    t = threading.Thread(target=tagger)
-    t.start()
-    # the tagger has pre-read v1 and is polling for the lease; commit
-    # v2 under the held lease, then release it to let the tagger in
-    time.sleep(0.5)
-    atomic_publish(_rows(spark, 0, 20), d, _lease=lease)    # v2
-    lease.release()
-    t.join()
-    assert not err
-    man = P._read_manifest(d, fs)
-    assert man["version"] == 3  # v3 = the tag's metadata commit
-    assert (man.get("tags") or {}).get("cur") == 2, man.get("tags")
 
 
 # ----------------------------------------------------------- type widening
@@ -896,20 +860,6 @@ def test_update_publish_point_prunes_candidates(spark, tmp_path):
     )
     assert ver == 3
     assert read_published(spark, d).where("k = 150").collect()[0].v == -1
-
-
-def test_update_publish_enforces_constraints(spark, tmp_path):
-    """Updated rows pass through the shared constraint observation —
-    an UPDATE that would violate a CHECK constraint aborts and leaves
-    the table untouched."""
-    d = str(tmp_path / "t")
-    atomic_publish(_rows(spark, 0, 10).coalesce(1), d)
-    P.add_constraint(d, "v_nonneg", "v >= 0", spark=spark)
-    with pytest.raises(ValueError, match="v_nonneg"):
-        P.update_publish(spark, d, "k = 1", {"v": "-5"})
-    assert {r.v for r in read_published(spark, d).where("k = 1").collect()} == {
-        10
-    }
 
 
 def test_update_publish_on_renamed_table(spark, tmp_path):
@@ -1698,24 +1648,6 @@ def test_overwrite_partitions_refuses_null_partition_values(
         P.overwrite_partitions_publish(withnull, d)
 
 
-def test_publish_clustered_does_not_clobber_index_spec(spark, tmp_path):
-    """publish_clustered's internal stats_cols are a write detail —
-    the table's persisted index spec must survive it."""
-    d = str(tmp_path / "t")
-    atomic_publish(
-        _rows(spark, 0, 50).coalesce(1), d,
-        stats_cols=["k"], bloom_cols=["k"],
-    )
-    P.publish_clustered(
-        read_published(spark, d), d, cluster_by=["v"]
-    )
-    man = P._read_manifest(d, _fs())
-    assert man["index_cols"] == {"stats": ["k"], "bloom": ["k"]}
-    # and the next bare append still blooms on k per the spec
-    append_publish(_rows(spark, 50, 60).coalesce(1), d)
-    assert P._load_seg(_fs(), d, "_v3").get("file_blooms")
-
-
 # --------------------------------------------------------- retention policy
 
 
@@ -1761,22 +1693,18 @@ def test_describe_table_property_sheet(spark, tmp_path):
     atomic_publish(
         _rows(spark, 0, 50).coalesce(1), d, bloom_cols=["k"]
     )
-    P.add_constraint(d, "k_nonneg", "k >= 0", spark=spark)
     P.set_retention(d, keep=3, spark=spark)
-    P.tag_version(d, "audit", spark=spark)
     delete_publish(spark, d, "k = 7", delete_vectors=True)
     det = P.describe_table(d, spark=spark)
-    # v1 publish, v2 constraint, v3 retention, v4 tag, v5 dv delete
-    assert det["version"] == 5 and det["n_rows"] == 49
+    # v1 publish, v2 retention, v3 dv delete
+    assert det["version"] == 3 and det["n_rows"] == 49
     assert det["partition_by"] == []
     assert det["schema"].startswith("struct<k:bigint")
-    assert det["constraints"] == {"k_nonneg": "k >= 0"}
     assert det["retention"] == {"keep": 3}
     assert det["index_cols"]["bloom"] == ["k"]
-    assert "audit" in det["tags"]
     assert det["dv_files"] == 1 and det["dv_rows"] == 1
     assert det["operation"] == "delete"
-    assert det["external_refs"] == 0 and det["n_snapshots"] == 5
+    assert det["external_refs"] == 0 and det["n_snapshots"] == 3
 
 
 def test_optimize_table_honors_retention_policy(spark, tmp_path):

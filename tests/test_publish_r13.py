@@ -522,107 +522,6 @@ def test_claimbeat_stop_joins_no_claim_resurrection(tmp_path):
     fs.delete_file(claim)
 
 
-# ------------------------------------------------------------ branch refs
-
-
-def _kv(spark, lo, hi):
-    return spark.range(lo, hi).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-    )
-
-
-def test_branch_lifecycle_create_write_read_fast_forward(spark, tmp_path):
-    """VERDICT r12 #8: fork → write on branch (main invisible) → read
-    via ref → fast-forward adopts the head as main's next version."""
-    t = str(tmp_path / "t")
-    atomic_publish(_kv(spark, 0, 20), t, partition_by=["bucket(2, k)"])
-    P.create_branch(t, "rehearse")
-    assert P.append_branch(_kv(spark, 20, 30), t, "rehearse") == 1
-    assert read_published(spark, t).count() == 20  # main untouched
-    assert read_published(spark, t, ref="rehearse").count() == 30
-    assert P.append_branch(_kv(spark, 30, 35), t, "rehearse") == 2
-    v = P.fast_forward_branch(t, "rehearse", spark=spark)
-    assert read_published(spark, t).count() == 35
-    assert read_published(spark, t, version=v).count() == 35
-    # ref dropped by default; branch files now main's
-    assert P.describe_table(t, spark)["branches"] == {}
-    # the fast-forwarded state is an ordinary snapshot: lifecycle goes on
-    delete_publish(spark, t, "k >= 30", delete_vectors=True)
-    assert read_published(spark, t).count() == 30
-
-
-def test_fast_forward_refuses_when_main_moved(spark, tmp_path):
-    t = str(tmp_path / "t")
-    atomic_publish(_kv(spark, 0, 10), t)
-    P.create_branch(t, "b")
-    P.append_branch(_kv(spark, 10, 12), t, "b")
-    append_publish(_kv(spark, 100, 101), t)  # concurrent main commit
-    with pytest.raises(P.ConcurrentWriteError, match="main moved"):
-        P.fast_forward_branch(t, "b", spark=spark)
-    # the branch stays readable and droppable after the refusal
-    assert read_published(spark, t, ref="b").count() == 12
-    P.drop_branch(t, "b", spark=spark)
-    with pytest.raises(KeyError):
-        read_published(spark, t, ref="b")
-
-
-def test_branch_append_schema_strict_and_concurrent_seq(spark, tmp_path):
-    t = str(tmp_path / "t")
-    atomic_publish(_kv(spark, 0, 5), t)
-    P.create_branch(t, "b")
-    with pytest.raises(ValueError, match="batch schema differs"):
-        P.append_branch(
-            _kv(spark, 5, 6).withColumn("extra", F.lit(1)), t, "b"
-        )
-    # a stale-seq commit raises: advance the branch UNDERNEATH the
-    # writer, between its planning read and its commit (intercept at
-    # the post-write file scan — deterministic race injection)
-    import json as _json
-
-    fs = P._PosixFS()
-    real_scan = P._scan_written
-    fired = {}
-
-    def bump_then_scan(fs_, vdir, vname):
-        if not fired:
-            fired["x"] = True
-            man = P._read_manifest(t, fs)
-            man["branches"]["b"]["seq"] = 7
-            fs.replace_with(
-                _json.dumps(man), P._manifest_path(t, fs), ".tmp.t"
-            )
-        return real_scan(fs_, vdir, vname)
-
-    P._scan_written = bump_then_scan
-    try:
-        with pytest.raises(P.ConcurrentWriteError, match="advanced"):
-            P.append_branch(_kv(spark, 5, 6), t, "b")
-    finally:
-        P._scan_written = real_scan
-
-
-def test_vacuum_pins_branch_head_files(spark, tmp_path):
-    t = str(tmp_path / "t")
-    atomic_publish(_kv(spark, 0, 10), t)
-    P.create_branch(t, "b")
-    P.append_branch(_kv(spark, 10, 15), t, "b")
-    # churn main so vacuum has history to drop
-    for i in range(3):
-        append_publish(_kv(spark, 100 + i, 101 + i), t)
-    P.vacuum(t, keep=1, spark=spark)
-    assert read_published(spark, t, ref="b").count() == 15
-
-
-def test_branch_name_collides_with_tag_refused(spark, tmp_path):
-    t = str(tmp_path / "t")
-    atomic_publish(_kv(spark, 0, 3), t)
-    P.tag_version(t, "x", spark=spark)
-    with pytest.raises(ValueError, match="already a tag"):
-        P.create_branch(t, "x")
-    with pytest.raises(ValueError, match="already exists"):
-        P.create_branch(t, "y"), P.create_branch(t, "y")
-
-
 # ------------------------------------------- streaming × hidden partitioning
 
 
@@ -736,23 +635,3 @@ def test_datasource_reads_hidden_layout_and_prunes(spark, tmp_path):
     rels = [pt.rel for pt in reader.partitions()]
     assert rels and all("ts_day=2024-03-02" in r for r in rels)
 
-
-def test_datasource_ref_resolves_branch(spark, tmp_path):
-    from bamboo_spark.sources.published import register
-
-    register(spark)
-    t = str(tmp_path / "t")
-    atomic_publish(_kv(spark, 0, 10), t)
-    P.create_branch(t, "b")
-    P.append_branch(_kv(spark, 10, 14), t, "b")
-    main = spark.read.format("bamboo_published").load(t)
-    br = (
-        spark.read.format("bamboo_published")
-        .option("ref", "b")
-        .load(t)
-    )
-    assert main.count() == 10 and br.count() == 14
-    with pytest.raises(Exception, match="no tag or branch"):
-        spark.read.format("bamboo_published").option(
-            "ref", "nope"
-        ).load(t).count()

@@ -189,11 +189,16 @@ def _race_on_scan(monkeypatch, racer):
     monkeypatch.setattr(P, "_scan_written", hook)
 
 
-def _case_atomic_constraint(spark, d, monkeypatch):
+def _case_atomic_index_fault(spark, d, monkeypatch):
     _table(spark, d, 10)
-    P.add_constraint(d, "v_nonneg", "v >= 0", spark=spark)
-    bad = spark.createDataFrame([(1, -1)], "k long, v long")
-    return ValueError, lambda: atomic_publish(bad, d)
+
+    def broken(*a, **kw):
+        raise OSError("injected index build failure")
+
+    # fails after the data write, inside the held lease
+    monkeypatch.setattr(P, "_enrich_seg", broken)
+    df = spark.createDataFrame([(1, 1)], "k long, v long")
+    return OSError, lambda: atomic_publish(df, d, stats_cols=["v"])
 
 
 def _case_append_schema_change(spark, d, monkeypatch):
@@ -227,21 +232,6 @@ def _case_replace_files_rewritten(spark, d, monkeypatch):
     return P.ConcurrentWriteError, lambda: P.replace_files_publish(
         df, d, target
     )
-
-
-def _case_branch_seq_moved(spark, d, monkeypatch):
-    _table(spark, d, 10)
-    P.create_branch(d, "b")
-    fs = P._PosixFS()
-
-    def bump():
-        man = P._read_manifest(d, fs)
-        man["branches"]["b"]["seq"] = 7
-        fs.replace_with(json.dumps(man), P._manifest_path(d, fs), ".tmp.t")
-
-    _race_on_scan(monkeypatch, bump)
-    batch = spark.createDataFrame([(100, 1)], "k long, v long")
-    return P.ConcurrentWriteError, lambda: P.append_branch(batch, d, "b")
 
 
 def _case_clone_fault(spark, d, monkeypatch):
@@ -327,11 +317,10 @@ def _case_compact_dv_race(spark, d, monkeypatch):
 @pytest.mark.parametrize(
     "case",
     [
-        _case_atomic_constraint,
+        _case_atomic_index_fault,
         _case_append_schema_change,
         _case_replace_partitions_overlap,
         _case_replace_files_rewritten,
-        _case_branch_seq_moved,
         _case_clone_fault,
         _case_merge_dv_race,
         _case_dv_delete_rewritten,

@@ -473,7 +473,6 @@ def test_batch_time_travel_options(src, spark, tmp_path):
     append_publish(
         spark.range(5, 9).select(F.col("id").alias("k")), t
     )
-    P.tag_version(t, "freeze", version=1, spark=spark)
 
     assert (
         spark.read.format("bamboo_published")
@@ -489,14 +488,12 @@ def test_batch_time_travel_options(src, spark, tmp_path):
         .count()
         == 5
     )
-    assert (
-        spark.read.format("bamboo_published")
-        .option("ref", "freeze")
-        .load(t)
-        .count()
-        == 5
-    )
     assert spark.read.format("bamboo_published").load(t).count() == 9
+    # the removed ref option refuses instead of reading main
+    with pytest.raises(Exception, match="ref option is not supported"):
+        spark.read.format("bamboo_published").option(
+            "ref", "freeze"
+        ).load(t).count()
 
 
 def test_stream_starting_timestamp(src, spark, tmp_path):
