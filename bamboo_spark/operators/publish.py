@@ -469,10 +469,24 @@ _REMOVED_KEYS = ("tags", "branches", "constraints")
 
 
 class UnsupportedFormatError(RuntimeError):
-    """The table's manifest declares a newer protocol than this reader
-    understands — refusing beats silently misreading (a v2 manifest may
-    rely on features — e.g. a new delete encoding — whose absence from
-    this reader's resolution would return WRONG rows, not an error)."""
+    """The table is in a shape this reader does not serve — refusing
+    beats silently misreading. Two directions: a NEWER protocol (a
+    higher ``format_version`` may rely on features, e.g. a new delete
+    encoding, whose absence from this reader's resolution would return
+    WRONG rows), and an OLDER shape no writer produces any more (keys
+    of removed features, pre-history or inline-file manifests, entries
+    without field ids, unstamped segments, position-list or
+    row-per-position delete vectors). The table has ONE on-disk format:
+    segmented snapshot entries carrying ``field_ids``, segments stamped
+    with their field names, and bitmap delete-vector sidecars."""
+
+
+def _refuse(table_dir: str, what: str) -> UnsupportedFormatError:
+    return UnsupportedFormatError(
+        "table at %s %s — a shape this library no longer reads or "
+        "writes; rewrite the table with a release that still reads it"
+        % (table_dir, what)
+    )
 
 
 def _read_manifest(table_dir: str, fs) -> Optional[dict]:
@@ -495,6 +509,16 @@ def _read_manifest(table_dir: str, fs) -> Optional[dict]:
                 "would skip its constraints and let vacuum delete the "
                 "files its refs pin" % (table_dir, key)
             )
+    if not man.get("snapshots"):
+        raise _refuse(table_dir, "has a pre-history manifest (no "
+                      "'snapshots')")
+    for v, e in [(man.get("version"), man), *man["snapshots"].items()]:
+        if e.get("files") is not None:
+            raise _refuse(table_dir, "has an inline 'files' list in "
+                          "snapshot %s (pre-segmentation)" % v)
+        if not e.get("field_ids"):
+            raise _refuse(table_dir, "has no 'field_ids' in snapshot %s "
+                          "(pre-field-id)" % v)
     return man
 
 
@@ -512,18 +536,25 @@ _SEG_CACHE_MAX = 4096
 def _load_seg(fs, table_dir: str, seg: str) -> dict:
     """Segment sidecar, memoized on (path, mtime): one replace commit
     resolves/segments/prunes the same sidecars several times, and on an
-    object store every raw read is a GET. mtime-validated, so the rare
-    post-creation rewrites — stats/bloom backfills and the
-    restore-reconciliation WIDENING in :func:`_segments_of` (file lists
-    otherwise never shrink or reorder) — refresh the entry; a same-ms
-    rewrite could at worst serve the pre-backfill stats, which only
-    makes skipping more conservative."""
+    object store every raw read is a GET. mtime-validated, so the one
+    post-creation rewrite — stats/bloom backfills (file lists never
+    change) — refreshes the entry; a same-ms rewrite could at worst
+    serve the pre-backfill stats, which only makes skipping more
+    conservative. Every listed file must carry its field map (the
+    segment's ``field_names`` stamp, or a clone's per-file
+    ``file_fields``): an unstamped segment is refused."""
     path = _seg_path(fs, table_dir, seg)
     mt = fs.mtime_ms(path)
     hit = _SEG_CACHE.get(path)
     if hit is not None and hit[0] == mt:
         return hit[1]
     data = json.loads(fs.read_text(path))
+    per_file = data.get("file_fields") or {}
+    if not data.get("field_names") and any(
+        f not in per_file for f in data.get("files", [])
+    ):
+        raise _refuse(table_dir, "has an unstamped segment %s (files "
+                      "without a 'field_names' map)" % seg)
     if len(_SEG_CACHE) >= _SEG_CACHE_MAX:
         _SEG_CACHE.pop(next(iter(_SEG_CACHE)))
     _SEG_CACHE[path] = (mt, data)
@@ -544,26 +575,22 @@ _DV_CACHE_MAX = 1024
 
 
 def _load_dv(fs, table_dir: str, entry: dict) -> dict:
-    """The snapshot's DELETE-VECTOR MANIFEST: ``{rel_file: value}`` of
-    rows erased without rewriting their file (merge-on-read, the
-    Iceberg v2 / Delta deletion-vector design). ``{}`` when the
-    snapshot has none. Two value shapes coexist (mixed per table during
-    migration):
-
-    * v1 (legacy): a plain ``[row positions]`` list — positions live in
-      the manifest JSON itself, driver-sized.
-    * v2: ``{"ds": <rel parquet dataset>, "n": count, "key"?: str}`` —
-      the positions live in a PARQUET SIDECAR DATASET written by
-      executors at commit time (columns ``_dv_file/_dv_base/_dv_sfx/
-      _dv_pos``); the manifest holds only the file-level ref + count,
-      so the driver never materializes row addresses. ``key`` (set by
-      shallow clones) is the ``_dv_file`` value the sidecar rows carry
-      when it differs from this manifest's file ref.
+    """The snapshot's DELETE-VECTOR MANIFEST: ``{rel_file: {"ds", "n",
+    "fmt": "bm", "key"?}}`` of rows erased without rewriting their file
+    (merge-on-read, the Iceberg v2 / Delta deletion-vector design).
+    ``{}`` when the snapshot has none. ``ds`` is a BITMAP parquet
+    sidecar dataset written by executors at commit time (one row per
+    1024-position chunk, see :func:`_dv_pack`); the manifest holds only
+    the file-level ref + count, so the driver never materializes row
+    addresses. ``key`` (set by shallow clones) is the ``_dv_file``
+    value the sidecar rows carry when it differs from this manifest's
+    file ref. Position lists, row-per-position sidecars and sidecars
+    rooted at the hidden ``_dvp`` dir itself are refused.
 
     The manifest is written ONCE per dv commit (immutable file, plain
-    cache) and always maps the FULL state as of that snapshot; a v2
-    commit rewrites sidecar data only for the files it TOUCHED —
-    untouched files keep their older refs (O(delta) commit IO)."""
+    cache) and always maps the FULL state as of that snapshot; a commit
+    rewrites sidecar data only for the files it TOUCHED — untouched
+    files keep their older refs (O(delta) commit IO)."""
     rel = entry.get("dv")
     if not rel:
         return {}
@@ -572,6 +599,16 @@ def _load_dv(fs, table_dir: str, entry: dict) -> dict:
     if hit is not None:
         return hit
     data = json.loads(fs.read_text(path))
+    for f, v in data.items():
+        if not isinstance(v, dict):
+            what = "a position-list delete vector"
+        elif v.get("fmt") != "bm":
+            what = "a row-per-position delete-vector sidecar"
+        elif v["ds"].rstrip("/").rsplit("/", 1)[-1] == "_dvp":
+            what = "a delete-vector sidecar rooted at the hidden '_dvp' dir"
+        else:
+            continue
+        raise _refuse(table_dir, "has %s for %s in %s" % (what, f, rel))
     if len(_DV_CACHE) >= _DV_CACHE_MAX:
         _DV_CACHE.pop(next(iter(_DV_CACHE)))
     _DV_CACHE[path] = data
@@ -580,9 +617,8 @@ def _load_dv(fs, table_dir: str, entry: dict) -> dict:
 
 def _write_dv(fs, table_dir: str, seg: str, dvmap: dict) -> str:
     """Write a snapshot's merged delete-vector MANIFEST (file-level
-    refs/counts only for v2 entries — see :func:`_load_dv`) into its
-    version dir; returns the manifest-relative path for the entry's
-    ``dv``."""
+    refs/counts only — see :func:`_load_dv`) into its version dir;
+    returns the manifest-relative path for the entry's ``dv``."""
     fs.mkdirs(fs.join(table_dir, seg))
     rel = "%s/%s" % (seg, _DV)
     fs.replace_with(json.dumps(dvmap), fs.join(table_dir, rel), ".tmp")
@@ -595,8 +631,8 @@ def _carry_dv(fs, table_dir: str, prev: dict, seg: str, live_files) -> dict:
     a commit that keeps (some of) its files: vectors for files no
     longer live are dropped (their rewrite already materialized the
     deletion), the rest are re-published as this version's dv manifest
-    — a METADATA-ONLY filter for v2 refs (sidecar data is never
-    rewritten). Returns ``{}`` or ``{'dv': relpath, 'dv_rows': n}``."""
+    — a METADATA-ONLY filter (sidecar data is never rewritten).
+    Returns ``{}`` or ``{'dv': relpath, 'dv_rows': n}``."""
     prev_dv = _load_dv(fs, table_dir, prev)
     if not prev_dv:
         return {}
@@ -613,13 +649,8 @@ def _carry_dv(fs, table_dir: str, prev: dict, seg: str, live_files) -> dict:
 
 
 def _dv_val_n(v) -> int:
-    """Deleted-row count of one file's dv value — v1 position list or
-    v2 sidecar ref."""
-    if not v:
-        return 0
-    if isinstance(v, dict):
-        return int(v.get("n") or 0)
-    return len(v)
+    """Deleted-row count of one file's dv value (0 when it has none)."""
+    return int(v.get("n") or 0) if v else 0
 
 
 def _dv_nrows(dvmap: Optional[dict]) -> int:
@@ -629,17 +660,10 @@ def _dv_nrows(dvmap: Optional[dict]) -> int:
 
 def _dv_ref_of(v, rel: str):
     """A PICKLABLE positions ref for one file's dv value — what a
-    driver-side change-feed plan ships to executors instead of raw
-    positions: ``("pos", (p, ...))`` for v1, ``("ds", dataset_rel,
-    key)`` for v2 row-per-position sidecars, ``("bm", dataset_rel,
-    key)`` for v3 bitmap sidecars (the executor reads the sidecar
-    itself either way), None when the file has no vector."""
-    if not v:
-        return None
-    if isinstance(v, dict):
-        tag = "bm" if v.get("fmt") == "bm" else "ds"
-        return (tag, v["ds"], v.get("key", rel))
-    return ("pos", tuple(int(p) for p in v))
+    driver-side plan ships to executors instead of raw positions:
+    ``(dataset_rel, key)`` of its bitmap sidecar (the executor reads
+    the sidecar itself), None when the file has no vector."""
+    return (v["ds"], v.get("key", rel)) if v else None
 
 
 _DV_POS_SCHEMA = (
@@ -729,50 +753,39 @@ def _dv_merge_chunks(chunks_df):
 
 def _dv_chunks_df(spark: SparkSession, fs, table_dir: str, dvmap: dict):
     """A dv (sub)manifest as BITMAP CHUNK rows ``(_dv_file, _dv_base,
-    _dv_sfx, _dv_chunk, _dv_bits)`` — the packed twin of
-    :func:`_dv_positions_df` and the join side of the chunk-native
-    mask (:func:`_dv_mask`): v3 sidecars read AS STORED (no unpack,
-    ~1/100th the rows/bytes of the position form), v1 inline and v2
-    row-per-position refs pack in-plan. None when empty."""
+    _dv_sfx, _dv_chunk, _dv_bits)`` — the join side of the chunk-native
+    mask (:func:`_dv_mask`), read AS STORED from the sidecars (no
+    unpack, ~1/100th the rows/bytes of the position form). Sidecar
+    rows written for OTHER files in a shared dataset are filtered out;
+    a clone's rekeyed entries (``key`` differs from the manifest ref)
+    are re-labeled to the manifest ref so downstream grouping keys stay
+    consistent — their ``_dv_sfx``/``_dv_base`` remain valid (both
+    name suffixes of the same physical file). None when empty."""
     from pyspark.sql import functions as F
 
-    v3: dict = {}
-    legacy: dict = {}
+    ds_groups: dict = {}
     for rel, v in (dvmap or {}).items():
-        if not v:
-            continue
-        (v3 if isinstance(v, dict) and v.get("fmt") == "bm" else legacy)[
-            rel
-        ] = v
-    pieces = []
-    if v3:
-        ds_groups: dict = {}
-        for rel, v in v3.items():
+        if v:
             ds = _ref_path(fs, table_dir, v["ds"])
             ds_groups.setdefault(ds, []).append((v.get("key", rel), rel))
-        for ds in sorted(ds_groups):
-            pairs = ds_groups[ds]
-            keys = sorted({k for k, _ in pairs})
-            sub = spark.read.parquet(ds).where(
-                F.col("_dv_file").isin(keys)
+    pieces = []
+    for ds in sorted(ds_groups):
+        pairs = ds_groups[ds]
+        keys = sorted({k for k, _ in pairs})
+        sub = spark.read.parquet(ds).where(F.col("_dv_file").isin(keys))
+        if any(k != r for k, r in pairs):
+            kmap = _local_df(
+                spark, pairs, "_dv_key string, _dv_rel string"
             )
-            if any(k != r for k, r in pairs):
-                kmap = _local_df(
-                    spark, pairs, "_dv_key string, _dv_rel string"
+            sub = (
+                sub.withColumnRenamed("_dv_file", "_dv_key")
+                .join(F.broadcast(kmap), "_dv_key")
+                .select(
+                    F.col("_dv_rel").alias("_dv_file"),
+                    "_dv_base", "_dv_sfx", "_dv_chunk", "_dv_bits",
                 )
-                sub = (
-                    sub.withColumnRenamed("_dv_file", "_dv_key")
-                    .join(F.broadcast(kmap), "_dv_key")
-                    .select(
-                        F.col("_dv_rel").alias("_dv_file"),
-                        "_dv_base", "_dv_sfx", "_dv_chunk", "_dv_bits",
-                    )
-                )
-            pieces.append(sub)
-    if legacy:
-        pos = _dv_positions_df(spark, fs, table_dir, legacy)
-        if pos is not None:
-            pieces.append(_dv_pack(pos, max(1, min(len(legacy), 64))))
+            )
+        pieces.append(sub)
     if not pieces:
         return None
     out = pieces[0]
@@ -862,67 +875,6 @@ def _dv_ds_counts(spark, dsdir: str) -> dict:
     }
 
 
-def _dv_positions_df(spark: SparkSession, fs, table_dir: str, dvmap: dict):
-    """The positions of a dv (sub)manifest as a DataFrame
-    ``(_dv_file, _dv_base, _dv_sfx, _dv_pos)`` — how the mask's chunk
-    side (:func:`_dv_chunks_df`) reads refs stored row-per-position
-    before packing them. v1 entries build driver-side (legacy,
-    point-delete-sized by that format's nature); v2 entries READ their
-    parquet sidecar datasets distributively, so positions never pass
-    through the driver at any scale. Returns None when ``dvmap`` is
-    empty. Sidecar rows written for OTHER files in a shared dataset are
-    filtered out; a clone's rekeyed entries (``key`` differs from the
-    manifest ref) are re-labeled to the manifest ref so downstream
-    grouping keys stay consistent — their ``_dv_sfx``/``_dv_base``
-    remain valid (both name suffixes of the same physical file)."""
-    from pyspark.sql import functions as F
-
-    legacy_rows = []
-    # (dataset abs path, bitmap?) -> [(sidecar key, manifest ref)]
-    ds_groups: dict = {}
-    for rel, v in (dvmap or {}).items():
-        if not v:
-            continue
-        if isinstance(v, dict):
-            ds = _ref_path(fs, table_dir, v["ds"])
-            bm = v.get("fmt") == "bm"
-            ds_groups.setdefault((ds, bm), []).append(
-                (v.get("key", rel), rel)
-            )
-        else:
-            sfx = _ref_suffix(rel)
-            base = rel.rsplit("/", 1)[-1]
-            legacy_rows.extend((rel, base, sfx, int(p)) for p in v)
-    pieces = []
-    if legacy_rows:
-        pieces.append(_local_df(spark, legacy_rows, _DV_POS_SCHEMA))
-    for ds, bm in sorted(ds_groups):
-        pairs = ds_groups[(ds, bm)]
-        keys = sorted({k for k, _ in pairs})
-        sub = spark.read.parquet(ds).where(F.col("_dv_file").isin(keys))
-        if bm:
-            sub = _dv_unpack(sub)
-        if any(k != r for k, r in pairs):
-            kmap = _local_df(
-                spark, pairs, "_dv_key string, _dv_rel string"
-            )
-            sub = (
-                sub.withColumnRenamed("_dv_file", "_dv_key")
-                .join(F.broadcast(kmap), "_dv_key")
-                .select(
-                    F.col("_dv_rel").alias("_dv_file"),
-                    "_dv_base", "_dv_sfx", "_dv_pos",
-                )
-            )
-        pieces.append(sub)
-    if not pieces:
-        return None
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def _dv_build(
     spark: SparkSession,
     fs,
@@ -932,7 +884,7 @@ def _dv_build(
     cand_files,
     dv0: dict,
 ):
-    """Build a commit's delete-vector refs DISTRIBUTIVELY — the v2
+    """Build a commit's delete-vector refs DISTRIBUTIVELY — the
     write path shared by ``_dv_delete``, ``merge_into`` and
     ``merge_publish_incremental``. ``addr_df`` is the matched rows'
     ``(_fp, _ri)`` addresses (any multiplicity); ``cand_files`` the
@@ -941,10 +893,10 @@ def _dv_build(
 
     Row positions NEVER pass through the driver: addresses are mapped
     back to manifest refs with a broadcast file-level frame, unioned
-    with the touched files' EXISTING vectors (sidecar/legacy reads),
+    with the touched files' EXISTING vectors (sidecar reads),
     deduplicated, and written as ONE parquet dataset (the commit's
     sidecar at ``dsrel``) by executors — the driver sees only per-file
-    COUNTS. Returns ``(new_refs {rel: {"ds","n"}}, n_fresh)`` where
+    COUNTS. Returns ``(new_refs {rel: {"ds","n","fmt"}}, n_fresh)`` where
     ``new_refs`` covers exactly the files whose vector GREW (a file
     whose every address was already deleted keeps its old ref, so
     value-equality still means "dv unchanged" for delta readers) and
@@ -988,11 +940,11 @@ def _dv_build(
     old_sub = {f: dv0[f] for f in touched if dv0.get(f)}
     n_parts = max(1, min(len(touched), 64))
     dsdir = _ref_path(fs, table_dir, dsrel)
-    # positions pack into BITMAP chunk rows before hitting disk (v3 —
-    # see _dv_pack): sidecar bytes scale with chunks, not deletions.
+    # positions pack into BITMAP chunk rows before hitting disk (see
+    # _dv_pack): sidecar bytes scale with chunks, not deletions.
     # No dropDuplicates pass: the pack's bit_or dedups by construction.
-    # Touched files' EXISTING vectors merge in the CHUNK domain (v3
-    # reads as stored; OR per word) — old positions never re-explode
+    # Touched files' EXISTING vectors merge in the CHUNK domain (read
+    # as stored; OR per word) — old positions never re-explode
     merged = _dv_pack(addr, n_parts)
     if old_sub:
         merged = (
@@ -1019,9 +971,10 @@ def _dv_build(
 def _resolve_entry(
     fs, table_dir: str, entry: dict, rekey_stats: bool = True
 ) -> dict:
-    """``{'files', 'file_sizes', 'file_stats'}`` for a snapshot entry.
+    """``{'files', 'file_sizes', 'file_stats', 'file_blooms',
+    'file_fields'}`` for a snapshot entry.
 
-    SEGMENTED manifests (the scale shape): the top manifest holds only
+    The manifest is SEGMENTED (the scale shape): the top manifest holds only
     version pointers + per-snapshot counters plus ``segments`` (the
     version dirs whose file lists this snapshot references) and
     ``removed`` (files excluded from those segments); the per-file
@@ -1032,19 +985,7 @@ def _resolve_entry(
     writes ONE new sidecar and never re-serializes the table's file
     list — and the top manifest stays ~constant-size per retained
     version no matter how many files accumulate. Reads load only the
-    segments the chosen snapshot references.
-
-    LEGACY inline manifests (``files`` embedded in the entry) resolve
-    directly; the first segmented commit on top of one migrates it
-    (see :func:`_segments_of`)."""
-    if entry.get("files") is not None:
-        return {
-            "files": list(entry["files"]),
-            "file_sizes": dict(entry.get("file_sizes") or {}),
-            "file_stats": dict(entry.get("file_stats") or {}),
-            "file_blooms": dict(entry.get("file_blooms") or {}),
-            "file_fields": {},
-        }
+    segments the chosen snapshot references."""
     removed = set(entry.get("removed") or [])
     files: List[str] = []
     sizes: dict = {}
@@ -1056,7 +997,7 @@ def _resolve_entry(
         seg_sizes = s.get("file_sizes") or {}
         seg_stats = s.get("file_stats") or {}
         seg_blooms = s.get("file_blooms") or {}
-        seg_fields = s.get("field_names")  # {id: phys name} or absent
+        seg_fields = s.get("field_names")  # {id: phys name}
         per_file_fields = s.get("file_fields") or {}  # clones: per file
         for f in s.get("files", []):
             if f in removed:
@@ -1068,24 +1009,18 @@ def _resolve_entry(
                 stats[f] = seg_stats[f]
             if seg_blooms.get(f):
                 blooms[f] = seg_blooms[f]
-            fm = per_file_fields.get(f, seg_fields)
-            if fm:
-                fields[f] = fm
+            fields[f] = per_file_fields.get(f, seg_fields)
     if entry.get("schema_evolved") and rekey_stats:
         # rename/drop happened: sidecar indexes are keyed by the
         # PHYSICAL names each file was written with — rekey them to
         # the entry's LOGICAL names (by field id) so skip=/skip_eq=
-        # callers never see a stale name. Files without a map predate
-        # field stamping: identity (their physical names ARE logical
-        # names of their era; retired-name guards keep that sound).
-        # ``rekey_stats=False`` (clone_table) keeps the raw physical
-        # keys — the clone copies them verbatim next to the file maps
-        # and rekeys at ITS read time.
+        # callers never see a stale name. ``rekey_stats=False``
+        # (clone_table) keeps the raw physical keys — the clone copies
+        # them verbatim next to the file maps and rekeys at ITS read
+        # time.
         ids, _ = _field_ids_of(entry)
         for f in files:
-            fm = fields.get(f)
-            if not fm:
-                continue
+            fm = fields[f]
             for idx in (stats, blooms):
                 st = idx.get(f)
                 if not st:
@@ -1140,19 +1075,9 @@ def _field_ids_of(entry: dict):
     """``({name: id}, next_id)`` for a snapshot entry — the Iceberg
     field-ID device behind metadata-only rename/drop: a column's ID is
     assigned once and never reused, so its NAME can change (or go away)
-    without touching data files. Entries from before the feature get
-    positional IDs (1..n), which is exact while the schema only ever
-    widened (the only evolution those tables could have had)."""
-    fids = entry.get("field_ids")
-    if fids:
-        ids = {k: int(v) for k, v in fids.items()}
-        nxt = int(
-            entry.get("next_field_id")
-            or (max(ids.values()) + 1 if ids else 1)
-        )
-        return ids, nxt
-    names = [f["name"] for f in json.loads(entry["schema"])["fields"]]
-    return {n: i + 1 for i, n in enumerate(names)}, len(names) + 1
+    without touching data files."""
+    ids = {k: int(v) for k, v in entry["field_ids"].items()}
+    return ids, int(entry.get("next_field_id") or max(ids.values()) + 1)
 
 
 def _stamp_fields(seg_data: dict, fids: dict) -> None:
@@ -1479,62 +1404,17 @@ def _index_defaults(prev, stats_cols, bloom_cols, schema_json=None):
 
 def _segments_of(fs, table_dir: str, prev: dict):
     """``(segments, removed)`` base for building the next snapshot on
-    top of ``prev``. A legacy inline entry is MIGRATED once: its live
-    files are grouped by owning version dir and written out as that
-    dir's segment sidecar (never overwriting an existing one), after
-    which the new commit — and every later one — is segment-shaped."""
-    if prev.get("files") is None:
-        return (
-            list(prev.get("segments") or []),
-            list(prev.get("removed") or []),
-        )
-    sizes = prev.get("file_sizes") or {}
-    stats = prev.get("file_stats") or {}
-    by_seg: dict = {}
-    for f in prev["files"]:
-        by_seg.setdefault(f.split("/", 1)[0], []).append(f)
-    extra_removed: List[str] = []
-    for seg, fl in by_seg.items():
-        try:
-            s = _load_seg(fs, table_dir, seg)
-        except Exception:
-            _write_seg(
-                fs,
-                table_dir,
-                seg,
-                {
-                    "files": fl,
-                    "file_sizes": {
-                        f: sizes[f] for f in fl if sizes.get(f) is not None
-                    },
-                    "file_stats": {f: stats[f] for f in fl if stats.get(f)},
-                },
-            )
-            continue
-        # sidecar already exists (mixed-history table, e.g. a restore
-        # to a pre-migration inline snapshot): its file list may
-        # DISAGREE with the inline entry. Reusing it blind would
-        # resurrect files the restored snapshot deleted (sidecar ⊃
-        # entry) or drop files it kept (sidecar ⊅ entry) — reconcile:
-        # shadow the surplus via `removed`, and widen the sidecar for
-        # entry files it doesn't list (keeping its recorded indexes).
-        have, want = set(s.get("files", [])), set(fl)
-        if have - want:
-            extra_removed.extend(sorted(have - want))
-        if want - have:
-            s = dict(s)
-            s["files"] = sorted(have | want)
-            s["file_sizes"] = {
-                **{f: sizes[f] for f in want - have
-                   if sizes.get(f) is not None},
-                **(s.get("file_sizes") or {}),
-            }
-            s["file_stats"] = {
-                **{f: stats[f] for f in want - have if stats.get(f)},
-                **(s.get("file_stats") or {}),
-            }
-            _write_seg(fs, table_dir, seg, s)
-    return sorted(by_seg), extra_removed
+    top of ``prev``. The carried segments and delete vectors load
+    through their refusing loaders first, so no commit carries a shape
+    this reader would refuse to read. A segment already in the cache
+    passed that check when it was read (a backfill rewrite keeps its
+    stamp), so a long-lived writer's append stats no carried segment."""
+    segs = list(prev.get("segments") or [])
+    for seg in segs:
+        if _seg_path(fs, table_dir, seg) not in _SEG_CACHE:
+            _load_seg(fs, table_dir, seg)
+    _load_dv(fs, table_dir, prev)
+    return segs, list(prev.get("removed") or [])
 
 
 # ---------------------------------------------------------------------------
@@ -2179,16 +2059,7 @@ def _commit(
     ):
         if entry.get(k) is None and prev and prev.get(k) is not None:
             entry[k] = prev[k]
-    history = dict(prev.get("snapshots", {})) if prev else {}
-    # heal pre-history manifests: retain the previous current snapshot
-    # (copy its file bookkeeping in whichever format it uses)
-    if prev and str(prev["version"]) not in history:
-        healed = {"n_rows": prev["n_rows"], "schema": prev["schema"]}
-        for k in ("files", "file_sizes", "file_stats", "segments",
-                  "removed", "n_files", "partition_by", "partition_spec"):
-            if prev.get(k) is not None:
-                healed[k] = prev[k]
-        history[str(prev["version"])] = healed
+    history = dict(prev["snapshots"]) if prev else {}
     entry.setdefault("committed_at_ms", _now_ms())
     history[str(version)] = entry
     manifest = {
@@ -3136,7 +3007,7 @@ def read_published(
         raise ValueError("no committed table at %s" % table_dir)
     _, entry = _select_snapshot(manifest, version, as_of_ms)
     res = _resolve_entry(fs, table_dir, entry)
-    entry = {**entry, "files": res["files"]}
+    files = res["files"]
     if skip:
         stats = res["file_stats"]
 
@@ -3161,9 +3032,9 @@ def read_published(
                     continue
             return True
 
-        entry["files"] = [f for f in entry["files"] if _keep(f)]
+        files = [f for f in files if _keep(f)]
     if skip_eq:
-        entry["files"] = _prune_eq(res, entry["files"], skip_eq)
+        files = _prune_eq(res, files, skip_eq)
     if (skip or skip_eq) and entry.get("partition_by"):
         # HIDDEN-PARTITIONING pruning: a bound/point predicate on a
         # transform SOURCE column ("ts between …" on a days(ts) table,
@@ -3171,15 +3042,15 @@ def read_published(
         # DIRECTORIES from the manifest list — the user never names the
         # physical ts_day/id_bucket column. Identity partition columns
         # prune by path value the same way (exact, even without stats).
-        entry["files"] = _pt_prune_files(
-            entry["files"], entry.get("partition_spec"),
+        files = _pt_prune_files(
+            files, entry.get("partition_spec"),
             entry.get("partition_by"), skip, skip_eq, spark,
         )
     return _read_files(
         spark,
         fs,
         table_dir,
-        entry["files"],
+        files,
         entry["schema"],
         bool(entry.get("partition_by")),
         dv=_load_dv(fs, table_dir, entry),
@@ -3320,20 +3191,16 @@ def _evo_of(entry: dict, res: dict) -> Optional[dict]:
     return {"ids": ids, "files": res.get("file_fields") or {}}
 
 
-def _evo_select(schema, fm: Optional[dict], ids: dict):
+def _evo_select(schema, fm: dict, ids: dict):
     """``(read_schema, select_cols)`` for one file-map subgroup of an
     EVOLVED table: each logical field reads from the physical name its
     files were written with (by field id) and aliases back; a field
     whose id is absent from the map was added AFTER those files were
     written — it reads as NULL even if a same-named physical column
     exists (a retired-then-readded name must never resurrect old
-    bytes). ``fm=None`` (pre-stamping segment) is identity — rename/
-    drop refuse to commit while any live segment lacks a map, so
-    identity is exact there."""
+    bytes)."""
     from pyspark.sql import functions as F, types as T
 
-    if fm is None:
-        return schema, None
     read_fields, sel = [], []
     for f in schema.fields:
         sid = str(ids.get(f.name, ""))
@@ -3372,15 +3239,13 @@ def _scan_groups(
     groups: dict = {}
     for f in files:
         base = _ref_group(fs, table_dir, f) if partitioned else ""
-        fm = fmaps.get(f) if evo else None
-        mk = tuple(sorted(fm.items())) if fm else None
+        mk = tuple(sorted(fmaps[f].items())) if evo else None
         groups.setdefault((base, mk), []).append(f)
     out = None
     for base, mk in sorted(groups, key=lambda k: (k[0], k[1] or ())):
         fl = groups[(base, mk)]
-        fm = dict(mk) if mk else None
         rschema, sel = (
-            _evo_select(schema, fm, ids) if evo else (schema, None)
+            _evo_select(schema, dict(mk), ids) if evo else (schema, None)
         )
         reader = spark.read.schema(rschema)
         if partitioned:
@@ -3453,7 +3318,9 @@ def set_partition_layout(
             "set_partition_layout: the new layout must be non-empty "
             "(rewrite via compact() to go unpartitioned)"
         )
-    with _Lease(fs, table_dir, ttl_ms=lease_ttl_ms) as lease:
+    with _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
+        wait_ms=_COMMIT_WAIT_MS
+    ) as lease:
         manifest = _read_manifest(table_dir, fs)
         if manifest is None:
             raise ValueError("set_partition_layout: no committed table")
@@ -3496,50 +3363,31 @@ def _evolve_schema(
     operation: str,
 ) -> int:
     """Shared commit shape for metadata-only schema evolution
-    (rename/drop): validate that every LIVE file carries a field map
-    (pre-stamping segments read by NAME — evolving over them would
-    silently null or resurrect columns; ``compact()`` first), apply
-    ``mutate(schema_struct, fids, retired)`` → (new_struct, new_fids,
-    newly_retired), and commit a snapshot that re-cites every segment
-    by reference with the new logical schema. Zero data IO."""
+    (rename/drop): apply ``mutate(schema_struct, fids, retired)`` →
+    (new_struct, new_fids, newly_retired[, overrides]), and commit a
+    snapshot that re-cites every segment by reference with the new
+    logical schema. Zero data IO. The commit lease is WAITED for, like
+    :func:`_metadata_commit`'s."""
     from pyspark.sql import types as T
 
     fs = _fs_for(table_dir, spark)
-    with _Lease(fs, table_dir, ttl_ms=lease_ttl_ms) as lease:
+    with _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
+        wait_ms=_COMMIT_WAIT_MS
+    ) as lease:
         manifest = _read_manifest(table_dir, fs)
         if manifest is None:
             raise ValueError("%s: no committed table here" % operation)
-        res = _resolve_entry(fs, table_dir, manifest, rekey_stats=False)
-        maps = res.get("file_fields") or {}
-        unmapped = [f for f in res["files"] if f not in maps]
-        if unmapped:
-            raise ValueError(
-                "%s: %d live file(s) predate field-map stamping and "
-                "resolve columns BY NAME — evolving the schema over "
-                "them would corrupt reads; compact() the table first "
-                "(a rewrite stamps every file)"
-                % (operation, len(unmapped))
-            )
         st = T.StructType.fromJson(json.loads(manifest["schema"]))
         fids, nxt = _field_ids_of(manifest)
         retired = set(manifest.get("retired_names") or [])
         out = mutate(st, fids, retired)
-        # a mutate may evolve layout metadata too: 4th element is
-        # either the new partition_by (legacy tuple shape) or a dict of
-        # entry overrides ({"partition_by", "partition_spec",
-        # "index_cols"} — renaming a partition column / transform
-        # source / indexed column rides the same commit)
-        new_parts = None
-        overrides: dict = {}
-        if len(out) == 4:
-            new_st, fids, newly_retired, tail = out
-            if isinstance(tail, dict):
-                overrides = tail
-                new_parts = overrides.pop("partition_by", None)
-            else:
-                new_parts = tail
-        else:
-            new_st, fids, newly_retired = out
+        # a mutate may evolve layout metadata too: an optional 4th
+        # element is a dict of entry overrides ({"partition_by",
+        # "partition_spec", "index_cols"} — renaming a partition column
+        # / transform source / indexed column rides the same commit)
+        new_st, fids, newly_retired = out[:3]
+        overrides = dict(out[3]) if len(out) == 4 else {}
+        new_parts = overrides.pop("partition_by", None)
         segs, removed = _segments_of(fs, table_dir, manifest)
         prev_nf, prev_sz = _entry_counters(fs, table_dir, manifest)
         entry = {
@@ -3606,9 +3454,8 @@ def rename_column(
     table under the new spec — the same contract as
     ``set_partition_layout``.
 
-    Guards: the old name is retired FOREVER (re-adding it would
-    resurrect old bytes on name-resolved segments); tables with
-    pre-stamping segments must ``compact()`` first."""
+    Guard: the old name is retired FOREVER (re-adding it would
+    resurrect old bytes)."""
     def mutate(st, fids, retired):
         from pyspark.sql import types as T
 
@@ -3708,7 +3555,7 @@ def drop_column(
     parquet never reads an unrequested column) until the next rewrite
     physically sheds them. The name is retired forever — a later
     schema-merge append re-introducing it is refused (it would
-    resurrect the old bytes on name-resolved segments); add the data
+    resurrect the old bytes); add the data
     back under a new name. Dropping a hive partition column is refused
     (use set_partition_layout). Zero data IO at any table size."""
     def mutate(st, fids, retired):
@@ -3998,7 +3845,9 @@ def restore_table(
     by reference, no data moves at any table size. The undo button for
     a bad merge/delete/compaction."""
     fs = _fs_for(table_dir, spark)
-    with _Lease(fs, table_dir, ttl_ms=lease_ttl_ms) as lease:
+    with _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
+        wait_ms=_COMMIT_WAIT_MS
+    ) as lease:
         manifest = _read_manifest(table_dir, fs)
         if manifest is None:
             raise ValueError("restore_table: no committed table here")
@@ -4012,9 +3861,9 @@ def restore_table(
         entry = {
             k: src[k]
             for k in (
-                "files", "file_sizes", "file_stats", "segments",
-                "removed", "n_rows", "n_files", "size_bytes", "schema",
-                "partition_by", "partition_spec", "dv", "dv_rows",
+                "segments", "removed", "n_rows", "n_files", "size_bytes",
+                "schema", "partition_by", "partition_spec", "dv",
+                "dv_rows",
             )
             if src.get(k) is not None
         }
@@ -4046,7 +3895,7 @@ def clone_table(
 ) -> int:
     """SHALLOW CLONE: fork ``src_dir``'s committed snapshot (or any
     retained ``version`` / ``as_of_ms`` state) into a NEW table at
-    ``dst_dir`` by metadata alone — the clone's v1 manifest re-cites
+    ``dst_dir`` by metadata alone — the clone's first manifest re-cites
     the source's data files as EXTERNAL absolute refs; zero data bytes
     move at any table size (Delta Lake's shallow clone). The clone is
     a fully independent table from the first commit: appends, deletes,
@@ -4125,19 +3974,15 @@ def clone_table(
     for f, v in _load_dv(src_fs, src_dir, entry).items():
         if f not in live or not _dv_val_n(v):
             continue
-        if isinstance(v, dict):
-            # v2/v3 sidecar ref: externalize the dataset path (zero
-            # copy, like the data refs) and pin the SIDECAR's own file
-            # key — its rows were written under the source's ref, which
-            # the clone's scan URIs still suffix-match
-            dv[abs_of[f]] = {
-                "ds": _ref_path(src_fs, src_dir, v["ds"]),
-                "n": int(v["n"]),
-                "key": v.get("key", f),
-                **({"fmt": v["fmt"]} if v.get("fmt") else {}),
-            }
-        else:
-            dv[abs_of[f]] = v
+        # externalize the sidecar dataset path (zero copy, like the
+        # data refs) and pin the SIDECAR's own file key — its rows were
+        # written under the source's ref, which the clone's scan URIs
+        # still suffix-match
+        dv[abs_of[f]] = {
+            **v,
+            "ds": _ref_path(src_fs, src_dir, v["ds"]),
+            "key": v.get("key", f),
+        }
     fs = _fs_for(dst_dir, spark)
     fs.mkdirs(dst_dir)
     with _Lease(fs, dst_dir, ttl_ms=300_000) as lease:
@@ -4229,16 +4074,15 @@ def _append_delta_files(
     from the final entry's resolution, and resolving it there would
     silently NULL the renamed column. The final entry's field ids key
     the logical names; a walk whose id space broke (a full rewrite
-    re-assigned ids mid-range) or whose delivered files predate field
-    stamping refuses instead of guessing (Delta similarly blocks
-    streaming across column-mapping changes)."""
+    re-assigned ids mid-range) refuses instead of guessing (Delta
+    similarly blocks streaming across column-mapping changes)."""
 
     def _entry_of(v: int) -> dict:
         if v == 0:
             # version 0 = the empty table before the first commit: the
             # delta from it is the FULL initial snapshot (how a
             # startingVersion=0 stream replays history)
-            return {"n_rows": 0, "files": [], "segments": []}
+            return {"n_rows": 0, "segments": []}
         if v == int(manifest["version"]):
             return manifest
         snaps = manifest.get("snapshots", {})
@@ -4250,18 +4094,19 @@ def _append_delta_files(
         return snaps[str(v)]
 
     appended: List[str] = []
-    fmaps: dict = {}  # delivered file -> {field_id: phys name} or None
+    fmaps: dict = {}  # delivered file -> {field_id: phys name}
     evolved_any = False
     ids_broken: Optional[str] = None
 
     def _collect(added_files, e: dict) -> None:
         # record each appended file's stamped field map FROM THE ENTRY
         # THAT APPENDED IT — the final entry may no longer resolve it
-        res_e = _resolve_entry(fs, table_dir, e, rekey_stats=False)
-        ff = res_e.get("file_fields") or {}
+        ff = _resolve_entry(fs, table_dir, e, rekey_stats=False)[
+            "file_fields"
+        ]
         for f in added_files:
             appended.append(f)
-            fmaps[f] = ff.get(f)
+            fmaps[f] = ff[f]
 
     def _step_ids(a: dict, b: dict) -> None:
         nonlocal ids_broken
@@ -4296,7 +4141,7 @@ def _append_delta_files(
             dv_prev_m = _load_dv(fs, table_dir, prev_e)
             dv_cur_m = _load_dv(fs, table_dir, e)
             dv_changed = any(
-                (dv_prev_m.get(f) or []) != (dv_cur_m.get(f) or [])
+                (dv_prev_m.get(f) or None) != (dv_cur_m.get(f) or None)
                 for f in common
             )
             if dv_changed and not ignore_deletes:
@@ -4375,24 +4220,14 @@ def _append_delta_files(
         schema, partitioned = e["schema"], bool(e.get("partition_by"))
     evo = None
     if evolved_any and appended:
-        final_e = _entry_of(to_v)
-        unstamped = sorted(f for f in appended if fmaps.get(f) is None)
-        if ids_broken or unstamped:
+        if ids_broken:
             raise ValueError(
                 "read_appends: the table renamed/dropped columns and %s "
                 "— the delivered files' physical columns can't be "
                 "resolved exactly; read the full snapshot or "
-                "read_changes() instead"
-                % (
-                    ids_broken
-                    or "delivered file(s) predate field stamping (%s...)"
-                    % unstamped[:3]
-                )
+                "read_changes() instead" % ids_broken
             )
-        evo = {
-            "ids": _field_ids_of(final_e)[0],
-            "files": {f: fmaps[f] for f in appended},
-        }
+        evo = {"ids": _field_ids_of(_entry_of(to_v))[0], "files": fmaps}
     return appended, schema, partitioned, evo
 
 
@@ -4419,7 +4254,7 @@ def _cdf_delta(
     ``{kind, file, take_ref, mask_ref, fields, version, schema,
     partitioned}`` where ``take_ref`` is a ``(cur, prev)`` pair of
     position refs (see :func:`_dv_ref_of`) whose difference names the
-    newly-deleted rows (resolved EXECUTOR-side — v2 sidecar positions
+    newly-deleted rows (resolved EXECUTOR-side — sidecar positions
     never pass through the driver), ``mask_ref`` positions to exclude
     (a dropped/added file's pre-existing dv), and ``fields`` the
     file's (logical, physical) column resolution on schema-evolved
@@ -4435,7 +4270,7 @@ def _cdf_delta(
 
     def _entry_of(v: int) -> dict:
         if v == 0:
-            return {"n_rows": 0, "files": [], "segments": []}
+            return {"n_rows": 0, "segments": []}
         if v == int(manifest["version"]):
             return manifest
         snaps = manifest.get("snapshots", {})
@@ -4489,9 +4324,7 @@ def _cdf_delta(
         `_fields_for`). None = identity (table never evolved)."""
         if not man_evolved:
             return None
-        fm = (res.get("file_fields") or {}).get(f)
-        if fm is None:
-            return tuple((n, n) for n in man_names)
+        fm = res["file_fields"][f]
         return tuple(
             (n, fm.get(str(man_ids.get(n)))) for n in man_names
         )
@@ -4699,7 +4532,7 @@ def read_changes(
 
     def _entry_of(v: int) -> dict:
         if v == 0:
-            return {"n_rows": 0, "files": [], "segments": []}
+            return {"n_rows": 0, "segments": []}
         if v == int(manifest["version"]):
             return manifest
         snaps = manifest.get("snapshots", {})
@@ -5066,8 +4899,10 @@ def vacuum(
     # the manifest rewrite (history prune) is a table mutation like any
     # other: without the lease, a publish committing between our read
     # and our replace_with would be silently reverted (its snapshot
-    # erased, its files orphaned)
-    with _Lease(fs, table_dir, ttl_ms=lease_ttl_ms):
+    # erased, its files orphaned). Waited for, like a metadata commit.
+    with _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
+        wait_ms=_COMMIT_WAIT_MS
+    ):
         manifest = _read_manifest(table_dir, fs)
         if manifest is None:
             return []
@@ -5092,19 +4927,12 @@ def vacuum(
         pruned = {
             v: e for v, e in snaps.items() if int(v) in retained
         }
-        if pruned != snaps:
-            manifest["snapshots"] = pruned
-            if not dry_run:
-                fs.replace_with(
-                    json.dumps(manifest),
-                    _manifest_path(table_dir, fs),
-                    ".tmp.vac",
-                )
         # reference set AFTER pruning: every dir a retained snapshot
         # (incl. the committed one) cites a data file or its delete-
-        # vector file in must survive.
+        # vector file in must survive. Resolved BEFORE the history
+        # rewrite, so a refused segment or dv shape mutates nothing.
         referenced = set()
-        for e in [manifest, *(manifest.get("snapshots") or {}).values()]:
+        for e in [manifest, *pruned.values()]:
             for f in _entry_files(fs, table_dir, e):
                 if not _is_ext(f):
                     referenced.add(f.split("/", 1)[0])
@@ -5114,12 +4942,20 @@ def vacuum(
                 referenced.add(seg)
             if e.get("dv"):
                 referenced.add(e["dv"].split("/", 1)[0])
-                # v2 refs: a snapshot's dv manifest can cite sidecar
-                # DATASETS in OLDER version dirs (untouched files keep
-                # their refs) — those dirs must survive too
+                # a snapshot's dv manifest can cite sidecar DATASETS in
+                # OLDER version dirs (untouched files keep their refs)
+                # — those dirs must survive too
                 for v in _load_dv(fs, table_dir, e).values():
-                    if isinstance(v, dict) and not _is_ext(v["ds"]):
+                    if not _is_ext(v["ds"]):
                         referenced.add(v["ds"].split("/", 1)[0])
+        if pruned != snaps:
+            manifest["snapshots"] = pruned
+            if not dry_run:
+                fs.replace_with(
+                    json.dumps(manifest),
+                    _manifest_path(table_dir, fs),
+                    ".tmp.vac",
+                )
 
         def _claim_fresh(name: str) -> bool:
             """An optimistic writer stages data with NO lease held —
@@ -5182,7 +5018,7 @@ def fsck_table(
     """Read-only CONSISTENCY AUDIT of a published table — the
     operational "is this table healthy" primitive (Delta FSCK's
     counterpart): walks every retained snapshot and verifies that each
-    cited data file, delete-vector manifest, v2 dv sidecar dataset and
+    cited data file, delete-vector manifest, dv sidecar dataset and
     segment sidecar actually resolves on storage; classifies every
     unreferenced ``_v<N>`` dir as in-flight (fresh claim — an
     optimistic writer staging) or orphan (vacuum candidate); and lists
@@ -5315,18 +5151,17 @@ def fsck_table(
                 )
                 dvmap = {}
             for f, val in dvmap.items():
-                if isinstance(val, dict):
-                    ds = val["ds"]
-                    if not _is_ext(ds):
-                        referenced.add(ds.split("/", 1)[0])
-                    dsp = _ref_path(fs, table_dir, ds)
-                    try:
-                        if not fs.walk_files(dsp):
-                            raise FileNotFoundError(dsp)
-                    except Exception:
-                        report["missing_dv"].append(
-                            {"snapshot": int(v), "file": f, "ds": ds}
-                        )
+                ds = val["ds"]
+                if not _is_ext(ds):
+                    referenced.add(ds.split("/", 1)[0])
+                dsp = _ref_path(fs, table_dir, ds)
+                try:
+                    if not fs.walk_files(dsp):
+                        raise FileNotFoundError(dsp)
+                except Exception:
+                    report["missing_dv"].append(
+                        {"snapshot": int(v), "file": f, "ds": ds}
+                    )
     dirs = sorted(
         d
         for d in fs.listdir(table_dir)
@@ -6723,8 +6558,8 @@ def compact_delete_vectors(
     lease_ttl_ms: int = 300_000,
 ) -> Optional[int]:
     """MINOR COMPACTION of the delete vectors: fold every sidecar
-    dataset (and any legacy v1 inline positions) the committed snapshot
-    references into ONE clustered parquet dataset and repoint the dv
+    dataset the committed snapshot references into ONE clustered
+    parquet dataset and repoint the dv
     manifest — ZERO data files touched (``dataChange=false``; the
     Iceberg 'rewrite position deletes' maintenance action). After K dv
     commits a masked scan reads up to K sidecar datasets and vacuum
@@ -6752,25 +6587,16 @@ def compact_delete_vectors(
     dv0 = {f: v for f, v in dv0.items() if _dv_val_n(v)}
     if not dv0:
         return None
-    ds_refs = {
-        v["ds"] for v in dv0.values() if isinstance(v, dict)
-    }
-    if len(ds_refs) == 1 and all(
-        isinstance(v, dict)
-        and v.get("key", f) == f
-        and v.get("fmt") == "bm"
-        for f, v in dv0.items()
+    if len({v["ds"] for v in dv0.values()}) == 1 and all(
+        v.get("key", f) == f for f, v in dv0.items()
     ):
-        # already one local, identity-keyed BITMAP dataset (a lone
-        # row-per-position v2 dataset still folds: the rewrite is the
-        # upgrade path to the packed format)
-        return None
+        return None  # already one local, identity-keyed dataset
     expected = {f: _dv_val_n(v) for f, v in dv0.items()}
 
     def fold(rel):
-        # fold in the CHUNK domain: v3 sidecars carry over as stored,
-        # legacy refs pack in-plan; (file, chunk) is unique across the
-        # union (each file's ref names one dataset) so no re-merge
+        # fold in the CHUNK domain: sidecars carry over as stored;
+        # (file, chunk) is unique across the union (each file's ref
+        # names one dataset) so no re-merge
         dsdir = _ref_path(fs, table_dir, rel)
         (
             _dv_chunks_df(spark, fs, table_dir, dv0)
@@ -6814,45 +6640,6 @@ def compact_delete_vectors(
         return st.commit(entry_of, same_dv)
 
 
-def _footer_minmax(fs, path: str, cols) -> Optional[dict]:
-    """Per-file {col: [min, max]} from the parquet FOOTER statistics
-    (driver-side metadata read, no scan). Returns None when footer
-    stats are unavailable for the backend/path."""
-    local = None
-    if isinstance(fs, _PosixFS):
-        local = path
-    elif path.startswith("file:"):
-        local = path[len("file:"):]
-        while local.startswith("//"):
-            local = local[1:]
-    if local is None:
-        return None  # remote URI: stats skipped (documented fallback)
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(local).metadata
-    names = {md.schema.column(i).path: i for i in range(md.num_columns)}
-    out = {}
-    for c in cols:
-        i = names.get(c)
-        if i is None:
-            continue
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(i).statistics
-            if st is None or not st.has_min_max:
-                return None  # stats missing: never skip blindly
-            mn, mx = st.min, st.max
-            lo = mn if lo is None or mn < lo else lo
-            hi = mx if hi is None or mx > hi else hi
-        if lo is not None:
-            if hasattr(lo, "isoformat"):
-                lo, hi = lo.isoformat(), hi.isoformat()
-            if isinstance(lo, bytes):
-                lo, hi = lo.decode("utf-8", "replace"), hi.decode("utf-8", "replace")
-            out[c] = [lo, hi]
-    return out or None
-
-
 def _phys_backfill_groups(manifest: dict, seg_data: dict, cols):
     """One segment's backfill read groups for a possibly-EVOLVED table:
     ``[(files, physical cols, physical schema_json)]`` — the manifest's
@@ -6862,8 +6649,7 @@ def _phys_backfill_groups(manifest: dict, seg_data: dict, cols):
     ``_resolve_entry`` rekeys them to logical names at read time, so a
     backfill after a rename still prunes. A column a file never had
     (added after it was written) is skipped for that group — no stats
-    beats wrong stats. Pre-stamping files resolve as identity (their
-    physical names ARE their era's logical names)."""
+    beats wrong stats."""
     ids, _ = _field_ids_of(manifest)
     types = {
         f["name"]: f
@@ -6873,22 +6659,16 @@ def _phys_backfill_groups(manifest: dict, seg_data: dict, cols):
     per_file = seg_data.get("file_fields") or {}
     groups: dict = {}
     for f in seg_data.get("files", []):
-        fm = per_file.get(f, seg_fields)
-        mk = tuple(sorted(fm.items())) if fm else None
+        mk = tuple(sorted(per_file.get(f, seg_fields).items()))
         groups.setdefault(mk, []).append(f)
     out = []
     for mk, fl in groups.items():
-        fm = dict(mk) if mk else None
+        fm = dict(mk)
         phys = {}
         for c in cols:
-            if c not in types:
-                continue
-            if fm is None:
-                phys[c] = c
-            else:
-                p = fm.get(str(ids.get(c)))
-                if p is not None:
-                    phys[c] = p
+            p = fm.get(str(ids.get(c))) if c in types else None
+            if p is not None:
+                phys[c] = p
         if not phys:
             continue
         fields = []
@@ -6916,8 +6696,8 @@ def _backfill_indexes(
     m_bits: int = _BLOOM_M,
     k: int = _BLOOM_K,
 ) -> int:
-    """The backfill loop of :func:`collect_file_stats` (segmented
-    manifests) and :func:`collect_file_blooms` — min/max stats, or
+    """The backfill loop of :func:`collect_file_stats` and
+    :func:`collect_file_blooms` — min/max stats, or
     blooms when ``blooms``: per live segment, resolve the logical
     ``cols`` to each file's PHYSICAL names
     (:func:`_phys_backfill_groups` — evolved tables backfill exactly),
@@ -6956,61 +6736,35 @@ def collect_file_stats(
     stats_cols,
     spark: Optional[SparkSession] = None,
 ) -> int:
-    """Record per-file min/max FOOTER statistics for ``stats_cols`` in
-    the committed manifest (one atomic manifest rewrite, no data
-    change; returns how many files got stats). This is the
-    data-skipping half of a table format: with stats recorded,
-    ``read_published(..., skip={"col": (lo, hi)})`` opens only the
-    files whose [min, max] intersects the bound — on a
-    ``zorder_layout``-clustered snapshot that's the file-level
-    min/max pruning that turns a 100 TB scan filtered on any
+    """Backfill per-file min/max statistics for ``stats_cols`` into the
+    committed snapshot's segment sidecars (no data change; returns how
+    many files got stats). This is the data-skipping half of a table
+    format: with stats recorded, ``read_published(..., skip={"col":
+    (lo, hi)})`` opens only the files whose [min, max] intersects the
+    bound — on a ``zorder_layout``-clustered snapshot that's the
+    file-level min/max pruning that turns a 100 TB scan filtered on any
     clustered dimension into a few files.
 
     Prefer ``stats_cols=`` on the publish itself: the executors just
     wrote the files, so write-time stats cost one column-pruned pass
-    over the DELTA only. This function is the post-hoc/backfill path:
-    on segmented manifests it runs a distributed per-segment job
-    (works on every backend); legacy inline manifests use driver-side
-    footer reads (posix/file: only). Files without collectable stats
-    simply carry none and are never skipped — skipping is always
-    CONSERVATIVE."""
+    over the DELTA only. This function is the post-hoc/backfill path: a
+    distributed job per segment (every backend). Files without
+    collectable stats simply carry none and are never skipped —
+    skipping is always CONSERVATIVE."""
     fs = _fs_for(table_dir, spark)
     with _Lease(fs, table_dir):
         manifest = _read_manifest(table_dir, fs)
         if manifest is None:
             raise ValueError("collect_file_stats: no committed table here")
-        if manifest.get("files") is None:
-            # segmented manifest: stats live in the per-version segment
-            # sidecars, backfilled in place by a distributed job per
-            # segment (every backend)
-            spark = spark or SparkSession.getActiveSession()
-            if spark is None:
-                raise RuntimeError(
-                    "collect_file_stats needs an active SparkSession "
-                    "(stats collection is a distributed job)"
-                )
-            return _backfill_indexes(
-                spark, fs, table_dir, manifest, stats_cols, blooms=False
+        spark = spark or SparkSession.getActiveSession()
+        if spark is None:
+            raise RuntimeError(
+                "collect_file_stats needs an active SparkSession "
+                "(stats collection is a distributed job)"
             )
-        # legacy inline manifest: stats embed in the manifest itself
-        stats = dict(manifest.get("file_stats") or {})
-        n = 0
-        for f in manifest["files"]:
-            mm = _footer_minmax(fs, _ref_path(fs, table_dir, f), list(stats_cols))
-            if mm:
-                stats[f] = {**stats.get(f, {}), **mm}
-                n += 1
-        manifest["file_stats"] = stats
-        # keep history entry for the current version in sync
-        cur = str(manifest["version"])
-        if cur in manifest.get("snapshots", {}):
-            manifest["snapshots"][cur]["file_stats"] = stats
-        fs.replace_with(
-            json.dumps(manifest),
-            _manifest_path(table_dir, fs),
-            ".tmp.stats",
+        return _backfill_indexes(
+            spark, fs, table_dir, manifest, stats_cols, blooms=False
         )
-        return n
 
 
 def collect_file_blooms(
@@ -7027,18 +6781,12 @@ def collect_file_blooms(
     ``read_published(skip_eq={'col': v})`` and
     ``delete_publish(..., point=...)`` open only the files that may
     contain the value — the point-lookup/point-delete index min/max
-    stats can't provide on unclustered data. Segmented manifests only
-    (legacy tables: run any publish first to migrate)."""
+    stats can't provide on unclustered data."""
     fs = _fs_for(table_dir, spark)
     with _Lease(fs, table_dir):
         manifest = _read_manifest(table_dir, fs)
         if manifest is None:
             raise ValueError("collect_file_blooms: no committed table here")
-        if manifest.get("files") is not None:
-            raise ValueError(
-                "collect_file_blooms needs a segmented manifest — any "
-                "publish migrates a legacy table"
-            )
         spark = spark or SparkSession.getActiveSession()
         if spark is None:
             raise RuntimeError(

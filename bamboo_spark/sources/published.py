@@ -132,48 +132,45 @@ def _open_parquet(loc: str, columns=None, filters=None):
 
 def _ref_positions(ref) -> Optional[set]:
     """EXECUTOR-side resolution of a positions ref (publish.
-    ``_dv_ref_of`` with dataset paths pre-resolved to locations):
-    ``("pos", (p, ...))`` inlines v1 positions; ``("ds", loc, key)``
-    reads the file's rows from a row-per-position parquet sidecar;
-    ``("bm", loc, key)`` reads the v3 BITMAP sidecar (chunk + 16x64-bit
-    words per row) and unpacks it with numpy. Either dataset read is
+    ``_dv_ref_of`` with the dataset path pre-resolved to a location):
+    ``(loc, key)`` reads the file's rows of the BITMAP sidecar (chunk +
+    16x64-bit words per row) and unpacks them with numpy. The read is
     column-pruned and predicate-pushed, so a task touches only its own
     file's positions no matter how large the commit's dataset is."""
     if ref is None:
         return None
-    if ref[0] == "pos":
-        return set(ref[1])
-    tag, loc, key = ref
-    if tag == "bm":
-        import numpy as np
+    import numpy as np
 
-        tbl = _open_parquet(
-            loc,
-            columns=["_dv_chunk", "_dv_bits"],
-            filters=[("_dv_file", "=", key)],
-        )
-        if tbl.num_rows == 0:
-            return set()
-        chunks = np.asarray(tbl["_dv_chunk"].to_pylist(), dtype=np.int64)
-        # the sidecar stores 64-bit words as SIGNED longs (Spark has no
-        # uint64): a position with p % 64 == 63 packs as a NEGATIVE
-        # long, and a direct negative->uint64 asarray is deprecated on
-        # NumPy 1.x and an OverflowError on NumPy 2.x — go through
-        # int64 and reinterpret the bits
-        words = np.asarray(
-            tbl["_dv_bits"].to_pylist(), dtype=np.int64
-        ).view(np.uint64)
-        ci, wi, bi = np.nonzero(
-            ((words[:, :, None] >> np.arange(64, dtype=np.uint64)) & 1)
-            .astype(bool)
-        )
-        return set(
-            (chunks[ci] * (words.shape[1] * 64) + wi * 64 + bi).tolist()
-        )
+    loc, key = ref
     tbl = _open_parquet(
-        loc, columns=["_dv_pos"], filters=[("_dv_file", "=", key)]
+        loc,
+        columns=["_dv_chunk", "_dv_bits"],
+        filters=[("_dv_file", "=", key)],
     )
-    return set(tbl["_dv_pos"].to_pylist())
+    if tbl.num_rows == 0:
+        return set()
+    chunks = np.asarray(tbl["_dv_chunk"].to_pylist(), dtype=np.int64)
+    # the sidecar stores 64-bit words as SIGNED longs (Spark has no
+    # uint64): a position with p % 64 == 63 packs as a NEGATIVE long,
+    # and a direct negative->uint64 asarray is deprecated on NumPy 1.x
+    # and an OverflowError on NumPy 2.x — go through int64 and
+    # reinterpret the bits
+    words = np.asarray(
+        tbl["_dv_bits"].to_pylist(), dtype=np.int64
+    ).view(np.uint64)
+    ci, wi, bi = np.nonzero(
+        ((words[:, :, None] >> np.arange(64, dtype=np.uint64)) & 1)
+        .astype(bool)
+    )
+    return set(
+        (chunks[ci] * (words.shape[1] * 64) + wi * 64 + bi).tolist()
+    )
+
+
+def _loc_ref(table_dir: str, ref) -> Optional[tuple]:
+    """A planner's positions ref with its table-relative sidecar
+    dataset resolved to a location an executor can open."""
+    return None if ref is None else (_join(table_dir, ref[0]), ref[1])
 
 
 class _ArrowMetaFS:
@@ -250,7 +247,7 @@ class _FilePartition(InputPartition):
     rel: str             # manifest-relative path (carries col=val segs)
     schema_json: str
     partition_by: tuple
-    dv_ref: Optional[tuple] = None     # mask: ("pos",(..)) | ("ds",loc,key)
+    dv_ref: Optional[tuple] = None     # mask: (sidecar loc, key)
     take_diff: Optional[tuple] = None  # (cur_ref, prev_ref)
     change_type: Optional[str] = None
     commit_version: Optional[int] = None
@@ -267,10 +264,8 @@ def _fields_for(schema_json: str, evo: Optional[dict], rel: str):
     same-named physical column must never resurrect)."""
     if not evo:
         return None
-    fm = evo["files"].get(rel)
+    fm = evo["files"][rel]
     names = [f["name"] for f in json.loads(schema_json)["fields"]]
-    if fm is None:
-        return tuple((n, n) for n in names)
     return tuple(
         (n, fm.get(str(evo["ids"].get(n)))) for n in names
     )
@@ -495,7 +490,7 @@ class _PublishedBatchReader(DataSourceReader):
                 self._hi[c] = hi
 
     def partitions(self) -> List[InputPartition]:
-        from bamboo_spark.operators.publish import _prune_eq
+        from bamboo_spark.operators.publish import _dv_ref_of, _prune_eq
 
         p = self._pinned
         files = list(p["files"])
@@ -546,21 +541,11 @@ class _PublishedBatchReader(DataSourceReader):
                 rel=f,
                 schema_json=p["schema"],
                 partition_by=tuple(p["partition_by"]),
-                dv_ref=self._dv_ref(dv.get(f), f),
+                dv_ref=_loc_ref(self._dir, _dv_ref_of(dv.get(f), f)),
                 fields=_fields_for(p["schema"], p.get("evo"), f),
             )
             for f in files
         ]
-
-    def _dv_ref(self, v, rel: str) -> Optional[tuple]:
-        """Positions ref for one file's dv-manifest value, with v2/v3
-        sidecar dataset paths resolved to readable locations."""
-        if not v:
-            return None
-        if isinstance(v, dict):
-            tag = "bm" if v.get("fmt") == "bm" else "ds"
-            return (tag, _join(self._dir, v["ds"]), v.get("key", rel))
-        return ("pos", tuple(int(p) for p in v))
 
     def read(self, partition: _FilePartition):
         return _arrow_batches(partition)
@@ -667,14 +652,6 @@ class _PublishedStreamReader(DataSourceStreamReader):
                 int(end["version"]),
             )
 
-            def _loc_ref(ref):
-                # v2/v3 refs carry dataset paths relative to the table
-                # dir — resolve to locations the executor can open,
-                # preserving the format tag ("ds" rows / "bm" bitmaps)
-                if ref is None or ref[0] == "pos":
-                    return ref
-                return (ref[0], _join(self._dir, ref[1]), ref[2])
-
             out: List[InputPartition] = []
             for p in plan:
                 if p["kind"] == "rewrite":
@@ -687,7 +664,7 @@ class _PublishedStreamReader(DataSourceStreamReader):
                                 (
                                     _join(self._dir, f),
                                     f,
-                                    _loc_ref(ref),
+                                    _loc_ref(self._dir, ref),
                                     fields,
                                 )
                                 for f, ref, fields in p["old"]
@@ -696,7 +673,7 @@ class _PublishedStreamReader(DataSourceStreamReader):
                                 (
                                     _join(self._dir, f),
                                     f,
-                                    _loc_ref(ref),
+                                    _loc_ref(self._dir, ref),
                                     fields,
                                 )
                                 for f, ref, fields in p["new"]
@@ -713,9 +690,11 @@ class _PublishedStreamReader(DataSourceStreamReader):
                         rel=p["file"],
                         schema_json=_cdf_schema_json(p["schema"]),
                         partition_by=parts,
-                        dv_ref=_loc_ref(p["mask_ref"]),
+                        dv_ref=_loc_ref(self._dir, p["mask_ref"]),
                         take_diff=(
-                            tuple(_loc_ref(r) for r in p["take_ref"])
+                            tuple(
+                                _loc_ref(self._dir, r) for r in p["take_ref"]
+                            )
                             if p["take_ref"] is not None
                             else None
                         ),

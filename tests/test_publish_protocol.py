@@ -311,40 +311,112 @@ def test_segment_prune_drops_fully_replaced_versions(spark, tmp_path):
     assert got.where("k = 'b'").count() == 1
 
 
-def test_legacy_inline_manifest_migrates_on_next_commit(spark, tmp_path):
-    """A table whose manifest predates segmentation (inline file list)
-    keeps reading, and the FIRST new commit migrates it to segment
-    sidecars without changing any snapshot's content."""
+def _refused_shapes(table_dir):
+    """Every legacy shape the shared loaders refuse, found by walking
+    the table's manifest, each ``_seg.json`` and each ``_dv.json``."""
+    found = []
+    man = json.load(open(os.path.join(table_dir, "manifest.json")))
+    if not man.get("snapshots"):
+        found.append("manifest without snapshots")
+    for v, e in [("top", man), *man.get("snapshots", {}).items()]:
+        if "files" in e:
+            found.append("inline files in snapshot %s" % v)
+        if not e.get("field_ids"):
+            found.append("no field_ids in snapshot %s" % v)
+    for root, _, names in os.walk(table_dir):
+        for name in names:
+            path = os.path.join(root, name)
+            if name == "_seg.json":
+                seg = json.load(open(path))
+                per_file = seg.get("file_fields") or {}
+                if not seg.get("field_names") and any(
+                    f not in per_file for f in seg["files"]
+                ):
+                    found.append("unstamped segment %s" % path)
+            elif name == "_dv.json":
+                for f, val in json.load(open(path)).items():
+                    if not isinstance(val, dict):
+                        found.append("position list %s" % path)
+                    elif val.get("fmt") != "bm":
+                        found.append("row-per-position sidecar %s" % path)
+                    elif val["ds"].rstrip("/").endswith("/_dvp"):
+                        found.append("hidden _dvp root %s" % path)
+    return found
+
+
+def test_every_writer_writes_one_table_format(spark, tmp_path):
+    """Every writer in the package, run on one table (and a clone of
+    it), leaves only the current on-disk shape: snapshot history,
+    segmented entries with field ids, stamped segments and bitmap
+    delete-vector sidecars below ``_v<N>/_dvp/dvp`` — none of the
+    shapes the readers refuse."""
     t = str(tmp_path / "tbl")
-    atomic_publish(spark.range(12).selectExpr("id", "id as x"), t)
-    # rewrite the manifest into the legacy inline format
-    fs = P._PosixFS()
-    man = P._read_manifest(t, fs)
-    res = P._resolve_entry(fs, t, man)
-    legacy_entry = {
-        "files": res["files"],
-        "file_sizes": res["file_sizes"],
-        "n_rows": man["n_rows"],
-        "size_bytes": man["size_bytes"],
-        "schema": man["schema"],
-        "partition_by": man.get("partition_by") or [],
-    }
-    legacy = {
-        "version": 1,
-        "snapshots": {"1": legacy_entry},
-        **legacy_entry,
-    }
-    os.remove(os.path.join(t, "_v1", "_seg.json"))
-    fs.replace_with(json.dumps(legacy), os.path.join(t, "manifest.json"), ".tmp")
-    assert read_published(spark, t).count() == 12  # legacy read works
-    v2 = append_publish(spark.range(12, 20).selectExpr("id", "id as x"), t)
-    assert v2 == 2
-    man2 = json.load(open(os.path.join(t, "manifest.json")))
-    assert man2.get("files") is None  # migrated to segments
-    assert set(man2["segments"]) == {"_v1", "_v2"}
-    assert os.path.exists(os.path.join(t, "_v1", "_seg.json"))
-    assert read_published(spark, t).count() == 20
-    assert read_published(spark, t, version=2).count() == 20
+    c = str(tmp_path / "clone")
+
+    def rows(pairs, x=0):
+        return spark.createDataFrame(
+            [(k, v, x, "p%d" % (k % 2)) for k, v in pairs],
+            "k long, v long, x long, p string",
+        )
+
+    atomic_publish(
+        rows([(k, k) for k in range(20)]), t, partition_by="p",
+        stats_cols=["k"], bloom_cols=["k"],
+    )
+    P.set_retention(t, keep=100, spark=spark)  # history for the checks
+    append_publish(rows([(k, k) for k in range(20, 30)]), t)
+    P.merge_into(
+        rows([(1, 100), (40, 40)]), t, "k",
+        when_matched_update={"v": "s.v"},
+    )
+    P.merge_publish_incremental(
+        spark.createDataFrame(
+            [(2, 200, 0, "p0", "upsert"), (7, 700, 0, "p1", "delete")],
+            "k long, v long, x long, p string, op string",
+        ),
+        t, "k", ["v"], op_col="op",
+    )
+    delete_publish(spark, t, "k = 3", delete_vectors=True)
+    delete_publish(spark, t, "k = 8", delete_vectors=True)
+    assert P.compact_delete_vectors(t, spark=spark) is not None
+    delete_publish(spark, t, "k = 4", delete_vectors=False)
+    P.update_publish(spark, t, "k = 5", {"v": "v + 1000"})
+    P.update_publish(
+        spark, t, "k = 6", {"v": "v + 1000"}, delete_vectors=False
+    )
+    P.replace_where_publish(rows([(50, 50), (51, 51)]), t, "k >= 50")
+    replace_partitions_publish(
+        rows([(k, k) for k in range(1, 30, 2)]), t, values=["p1"],
+        partition_col="p",
+    )
+    optimize_table(spark, t)
+    delete_publish(spark, t, "k = 10", delete_vectors=True)
+    dv_version = current_version(t)
+    P.rename_column(t, "v", "w", spark=spark)
+    P.drop_column(t, "x", spark=spark)
+    P.set_partition_layout(t, ["p", "bucket(2, k)"], spark=spark)
+    append_publish(
+        spark.createDataFrame([(60, 60, "p0")], "k long, w long, p string"),
+        t,
+    )
+    compact(spark, t)
+    P.restore_table(t, dv_version, spark=spark)
+    P.clone_table(spark, t, c)
+    delete_publish(spark, c, "k = 12", delete_vectors=True)
+
+    ops = {r.operation for r in P.table_history(spark, t).collect()}
+    assert {"delete", "compact_dv", "rename_column", "restore"} <= ops
+    # the restore brought back a snapshot with delete vectors, and the
+    # clone externalized them
+    assert json.load(open(os.path.join(t, "manifest.json"))).get("dv")
+    assert any(
+        os.path.isdir(os.path.join(root, "_dvp", "dvp"))
+        for root, _, _ in os.walk(c)
+    )
+    assert _refused_shapes(t) == []
+    assert _refused_shapes(c) == []
+    got = {r.k for r in read_published(spark, c).collect()}
+    assert not got & {4, 8, 10, 12, 60} and {3, 50} <= got
 
 
 def test_segmented_stats_skipping_still_prunes(spark, tmp_path):

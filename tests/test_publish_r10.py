@@ -5,6 +5,9 @@ label / timestamp / counters), TIMESTAMP AS OF time travel
 merge. All pure-metadata features: one manifest read, no data IO."""
 
 import datetime
+import json as _json
+import os
+import re
 import time
 
 import pytest
@@ -415,7 +418,8 @@ def test_rename_guards_partition_col_and_unstamped_segments(
     assert sorted(
         (r.k, r.bucket) for r in read_published(spark, d).collect()
     ) == [(k, k % 2) for k in range(8)]
-    # simulate a pre-stamping segment: strip field_names from a sidecar
+    # a pre-stamping segment (no field_names) is refused: its files
+    # would resolve columns by name after the rename
     d2 = str(tmp_path / "t2")
     atomic_publish(_kv(spark, [(1, 10)]), d2)
     for root, _, fl in os.walk(d2):
@@ -425,11 +429,10 @@ def test_rename_guards_partition_col_and_unstamped_segments(
                 seg = _json.load(open(pth))
                 seg.pop("field_names", None)
                 _json.dump(seg, open(pth, "w"))
-    with pytest.raises(ValueError, match="compact"):
+    P._SEG_CACHE.clear()
+    with pytest.raises(P.UnsupportedFormatError, match="unstamped segment"):
         P.rename_column(d2, "v", "w", spark=spark)
-    compact(spark, d2)  # rewrite stamps every file
-    P.rename_column(d2, "v", "w", spark=spark)
-    assert read_published(spark, d2).columns == ["k", "w"]
+    assert P._read_manifest(d2, P._PosixFS())["version"] == 1
 
 
 def test_rename_with_delete_vectors_and_restore(spark, tmp_path):
@@ -739,42 +742,153 @@ def test_format_version_guard(spark, tmp_path):
         append_publish(_kv(spark, [(2, 20)]), d)
 
 
-@pytest.mark.parametrize("key", ["tags", "branches", "constraints"])
-def test_manifest_with_removed_feature_is_refused(spark, tmp_path, key):
-    """Tags, branches and CHECK constraints are gone, but format-1
-    tables written before may still carry them: every reader refuses
-    such a manifest by name rather than ignoring the key — unenforced
-    constraints, or a vacuum that deletes a branch head's files."""
-    import json as _json
-    import os
+def _dv_positions(spark, d, man):
+    """``{file: [positions]}`` of the committed snapshot's delete
+    vectors, unpacked from their bitmap sidecars."""
+    dv = P._load_dv(P._PosixFS(), d, man)
+    out = {}
+    for f, ref in dv.items():
+        bits = spark.read.parquet(os.path.join(d, ref["ds"]))
+        out[f] = sorted(
+            r._dv_pos
+            for r in P._dv_unpack(bits).where(F.col("_dv_file") == f)
+            .collect()
+        )
+    return out
 
+
+def _edit_json(path, edit):
+    with open(path) as fh:
+        data = _json.load(fh)
+    edit(data)
+    with open(path, "w") as fh:
+        _json.dump(data, fh)
+
+
+def _legacy_inline(spark, d, man):
+    # an older snapshot lists its files inline instead of by segment
+    e = man["snapshots"]["2"]
+    e["files"] = P._entry_files(P._PosixFS(), d, e)
+    e.pop("segments")
+    e.pop("removed", None)
+
+
+def _legacy_unstamped(spark, d, man):
+    _edit_json(
+        os.path.join(d, man["segments"][-1], "_seg.json"),
+        lambda seg: seg.pop("field_names"),
+    )
+
+
+def _legacy_no_field_ids(spark, d, man):
+    for e in [man, *man["snapshots"].values()]:
+        e.pop("field_ids")
+
+
+def _legacy_dv_positions(spark, d, man):
+    pos = _dv_positions(spark, d, man)
+    _edit_json(
+        os.path.join(d, man["dv"]),
+        lambda dv: dv.update({f: pos[f] for f in dv}),
+    )
+
+
+def _legacy_dv_rows(spark, d, man):
+    # one row per deleted position, as sidecars were written before
+    # the bitmap packing
+    dv = P._load_dv(P._PosixFS(), d, man)
+    for f, ref in dv.items():
+        rows = ref["ds"] + "_rows"
+        P._dv_unpack(
+            spark.read.parquet(os.path.join(d, ref["ds"]))
+        ).write.parquet(os.path.join(d, rows))
+        dv[f] = {"ds": rows, "n": ref["n"]}
+    _edit_json(os.path.join(d, man["dv"]), lambda old: old.update(dv))
+
+
+def _legacy_dv_hidden_root(spark, d, man):
+    # the sidecar dataset rooted at the hidden _dvp dir itself
+    ds = next(iter(P._load_dv(P._PosixFS(), d, man).values()))["ds"]
+    hidden = ds.rsplit("/", 1)[0]
+    os.rename(os.path.join(d, ds), os.path.join(d, hidden + "_tmp"))
+    os.rmdir(os.path.join(d, hidden))
+    os.rename(os.path.join(d, hidden + "_tmp"), os.path.join(d, hidden))
+    _edit_json(
+        os.path.join(d, man["dv"]),
+        lambda dv: dv.update({f: {**v, "ds": hidden} for f, v in dv.items()}),
+    )
+
+
+# shape -> (edit of a fresh 5-version table: manifest edits apply to
+# the loaded manifest, which is written back; error text naming it)
+_LEGACY_SHAPES = {
+    "tags": (lambda s, d, m: m.update(tags={"freeze": 1}), "'tags'"),
+    "branches": (
+        lambda s, d, m: m.update(
+            branches={
+                "b": {"head": m["snapshots"]["1"], "base": 1, "seq": 1}
+            }
+        ),
+        "'branches'",
+    ),
+    "constraints": (
+        lambda s, d, m: m.update(constraints={"v_pos": "v > 0"}),
+        "'constraints'",
+    ),
+    "pre_history": (
+        lambda s, d, m: m.pop("snapshots"), "pre-history manifest"
+    ),
+    "inline_files": (_legacy_inline, "inline 'files' list in snapshot 2"),
+    "no_field_ids": (_legacy_no_field_ids, "no 'field_ids'"),
+    "unstamped_segment": (_legacy_unstamped, "unstamped segment"),
+    "dv_position_list": (
+        _legacy_dv_positions, "position-list delete vector"
+    ),
+    "dv_row_sidecar": (
+        _legacy_dv_rows, "row-per-position delete-vector sidecar"
+    ),
+    "dv_hidden_root": (_legacy_dv_hidden_root, "hidden '_dvp' dir"),
+}
+
+
+@pytest.mark.parametrize("key", list(_LEGACY_SHAPES))
+def test_manifest_with_removed_feature_is_refused(spark, tmp_path, key):
+    """Tags, branches and CHECK constraints are gone, and so are the
+    table shapes no writer produces any more (pre-history and inline
+    manifests, entries without field ids, unstamped segments, position
+    lists, row-per-position and hidden-root delete-vector sidecars) —
+    but tables written before may still carry them: every reader and
+    writer refuses such a table by name rather than misreading it
+    (unenforced constraints, a vacuum that deletes a branch head's
+    files, columns resolved by name after a rename)."""
     from bamboo_spark.operators.publish import UnsupportedFormatError
     from bamboo_spark.sources.published import register
 
     d = str(tmp_path / "t")
-    atomic_publish(_kv(spark, [(1, 10)]), d)                    # v1
-    for k in (2, 3, 4):
-        append_publish(_kv(spark, [(k, k * 10)]), d)            # v2-v4
+    atomic_publish(_kv(spark, [(1, 10), (2, 20)]), d)            # v1
+    for k in (3, 4):
+        append_publish(_kv(spark, [(k, k * 10)]), d)            # v2-v3
+    delete_publish(spark, d, "k = 2", delete_vectors=True)      # v4
+    append_publish(_kv(spark, [(5, 50)]), d)                    # v5
+    edit, named = _LEGACY_SHAPES[key]
     man_path = os.path.join(d, "manifest.json")
-    man = _json.load(open(man_path))
-    man[key] = {
-        "tags": {"freeze": 1},
-        "branches": {
-            "b": {"head": man["snapshots"]["1"], "base": 1, "seq": 1}
-        },
-        "constraints": {"v_pos": "v > 0"},
-    }[key]
-    _json.dump(man, open(man_path, "w"))
+    _edit_json(man_path, lambda man: edit(spark, d, man))
+    P._SEG_CACHE.clear()  # as a fresh process would see the table
+    P._DV_CACHE.clear()
+    named = re.escape(named)
     on_disk = sorted(os.listdir(d))
-    with pytest.raises(UnsupportedFormatError, match=repr(key)):
-        append_publish(_kv(spark, [(5, 50)]), d)
-    with pytest.raises(UnsupportedFormatError, match=repr(key)):
+    man_text = open(man_path).read()
+    with pytest.raises(UnsupportedFormatError, match=named):
+        append_publish(_kv(spark, [(6, 60)]), d)
+    with pytest.raises(UnsupportedFormatError, match=named):
         P.vacuum(d, keep=1, spark=spark)
-    assert sorted(os.listdir(d)) == on_disk  # vacuum deleted nothing
-    with pytest.raises(UnsupportedFormatError, match=repr(key)):
-        read_published(spark, d)
+    # neither the failed append nor vacuum changed anything
+    assert sorted(os.listdir(d)) == on_disk
+    assert open(man_path).read() == man_text
+    with pytest.raises(UnsupportedFormatError, match=named):
+        read_published(spark, d).collect()
     register(spark)
-    with pytest.raises(Exception, match=repr(key)):
+    with pytest.raises(Exception, match=named):
         spark.read.format("bamboo_published").load(d).count()
     # a ref load never silently reads main
     with pytest.raises(Exception, match="ref option is not supported"):

@@ -124,40 +124,6 @@ def test_predicate_dv_delete_never_collects_rows(spark, tmp_path, monkeypatch):
     assert got == [k for k in range(6000) if k % 3 != 0]
 
 
-def test_legacy_v1_dv_manifest_still_reads_and_upgrades(spark, tmp_path):
-    """v1 dv manifests (positions inline in the JSON) keep reading, and
-    a new dv commit on top of one merges the legacy positions into v2
-    sidecars."""
-    d = str(tmp_path / "t")
-    atomic_publish(_rows(spark, 0, 500), d)
-    delete_publish(spark, d, "k % 7 = 0", delete_vectors=True)
-    fs = _fs()
-    man = P._read_manifest(d, fs)
-    dv = P._load_dv(fs, d, man)
-    # rewrite the committed dv manifest in the LEGACY v1 shape
-    # (positions unpacked from the committed bitmap sidecars)
-    v1 = {rel: [] for rel in dv}
-    for r in P._dv_positions_df(spark, fs, d, dv).collect():
-        v1[r._dv_file].append(int(r._dv_pos))
-    v1 = {rel: sorted(ps) for rel, ps in v1.items()}
-    (Path(d) / man["dv"]).write_text(json.dumps(v1))
-    P._DV_CACHE.clear()
-    man2 = P._read_manifest(d, fs)
-    assert all(
-        isinstance(v, list) for v in P._load_dv(fs, d, man2).values()
-    )
-    expect1 = [k for k in range(500) if k % 7 != 0]
-    got = sorted(r.k for r in read_published(spark, d).collect())
-    assert got == expect1
-    # a further dv-delete merges v1 positions into v2 sidecars
-    delete_publish(spark, d, "k % 11 = 0", delete_vectors=True)
-    expect2 = [k for k in expect1 if k % 11 != 0]
-    got = sorted(r.k for r in read_published(spark, d).collect())
-    assert got == expect2
-    man3 = P._read_manifest(d, _fs())
-    assert man3["dv_rows"] == 500 - len(expect2)
-
-
 def test_dv_on_partitioned_evolved_table(spark, tmp_path):
     """dv-delete + masked reads compose with hive partitioning AND
     metadata-only renames: the predicate references the renamed column,
@@ -458,6 +424,47 @@ def test_concurrent_metadata_ops_compose(spark, tmp_path):
     assert man["retention"] == {"keep": 3, "older_than_ms": 60_000}
     assert man["index_cols"] == {"stats": ["k"], "bloom": ["k"]}
     assert read_published(spark, d).columns == ["k", "amount"]
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["rename_column", "set_partition_layout", "restore_table", "vacuum"],
+)
+def test_metadata_writers_queue_for_the_lease(spark, tmp_path, op):
+    """Schema, layout, restore and vacuum commits are milliseconds of
+    manifest work: like set_retention, they WAIT for a lease another
+    writer holds briefly, then commit, instead of raising at once."""
+    import threading
+    import time
+
+    d = str(tmp_path / "t")
+    atomic_publish(_rows(spark, 0, 10), d)
+    append_publish(_rows(spark, 10, 12), d)
+    run = {
+        "rename_column": lambda: P.rename_column(d, "v", "w", spark=spark),
+        "set_partition_layout": lambda: P.set_partition_layout(
+            d, "bucket(2, k)", spark=spark
+        ),
+        "restore_table": lambda: P.restore_table(d, 1, spark=spark),
+        "vacuum": lambda: P.vacuum(d, keep=1, spark=spark),
+    }[op]
+    held = P._Lease(_fs(), d).acquire()
+    holder = threading.Timer(1.0, held.release)
+    holder.start()
+    try:
+        t0 = time.monotonic()
+        run()
+        waited = time.monotonic() - t0
+    finally:
+        holder.join(timeout=30)
+    assert not holder.is_alive() and waited >= 0.9
+    man = P._read_manifest(d, _fs())
+    if op == "vacuum":
+        assert sorted(man["snapshots"]) == ["2"]
+    else:
+        assert man["version"] == 3 and man["operation"] == {
+            "restore_table": "restore"
+        }.get(op, op)
 
 
 def test_backfill_stats_and_blooms_on_evolved_table(spark, tmp_path):

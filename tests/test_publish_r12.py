@@ -646,12 +646,12 @@ def test_dv_bitmap_sidecar_compresses_dense_deletes(spark, tmp_path):
     assert ref["fmt"] == "bm" and ref["n"] == n // 2
     packed_bytes = _dir_bytes(Path(d) / ref["ds"])
     # the row-per-position layout of the SAME positions, for comparison
-    legacy = P._dv_positions_df(spark, fs, d, dv)
-    legacy.coalesce(1).write.parquet(str(tmp_path / "legacy"))
-    legacy_bytes = _dir_bytes(tmp_path / "legacy")
-    assert packed_bytes * 10 <= legacy_bytes, (
+    positional = P._dv_unpack(spark.read.parquet(str(Path(d) / ref["ds"])))
+    positional.coalesce(1).write.parquet(str(tmp_path / "positional"))
+    positional_bytes = _dir_bytes(tmp_path / "positional")
+    assert packed_bytes * 10 <= positional_bytes, (
         "bitmap sidecar %d B vs positional %d B — expected >=10x"
-        % (packed_bytes, legacy_bytes)
+        % (packed_bytes, positional_bytes)
     )
     got = read_published(spark, d)
     assert got.count() == n // 2

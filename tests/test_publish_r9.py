@@ -470,119 +470,6 @@ def test_read_appends_refuses_dv_deletes(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# legacy inline restore reconciliation (ADVICE r8 low)
-# ---------------------------------------------------------------------------
-
-
-def _to_inline(t):
-    """Convert a committed segmented manifest to the LEGACY inline
-    shape (files embedded, sidecars gone) — simulating a table written
-    before segmentation."""
-    fs = P._PosixFS()
-    man = P._read_manifest(t, fs)
-    for vstr, e in list(man.get("snapshots", {}).items()):
-        res = P._resolve_entry(fs, t, e)
-        e.pop("segments", None)
-        e.pop("removed", None)
-        e["files"] = res["files"]
-        e["file_sizes"] = res["file_sizes"]
-    res = P._resolve_entry(fs, t, man)
-    man.pop("segments", None)
-    man.pop("removed", None)
-    man["files"] = res["files"]
-    man["file_sizes"] = res["file_sizes"]
-    fs.replace_with(json.dumps(man), os.path.join(t, "manifest.json"), ".tmp")
-    for d in os.listdir(t):
-        seg = os.path.join(t, d, "_seg.json")
-        if os.path.isdir(os.path.join(t, d)) and os.path.exists(seg):
-            os.remove(seg)
-    P._SEG_CACHE.clear()
-
-
-def test_restore_to_inline_snapshot_reconciles_sidecars(spark, tmp_path):
-    """Restore to a pre-migration INLINE snapshot on a table whose dirs
-    gained sidecars from a later migration: the next append must
-    resolve exactly the restored file set — neither resurrecting files
-    the restored snapshot dropped nor dropping files it kept."""
-    t = str(tmp_path / "tbl")
-    atomic_publish(spark.range(10).selectExpr("id").repartition(2), t)  # v1
-    _to_inline(t)  # legacy table: v1 inline, 2 files in _v1
-    fs = P._PosixFS()
-    man = P._read_manifest(t, fs)
-    f1, f2 = sorted(man["files"])
-    # hand-craft a legacy v2 that dropped f2 (old partial replace)
-    import pyarrow.parquet as pq
-
-    rows_f1 = int(pq.ParquetFile(os.path.join(t, f1)).metadata.num_rows)
-    v2 = {
-        "files": [f1],
-        "file_sizes": {f1: man["file_sizes"][f1]},
-        "n_rows": rows_f1,
-        "n_files": 1,
-        "size_bytes": man["file_sizes"][f1],
-        "schema": man["schema"],
-        "partition_by": [],
-    }
-    man["snapshots"]["2"] = v2
-    man2 = {"version": 2, "snapshots": man["snapshots"], **v2}
-    fs.replace_with(json.dumps(man2), os.path.join(t, "manifest.json"), ".tmp")
-    P._SEG_CACHE.clear()
-    # migrate from v2-inline: sidecar _v1 gets [f1] only
-    append_publish(spark.range(100, 102).selectExpr("id"), t)  # v3
-    assert read_published(spark, t).count() == rows_f1 + 2
-    # restore to v1 (inline, [f1, f2]) — the sidecar now DISAGREES
-    restore_table(t, 1)  # v4
-    assert read_published(spark, t).count() == 10
-    # the next append migrates v4's inline entry; reconciliation must
-    # widen the sidecar so f2's rows survive
-    append_publish(spark.range(200, 203).selectExpr("id"), t)  # v5
-    got = read_published(spark, t)
-    assert got.count() == 13
-    ids = sorted(r["id"] for r in got.collect())
-    assert ids == list(range(10)) + [200, 201, 202]
-
-
-def test_restore_to_smaller_inline_does_not_resurrect(spark, tmp_path):
-    """The mirror case: the existing sidecar lists MORE files than the
-    restored inline snapshot — the surplus must be shadowed via
-    `removed`, not resurrected."""
-    t = str(tmp_path / "tbl")
-    atomic_publish(spark.range(10).selectExpr("id").repartition(2), t)  # v1
-    _to_inline(t)
-    fs = P._PosixFS()
-    man = P._read_manifest(t, fs)
-    f1, f2 = sorted(man["files"])
-    import pyarrow.parquet as pq
-
-    rows_f1 = int(pq.ParquetFile(os.path.join(t, f1)).metadata.num_rows)
-    # migrate from v1-inline (FULL file list): sidecar _v1 = [f1, f2]
-    append_publish(spark.range(100, 102).selectExpr("id"), t)  # v2
-    # hand-craft an inline RESTORE target that kept only f1
-    man = P._read_manifest(t, fs)
-    v9 = {
-        "files": [f1],
-        "file_sizes": {},
-        "n_rows": rows_f1,
-        "n_files": 1,
-        "size_bytes": 1,
-        "schema": man["schema"],
-        "partition_by": [],
-    }
-    snaps = dict(man["snapshots"])
-    snaps[str(man["version"] + 1)] = v9
-    man2 = {"version": man["version"] + 1, "snapshots": snaps, **v9}
-    fs.replace_with(json.dumps(man2), os.path.join(t, "manifest.json"), ".tmp")
-    P._SEG_CACHE.clear()
-    assert read_published(spark, t).count() == rows_f1
-    append_publish(spark.range(300, 302).selectExpr("id"), t)
-    got = read_published(spark, t)
-    assert got.count() == rows_f1 + 2  # f2's rows NOT resurrected
-    assert got.where("id >= 10").where("id < 300").count() == 0 or True
-    ids = {r["id"] for r in got.collect()}
-    assert {300, 301} <= ids and len(ids) == rows_f1 + 2
-
-
-# ---------------------------------------------------------------------------
 # observability (VERDICT r8 #9)
 # ---------------------------------------------------------------------------
 
