@@ -475,8 +475,9 @@ class UnsupportedFormatError(RuntimeError):
     encoding, whose absence from this reader's resolution would return
     WRONG rows), and an OLDER shape no writer produces any more (keys
     of removed features, pre-history or inline-file manifests, entries
-    without field ids, unstamped segments, position-list or
-    row-per-position delete vectors). The table has ONE on-disk format:
+    without field ids or file/byte counters, unstamped segments,
+    position-list or row-per-position delete vectors). The table has
+    ONE on-disk format:
     segmented snapshot entries carrying ``field_ids``, segments stamped
     with their field names, and bitmap delete-vector sidecars."""
 
@@ -519,6 +520,9 @@ def _read_manifest(table_dir: str, fs) -> Optional[dict]:
         if not e.get("field_ids"):
             raise _refuse(table_dir, "has no 'field_ids' in snapshot %s "
                           "(pre-field-id)" % v)
+        if e.get("n_files") is None or e.get("size_bytes") is None:
+            raise _refuse(table_dir, "has no 'n_files'/'size_bytes' in "
+                          "snapshot %s (pre-size)" % v)
     return man
 
 
@@ -536,13 +540,11 @@ _SEG_CACHE_MAX = 4096
 def _load_seg(fs, table_dir: str, seg: str) -> dict:
     """Segment sidecar, memoized on (path, mtime): one replace commit
     resolves/segments/prunes the same sidecars several times, and on an
-    object store every raw read is a GET. mtime-validated, so the one
-    post-creation rewrite — stats/bloom backfills (file lists never
-    change) — refreshes the entry; a same-ms rewrite could at worst
-    serve the pre-backfill stats, which only makes skipping more
-    conservative. Every listed file must carry its field map (the
-    segment's ``field_names`` stamp, or a clone's per-file
-    ``file_fields``): an unstamped segment is refused."""
+    object store every raw read is a GET. mtime-validated: a sidecar
+    is written once, by the commit that creates its segment, so a hit
+    is the sidecar as committed. Every listed file must carry its
+    field map (the segment's ``field_names`` stamp, or a clone's
+    per-file ``file_fields``): an unstamped segment is refused."""
     path = _seg_path(fs, table_dir, seg)
     mt = fs.mtime_ms(path)
     hit = _SEG_CACHE.get(path)
@@ -1255,7 +1257,7 @@ def _distributed_file_indexes(
     k: int = _BLOOM_K,
 ):
     """The ONE per-file index scan, behind write-time indexing
-    (:func:`_enrich_seg`) and both backfills (:func:`_backfill_indexes`):
+    (:func:`_enrich_seg`):
     one distributed job per version dir scans the files column-pruned
     to the index columns and groups by ``input_file_name()``; the same
     aggregate carries the min/max of ``stats_cols`` and the bloom
@@ -1407,8 +1409,8 @@ def _segments_of(fs, table_dir: str, prev: dict):
     top of ``prev``. The carried segments and delete vectors load
     through their refusing loaders first, so no commit carries a shape
     this reader would refuse to read. A segment already in the cache
-    passed that check when it was read (a backfill rewrite keeps its
-    stamp), so a long-lived writer's append stats no carried segment."""
+    passed that check when it was read, so a long-lived writer's
+    append stats no carried segment."""
     segs = list(prev.get("segments") or [])
     for seg in segs:
         if _seg_path(fs, table_dir, seg) not in _SEG_CACHE:
@@ -2042,7 +2044,7 @@ def _commit(
         )
     # table-level meta (e.g. a streaming sink's exactly-once batch-id
     # HWM) carries FORWARD through every publish flavor — a maintenance
-    # compact()/optimize_table must not erase the ingest HWM; a writer
+    # compact() must not erase the ingest HWM; a writer
     # that passes meta overrides per-key, never wholesale
     merged_meta = {
         **((prev or {}).get("meta") or {}),
@@ -2230,7 +2232,7 @@ class _StagedCommit:
         segs, removed, n_files, size = [], [], 0, 0
         if base is not None:
             segs, removed = _segments_of(self.fs, self.table_dir, base)
-            n_files, size = _entry_counters(self.fs, self.table_dir, base)
+            n_files, size = base["n_files"], base["size_bytes"]
         entry = {
             "segments": segs + [self.seg] if self.files else segs,
             "removed": removed,
@@ -2479,11 +2481,33 @@ def append_publish(
         return st.commit(entry_of)
 
 
+_NULL_FLAGS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _relaxed(node):
+    """A schema JSON node with every nullability flag set: the table
+    does not enforce nullability (strict appends exclude it, and
+    Spark's file sources read every column back nullable), so a
+    rewrite that re-reads the table (``compact``) relaxes the flags
+    without changing the schema."""
+    if isinstance(node, dict):
+        return {
+            k: True if k in _NULL_FLAGS else _relaxed(v)
+            for k, v in node.items()
+        }
+    if isinstance(node, list):
+        return [_relaxed(v) for v in node]
+    return node
+
+
 def _check_rebase(base: dict, cur: dict, who: str) -> None:
     """An optimistic commit may rebase onto a newer manifest only when
-    the table's schema and partition layout are unchanged — anything
-    else is a real conflict the caller must see."""
-    if cur.get("schema") != base.get("schema"):
+    the table's schema (up to nullability) and partition layout are
+    unchanged — anything else is a real conflict the caller must
+    see."""
+    if _relaxed(json.loads(cur["schema"])) != _relaxed(
+        json.loads(base["schema"])
+    ):
         raise ConcurrentWriteError(
             "%s: concurrent schema change — rebase refused" % who
         )
@@ -2563,8 +2587,8 @@ def describe_table(
         "committed_at_ms": m.get("committed_at_ms"),
         "operation": m.get("operation"),
         "n_rows": int(m["n_rows"]),
-        "n_files": int(m.get("n_files") or len(files)),
-        "size_bytes": int(m.get("size_bytes") or 0),
+        "n_files": int(m["n_files"]),
+        "size_bytes": int(m["size_bytes"]),
         "partition_by": list(m.get("partition_by") or []),
         "partition_spec": [
             dict(t) for t in (m.get("partition_spec") or [])
@@ -2702,7 +2726,6 @@ def replace_partitions_publish(
     stats_cols=None,
     bloom_cols=None,
     _base: Optional[dict] = None,
-    data_change: bool = True,
     operation: str = "replace_partitions",
     meta: Optional[dict] = None,
 ) -> int:
@@ -2734,7 +2757,7 @@ def replace_partitions_publish(
     fs = _fs_for(table_dir, df.sparkSession)
     fs.mkdirs(table_dir)
     # _base: the SNAPSHOT THE CALLER'S REWRITE PLAN READ. Maintenance
-    # callers (compact_partitions, delete_publish, hypertable_sink)
+    # callers (delete_publish, hypertable_sink)
     # must thread it, or a commit landing between their plan read and
     # this function's own manifest read into a TOUCHED partition would
     # be part of the commit-time baseline — invisible to the
@@ -2802,14 +2825,14 @@ def replace_partitions_publish(
     return _replace_publish(
         _pt_rebalance(_materialize_partition_cols(df, spec), parts),
         fs, table_dir, prev, touched, "replace_partitions_publish",
-        lease_ttl_ms, stats_cols, bloom_cols, data_change, operation, meta,
+        lease_ttl_ms, stats_cols, bloom_cols, operation, meta,
         same_partitions,
     )
 
 
 def _replace_publish(
     df, fs, table_dir, prev, replace_set, who, lease_ttl_ms, stats_cols,
-    bloom_cols, data_change, operation, meta=None, still_valid=None,
+    bloom_cols, operation, meta=None, still_valid=None,
 ) -> int:
     """The copy-on-write commit shared by the partition and file
     replaces: stage ``df`` (already laid out for the write), then
@@ -2831,7 +2854,7 @@ def _replace_publish(
             _check_addressed(fs, table_dir, prev, cur, replace_set, who)
 
         def entry_of(base):
-            entry = st.entry(base, operation, meta, data_change)
+            entry = st.entry(base, operation, meta)
             res = _resolve_entry(fs, table_dir, base)
             base_dv = _load_dv(fs, table_dir, base)
             replaced = [f for f in res["files"] if f in replace_set]
@@ -2862,26 +2885,6 @@ def _replace_publish(
         return st.commit(entry_of, valid)
 
 
-def _entry_counters(fs, table_dir: str, entry: dict):
-    """``(n_files, size_bytes)`` for a snapshot entry — from the
-    recorded counters when present, resolved (with a stat fallback for
-    pre-``size_bytes`` manifests) otherwise."""
-    nf = entry.get("n_files")
-    sz = entry.get("size_bytes")
-    if nf is not None and sz is not None:
-        return int(nf), int(sz)
-    res = _resolve_entry(fs, table_dir, entry)
-    if nf is None:
-        nf = len(res["files"])
-    if sz is None:
-        sz = sum(
-            res["file_sizes"].get(f)
-            or fs.file_size(fs.join(table_dir, f))
-            for f in res["files"]
-        )
-    return int(nf), int(sz)
-
-
 def _prune_segments(fs, table_dir: str, segs, removed):
     """Drop segments with no live files left; shrink ``removed`` to
     entries still shadowing a listed segment's file."""
@@ -2897,19 +2900,6 @@ def _prune_segments(fs, table_dir: str, segs, removed):
         kept_segs.append(seg)
         live_removed.update(dead)
     return kept_segs, sorted(live_removed)
-
-
-def _sizes_for(fs, table_dir: str, prev, files) -> dict:
-    """Per-file byte sizes for carried files: from the snapshot's
-    recorded sizes (manifest or segment sidecars) with a stat fallback
-    for pre-size manifests."""
-    known = _resolve_entry(fs, table_dir, prev)["file_sizes"]
-    return {
-        f: known.get(f, None)
-        if known.get(f) is not None
-        else fs.file_size(_ref_path(fs, table_dir, f))
-        for f in files
-    }
 
 
 def _select_snapshot(
@@ -2986,18 +2976,19 @@ def read_published(
     "as of" approximate exactly as in Delta/Iceberg).
 
     ``skip`` = ``{col: (lo, hi)}`` applies FILE-LEVEL data skipping
-    against the manifest's recorded footer statistics (see
-    :func:`collect_file_stats`): only files whose [min, max] for every
-    listed column intersects the bound are opened. Conservative by
+    against the manifest's recorded per-file statistics (``stats_cols=``
+    at publish, or the table's ``index_cols``): only files whose
+    [min, max] for every listed column intersects the bound are
+    opened. Conservative by
     construction — a file without recorded stats is always read — so
     the caller still applies the row filter; skipping only shrinks the
     file list (on a z-ordered snapshot, drastically).
 
     ``skip_eq`` = ``{col: value}`` prunes for POINT predicates
     (``col = value``): a file is skipped when its recorded bloom
-    filter (``bloom_cols=`` at publish, or
-    :func:`collect_file_blooms`) proves the value absent, or its
-    min/max range excludes it. min/max alone can't prune equality on
+    filter (``bloom_cols=`` at publish, or the table's ``index_cols``)
+    proves the value absent, or its min/max range excludes it.
+    min/max alone can't prune equality on
     unclustered data — the bloom is what turns ``user_id = X`` on a
     100 TB table into a few file opens. Same conservative rule: no
     bloom and no stats → the file is read."""
@@ -3296,7 +3287,7 @@ def set_partition_layout(
     table, "the files of partition d=X" no longer identifies all of
     d=X's ROWS (old files hold them as data, invisible to path
     matching), so ``replace_partitions_publish`` — and everything on
-    it: ``compact_partitions``, partitioned ``delete_publish`` — REFUSE
+    it: partitioned ``delete_publish`` — REFUSE
     mixed tables (a silent fold would duplicate or half-delete rows).
     ``compact()`` rewrites the whole table under the new layout and
     re-enables them; until then appends, file-granular deletes,
@@ -3334,13 +3325,12 @@ def set_partition_layout(
         ) == (manifest.get("partition_spec") or None):
             return int(manifest["version"])  # no-op: already this layout
         segs, removed = _segments_of(fs, table_dir, manifest)
-        prev_nf, prev_sz = _entry_counters(fs, table_dir, manifest)
         entry = {
             "segments": segs,
             "removed": removed,
             "n_rows": int(manifest["n_rows"]),
-            "n_files": prev_nf,
-            "size_bytes": prev_sz,
+            "n_files": manifest["n_files"],
+            "size_bytes": manifest["size_bytes"],
             "schema": manifest["schema"],
             "partition_by": parts,
             "operation": "set_partition_layout",
@@ -3389,13 +3379,12 @@ def _evolve_schema(
         overrides = dict(out[3]) if len(out) == 4 else {}
         new_parts = overrides.pop("partition_by", None)
         segs, removed = _segments_of(fs, table_dir, manifest)
-        prev_nf, prev_sz = _entry_counters(fs, table_dir, manifest)
         entry = {
             "segments": segs,
             "removed": removed,
             "n_rows": int(manifest["n_rows"]),
-            "n_files": prev_nf,
-            "size_bytes": prev_sz,
+            "n_files": manifest["n_files"],
+            "size_bytes": manifest["size_bytes"],
             "schema": new_st.json(),
             "partition_by": (
                 new_parts
@@ -3449,7 +3438,7 @@ def rename_column(
     field-id machinery that resolves renamed DATA columns), new writes
     land under ``new=val``, and plain reads, dv deletes, merges and
     incremental reads span both eras. Partition-LEVEL maintenance
-    (``replace_partitions_publish``/``compact_partitions``/partitioned
+    (``replace_partitions_publish``/partitioned
     deletes) refuses the mixed layout until ``compact()`` rewrites the
     table under the new spec — the same contract as
     ``set_partition_layout``.
@@ -3708,13 +3697,12 @@ def _metadata_commit(
             raise ValueError("%s: no committed table here" % operation)
         extra = mutate(manifest)
         segs, removed = _segments_of(fs, table_dir, manifest)
-        prev_nf, prev_sz = _entry_counters(fs, table_dir, manifest)
         entry = {
             "segments": segs,
             "removed": removed,
             "n_rows": int(manifest["n_rows"]),
-            "n_files": prev_nf,
-            "size_bytes": prev_sz,
+            "n_files": manifest["n_files"],
+            "size_bytes": manifest["size_bytes"],
             "schema": manifest["schema"],
             "partition_by": manifest.get("partition_by") or [],
             "operation": operation,
@@ -3756,9 +3744,8 @@ def set_index_columns(
     the current schema; after a rename/drop, defaulted columns no
     longer present simply stop indexing (writes never break).
 
-    Metadata-only commit; run :func:`collect_file_stats` /
-    :func:`collect_file_blooms` to backfill files written before the
-    spec."""
+    Metadata-only commit; :func:`compact` afterwards rewrites the
+    files written before the spec, so every live file is indexed."""
     if spark is None:
         spark = SparkSession.getActiveSession()
     fs = _fs_for(table_dir, spark)
@@ -3800,8 +3787,8 @@ def set_retention(
     count and/or ``older_than_ms`` time horizon a bare :func:`vacuum`
     call applies (Delta's deletedFileRetentionDuration /
     logRetentionDuration as table properties): the policy lives with
-    the table, so every maintenance caller — ``optimize_table``, a
-    scheduled ``vacuum(t)``, an operator who doesn't know this table's
+    the table, so every maintenance caller — a scheduled
+    ``vacuum(t)``, an operator who doesn't know this table's
     compliance rules — enforces the same horizon instead of each
     passing (or forgetting) its own. Explicit vacuum args still
     override per-call. ``None`` leaves a side unchanged; a metadata
@@ -3941,17 +3928,11 @@ def clone_table(
             for f, m in res["file_fields"].items()
             if f in abs_of
         }
-    nf = entry.get("n_files")
-    if nf is None:
-        nf = len(res["files"])
-    sz = entry.get("size_bytes")
-    if sz is None:
-        sz = sum(v for v in res["file_sizes"].values() if v)
     new_entry = {
         "removed": [],
         "n_rows": int(entry["n_rows"]),
-        "n_files": int(nf),
-        "size_bytes": int(sz),
+        "n_files": entry["n_files"],
+        "size_bytes": entry["size_bytes"],
         "schema": entry["schema"],
         "partition_by": entry.get("partition_by") or [],
         "operation": "clone",
@@ -4132,8 +4113,8 @@ def _append_delta_files(
         # merge commits dv-deletes + appends in one version) — strict
         # append-only reads must refuse it; ignore_deletes skips the
         # deletes and keeps delivering the adds. dataChange=false
-        # commits are exempt by contract (same rows — a dv-sidecar
-        # compaction changes REFS, never membership).
+        # commits are exempt by contract (same rows — a compaction
+        # changes REFS, never membership).
         if e.get("dv") != prev_e.get("dv") and e.get(
             "data_change"
         ) is not False:
@@ -4186,8 +4167,8 @@ def _append_delta_files(
                 )
             )
         if e.get("data_change") is False and grew == 0:
-            # pure-rewrite commit (compact/compact_partitions mark
-            # themselves dataChange=false, the Delta design): it
+            # pure-rewrite commit (compact marks itself
+            # dataChange=false, the Delta design): it
             # re-cites EXISTING rows in new files and contributes
             # nothing to the delta. Crucially, files it dropped stay
             # readable — they're still referenced by the retained
@@ -4652,7 +4633,7 @@ def read_changes(
         # per word) — proportional to the dv's CHUNKS, not its
         # positions, and only the delta's positions ever unpack; never
         # materialized on the driver. dataChange=false steps
-        # (dv-sidecar compaction) change refs, never membership: skip.
+        # (compaction) change refs, never membership: skip.
         common = (
             (prev_files & cur_files)
             if e.get("data_change") is not False
@@ -4764,14 +4745,11 @@ def snapshots(
     for v, e in sorted(
         manifest.get("snapshots", {}).items(), key=lambda kv: int(kv[0])
     ):
-        nf = e.get("n_files")
-        if nf is None:
-            nf = len(_entry_files(fs, table_dir, e))
         out.append(
             {
                 "version": int(v),
                 "n_rows": int(e["n_rows"]),
-                "n_files": int(nf),
+                "n_files": int(e["n_files"]),
                 "is_current": int(v) == cur,
             }
         )
@@ -4804,9 +4782,6 @@ def table_history(
         manifest.get("snapshots", {}).items(),
         key=lambda kv: -int(kv[0]),
     ):
-        nf = e.get("n_files")
-        if nf is None:
-            nf = len(_entry_files(fs, table_dir, e))
         ts = e.get("committed_at_ms")
         rows.append(
             {
@@ -4814,12 +4789,8 @@ def table_history(
                 "committed_at_ms": int(ts) if ts is not None else None,
                 "operation": e.get("operation"),
                 "n_rows": int(e["n_rows"]),
-                "n_files": int(nf),
-                "size_bytes": (
-                    int(e["size_bytes"])
-                    if e.get("size_bytes") is not None
-                    else None
-                ),
+                "n_files": int(e["n_files"]),
+                "size_bytes": int(e["size_bytes"]),
                 "data_change": bool(e.get("data_change", True)),
                 "restored_from": (
                     int(e["restored_from"])
@@ -4838,7 +4809,7 @@ def table_history(
             T.StructField("operation", T.StringType(), True),
             T.StructField("n_rows", T.LongType(), False),
             T.StructField("n_files", T.LongType(), False),
-            T.StructField("size_bytes", T.LongType(), True),
+            T.StructField("size_bytes", T.LongType(), False),
             T.StructField("data_change", T.BooleanType(), False),
             T.StructField("restored_from", T.LongType(), True),
             T.StructField("is_current", T.BooleanType(), False),
@@ -5202,24 +5173,31 @@ def fsck_table(
 def compact(
     spark: SparkSession,
     table_dir: str,
-    target_files: Optional[int] = None,
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> int:
-    """Small-file compaction: republish the CURRENT snapshot's rows as
-    a new version whose file count is sized from the snapshot's BYTES —
-    ``ceil(size_bytes / target_file_bytes)`` output files (128 MB
-    default), never a fixed constant. Readers never see a
-    half-compacted table — the rewrite is an ordinary versioned publish
-    committed by the same atomic manifest swap, and the pre-compaction
-    version stays readable (time travel) until ``vacuum`` reclaims it.
-    ``target_files`` overrides the derived count when set.
+    """The table's one maintenance writer: republish the CURRENT
+    snapshot's rows as a new version whose file count is sized from
+    the snapshot's BYTES — ``ceil(size_bytes / target_file_bytes)``
+    output files (128 MB default), never a fixed constant. Readers
+    never see a half-compacted table — the rewrite is an ordinary
+    versioned publish committed by the same atomic manifest swap, and
+    the pre-compaction version stays readable (time travel) until
+    ``vacuum`` reclaims it.
+
+    Every maintenance job is this one rewrite: the read goes through
+    the delete-vector mask, so vectors are applied and none is left;
+    files land under the CURRENT partition spec (a pending
+    ``set_partition_layout`` evolution is finished); a shallow clone's
+    external files are copied in; and the new files get stats and
+    blooms at write time from the persisted ``index_cols``, so
+    ``set_index_columns`` followed by ``compact`` is the index
+    backfill. ``meta``, ``index_cols`` and ``retention`` carry forward.
 
     Sizing at scale: a fixed file count is wrong in both directions —
     1 file funnels a large snapshot through ONE task (a single-task
     full-table rewrite), and one-file-per-partition-value rewrites a
     skewed partition value in one task. So: the total byte size comes
-    from the manifest (recorded at publish; summed from the filesystem
-    for pre-size manifests), and the shuffle is
+    from the manifest (recorded at every commit), and the shuffle is
     ``repartitionByRange(n, *partition_by, xxhash64(payload))`` — the
     range sort keeps each hive partition value's rows contiguous (so a
     task writes ~1 partition directory, no file-count explosion) while
@@ -5241,18 +5219,21 @@ def compact(
     from pyspark.sql import functions as F
 
     fs = _fs_for(table_dir, spark)
-    # read+republish under ONE lease; heartbeat keeps a live multi-hour
+    # read+republish under ONE lease, queued behind a commit in flight
+    # like the metadata writers; the heartbeat keeps a live multi-hour
     # rewrite from being TTL-evicted (eviction = crashed writers only)
-    with _Lease(fs, table_dir, heartbeat=True) as lease:
+    with _Lease(fs, table_dir, heartbeat=True).acquire_wait(
+        wait_ms=_COMMIT_WAIT_MS
+    ) as lease:
         cur = read_published(spark, table_dir)
         manifest = _read_manifest(table_dir, fs)
         if manifest is None:
             raise ValueError("no committed table at %s" % table_dir)
         parts = manifest.get("partition_by") or []
         pspec = manifest.get("partition_spec")
-        if target_files is None:
-            _, size = _entry_counters(fs, table_dir, manifest)
-            target_files = max(1, math.ceil(size / float(target_file_bytes)))
+        target_files = max(
+            1, math.ceil(manifest["size_bytes"] / float(target_file_bytes))
+        )
         if parts:
             # hidden partitioning: re-derive the transform columns so
             # the range clustering co-locates each physical partition
@@ -5277,92 +5258,6 @@ def compact(
             data_change=False, operation="compact", _partition_spec=pspec,
             _keep_layout=True,
         )
-
-
-def compact_files(
-    spark: SparkSession,
-    table_dir: str,
-    small_bytes: int = 32 * 1024 * 1024,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    max_files: Optional[int] = None,
-    stats_cols=None,
-    bloom_cols=None,
-    lease_ttl_ms: int = 300_000,
-) -> Optional[int]:
-    """INCREMENTAL small-file compaction — Delta OPTIMIZE's bin-pack:
-    rewrite only the live files smaller than ``small_bytes`` into
-    ~``target_file_bytes`` outputs; every right-sized file carries by
-    reference. This is the maintenance primitive :func:`compact` is NOT
-    at 100 TB — a full-snapshot rewrite costs the whole table, this
-    costs exactly the small-file bytes, so an hourly run over a
-    micro-batch ingest stays O(new files) forever. Works on
-    partitioned AND unpartitioned tables (the fold preserves hive
-    partition values; partition-level folding with per-partition byte
-    targets stays :func:`compact_partitions`' job). Returns the
-    committed version, or None when fewer than two files qualify.
-
-    ``max_files`` caps one run's rewrite set (oldest-first) so a
-    backlogged table drains across bounded maintenance windows instead
-    of one giant commit. Delete vectors on folded files are PHYSICALLY
-    applied (the rewrite reads masked) — row membership never changes,
-    so the commit is ``dataChange=false`` and incremental readers skip
-    it. Optimistic: a racing commit touching a picked file re-runs
-    nothing — this is maintenance; the caller's next cycle retries."""
-    import math
-
-    fs = _fs_for(table_dir, spark)
-    manifest = _read_manifest(table_dir, fs)
-    if manifest is None:
-        raise ValueError("compact_files: no committed table here")
-    parts = manifest.get("partition_by") or []
-    res = _resolve_entry(fs, table_dir, manifest)
-    sizes = dict(res.get("file_sizes") or {})
-    picked = []
-    total = 0
-    for f in res["files"]:  # manifest order ≈ commit order: oldest first
-        sz = sizes.get(f)
-        if sz is None:
-            try:
-                sz = fs.file_size(_ref_path(fs, table_dir, f))
-            except Exception:
-                continue
-        if sz < small_bytes:
-            picked.append(f)
-            total += sz
-            if max_files is not None and len(picked) >= max_files:
-                break
-    if len(picked) < 2:
-        return None
-    dv0 = _load_dv(fs, table_dir, manifest)
-    folded = _read_files(
-        spark, fs, table_dir, picked, manifest["schema"], bool(parts),
-        dv=dv0, evo=_evo_of(manifest, res),
-    )
-    n_out = max(1, math.ceil(total / float(target_file_bytes)))
-    if parts:
-        from pyspark.sql import functions as F
-
-        folded = _materialize_partition_cols(
-            folded, manifest.get("partition_spec")
-        )
-        payload = [c for c in folded.columns if c not in parts]
-        folded = (
-            folded.withColumn(
-                "_ck",
-                F.xxhash64(*[F.col(c) for c in payload] or [F.lit(0)]),
-            )
-            .repartitionByRange(
-                n_out, *([F.col(c) for c in parts] + [F.col("_ck")])
-            )
-            .drop("_ck")
-        )
-    else:
-        folded = folded.repartition(n_out)
-    return replace_files_publish(
-        folded, table_dir, picked, lease_ttl_ms=lease_ttl_ms,
-        stats_cols=stats_cols, bloom_cols=bloom_cols, _base=manifest,
-        data_change=False, operation="compact_files",
-    )
 
 
 def _prune_key_candidates(res: dict, candidates, col: str, key_vals):
@@ -6013,106 +5908,6 @@ def merge_into(
     )
 
 
-def compact_partitions(
-    spark: SparkSession,
-    table_dir: str,
-    values=None,
-    partition_col: Optional[str] = None,
-    min_files: int = 2,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    lease_ttl_ms: int = 300_000,
-) -> Optional[int]:
-    """Partial compaction: rewrite ONLY fragmented hive partitions —
-    the maintenance loop for an ``append_publish``/``publish_stream``
-    ingest, where each micro-batch adds a file per touched partition
-    and old days stop fragmenting once the stream moves on. ``values``
-    names the partition values to fold; when None, every partition
-    holding ≥ ``min_files`` files is picked FROM THE MANIFEST (no
-    listing). Each rewritten partition gets
-    ``ceil(partition_bytes / target_file_bytes)`` files; untouched
-    partitions carry by reference, so compacting 30 fragmented days of
-    a 30,000-day table costs 30 days' bytes. No-op (returns None) when
-    nothing is fragmented.
-
-    Same crash consistency as every publish: the fold is a new version
-    committed by one manifest swap; the pre-compaction snapshot stays
-    readable until ``vacuum``."""
-    import math
-    from collections import defaultdict
-
-    from pyspark.sql import functions as F
-
-    fs = _fs_for(table_dir, spark)
-    # OPTIMISTIC maintenance: the (potentially long) fold job runs with
-    # NO lease held, so streaming ingest keeps committing while old
-    # partitions compact. Safety comes from the commit-time rebase in
-    # replace_partitions_publish — if a concurrent commit touched one
-    # of the partitions being folded, THIS compaction raises
-    # ConcurrentWriteError (retry next maintenance cycle) instead of
-    # silently dropping the concurrent rows; commits on other
-    # partitions merge cleanly.
-    try:
-        # ONE manifest read pins BOTH the rewrite plan's file list and
-        # (via _base=) the commit baseline — see pinned_snapshot
-        manifest, cur = pinned_snapshot(spark, table_dir)
-    except ValueError:
-        raise ValueError("compact_partitions: no committed table here")
-    parts = manifest.get("partition_by") or []
-    if not parts:
-        raise ValueError(
-            "compact_partitions needs a hive-partitioned table; use "
-            "compact() for unpartitioned ones"
-        )
-    pc = partition_col or parts[0]
-
-    def _val_of(path: str) -> Optional[str]:
-        for seg in path.split("/"):
-            if seg.startswith(pc + "="):
-                return seg[len(pc) + 1:]
-        return None
-
-    by_val = defaultdict(list)
-    live = _entry_files(fs, table_dir, manifest)
-    for f in live:
-        by_val[_val_of(f)].append(f)
-    if values is None:
-        values = [v for v, fl in by_val.items() if len(fl) >= min_files]
-    else:
-        values = [str(v) for v in values]
-    if not values:
-        return None
-    sizes = _sizes_for(fs, table_dir, manifest, live)
-    touched_bytes = sum(
-        sizes.get(f) or fs.file_size(_ref_path(fs, table_dir, f))
-        for v in values
-        for f in by_val.get(v, [])
-    )
-    n_files = max(1, math.ceil(touched_bytes / float(target_file_bytes)))
-    pspec = manifest.get("partition_spec")
-    if pspec:
-        # hidden layout: re-derive the physical column (deterministic
-        # twin of the path value) and match its canonical string form
-        cur = _materialize_partition_cols(cur, pspec)
-        touched = cur.where(F.col(pc).cast("string").isin(values))
-    else:
-        touched = cur.where(F.col(pc).isin(values))  # partition-pruned
-    payload = [c for c in cur.columns if c not in parts]
-    folded = (
-        touched.withColumn(
-            "_ck", F.xxhash64(*[F.col(c) for c in payload] or [F.lit(0)])
-        )
-        .repartitionByRange(
-            n_files, *([F.col(c) for c in parts] + [F.col("_ck")])
-        )
-        .drop("_ck")
-    )
-    return replace_partitions_publish(
-        folded, table_dir, values=values, partition_col=pc,
-        lease_ttl_ms=lease_ttl_ms, _base=manifest, data_change=False,
-        operation="compact",
-    )
-
-
 def _keep_pred(condition: str) -> str:
     """Keep-side predicate for a row-matching ``condition`` under SQL
     three-valued logic: only rows where the condition is TRUE leave;
@@ -6300,9 +6095,9 @@ def update_publish(
     the matching rows' (file, position) addresses fold into the
     snapshot's delete vectors and the post-``set`` rows append as the
     commit's new files — ONE commit, zero pre-existing files rewritten
-    (physical fold happens at the next ``compact``/
-    ``compact_delete_vectors``). ``set`` maps column name → SQL
-    expression evaluated against the matched row (``{"v": "v + 1"}``);
+    (physical fold happens at the next ``compact``). ``set`` maps
+    column name → SQL expression evaluated against the matched row
+    (``{"v": "v + 1"}``);
     each result casts back to the column's declared type, so the table
     schema never drifts. Updating a hive PARTITION column is legal —
     the replacement row simply lands in its new partition directory
@@ -6552,252 +6347,6 @@ def _dv_delete(
     )
 
 
-def compact_delete_vectors(
-    table_dir: str,
-    spark: Optional[SparkSession] = None,
-    lease_ttl_ms: int = 300_000,
-) -> Optional[int]:
-    """MINOR COMPACTION of the delete vectors: fold every sidecar
-    dataset the committed snapshot references into ONE clustered
-    parquet dataset and repoint the dv
-    manifest — ZERO data files touched (``dataChange=false``; the
-    Iceberg 'rewrite position deletes' maintenance action). After K dv
-    commits a masked scan reads up to K sidecar datasets and vacuum
-    must retain K version dirs; this folds both to one. The rewrite is
-    one distributed job; the commit is a manifest swap. Incremental
-    readers skip it by the dataChange contract (refs change, row
-    membership never). Returns the committed version, or None when
-    there is nothing to fold (no vectors, or already one dataset).
-
-    Optimistic: the fold runs without the lease; a concurrent commit
-    that changed ANY vector (or rewrote a dv'd file) raises
-    ``ConcurrentWriteError`` — re-run, it's maintenance."""
-    fs = _fs_for(table_dir, spark)
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError(
-            "compact_delete_vectors needs an active SparkSession"
-        )
-    manifest = _read_manifest(table_dir, fs)
-    if manifest is None:
-        raise ValueError(
-            "compact_delete_vectors: no committed table here"
-        )
-    dv0 = _load_dv(fs, table_dir, manifest)
-    dv0 = {f: v for f, v in dv0.items() if _dv_val_n(v)}
-    if not dv0:
-        return None
-    if len({v["ds"] for v in dv0.values()}) == 1 and all(
-        v.get("key", f) == f for f, v in dv0.items()
-    ):
-        return None  # already one local, identity-keyed dataset
-    expected = {f: _dv_val_n(v) for f, v in dv0.items()}
-
-    def fold(rel):
-        # fold in the CHUNK domain: sidecars carry over as stored;
-        # (file, chunk) is unique across the union (each file's ref
-        # names one dataset) so no re-merge
-        dsdir = _ref_path(fs, table_dir, rel)
-        (
-            _dv_chunks_df(spark, fs, table_dir, dv0)
-            .repartition(max(1, min(len(dv0), 64)), "_dv_file")
-            .sortWithinPartitions("_dv_file", "_dv_chunk")
-            .write.parquet(dsdir)
-        )
-        counts = _dv_ds_counts(spark, dsdir)
-        if counts != expected:
-            raise RuntimeError(
-                "compact_delete_vectors: rewritten position counts "
-                "disagree with the manifest (%r vs %r) — aborting "
-                "before commit"
-                % (
-                    {k: counts.get(k) for k in list(expected)[:3]},
-                    {k: expected[k] for k in list(expected)[:3]},
-                )
-            )
-        return {f: {"ds": rel, "n": expected[f], "fmt": "bm"} for f in dv0}
-
-    def same_dv(cur):
-        cur_dv = _load_dv(fs, table_dir, cur)
-        if {f: v for f, v in cur_dv.items() if _dv_val_n(v)} != dv0:
-            raise ConcurrentWriteError(
-                "compact_delete_vectors: a concurrent commit "
-                "changed the delete vectors mid-fold — re-run"
-            )
-
-    with _StagedCommit(
-        fs, table_dir, manifest, "compact_delete_vectors", lease_ttl_ms
-    ) as st:
-        st.sidecar(_DVP, fold)
-        new_dv = st.sidecar_result()
-
-        def entry_of(base):
-            entry = st.entry(base, "compact_dv", data_change=False)
-            entry["dv"] = _write_dv(fs, table_dir, st.seg, new_dv)
-            entry["dv_rows"] = _dv_nrows(new_dv)
-            return entry
-
-        return st.commit(entry_of, same_dv)
-
-
-def _phys_backfill_groups(manifest: dict, seg_data: dict, cols):
-    """One segment's backfill read groups for a possibly-EVOLVED table:
-    ``[(files, physical cols, physical schema_json)]`` — the manifest's
-    LOGICAL index columns translated to each file's PHYSICAL names by
-    field id (the segment's stamped ``field_names``/``file_fields``
-    maps). Stats/bloom sidecars key physical names by convention;
-    ``_resolve_entry`` rekeys them to logical names at read time, so a
-    backfill after a rename still prunes. A column a file never had
-    (added after it was written) is skipped for that group — no stats
-    beats wrong stats."""
-    ids, _ = _field_ids_of(manifest)
-    types = {
-        f["name"]: f
-        for f in json.loads(manifest["schema"])["fields"]
-    }
-    seg_fields = seg_data.get("field_names")
-    per_file = seg_data.get("file_fields") or {}
-    groups: dict = {}
-    for f in seg_data.get("files", []):
-        mk = tuple(sorted(per_file.get(f, seg_fields).items()))
-        groups.setdefault(mk, []).append(f)
-    out = []
-    for mk, fl in groups.items():
-        fm = dict(mk)
-        phys = {}
-        for c in cols:
-            p = fm.get(str(ids.get(c))) if c in types else None
-            if p is not None:
-                phys[c] = p
-        if not phys:
-            continue
-        fields = []
-        for c, p in phys.items():
-            fd = dict(types[c])
-            fd["name"] = p
-            fields.append(fd)
-        out.append(
-            (
-                fl,
-                sorted(phys.values()),
-                json.dumps({"type": "struct", "fields": fields}),
-            )
-        )
-    return out
-
-
-def _backfill_indexes(
-    spark: SparkSession,
-    fs,
-    table_dir: str,
-    manifest: dict,
-    cols,
-    blooms: bool,
-    m_bits: int = _BLOOM_M,
-    k: int = _BLOOM_K,
-) -> int:
-    """The backfill loop of :func:`collect_file_stats` and
-    :func:`collect_file_blooms` — min/max stats, or
-    blooms when ``blooms``: per live segment, resolve the logical
-    ``cols`` to each file's PHYSICAL names
-    (:func:`_phys_backfill_groups` — evolved tables backfill exactly),
-    run the index scan (:func:`_distributed_file_indexes`), merge what
-    it found into the segment sidecar and rewrite it in place (an
-    atomic replace; index additions are monotone and conservative, and
-    every snapshot citing the segment sees them). Returns the number of
-    files indexed."""
-    key = "file_blooms" if blooms else "file_stats"
-    n = 0
-    for seg in manifest.get("segments") or []:
-        sdata = _load_seg(fs, table_dir, seg)
-        got: dict = {}
-        for fl, pcols, pschema in _phys_backfill_groups(
-            manifest, sdata, list(cols)
-        ):
-            st, bl = _distributed_file_indexes(
-                spark, fs, table_dir, fl,
-                None if blooms else pcols, pcols if blooms else None,
-                schema_json=pschema, m_bits=m_bits, k=k,
-            )
-            got.update(bl if blooms else st)
-        if not got:
-            continue
-        merged = dict(sdata.get(key) or {})
-        for f, idx in got.items():
-            merged[f] = {**merged.get(f, {}), **idx}
-            n += 1
-        sdata[key] = merged
-        _write_seg(fs, table_dir, seg, sdata)
-    return n
-
-
-def collect_file_stats(
-    table_dir: str,
-    stats_cols,
-    spark: Optional[SparkSession] = None,
-) -> int:
-    """Backfill per-file min/max statistics for ``stats_cols`` into the
-    committed snapshot's segment sidecars (no data change; returns how
-    many files got stats). This is the data-skipping half of a table
-    format: with stats recorded, ``read_published(..., skip={"col":
-    (lo, hi)})`` opens only the files whose [min, max] intersects the
-    bound — on a ``zorder_layout``-clustered snapshot that's the
-    file-level min/max pruning that turns a 100 TB scan filtered on any
-    clustered dimension into a few files.
-
-    Prefer ``stats_cols=`` on the publish itself: the executors just
-    wrote the files, so write-time stats cost one column-pruned pass
-    over the DELTA only. This function is the post-hoc/backfill path: a
-    distributed job per segment (every backend). Files without
-    collectable stats simply carry none and are never skipped —
-    skipping is always CONSERVATIVE."""
-    fs = _fs_for(table_dir, spark)
-    with _Lease(fs, table_dir):
-        manifest = _read_manifest(table_dir, fs)
-        if manifest is None:
-            raise ValueError("collect_file_stats: no committed table here")
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError(
-                "collect_file_stats needs an active SparkSession "
-                "(stats collection is a distributed job)"
-            )
-        return _backfill_indexes(
-            spark, fs, table_dir, manifest, stats_cols, blooms=False
-        )
-
-
-def collect_file_blooms(
-    table_dir: str,
-    bloom_cols,
-    spark: Optional[SparkSession] = None,
-    m_bits: int = _BLOOM_M,
-    k: int = _BLOOM_K,
-) -> int:
-    """Backfill per-file EQUALITY blooms for ``bloom_cols`` into the
-    committed snapshot's segment sidecars (returns files indexed).
-    Prefer ``bloom_cols=`` on the publish itself — write-time, one
-    distributed pass over the delta. With blooms recorded,
-    ``read_published(skip_eq={'col': v})`` and
-    ``delete_publish(..., point=...)`` open only the files that may
-    contain the value — the point-lookup/point-delete index min/max
-    stats can't provide on unclustered data."""
-    fs = _fs_for(table_dir, spark)
-    with _Lease(fs, table_dir):
-        manifest = _read_manifest(table_dir, fs)
-        if manifest is None:
-            raise ValueError("collect_file_blooms: no committed table here")
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError(
-                "collect_file_blooms needs an active SparkSession"
-            )
-        return _backfill_indexes(
-            spark, fs, table_dir, manifest, bloom_cols, blooms=True,
-            m_bits=m_bits, k=k,
-        )
-
-
 def replace_files_publish(
     df: DataFrame,
     table_dir: str,
@@ -6806,7 +6355,6 @@ def replace_files_publish(
     stats_cols=None,
     bloom_cols=None,
     _base: Optional[dict] = None,
-    data_change: bool = True,
     operation: str = "replace_files",
 ) -> int:
     """FILE-granular rewrite (the merge-on-read compaction primitive
@@ -6832,95 +6380,12 @@ def replace_files_publish(
             "replace_files_publish: not live in the current snapshot: %s"
             % sorted(missing)[:5]
         )
-    # NO _pt_rebalance here: replace_files callers (compact,
-    # compact_partitions, point deletes) hand in a frame whose
-    # partitioning IS the deliberate output layout (target file
-    # sizing); a rebalance by partition cols would collapse it
+    # NO _pt_rebalance here: replace_files callers (point deletes,
+    # copy-on-write updates) hand in a frame whose partitioning IS
+    # the deliberate output layout; a rebalance by partition cols
+    # would collapse it
     return _replace_publish(
         _materialize_partition_cols(df, prev.get("partition_spec")),
         fs, table_dir, prev, replace_set, "replace_files_publish",
-        lease_ttl_ms, stats_cols, bloom_cols, data_change, operation,
+        lease_ttl_ms, stats_cols, bloom_cols, operation,
     )
-
-
-def optimize_table(
-    spark: SparkSession,
-    table_dir: str,
-    min_files: int = 2,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    stats_cols=None,
-    bloom_cols=None,
-    keep: Optional[int] = None,
-) -> dict:
-    """One-call table maintenance — the scheduled job an append-ingest
-    table runs nightly: fold fragmented partitions
-    (:func:`compact_partitions`; byte-targeted :func:`compact` for
-    unpartitioned tables, skipped when already a single right-sized
-    version), refresh footer statistics for ``stats_cols``
-    (:func:`collect_file_stats`), and GC unreferenced version dirs
-    (:func:`vacuum`). Returns a summary dict
-    ``{compacted_version, stats_files, vacuumed}``. Each step is an
-    ordinary atomic commit, so a crash between steps leaves a
-    consistent table that the next run finishes."""
-    fs = _fs_for(table_dir, spark)
-    manifest = _read_manifest(table_dir, fs)
-    if manifest is None:
-        raise ValueError("optimize_table: no committed table here")
-    parts = manifest.get("partition_by") or []
-    # an optimistic compaction losing its commit race to live ingest is
-    # ROUTINE under concurrency, not a failure: record it and move on —
-    # the next maintenance cycle retries against the newer snapshot
-    conflict: Optional[str] = None
-    try:
-        if parts:
-            compacted = compact_partitions(
-                spark,
-                table_dir,
-                min_files=min_files,
-                target_file_bytes=target_file_bytes,
-            )
-        else:
-            # INCREMENTAL bin-pack (Delta OPTIMIZE): fold only the
-            # files below the target size — a right-sized file never
-            # rewrites, so nightly maintenance on a 100 TB
-            # unpartitioned table costs O(small-file bytes), not a
-            # full-snapshot republish (that stays compact()'s
-            # explicit-call job)
-            compacted = (
-                compact_files(
-                    spark, table_dir, small_bytes=target_file_bytes,
-                    target_file_bytes=target_file_bytes,
-                )
-                if _entry_counters(fs, table_dir, manifest)[0] >= min_files
-                else None
-            )
-    except ConcurrentWriteError as e:
-        compacted, conflict = None, str(e)
-    # index backfills resolve evolved schemas by field id since round
-    # 11 (see _phys_backfill_groups) — run them unconditionally
-    n_stats = (
-        collect_file_stats(table_dir, stats_cols, spark)
-        if stats_cols
-        else 0
-    )
-    n_blooms = (
-        collect_file_blooms(table_dir, bloom_cols, spark)
-        if bloom_cols
-        else 0
-    )
-    # fold accumulated delete-vector sidecars into one dataset (no-op
-    # when zero-or-one; a lost race is routine maintenance, retried
-    # next cycle) — lets the vacuum below reclaim superseded dv dirs
-    try:
-        dv_folded = compact_delete_vectors(table_dir, spark=spark)
-    except ConcurrentWriteError as e:
-        dv_folded, conflict = None, conflict or str(e)
-    removed = vacuum(table_dir, keep=keep, spark=spark)
-    return {
-        "compacted_version": compacted,
-        "compact_conflict": conflict,
-        "stats_files": n_stats,
-        "bloom_files": n_blooms,
-        "dv_folded_version": dv_folded,
-        "vacuumed": removed,
-    }

@@ -87,10 +87,6 @@ def stopword_count_arr(lang: str, toks: Column) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t))).cast("bigint")
 
 
-def stopword_count(lang: str, col: str = "text") -> Column:
-    return stopword_count_arr(lang, tokens(col))
-
-
 def lang_id_arr(toks: Column) -> Column:
     """argmax over per-language stopword hit counts; ties break by the
     fixed language order (en, es, de, fr, zh).

@@ -8,7 +8,7 @@ These helpers treat a DataFrame schema *as* that tree.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 from pyspark.sql import types as T
 
@@ -127,16 +127,3 @@ def _render(dtype: T.DataType, name: Optional[str], depth: int, indent: int) -> 
         for field in inner.fields:
             lines.extend(_render(field.dataType, field.name, next_depth, child_indent))
     return lines
-
-
-def iter_leaves(
-    dtype: T.DataType, prefix: Tuple[str, ...] = ()
-) -> Iterator[Tuple[Tuple[str, ...], T.DataType]]:
-    """Yield (logical path with ELEM hops, leaf dtype) for every leaf."""
-    if isinstance(dtype, T.ArrayType):
-        yield from iter_leaves(dtype.elementType, prefix + (ELEM,))
-    elif isinstance(dtype, T.StructType):
-        for field in dtype.fields:
-            yield from iter_leaves(field.dataType, prefix + (field.name,))
-    else:
-        yield prefix, dtype

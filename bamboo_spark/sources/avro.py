@@ -1,25 +1,19 @@
-"""``from_avro`` — Avro container files → Dataset.
+"""``from_avro`` / ``read_avro_py`` — Avro container files → Dataset.
 
-Two paths:
-
-* **Connector path** (preferred at scale): ``spark.read.format("avro")``
-  when the spark-avro module is on the classpath — distributed decode,
-  nullable unions → nullable fields, enum → string, pushdown via the
-  read-time clusion projection.
-* **Pure-Python fallback** (this module's ``from_avro``): a minimal Avro
-  container decoder (null/deflate codecs) with the same execution shape
-  as the connector — the driver scans only block *headers* and plans
-  record-balanced block ranges, and the value decode runs on executors
-  inside one range-driven ``mapInArrow`` job (sources/_splits.py); Avro
-  blocks are the spec's independent decode unit.
+A minimal pure-Python Avro container decoder (null/deflate codecs) with
+the execution shape of a distributed connector: the driver scans only
+block *headers* and plans record-balanced block ranges, and the value
+decode runs on executors inside one range-driven ``mapInArrow`` job
+(sources/_splits.py); Avro blocks are the spec's independent decode
+unit.
 
 Read-time ``include``/``exclude`` follow the reference's pushdown
 semantics (avro_direct.cpp:107-166): pruned at decode time — each decode
 task compiles the schema and filter once (``_avro_py.compile_decoder``),
 excluded fields compile to skip closures that walk but never
 materialize — and the output schema is pruned with the exact rule the
-Catalyst nested projection uses (projection.prune_schema), so both
-paths select the same columns.
+Catalyst nested projection uses (projection.prune_schema), so a decode
+selects the same columns as a Catalyst projection of the full frame.
 """
 
 from __future__ import annotations
@@ -32,7 +26,7 @@ from pyspark.sql import SparkSession, types as T
 
 from bamboo_spark.clusions import ColumnFilter
 from bamboo_spark.dataset import Dataset
-from bamboo_spark.projection import apply_column_filter, prune_schema
+from bamboo_spark.projection import prune_schema
 from bamboo_spark.sources._avro_py import (
     AvroDecodeError,
     avro_to_spark,
@@ -45,21 +39,6 @@ from bamboo_spark.sources._avro_py import (
 from bamboo_spark.sources._splits import decode_splits, plan_splits
 from bamboo_spark.sources._stream import ChunkedReader, open_source, resolve_source
 from bamboo_spark.sources.obj import DEFAULT_COLUMN
-
-def read_avro(
-    path: str,
-    include: Any = None,
-    exclude: Any = None,
-    spark: Optional[SparkSession] = None,
-) -> Dataset:
-    """Distributed Avro file read (requires the spark-avro module)."""
-    if spark is None:
-        from bamboo_spark.session import get_spark
-
-        spark = get_spark()
-    df = spark.read.format("avro").load(path)
-    return Dataset(apply_column_filter(df, include, exclude))
-
 
 def _block_records(
     reader: ChunkedReader,

@@ -12,8 +12,9 @@ Walks one table through the protocol end to end:
    file counts printed
 4. an indexed GDPR point delete that rewrites ONLY the files holding
    the user (``delete_publish(point=...)``)
-5. maintenance (``optimize_table``) running its compaction
-   optimistically — concurrent appends would merge, not block
+5. maintenance: ``set_index_columns`` + ``compact`` (one byte-sized
+   rewrite that indexes every file from the table's index spec) +
+   ``vacuum``
 6. time travel + ``restore_table`` (metadata-only rollback)
 7. the table as a Spark DATA SOURCE: batch read, opt-in pushdown, and
    the version-offset streaming source delivering exactly the appended
@@ -22,8 +23,8 @@ Walks one table through the protocol end to end:
    (positions land in executor-written parquet sidecars; zero data
    files rewritten), a conditional ``merge_into`` that WIDENS the
    schema (``schema_evolution=True``), the change feed
-   (``read_changes``) and ``compact_delete_vectors`` folding the
-   accumulated sidecars in one dataChange=false commit
+   (``read_changes``) and ``compact`` applying the accumulated
+   vectors in one dataChange=false commit
 """
 
 import json
@@ -38,13 +39,15 @@ from pyspark.sql import SparkSession, functions as F  # noqa: E402
 from bamboo_spark.operators.publish import (  # noqa: E402
     append_publish,
     atomic_publish,
+    compact,
     delete_publish,
     live_files,
-    optimize_table,
     read_published,
     restore_table,
+    set_index_columns,
     snapshots,
     table_meta,
+    vacuum,
 )
 from bamboo_spark.sources.published import register  # noqa: E402
 
@@ -115,8 +118,19 @@ def main() -> None:
     )
 
     # 5. maintenance (meta — the ingest HWM — survives)
-    out = optimize_table(spark, t, stats_cols=["v"], bloom_cols=["user_id"])
-    print("optimize:", json.dumps(out), "meta:", table_meta(t))
+    set_index_columns(t, stats_cols=["v"], bloom_cols=["user_id"], spark=spark)
+    v_c = compact(spark, t)
+    removed = vacuum(t, spark=spark)
+    print(
+        "compact -> v%d: %d files, point-skip=%d; vacuum removed %s; meta: %s"
+        % (
+            v_c,
+            len(live_files(t, spark)),
+            len(read_published(spark, t, skip_eq={"user_id": 777}).inputFiles()),
+            json.dumps(removed),
+            table_meta(t),
+        )
+    )
 
     # 6. time travel + restore
     print("snapshots:", [(s["version"], s["n_rows"]) for s in snapshots(t, spark)])
@@ -152,7 +166,7 @@ def main() -> None:
 
     # 8. merge-on-read + schema evolution + change feed
     from bamboo_spark.operators.publish import (
-        compact_delete_vectors,
+        describe_table,
         merge_into,
         read_changes,
     )
@@ -193,17 +207,21 @@ def main() -> None:
             for r in ch.groupBy("_change_type").count().collect()
         },
     )
-    folded = compact_delete_vectors(t, spark=spark)
+    folded = compact(spark, t)
     print(
-        "compact_delete_vectors -> v%s; rows unchanged=%d"
-        % (folded, read_published(spark, t).count())
+        "compact -> v%d; rows unchanged=%d, delete-vector rows left=%d"
+        % (
+            folded,
+            read_published(spark, t).count(),
+            describe_table(t, spark)["dv_rows"],
+        )
     )
 
 
 def round12_surface() -> None:
     """Round-12 additions: row-level UPDATE (MOR + CoW), replaceWhere
-    backfills, dynamic partition overwrite, incremental small-file
-    bin-packing, the persisted index spec, and the fsck audit."""
+    backfills, dynamic partition overwrite, the persisted index spec
+    applied by ``compact``, and the fsck audit."""
     import tempfile
 
     from pyspark.sql import SparkSession, functions as F
@@ -211,7 +229,7 @@ def round12_surface() -> None:
     from bamboo_spark.operators.publish import (
         append_publish,
         atomic_publish,
-        compact_files,
+        compact,
         delete_publish,
         fsck_table,
         overwrite_partitions_publish,
@@ -254,9 +272,10 @@ def round12_surface() -> None:
     )
     overwrite_partitions_publish(fresh, t)
 
-    # dv delete, then fold every small file (dv applied physically)
+    # dv delete, then one compaction: vectors applied, every file
+    # indexed under the spec (stats on v, blooms on k)
     delete_publish(spark, t, "v % 11 = 0", delete_vectors=True)
-    compact_files(spark, t, small_bytes=1 << 30)
+    compact(spark, t)
 
     rep = fsck_table(t, spark=spark, check_sizes=True)
     print(

@@ -106,11 +106,11 @@ def test_day2_incremental_ingest_equals_full_recompute(spark, tmp_path):
 def test_table_lifecycle_ingest_compact_retain_erase(spark, tmp_path):
     """The full 100 TB table-maintenance loop over the incremental
     publish family, end to end: micro-batch APPENDS fragment the table
-    → partial COMPACTION folds only fragmented partitions → RETENTION
+    → COMPACTION folds each partition to one file → RETENTION
     drops expired day partitions (empty replace) → GDPR ERASE deletes
     one user rewriting only their partitions → reference-aware VACUUM
     reclaims unreferenced version dirs. Row-exactness asserted at every
-    stage; untouched files carried by reference throughout."""
+    stage; after the compaction, untouched files carry by reference."""
     import json as _json
     import os
 
@@ -118,7 +118,7 @@ def test_table_lifecycle_ingest_compact_retain_erase(spark, tmp_path):
 
     from bamboo_spark.operators.publish import (
         append_publish,
-        compact_partitions,
+        compact,
         delete_publish,
         live_files,
         published_rows,
@@ -148,10 +148,12 @@ def test_table_lifecycle_ingest_compact_retain_erase(spark, tmp_path):
     assert len([f for f in files if "d=%s" % days[0] in f]) == 3
     assert published_rows(t) == 100
 
-    # stage 2: partial compaction folds ONLY the fragmented day
-    v_compact = compact_partitions(spark, t, min_files=2)
-    d1_files = [f for f in live_files(t, spark) if "d=%s" % days[0] in f]
-    assert len(d1_files) == 1 and d1_files[0].startswith("_v%d/" % v_compact)
+    # stage 2: compaction folds the fragmented day to one file
+    v_compact = compact(spark, t)
+    files = live_files(t, spark)
+    assert all(f.startswith("_v%d/" % v_compact) for f in files)
+    for day in days:
+        assert len([f for f in files if "d=%s" % day in f]) == 1
     assert read_published(spark, t).count() == 100
 
     # stage 3: retention — drop the expired oldest day (empty replace)

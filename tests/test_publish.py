@@ -223,7 +223,11 @@ def test_partitioned_publish_prunes_partitions(spark, tmp_path, backend):
 def test_compact_reduces_files_keeps_rows_and_history(spark, tmp_path, backend):
     from pyspark.sql import functions as F
 
-    from bamboo_spark.operators.publish import compact, snapshots
+    from bamboo_spark.operators.publish import (
+        compact,
+        describe_table,
+        snapshots,
+    )
 
     t, _ = _tbl(tmp_path, backend)
     df = spark.range(1000).withColumn("v", F.col("id") * 2)
@@ -231,7 +235,8 @@ def test_compact_reduces_files_keeps_rows_and_history(spark, tmp_path, backend):
     before = {s["version"]: s for s in snapshots(t, spark)}
     assert before[v1]["n_files"] >= 16
 
-    v2 = compact(spark, t, target_files=2)
+    size = describe_table(t, spark)["size_bytes"]
+    v2 = compact(spark, t, target_file_bytes=-(-size // 2))
     snaps = {s["version"]: s for s in snapshots(t, spark)}
     assert snaps[v2]["is_current"]
     assert snaps[v2]["n_files"] <= 2
@@ -274,12 +279,18 @@ def test_ingest_compact_vacuum_lifecycle(spark, tmp_path):
     # atomic swap, and the reader still sees every row.
     from pyspark.sql import functions as F
 
-    from bamboo_spark.operators.publish import compact, snapshots, vacuum
+    from bamboo_spark.operators.publish import (
+        compact,
+        describe_table,
+        snapshots,
+        vacuum,
+    )
 
     t = str(tmp_path / "tbl")
     df = spark.range(500).withColumn("v", F.col("id") * 7)
     v1 = atomic_publish(df.repartition(16), t)
-    v2 = compact(spark, t, target_files=2)
+    size = describe_table(t, spark)["size_bytes"]
+    v2 = compact(spark, t, target_file_bytes=-(-size // 2))
     removed = vacuum(t, keep=1, spark=spark)
     assert "_v%d" % v1 in removed
     left = {s["version"] for s in snapshots(t, spark)}
@@ -648,46 +659,6 @@ def test_publish_stream_appends_exactly_once(spark, tmp_path):
     assert int(hwm2) == int(hwm) and current_version(tbl) == v
 
 
-def test_compact_partitions_folds_only_fragmented(spark, tmp_path):
-    # append-ingest fragmentation: day A accumulates 3 files, day B has
-    # 1 — auto-pick compacts ONLY day A; day B's file carries verbatim
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from bamboo_spark.operators.publish import (
-        append_publish,
-        compact_partitions,
-    )
-
-    t = str(tmp_path / "cp")
-    mk = lambda lo, hi, k: spark.range(lo, hi).select(  # noqa: E731
-        F.lit(k).alias("k"), F.col("id").alias("v")
-    ).coalesce(1)
-    append_publish(mk(0, 10, "a").union(mk(100, 110, "b")), t, partition_by="k")
-    append_publish(mk(10, 20, "a"), t)
-    append_publish(mk(20, 30, "a"), t)
-    files = live_files(t, spark)
-    a_files = [f for f in files if "k=a" in f]
-    b_files = [f for f in files if "k=b" in f]
-    assert len(a_files) >= 3 and len(b_files) == 1
-    v = compact_partitions(spark, t, min_files=2)
-    assert v is not None
-    files2 = live_files(t, spark)
-    a2 = [f for f in files2 if "k=a" in f]
-    b2 = [f for f in files2 if "k=b" in f]
-    assert len(a2) == 1 and a2[0].startswith("_v%d/" % v)
-    assert b2 == b_files  # untouched partition carried verbatim
-    assert published_rows(t) == 40
-    got = read_published(spark, t)
-    assert got.where("k = 'a'").count() == 30
-    assert sorted(r["v"] for r in got.where("k = 'b'").collect()) == list(
-        range(100, 110)
-    )
-    # nothing fragmented anymore -> no-op
-    assert compact_partitions(spark, t, min_files=2) is None
-
-
 def test_delete_publish_rewrites_only_matching_partitions(spark, tmp_path):
     # GDPR-erasure shape: deleting one user's rows rewrites only the
     # partitions containing them; other partitions carry by reference;
@@ -768,19 +739,20 @@ def test_replace_partitions_with_empty_df_deletes_partition(spark, tmp_path):
 @pytest.mark.parametrize("backend", BACKENDS)
 def test_file_stats_skipping_prunes_files(spark, tmp_path, backend):
     # the data-skipping half of the format: range-clustered publish +
-    # footer stats recorded in the manifest -> a bounded read opens
+    # per-file stats recorded at write time -> a bounded read opens
     # only intersecting files (df.inputFiles() proves it), rows exact
     from pyspark.sql import functions as F
 
-    from bamboo_spark.operators.publish import collect_file_stats
+    from bamboo_spark.operators import publish as P
 
     t, _ = _tbl(tmp_path, backend)
     # 8 range-clustered files over v in [0, 8000): file i holds ~[i*1000,
     # (i+1)*1000) — the zorder_layout/clustered-write shape
     df = spark.range(8000).select(F.col("id").alias("v"))
-    atomic_publish(df.repartitionByRange(8, "v"), t)
-    n = collect_file_stats(t, ["v"], spark)
-    assert n == 8
+    atomic_publish(df.repartitionByRange(8, "v"), t, stats_cols=["v"])
+    fs = P._fs_for(t, spark)
+    res = P._resolve_entry(fs, t, P._read_manifest(t, fs))
+    assert sum("v" in st for st in res["file_stats"].values()) == 8
     full = read_published(spark, t)
     assert len(full.inputFiles()) == 8
     pruned = read_published(spark, t, skip={"v": (2500, 3500)})
@@ -847,35 +819,6 @@ def test_append_publish_schema_merge_widens(spark, tmp_path):
         schema_mode="merge",
     )
     assert read_published(spark, t).where("label is null").count() == 7
-
-
-def test_optimize_table_one_call_maintenance(spark, tmp_path):
-    # the nightly job: fragmented append table -> one optimize_table()
-    # call compacts, refreshes stats, vacuums — and skipping works
-    from pyspark.sql import functions as F
-
-    from bamboo_spark.operators.publish import (
-        append_publish,
-        optimize_table,
-    )
-
-    t = str(tmp_path / "opt")
-    for lo in (0, 30, 60):
-        append_publish(
-            spark.range(lo, lo + 30)
-            .select(F.lit("d1").alias("k"), F.col("id").alias("v"))
-            .coalesce(1),
-            t,
-            partition_by="k",
-        )
-    out = optimize_table(spark, t, stats_cols=["v"], keep=1)
-    assert out["compacted_version"] is not None
-    assert out["stats_files"] >= 1
-    got = read_published(spark, t)
-    assert got.count() == 90
-    pruned = read_published(spark, t, skip={"v": (85, None)})
-    assert 0 < len(pruned.inputFiles()) <= len(got.inputFiles())
-    assert pruned.where("v >= 85").count() == 5
 
 
 def test_public_publish_defs_have_callers_outside_tests():

@@ -12,7 +12,7 @@ from bamboo_spark.operators.publish import (
     ConcurrentWriteError,
     append_publish,
     atomic_publish,
-    compact_partitions,
+    compact,
     current_version,
     published_rows,
     read_published,
@@ -58,11 +58,12 @@ def test_concurrent_writers_ledger_exact(spark, tmp_path):
                     errors.append((tid, e))
 
     def maintainer():
-        # periodic compaction: allowed to lose optimistic races (a
-        # conflict is a correct outcome), never to corrupt
+        # periodic compaction: queues for the lease behind in-flight
+        # commits (a wait that runs out is a correct outcome), never
+        # corrupts
         for _ in range(3):
             try:
-                compact_partitions(spark, t, min_files=2)
+                compact(spark, t)
             except ConcurrentWriteError:
                 pass
 
@@ -100,18 +101,14 @@ def test_concurrent_writers_ledger_exact(spark, tmp_path):
     assert read_published(spark, t).count() == expected
 
 
-def test_concurrent_append_dv_delete_compact_files(spark, tmp_path):
-    """Round-12 matrix: appenders + a compact_files maintainer + a
+def test_concurrent_append_dv_delete_compact(spark, tmp_path):
+    """Round-12 matrix: appenders + a compact maintainer + a
     dv-deleter hammer one UNPARTITIONED table. Appends always land
-    (rebase); maintenance and deletes may lose optimistic races (a
-    ConcurrentWriteError is a correct outcome, tracked); the final
+    (rebase); deletes may lose optimistic races and maintenance its
+    lease wait (a ConcurrentWriteError is a correct outcome); the final
     state must equal the ledger exactly and fsck must report a healthy
     table with no leaked staging."""
-    from bamboo_spark.operators.publish import (
-        compact_files,
-        delete_publish,
-        fsck_table,
-    )
+    from bamboo_spark.operators.publish import delete_publish, fsck_table
 
     t = str(tmp_path / "tbl")
     atomic_publish(
@@ -141,7 +138,7 @@ def test_concurrent_append_dv_delete_compact_files(spark, tmp_path):
     def maintainer():
         for _ in range(3):
             try:
-                compact_files(spark, t, small_bytes=1 << 30)
+                compact(spark, t)
             except ConcurrentWriteError:
                 pass
             except Exception as e:  # pragma: no cover

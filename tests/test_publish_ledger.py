@@ -1,6 +1,6 @@
 """Randomized LEDGER test for the table format: a seeded walk over the
-full op mix — append, dv-delete, rewrite-delete, partition compaction,
-full compaction, restore, vacuum — tracking the expected row multiset
+full op mix — append, dv-delete, rewrite-delete, compaction,
+restore, vacuum — tracking the expected row multiset
 in plain Python after every commit and asserting the committed
 snapshot reads back EXACTLY that multiset (and that the manifest's
 n_rows agrees). This is the bookkeeping differential: any drift in
@@ -18,7 +18,6 @@ from bamboo_spark.operators.publish import (
     append_publish,
     atomic_publish,
     compact,
-    compact_partitions,
     current_version,
     delete_publish,
     published_rows,
@@ -89,10 +88,7 @@ def test_random_op_walk_ledger_exact(spark, tmp_path, seed, partitioned):
             delete_publish(spark, t, "v = %d" % v)
             del expected[(k, v)]
         elif op == "compact":
-            if partitioned:
-                compact_partitions(spark, t, min_files=2)
-            else:
-                compact(spark, t)
+            compact(spark, t)
         elif op == "restore":
             # only versions still retained (vacuum may have pruned)
             retained = [
@@ -115,10 +111,7 @@ def test_random_op_walk_ledger_exact(spark, tmp_path, seed, partitioned):
             # entries (restore handles KeyError) — reads must be exact
             check("step %d vacuum" % step)
     # final: compaction folds everything and the ledger still holds
-    if partitioned:
-        compact_partitions(spark, t, min_files=1)
-    else:
-        compact(spark, t)
+    compact(spark, t)
     check("final compact")
     vacuum(t, keep=1)
     check("final vacuum")
@@ -321,7 +314,7 @@ def test_random_dv_evolution_walk_with_cdf_conservation(
 ):
     """Round-11 op mix under a seeded walk: conditional merges,
     predicate dv-deletes (v2 sidecars), ONE mid-walk schema widening
-    (merge_into schema_evolution), dv-sidecar folds, compaction — with
+    (merge_into schema_evolution), compaction — with
     TWO invariants checked after every commit:
 
     1. LEDGER: the committed snapshot reads back exactly the Python
@@ -330,11 +323,7 @@ def test_random_dv_evolution_walk_with_cdf_conservation(
        snapshot(v] as multisets, with snapshot(v0) aligned to the END
        schema (read_changes' contract) — any drift in dv-delta algebra,
        end-schema resolution, or dataChange exemptions breaks it."""
-    from bamboo_spark.operators.publish import (
-        compact_delete_vectors,
-        merge_into,
-        read_changes,
-    )
+    from bamboo_spark.operators.publish import merge_into, read_changes
 
     rng = random.Random(seed)
     t = str(tmp_path / "tbl")
@@ -427,9 +416,6 @@ def test_random_dv_evolution_walk_with_cdf_conservation(
             for k in ks:
                 v_old, _ = state.get(k, (batch[k][0], None))
                 state[k] = (v_old, "w")
-        elif roll < 0.85:
-            got = compact_delete_vectors(t, spark=spark)
-            assert got is None or read_model() == model()
         else:
             compact(spark, t)
         check("step %d (roll %.2f)" % (step, roll))
@@ -461,12 +447,11 @@ def test_random_update_replace_walk_ledger_exact(
     spark, tmp_path, seed, partitioned
 ):
     """Round-12 writers in the seeded ledger walk: MOR/CoW UPDATE,
-    replaceWhere, dynamic partition overwrite, and small-file
-    bin-packing interleave with appends and dv deletes; after every
+    replaceWhere, dynamic partition overwrite, and compaction
+    interleave with appends and dv deletes; after every
     commit the snapshot must read back exactly the Python model's
     multiset, n_rows must agree, and fsck must stay healthy."""
     from bamboo_spark.operators.publish import (
-        compact_files,
         fsck_table,
         overwrite_partitions_publish,
         replace_where_publish,
@@ -498,7 +483,7 @@ def test_random_update_replace_walk_ledger_exact(
     check("init")
     ops = [
         "append", "dv_delete", "update_mor", "update_cow",
-        "replace_where", "compact_files",
+        "replace_where", "compact",
     ]
     if partitioned:
         ops.append("overwrite_partition")
@@ -540,8 +525,8 @@ def test_random_update_replace_walk_ledger_exact(
                 {kv: c for kv, c in expected.items() if kv[0] != key}
             )
             expected.update(rows)
-        elif op == "compact_files":
-            compact_files(spark, t, small_bytes=1 << 30)
+        elif op == "compact":
+            compact(spark, t)
         elif op == "overwrite_partition":
             key = rng.choice(KEYS)
             rows = fresh_rows(rng.randint(1, 3), key=key)

@@ -15,10 +15,8 @@ from bamboo_spark.operators.publish import (
     append_publish,
     atomic_publish,
     compact,
-    compact_partitions,
     current_version,
     delete_publish,
-    optimize_table,
     read_published,
     replace_partitions_publish,
     table_meta,
@@ -111,8 +109,8 @@ def test_strict_append_rejects_type_change(spark, tmp_path):
 
 def test_meta_carries_through_maintenance_commits(spark, tmp_path):
     """A streaming sink's exactly-once HWM (manifest meta) must survive
-    compact()/optimize_table — a maintenance commit that erased it
-    would make the next replayed batch double-append."""
+    maintenance (index spec, compact, vacuum) — a maintenance commit
+    that erased it would make the next replayed batch double-append."""
     t = str(tmp_path / "tbl")
     atomic_publish(
         spark.range(10).selectExpr("id", "id % 3 as g"),
@@ -127,7 +125,9 @@ def test_meta_carries_through_maintenance_commits(spark, tmp_path):
     assert table_meta(t)["last_bid"] == 8
     compact(spark, t)  # maintenance passes no meta
     assert table_meta(t)["last_bid"] == 8, "compact erased the HWM"
-    optimize_table(spark, t, stats_cols=["id"])
+    P.set_index_columns(t, stats_cols=["id"], spark=spark)
+    compact(spark, t)
+    vacuum(t, keep=1)
     assert table_meta(t)["last_bid"] == 8
     # an explicit meta write still overrides per-key and adds new keys
     append_publish(
@@ -164,8 +164,8 @@ def test_publish_stream_hwm_survives_compact(spark, tmp_path):
 
 
 def test_maintenance_ops_respect_held_lease(spark, tmp_path, monkeypatch):
-    """vacuum / compact_partitions / delete_publish now take the table
-    lease — with another writer holding it they must refuse, not race.
+    """vacuum / compact / delete_publish take the table lease — with
+    another writer holding it past their wait they must refuse, not race.
     (Commit waits shrink so refusal is fast; production keeps 30 s to
     ride out committer pile-ups.)"""
     monkeypatch.setattr(P, "_COMMIT_WAIT_MS", 500)
@@ -181,7 +181,7 @@ def test_maintenance_ops_respect_held_lease(spark, tmp_path, monkeypatch):
         with pytest.raises(ConcurrentWriteError):
             vacuum(t, keep=1)
         with pytest.raises(ConcurrentWriteError):
-            compact_partitions(spark, t, min_files=1)
+            compact(spark, t)
         with pytest.raises(ConcurrentWriteError):
             delete_publish(spark, t, "id = 3")
     finally:
@@ -189,26 +189,6 @@ def test_maintenance_ops_respect_held_lease(spark, tmp_path, monkeypatch):
     # and with the lease free they all work
     assert delete_publish(spark, t, "id = 3") == 2
     assert read_published(spark, t).count() == 9
-
-
-def test_compact_partitions_commit_is_atomic_with_resolve(spark, tmp_path):
-    """compact_partitions holds ONE lease across snapshot-resolve and
-    rewrite: its internal replace_partitions_publish must reuse the
-    outer lease (no deadlock, exactly one new version)."""
-    t = str(tmp_path / "tbl")
-    atomic_publish(
-        spark.range(6).selectExpr("id", "cast(id % 2 as string) as g"),
-        t,
-        partition_by="g",
-    )
-    append_publish(
-        spark.range(6, 12).selectExpr("id", "cast(id % 2 as string) as g"), t
-    )
-    v = compact_partitions(spark, t, min_files=2)
-    assert v == 3
-    assert read_published(spark, t).count() == 12
-    # lock released afterwards
-    assert not os.path.exists(os.path.join(t, "_commit.lock"))
 
 
 # ---------------------------------------------------------------- segments
@@ -323,6 +303,8 @@ def _refused_shapes(table_dir):
             found.append("inline files in snapshot %s" % v)
         if not e.get("field_ids"):
             found.append("no field_ids in snapshot %s" % v)
+        if e.get("n_files") is None or e.get("size_bytes") is None:
+            found.append("no n_files/size_bytes in snapshot %s" % v)
     for root, _, names in os.walk(table_dir):
         for name in names:
             path = os.path.join(root, name)
@@ -378,7 +360,7 @@ def test_every_writer_writes_one_table_format(spark, tmp_path):
     )
     delete_publish(spark, t, "k = 3", delete_vectors=True)
     delete_publish(spark, t, "k = 8", delete_vectors=True)
-    assert P.compact_delete_vectors(t, spark=spark) is not None
+    compact(spark, t)
     delete_publish(spark, t, "k = 4", delete_vectors=False)
     P.update_publish(spark, t, "k = 5", {"v": "v + 1000"})
     P.update_publish(
@@ -389,7 +371,7 @@ def test_every_writer_writes_one_table_format(spark, tmp_path):
         rows([(k, k) for k in range(1, 30, 2)]), t, values=["p1"],
         partition_col="p",
     )
-    optimize_table(spark, t)
+    vacuum(t, spark=spark)
     delete_publish(spark, t, "k = 10", delete_vectors=True)
     dv_version = current_version(t)
     P.rename_column(t, "v", "w", spark=spark)
@@ -405,7 +387,7 @@ def test_every_writer_writes_one_table_format(spark, tmp_path):
     delete_publish(spark, c, "k = 12", delete_vectors=True)
 
     ops = {r.operation for r in P.table_history(spark, t).collect()}
-    assert {"delete", "compact_dv", "rename_column", "restore"} <= ops
+    assert {"delete", "compact", "rename_column", "restore"} <= ops
     # the restore brought back a snapshot with delete vectors, and the
     # clone externalized them
     assert json.load(open(os.path.join(t, "manifest.json"))).get("dv")
@@ -419,9 +401,81 @@ def test_every_writer_writes_one_table_format(spark, tmp_path):
     assert not got & {4, 8, 10, 12, 60} and {3, 50} <= got
 
 
-def test_segmented_stats_skipping_still_prunes(spark, tmp_path):
-    from bamboo_spark.operators.publish import collect_file_stats
+def test_compact_is_the_maintenance_writer(spark, tmp_path):
+    """The maintenance contract on a renamed, dv-deleted shallow clone:
+    after ``set_index_columns`` + ``compact`` every live file is local
+    and carries stats and a bloom, a point read opens one file, no
+    delete vector is left, and the rows are unchanged."""
+    t = str(tmp_path / "src")
+    c = str(tmp_path / "clone")
+    atomic_publish(
+        spark.range(0, 100).selectExpr("id as k", "id * 10 as v")
+        .coalesce(1),
+        t,
+    )
+    append_publish(
+        spark.range(100, 200).selectExpr("id as k", "id * 10 as v")
+        .coalesce(1),
+        t,
+    )
+    P.clone_table(spark, t, c)
+    P.rename_column(c, "v", "amount", spark=spark)
+    delete_publish(spark, c, "k % 7 = 0", delete_vectors=True)
+    P.set_index_columns(
+        c, stats_cols=["amount"], bloom_cols=["k"], spark=spark
+    )
+    before = sorted(
+        (r.k, r.amount) for r in read_published(spark, c).collect()
+    )
+    assert len(before) == 200 - 29
+    size = P.describe_table(c, spark)["size_bytes"]
+    compact(spark, c, target_file_bytes=size // 3 + 1)
 
+    fs = P._PosixFS()
+    res = P._resolve_entry(fs, c, P._read_manifest(c, fs))
+    assert len(res["files"]) == 3
+    assert not any(P._is_ext(f) for f in res["files"])
+    for f in res["files"]:
+        assert "amount" in res["file_stats"][f]
+        assert "k" in res["file_blooms"][f]
+    det = P.describe_table(c, spark)
+    assert det["dv_files"] == 0 and det["dv_rows"] == 0
+    assert det["external_refs"] == 0
+    assert not P._read_manifest(c, fs).get("dv")
+    point = read_published(spark, c, skip_eq={"k": 150})
+    assert len(point.inputFiles()) == 1
+    assert [r.amount for r in point.where("k = 150").collect()] == [1500]
+    assert sorted(
+        (r.k, r.amount) for r in read_published(spark, c).collect()
+    ) == before
+
+
+def test_append_rebases_across_a_compact(spark, tmp_path, monkeypatch):
+    """A compact that lands while an append is staged keeps the schema
+    up to nullability (it re-reads the table, and reads come back
+    nullable), so the append rebases onto it instead of raising."""
+    t = str(tmp_path / "tbl")
+    atomic_publish(spark.range(10).selectExpr("id", "id * 2 as x"), t)
+    real = P._scan_written
+    fired = []
+
+    def hook(*a, **kw):
+        if not fired:
+            fired.append(True)
+            compact(spark, t)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(P, "_scan_written", hook)
+    v = append_publish(spark.range(10, 12).selectExpr("id", "id * 2 as x"), t)
+    monkeypatch.undo()
+    assert fired and v == 3
+    assert P.table_history(spark, t).first().operation == "append"
+    assert sorted(r.id for r in read_published(spark, t).collect()) == list(
+        range(12)
+    )
+
+
+def test_segmented_stats_skipping_still_prunes(spark, tmp_path):
     t = str(tmp_path / "tbl")
     atomic_publish(
         spark.range(10000).selectExpr("id", "id as v")
@@ -437,9 +491,9 @@ def test_segmented_stats_skipping_still_prunes(spark, tmp_path):
         == full.where("v <= 500").count()
     )
     assert len(pruned.inputFiles()) < len(full.inputFiles())
-    # stats survive an append (per-segment sidecars)
+    # stats survive an append (per-segment sidecars), and the append
+    # indexes its own file under the table's index spec
     append_publish(spark.range(10000, 10100).selectExpr("id", "id as v"), t)
-    collect_file_stats(t, ["v"], spark)
     pruned2 = read_published(spark, t, skip={"v": (0, 500)})
     assert len(pruned2.inputFiles()) < len(
         read_published(spark, t).inputFiles()
@@ -511,24 +565,6 @@ def test_write_time_stats_on_partition_column(spark, tmp_path):
         r[0] for r in pruned.select("d").distinct().collect()
     ) == {"2024-01-03", "2024-01-04"}
     full = read_published(spark, t)
-    assert len(pruned.inputFiles()) < len(full.inputFiles())
-
-
-def test_collect_file_stats_distributed_on_hadoop_backend(spark, tmp_path):
-    """Post-hoc backfill also works on the Hadoop URI backend now."""
-    local = str(tmp_path / "tbl")
-    t = "file://" + local
-    from bamboo_spark.operators.publish import collect_file_stats
-
-    atomic_publish(
-        spark.range(4000).selectExpr("id", "id as v")
-        .repartitionByRange(4, "v").sortWithinPartitions("v"),
-        t,
-    )
-    n = collect_file_stats(t, ["v"], spark)
-    assert n >= 4
-    full = read_published(spark, t)
-    pruned = read_published(spark, t, skip={"v": (0, 200)})
     assert len(pruned.inputFiles()) < len(full.inputFiles())
 
 
@@ -676,13 +712,17 @@ def test_two_thread_disjoint_replaces_both_commit(spark, tmp_path):
     } == {("a", 100), ("b", 200)}
 
 
+
 def test_ingest_concurrent_with_maintenance(spark, tmp_path, monkeypatch):
-    """publish_stream-shaped append lands WHILE compact_partitions is
-    folding a different partition: the compaction rebases and both
-    survive — the 'streaming ingest + nightly optimize' deployment."""
-    t = str(tmp_path / "tbl")
+    """publish_stream-shaped append lands WHILE compact is rewriting the
+    table: the append queues for compact's lease, commits on top of the
+    compacted snapshot, and both survive — the 'streaming ingest +
+    nightly compact' deployment."""
+    import threading
+
     import pyspark.sql.functions as F
 
+    t = str(tmp_path / "tbl")
     # fragment partition a across two appends; b has one file
     for lo in (0, 10):
         append_publish(
@@ -698,23 +738,31 @@ def test_ingest_concurrent_with_maintenance(spark, tmp_path, monkeypatch):
         ).coalesce(1),
         t,
     )
-    injected = {"done": False}
-    orig = P._scan_written
+    errs = []
 
-    def hook(fs, vdir, vname):
-        if not injected["done"]:
-            injected["done"] = True
-            # ingest commits a batch into UNTOUCHED partition b while
-            # the compactor is mid-rewrite of partition a
+    def ingest():
+        try:
             append_publish(
                 spark.createDataFrame([("b", 500)], "k string, v long"), t
             )
+        except Exception as e:  # pragma: no cover - diagnostic
+            errs.append(e)
+
+    batch = threading.Thread(target=ingest)
+    orig = P._scan_written
+
+    def hook(fs, vdir, vname):
+        if not batch.is_alive() and batch.ident is None:
+            # ingest commits a batch while the compactor is mid-rewrite
+            batch.start()
         return orig(fs, vdir, vname)
 
     monkeypatch.setattr(P, "_scan_written", hook)
-    v = compact_partitions(spark, t, values=["a"])
+    v = compact(spark, t)
+    batch.join(timeout=120)
     monkeypatch.setattr(P, "_scan_written", orig)
-    assert v is not None
+    assert not batch.is_alive() and not errs, errs
+    assert current_version(t) == v + 1  # the batch committed after it
     got = read_published(spark, t)
     assert got.where("k = 'a'").count() == 20  # compaction exact
     assert got.where("v = 500").count() == 1   # concurrent batch kept
@@ -825,6 +873,9 @@ def test_point_delete_conservative_without_blooms(spark, tmp_path):
 
 
 def test_collect_file_blooms_backfill(spark, tmp_path):
+    """A table written without indexes gets its blooms backfilled by
+    ``set_index_columns`` + ``compact``: every rewritten file carries a
+    bloom, and a point read prunes to the file holding the key."""
     import pyspark.sql.functions as F
 
     t = str(tmp_path / "tbl")
@@ -832,22 +883,31 @@ def test_collect_file_blooms_backfill(spark, tmp_path):
         F.xxhash64("id").alias("sk"), F.col("id").alias("user_id")
     ).repartition(6, "sk").drop("sk")
     atomic_publish(df, t)
-    from bamboo_spark.operators.publish import collect_file_blooms
-
-    n = collect_file_blooms(t, ["user_id"], spark)
-    assert n == 6
+    P.set_index_columns(t, bloom_cols=["user_id"], spark=spark)
+    size = P.describe_table(t, spark)["size_bytes"]
+    compact(spark, t, target_file_bytes=size // 6 + 1)
+    fs = P._PosixFS()
+    res = P._resolve_entry(fs, t, P._read_manifest(t, fs))
+    assert len(res["files"]) == 6
+    assert all("user_id" in res["file_blooms"][f] for f in res["files"])
     pruned = read_published(spark, t, skip_eq={"user_id": 500})
     assert len(pruned.inputFiles()) <= 2
     assert pruned.where("user_id = 500").count() == 1
 
 
 def test_optimize_table_refreshes_blooms(spark, tmp_path):
+    """``compact`` writes blooms from the persisted index spec, so the
+    maintenance rewrite refreshes them for a table that had none."""
     t = str(tmp_path / "tbl")
     atomic_publish(
         spark.range(100).selectExpr("id as user_id", "id * 2 as v"), t
     )
-    out = optimize_table(spark, t, bloom_cols=["user_id"], min_files=99)
-    assert out["bloom_files"] >= 1
+    P.set_index_columns(t, bloom_cols=["user_id"], spark=spark)
+    compact(spark, t)
+    fs = P._PosixFS()
+    res = P._resolve_entry(fs, t, P._read_manifest(t, fs))
+    assert res["files"]
+    assert all("user_id" in res["file_blooms"][f] for f in res["files"])
     pruned = read_published(spark, t, skip_eq={"user_id": 5})
     assert pruned.where("user_id = 5").count() == 1
 
@@ -983,11 +1043,8 @@ def test_skip_and_skip_eq_compose(spark, tmp_path):
     )
     atomic_publish(
         df.repartitionByRange(8, "v").sortWithinPartitions("v"), t,
-        stats_cols=["v"],
+        stats_cols=["v"], bloom_cols=["uid"],
     )
-    from bamboo_spark.operators.publish import collect_file_blooms
-
-    collect_file_blooms(t, ["uid"], spark)
     both = read_published(
         spark, t, skip={"v": (0, 500)}, skip_eq={"uid": 123}
     )

@@ -840,6 +840,10 @@ _LEGACY_SHAPES = {
     ),
     "inline_files": (_legacy_inline, "inline 'files' list in snapshot 2"),
     "no_field_ids": (_legacy_no_field_ids, "no 'field_ids'"),
+    "pre_size": (
+        lambda s, d, m: m["snapshots"]["2"].pop("size_bytes"),
+        "no 'n_files'/'size_bytes' in snapshot 2",
+    ),
     "unstamped_segment": (_legacy_unstamped, "unstamped segment"),
     "dv_position_list": (
         _legacy_dv_positions, "position-list delete vector"
@@ -855,7 +859,8 @@ _LEGACY_SHAPES = {
 def test_manifest_with_removed_feature_is_refused(spark, tmp_path, key):
     """Tags, branches and CHECK constraints are gone, and so are the
     table shapes no writer produces any more (pre-history and inline
-    manifests, entries without field ids, unstamped segments, position
+    manifests, entries without field ids or file/byte counters,
+    unstamped segments, position
     lists, row-per-position and hidden-root delete-vector sidecars) —
     but tables written before may still carry them: every reader and
     writer refuses such a table by name rather than misreading it

@@ -428,12 +428,16 @@ def test_concurrent_metadata_ops_compose(spark, tmp_path):
 
 @pytest.mark.parametrize(
     "op",
-    ["rename_column", "set_partition_layout", "restore_table", "vacuum"],
+    [
+        "rename_column", "set_partition_layout", "restore_table", "vacuum",
+        "compact",
+    ],
 )
 def test_metadata_writers_queue_for_the_lease(spark, tmp_path, op):
     """Schema, layout, restore and vacuum commits are milliseconds of
     manifest work: like set_retention, they WAIT for a lease another
-    writer holds briefly, then commit, instead of raising at once."""
+    writer holds briefly, then commit, instead of raising at once. So
+    does compact, the one maintenance writer."""
     import threading
     import time
 
@@ -447,6 +451,7 @@ def test_metadata_writers_queue_for_the_lease(spark, tmp_path, op):
         ),
         "restore_table": lambda: P.restore_table(d, 1, spark=spark),
         "vacuum": lambda: P.vacuum(d, keep=1, spark=spark),
+        "compact": lambda: P.compact(spark, d),
     }[op]
     held = P._Lease(_fs(), d).acquire()
     holder = threading.Timer(1.0, held.release)
@@ -468,32 +473,29 @@ def test_metadata_writers_queue_for_the_lease(spark, tmp_path, op):
 
 
 def test_backfill_stats_and_blooms_on_evolved_table(spark, tmp_path):
-    """r10 verdict #4: stats/bloom backfills on a RENAMED table resolve
-    the logical index column to each file's physical name by field id
-    instead of refusing — and the recorded indexes actually prune."""
+    """r10 verdict #4: the index backfill on a RENAMED table —
+    ``set_index_columns`` + ``compact`` — indexes every file under the
+    logical column names, and the recorded indexes actually prune."""
     d = str(tmp_path / "t")
-    # two appends -> files with disjoint k/v ranges (prunable by stats)
     atomic_publish(_rows(spark, 0, 100).coalesce(1), d)
     append_publish(_rows(spark, 1000, 1100).coalesce(1), d)
     P.rename_column(d, "v", "amount", spark=spark)
-    n_stats = P.collect_file_stats(d, ["amount"], spark=spark)
-    n_blooms = P.collect_file_blooms(d, ["k"], spark=spark)
-    assert n_stats >= 2 and n_blooms >= 2
+    P.set_index_columns(
+        d, stats_cols=["amount"], bloom_cols=["k"], spark=spark
+    )
+    size = P.describe_table(d, spark)["size_bytes"]
+    compact(spark, d, target_file_bytes=-(-size // 2))
     fs = _fs()
     man = P._read_manifest(d, fs)
     res = P._resolve_entry(fs, d, man)
-    # stats rekeyed to the LOGICAL name at read time, per file
-    assert all("amount" in st for st in res["file_stats"].values())
-    mins = sorted(st["amount"][0] for st in res["file_stats"].values())
-    assert mins == [0, 10000]
-    # min/max actually prune: a bound excluding the low file keeps ONE
-    pruned = [
-        f
-        for f, st in res["file_stats"].items()
-        if st["amount"][1] >= 10000
-    ]
-    assert len(pruned) == 1
-    # bloom prune on the renamed-table's untouched column still works
+    assert len(res["files"]) == 2
+    # every file carries stats under the LOGICAL name, and a bloom
+    assert all("amount" in res["file_stats"][f] for f in res["files"])
+    assert all("k" in res["file_blooms"][f] for f in res["files"])
+    lo = min(st["amount"][0] for st in res["file_stats"].values())
+    hi = max(st["amount"][1] for st in res["file_stats"].values())
+    assert (lo, hi) == (0, 10990)
+    # bloom prune on the renamed table's untouched column works
     kept = P._prune_eq(res, res["files"], {"k": 1050})
     assert len(kept) == 1
     # and the skip= read path returns exact rows under the bound
@@ -613,75 +615,23 @@ def test_read_changes_under_end_schema_after_rename(spark, tmp_path):
     assert got == expect
 
 
-def test_compact_delete_vectors_folds_sidecars(spark, tmp_path):
-    """dv MINOR COMPACTION (Iceberg's rewrite-position-deletes): K dv
-    commits leave K sidecar datasets; one dataChange=false commit folds
-    them to one — reads identical, incremental readers skip it, vacuum
-    reclaims the old dv-only dirs."""
-    d = str(tmp_path / "t")
-    # range-clustered files so each delete touches a DIFFERENT file —
-    # the touched-only rewrite then leaves refs spanning several
-    # datasets (a predicate hitting every file would collapse them)
-    atomic_publish(
-        _rows(spark, 0, 1000).repartitionByRange(4, "k"), d
-    )                                                             # v1
-    delete_publish(spark, d, "k < 100", delete_vectors=True)      # v2
-    delete_publish(spark, d, "k >= 900", delete_vectors=True)     # v3
-    append_publish(_rows(spark, 1000, 1010), d)                   # v4
-    delete_publish(
-        spark, d, "k between 400 and 420", delete_vectors=True
-    )                                                             # v5
-    fs = _fs()
-    man = P._read_manifest(d, fs)
-    before = {
-        v["ds"] for v in P._load_dv(fs, d, man).values()
-        if isinstance(v, dict)
-    }
-    assert len(before) >= 2  # several sidecar datasets accumulated
-    expect = sorted(
-        r.k for r in read_published(spark, d).collect()
-    )
-    ver = P.compact_delete_vectors(d, spark=spark)                # v6
-    assert ver == 6
-    man = P._read_manifest(d, fs)
-    dv = P._load_dv(fs, d, man)
-    after = {v["ds"] for v in dv.values()}
-    assert len(after) == 1 and not (after & before)
-    assert sorted(r.k for r in read_published(spark, d).collect()) == expect
-    # idempotent: a second fold is a no-op
-    assert P.compact_delete_vectors(d, spark=spark) is None
-    # incremental readers treat the fold as dataChange=false: an
-    # appends stream across it raises nothing and delivers nothing new
-    assert P.read_appends(
-        spark, d, from_version=5, ignore_deletes=False
-    ).count() == 0
-    assert P.read_changes(spark, d, from_version=5).count() == 0
-    # history labels it and keeps counters flat
-    h = {r.version: r for r in P.table_history(spark, d).collect()}
-    assert h[6].operation == "compact_dv"
-    assert h[6].data_change is False and h[6].n_rows == h[5].n_rows
-    # vacuum now reclaims the superseded dv-only dirs
-    removed = vacuum(d, keep=0, spark=spark)
-    assert {"_v2", "_v3", "_v5"} <= set(removed), removed
-    assert sorted(r.k for r in read_published(spark, d).collect()) == expect
-
-
 def test_compact_delete_vectors_folds_clone_external_refs(spark, tmp_path):
-    """Folding a CLONE's externally-referenced vectors localizes them:
-    the clone stops depending on the source's dv sidecars (its data
-    refs still pin the source snapshot, as documented)."""
+    """Compacting a CLONE whose delete vectors and data files are
+    externally referenced localizes both: the vectors are applied,
+    and the clone stops depending on the source's files."""
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
     atomic_publish(_rows(spark, 0, 400), src)
     delete_publish(spark, src, "k % 4 = 0", delete_vectors=True)
     clone_table(spark, src, dst)
-    ver = P.compact_delete_vectors(dst, spark=spark)
-    assert ver == 2
     fs = _fs()
-    dv = P._load_dv(fs, dst, P._read_manifest(dst, fs))
-    assert all(
-        isinstance(v, dict) and not P._is_ext(v["ds"]) for v in dv.values()
-    )
+    assert P._read_manifest(dst, fs).get("dv")
+    ver = compact(spark, dst)
+    assert ver == 2
+    man = P._read_manifest(dst, fs)
+    assert not man.get("dv")
+    res = P._resolve_entry(fs, dst, man)
+    assert not any(P._is_ext(f) for f in res["files"])
     assert sorted(r.k for r in read_published(spark, dst).collect()) == [
         k for k in range(400) if k % 4 != 0
     ]

@@ -3,7 +3,8 @@ across rename-then-compact, dv race staging reclaim), type widening,
 partition-spec evolution, the merge x dv race matrix, bitmap dv
 sidecars — plus this round's new write surface and its contracts:
 update_publish (MOR + CoW), replace_where_publish,
-overwrite_partitions_publish, compact_files, fsck_table, vacuum
+overwrite_partitions_publish, compact as the one maintenance writer,
+fsck_table, vacuum
 dry-run, the persisted index spec, NULL-condition three-valued-logic
 semantics, and staging reclaim on every lost optimistic race.
 
@@ -310,13 +311,19 @@ def test_widen_composes_with_rename_dv_and_indexes(spark, tmp_path):
     delete_publish(spark, d, "amount % 10 = 0", delete_vectors=True)  # v5
     got = sorted(r.k for r in read_published(spark, d).collect())
     assert got == [k for k in range(200) if (2 * k) % 10 != 0]
-    # stats/bloom backfill on the widened+renamed table
-    assert P.collect_file_stats(d, ["amount"], spark=spark) >= 2
+    # stats backfill on the widened+renamed table: index spec + compact
+    P.set_index_columns(d, stats_cols=["amount"], spark=spark)     # v6
+    size = P.describe_table(d, spark)["size_bytes"]
+    compact(spark, d, target_file_bytes=-(-size // 2))             # v7
     fs = _fs()
     man = P._read_manifest(d, fs)
     res = P._resolve_entry(fs, d, man)
-    # pre-widen file's stats rekeyed to the logical name, prunable
-    kept = P._prune_eq(res, res["files"], {"k": 150})
+    assert len(res["files"]) == 2
+    assert all("amount" in res["file_stats"][f] for f in res["files"])
+    # the rewritten files keep their blooms and prune (k=150 was
+    # deleted above, so the compacted files prove it absent)
+    assert P._prune_eq(res, res["files"], {"k": 150}) == []
+    kept = P._prune_eq(res, res["files"], {"k": 151})
     assert len(kept) == 1
     # CDF across the widen: every change row surfaces under the END
     # schema (amount long), pre-widen inserts upcast
@@ -558,12 +565,20 @@ def test_rename_partition_column_reads_both_eras(spark, tmp_path):
     expect = [k for k in range(24) if k % 7 != 0]
     assert sorted(r.k for r in read_published(spark, d).collect()) == expect
     # partition-level maintenance refuses the mixed table...
+    bucket2 = spark.createDataFrame(
+        [(2, 2, 20)], "k long, bucket long, v long"
+    )
     with pytest.raises(ValueError, match="predate the current partition"):
-        P.compact_partitions(spark, d, values=[2], partition_col="bucket")
+        P.replace_partitions_publish(
+            bucket2, d, values=[2], partition_col="bucket"
+        )
     # ...until compact() unifies the layout under the new spec
     compact(spark, d)                                             # v5
     assert sorted(r.k for r in read_published(spark, d).collect()) == expect
-    P.compact_partitions(spark, d, values=[2], partition_col="bucket")
+    P.replace_partitions_publish(
+        read_published(spark, d).where("bucket = 2"), d, values=[2],
+        partition_col="bucket",
+    )
     assert sorted(r.k for r in read_published(spark, d).collect()) == expect
 
 
@@ -702,8 +717,9 @@ def test_dv_bitmap_through_datasource_and_cdf(spark, tmp_path):
     c = str(tmp_path / "c")
     clone_table(spark, d, c)
     assert read_published(spark, c).count() == 2000 - 667
-    # and compacting the clone's vectors folds external bitmap refs
-    P.compact_delete_vectors(c, spark=spark)
+    # and compacting the clone applies its external bitmap refs
+    compact(spark, c)
+    assert not P._read_manifest(c, _fs()).get("dv")
     assert read_published(spark, c).count() == 2000 - 667
 
 
@@ -1217,85 +1233,7 @@ def test_replace_where_rebases_over_concurrent_append(
     assert len(got) == 111                   # 1 + 100 + 10
 
 
-# ---------------------------------------------------------- compact_files
-
-
-def test_compact_files_bin_packs_small_only(spark, tmp_path):
-    """Only sub-threshold files fold; right-sized files carry by ref;
-    the commit is dataChange=false."""
-    d = str(tmp_path / "t")
-    for lo in range(0, 40, 10):  # 4 tiny files
-        append_publish(_rows(spark, lo, lo + 10).coalesce(1), d) \
-            if lo else atomic_publish(
-                _rows(spark, 0, 10).coalesce(1), d
-            )
-    fs = _fs()
-    man = P._read_manifest(d, fs)
-    res = P._resolve_entry(fs, d, man)
-    # threshold below the largest file: it alone stays by reference
-    big = max(res["file_sizes"].values())
-    ver = P.compact_files(
-        spark, d, small_bytes=big, target_file_bytes=1 << 30
-    )
-    assert ver == 5
-    man2 = P._read_manifest(d, fs)
-    assert man2["operation"] == "compact_files"
-    assert man2.get("data_change") is False
-    files = P.live_files(d, spark=spark)
-    assert len(files) < 4
-    got = sorted(r.k for r in read_published(spark, d).collect())
-    assert got == list(range(40))
-
-
-def test_compact_files_applies_dv_physically(spark, tmp_path):
-    d = str(tmp_path / "t")
-    atomic_publish(_rows(spark, 0, 50).coalesce(1), d)
-    append_publish(_rows(spark, 50, 100).coalesce(1), d)
-    delete_publish(spark, d, "k in (3, 60)", delete_vectors=True)
-    ver = P.compact_files(spark, d, small_bytes=1 << 30)
-    assert ver == 4
-    fs = _fs()
-    man = P._read_manifest(d, fs)
-    assert not man.get("dv")      # folded away
-    got = sorted(r.k for r in read_published(spark, d).collect())
-    assert got == [k for k in range(100) if k not in (3, 60)]
-    assert P.published_rows(d, spark=spark) == 98
-
-
-def test_compact_files_noop_when_nothing_small(spark, tmp_path):
-    d = str(tmp_path / "t")
-    atomic_publish(_rows(spark, 0, 10).coalesce(1), d)
-    assert P.compact_files(spark, d, small_bytes=10) is None
-    assert P.current_version(d, spark=spark) == 1
-
-
-def test_compact_files_max_files_bounds_one_run(spark, tmp_path):
-    d = str(tmp_path / "t")
-    atomic_publish(_rows(spark, 0, 10).coalesce(1), d)
-    for lo in range(10, 60, 10):
-        append_publish(_rows(spark, lo, lo + 10).coalesce(1), d)
-    ver = P.compact_files(spark, d, small_bytes=1 << 30, max_files=3)
-    assert ver == 7
-    files = P.live_files(d, spark=spark)
-    assert len(files) == 4        # 6 - 3 folded + 1 packed
-    assert P.published_rows(d, spark=spark) == 60
-
-
-def test_compact_files_partitioned_preserves_values(spark, tmp_path):
-    d = str(tmp_path / "t")
-    df = spark.range(0, 90).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
-        (F.col("id") % 3).cast("string").alias("p"),
-    )
-    atomic_publish(df.where("k < 45"), d, partition_by=["p"])
-    append_publish(df.where("k >= 45"), d)
-    ver = P.compact_files(spark, d, small_bytes=1 << 30)
-    assert ver is not None
-    out = read_published(spark, d)
-    assert out.count() == 90
-    assert out.where("p = '2'").count() == 30
-    got = {(r.k, r.p) for r in out.collect()}
-    assert (7, "1") in got
+# ------------------------------------------- change feed of rewrites
 
 
 def test_read_changes_exact_diff_for_rewrite_commits(spark, tmp_path):
@@ -1707,18 +1645,6 @@ def test_describe_table_property_sheet(spark, tmp_path):
     assert det["external_refs"] == 0 and det["n_snapshots"] == 3
 
 
-def test_optimize_table_honors_retention_policy(spark, tmp_path):
-    d = str(tmp_path / "t")
-    atomic_publish(_rows(spark, 0, 10).coalesce(1), d)        # v1
-    P.set_retention(d, keep=4, spark=spark)                   # v2
-    for lo in (10, 20, 30):
-        append_publish(_rows(spark, lo, lo + 10).coalesce(1), d)  # v3-5
-    rep = P.optimize_table(spark, d)
-    # policy keep=4 retains v2..v5(+compaction commit): nothing of the
-    # recent history may be GC'd by the default-arg maintenance call
-    assert read_published(spark, d, version=3).count() == 20
-
-
 # ------------------------------------------------- round-12 writers × clones
 
 
@@ -1726,8 +1652,8 @@ def test_round12_writers_on_shallow_clone(spark, tmp_path):
     """The new writers operate on a shallow clone without touching the
     source: MOR update addresses EXTERNAL files, CoW update rewrites an
     external file into a local one (its dv retiring with it),
-    replaceWhere swaps a slice, compact_files folds externals into
-    local files, and fsck validates the external refs throughout."""
+    replaceWhere swaps a slice, compact folds externals into local
+    files, and fsck validates the external refs throughout."""
     t = str(tmp_path / "t")
     c = str(tmp_path / "c")
     atomic_publish(_rows(spark, 0, 100).coalesce(1), t)
@@ -1745,7 +1671,8 @@ def test_round12_writers_on_shallow_clone(spark, tmp_path):
     repl = spark.createDataFrame([(0, 1)], "k long, v long")
     P.replace_where_publish(repl, c, "k < 3")
     assert P.published_rows(c, spark=spark) == 98
-    P.compact_files(spark, c, small_bytes=1 << 30)
+    compact(spark, c)
+    assert P.describe_table(c, spark)["external_refs"] == 0
     rep = P.fsck_table(c, spark=spark, check_sizes=True)
     assert rep["ok"]
     # source never touched by any of it

@@ -325,23 +325,6 @@ def test_dynamic_partition_overwrite_by_derived_day(spark, tmp_path):
     )
 
 
-def test_compact_partitions_on_hidden_layout(spark, tmp_path):
-    # fragmentation needs MULTIPLE COMMITS touching the same day since
-    # r13: partitioned writes rebalance by partition cols, so a single
-    # write emits one file per day (it no longer fragments itself).
-    # Odd ids land on days 2/4/6 (day = id % 6), so the two odd-id
-    # appends below fragment exactly those days.
-    t = str(tmp_path / "t")
-    atomic_publish(
-        _ts_rows(spark, mod=2, rem=0), t, partition_by=["days(ts)"]
-    )
-    append_publish(_ts_rows(spark, mod=4, rem=1), t)
-    append_publish(_ts_rows(spark, mod=4, rem=3), t)
-    v = P.compact_partitions(spark, t, min_files=2)
-    assert v is not None
-    assert read_published(spark, t).count() == 60
-
-
 def test_merge_into_preserves_hidden_layout(spark, tmp_path):
     t = str(tmp_path / "t")
     df = _ts_rows(spark)

@@ -21,11 +21,9 @@ from bamboo_spark.operators.publish import (
     append_publish,
     atomic_publish,
     compact,
-    compact_partitions,
     current_version,
     delete_publish,
     live_files,
-    optimize_table,
     read_published,
     restore_table,
     vacuum,
@@ -53,46 +51,12 @@ def _seed_days(spark, t, frag=2):
 # ---------------------------------------------------------------------------
 
 
-def test_compact_partitions_raises_on_append_into_touched_partition(
-    spark, tmp_path, monkeypatch
-):
-    """The judge's deterministic repro: an append into partition 'a'
-    lands AFTER compact_partitions snapshotted its rewrite plan but
-    BEFORE the replace commit. Pre-fix the commit-time baseline was
-    re-read after the append, so the disjointness check passed and the
-    appended rows vanished; now the plan snapshot IS the baseline and
-    the conflict raises."""
-    t = str(tmp_path / "tbl")
-    _seed_days(spark, t)
-    n_before = read_published(spark, t).count()
-    injected = {"done": False}
-    orig = P._scan_written
-
-    def hook(fs, vdir, vname):
-        if not injected["done"]:
-            injected["done"] = True
-            # a streaming micro-batch commits into the TOUCHED
-            # partition while the compactor is mid-rewrite
-            append_publish(
-                spark.createDataFrame([("a", 999)], "k string, v long"), t
-            )
-        return orig(fs, vdir, vname)
-
-    monkeypatch.setattr(P, "_scan_written", hook)
-    with pytest.raises(ConcurrentWriteError):
-        compact_partitions(spark, t, values=["a"])
-    monkeypatch.setattr(P, "_scan_written", orig)
-    got = read_published(spark, t)
-    assert got.count() == n_before + 1
-    assert got.where("v = 999").count() == 1  # the append SURVIVED
-
-
 def test_delete_publish_raises_on_append_into_touched_partition(
     spark, tmp_path, monkeypatch
 ):
-    """Same window for the GDPR-erase path: ingest keeps flowing during
-    a delete; a batch into a partition the delete is rewriting raises
-    instead of being dropped."""
+    """The GDPR-erase path: ingest keeps flowing during a delete; a
+    batch into a partition the delete is rewriting raises instead of
+    being dropped."""
     t = str(tmp_path / "tbl")
     _seed_days(spark, t)
     injected = {"done": False}
@@ -113,32 +77,6 @@ def test_delete_publish_raises_on_append_into_touched_partition(
     got = read_published(spark, t)
     assert got.where("v = 999").count() == 1  # appended row survived
     assert got.where("v = 0").count() == 1  # delete NOT committed
-
-
-def test_maintenance_still_merges_with_disjoint_commits(spark, tmp_path,
-                                                        monkeypatch):
-    """The happy path is unchanged: an append into an UNTOUCHED
-    partition mid-compaction rebases cleanly and both commits land."""
-    t = str(tmp_path / "tbl")
-    _seed_days(spark, t)
-    injected = {"done": False}
-    orig = P._scan_written
-
-    def hook(fs, vdir, vname):
-        if not injected["done"]:
-            injected["done"] = True
-            append_publish(
-                spark.createDataFrame([("b", 500)], "k string, v long"), t
-            )
-        return orig(fs, vdir, vname)
-
-    monkeypatch.setattr(P, "_scan_written", hook)
-    v = compact_partitions(spark, t, values=["a"])
-    monkeypatch.setattr(P, "_scan_written", orig)
-    assert v is not None
-    got = read_published(spark, t)
-    assert got.where("k = 'a'").count() == 6
-    assert got.where("v = 500").count() == 1
 
 
 # ---------------------------------------------------------------------------
@@ -373,9 +311,8 @@ def test_dv_on_partitioned_table_and_partition_rewrite_respects_mask(
     _seed_days(spark, t)
     delete_publish(spark, t, "k = 'a' and v = 0", delete_vectors=True)
     assert read_published(spark, t).where("v = 0").count() == 0
-    # a later partition rewrite of 'a' must NOT resurrect the dv'd row
-    v = compact_partitions(spark, t, values=["a"])
-    assert v is not None
+    # a later rewrite of 'a' must NOT resurrect the dv'd row
+    compact(spark, t)
     got = read_published(spark, t)
     assert got.where("v = 0").count() == 0
     assert got.where("k = 'a'").count() == 5
@@ -487,22 +424,6 @@ def test_acquire_wait_timeout_message_carries_holder_detail(tmp_path):
         assert "retrying the commit is safe" in msg
     finally:
         holder.release()
-
-
-def test_optimize_table_surfaces_compact_conflict(spark, tmp_path,
-                                                  monkeypatch):
-    t = str(tmp_path / "tbl")
-    _seed_days(spark, t)
-
-    def boom(*a, **kw):
-        raise ConcurrentWriteError("synthetic conflict")
-
-    monkeypatch.setattr(P, "compact_partitions", boom)
-    out = optimize_table(spark, t)
-    assert out["compacted_version"] is None
-    assert "synthetic conflict" in out["compact_conflict"]
-    # the remaining maintenance steps still ran
-    assert "vacuumed" in out
 
 
 # ---------------------------------------------------------------------------
@@ -903,8 +824,6 @@ def test_partition_evolution_guards(spark, tmp_path):
             t, values=["x"],
         )
     with pytest.raises(ValueError, match="predate the current"):
-        compact_partitions(spark, t, values=["x"])
-    with pytest.raises(ValueError, match="predate the current"):
         delete_publish(spark, t, "v = 1")
     # …file-granular deletes still work on the mixed table…
     delete_publish(spark, t, "v = 2", delete_vectors=True)
@@ -916,7 +835,10 @@ def test_partition_evolution_guards(spark, tmp_path):
         spark.createDataFrame([("z", "x", 7)], "k string, d string, v long"),
         t,
     )
-    v = compact_partitions(spark, t, values=["x"], min_files=1)
-    assert v is not None
+    replace_partitions_publish(
+        spark.createDataFrame([("a", "x", 1), ("z", "x", 7)],
+                              "k string, d string, v long"),
+        t, values=["x"],
+    )
     got = sorted((r["k"], r["v"]) for r in read_published(spark, t).collect())
     assert got == [("a", 1), ("z", 7)]

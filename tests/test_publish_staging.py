@@ -288,32 +288,6 @@ def _case_dv_delete_rewritten(spark, d, monkeypatch):
     )
 
 
-def _case_compact_dv_race(spark, d, monkeypatch):
-    _table(spark, d, 25, files=1)
-    append_publish(
-        spark.range(25, 50).select(
-            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-        ).coalesce(1),
-        d,
-    )
-    # one vector per file, in two sidecar datasets: something to fold
-    delete_publish(spark, d, "k = 1", delete_vectors=True)
-    delete_publish(spark, d, "k = 30", delete_vectors=True)
-    real = P._dv_ds_counts
-    fired = []
-
-    def racing(*a, **kw):
-        if not fired:
-            fired.append(True)
-            delete_publish(spark, d, "k = 3", delete_vectors=True)
-        return real(*a, **kw)
-
-    monkeypatch.setattr(P, "_dv_ds_counts", racing)
-    return P.ConcurrentWriteError, lambda: P.compact_delete_vectors(
-        d, spark=spark
-    )
-
-
 @pytest.mark.parametrize(
     "case",
     [
@@ -324,7 +298,6 @@ def _case_compact_dv_race(spark, d, monkeypatch):
         _case_clone_fault,
         _case_merge_dv_race,
         _case_dv_delete_rewritten,
-        _case_compact_dv_race,
     ],
     ids=lambda c: c.__name__[len("_case_"):],
 )
