@@ -4,7 +4,7 @@
 ROUND ?= 0
 SF ?= sf0.01
 
-.PHONY: close-round test bench-test ab
+.PHONY: close-round test bench-test ab examples
 close-round:
 	python tools/close_round.py $(ROUND) --sf $(SF)
 
@@ -24,3 +24,7 @@ WORKLOAD ?= nested_ingest
 SEEDS ?= 501-510
 ab:
 	python3 tools/ab_perfbench.py --base $(BASE) --workload $(WORKLOAD) --seeds $(SEEDS)
+
+# run every demo in examples/, stopping at the first that fails
+examples:
+	set -e; for f in examples/*.py; do echo "== $$f"; python $$f; done

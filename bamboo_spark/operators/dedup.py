@@ -379,20 +379,6 @@ def _minhash_aggs(num_hashes: int) -> list:
     ]
 
 
-def minhash_signatures(df: DataFrame, num_hashes: int = 128, k: int = 3) -> DataFrame:
-    """One row per doc with `num_hashes` minhash values.
-
-    Implementation: explode distinct shingles once, then `num_hashes`
-    map-side-combined min() aggregates — a single shuffle keyed by
-    doc_id, no repeated array traversals.
-    """
-    return (
-        _minhash_base(_hashed_sets(df, k))
-        .groupBy("doc_id")
-        .agg(*_minhash_aggs(num_hashes))
-    )
-
-
 def _band_rows(sig: DataFrame, num_hashes: int, rows_per_band: int) -> DataFrame:
     """(doc_id, band, h): one row per (doc, band) with the band's lane
     values hashed together — the LSH bucket key."""
@@ -420,9 +406,9 @@ def build_band_index(
     k: int = 3,
 ) -> DataFrame:
     """(doc_id, band, h) MinHash band index for a corpus — the stored
-    side of incremental near-dup ingestion. Persist it bucketed by
-    (band, h) (``scale.write_bucketed``) so every ingest batch's
-    candidate probe is a bucket-local join with no index shuffle."""
+    side of incremental near-dup ingestion. Persist it (plain parquet)
+    and pass it back as ``minhash_incremental(index=)``, so an ingest
+    batch computes signatures for its own docs only."""
     hsets = _hashed_sets(df, k)
     sig = _minhash_base(hsets).groupBy("doc_id").agg(*_minhash_aggs(num_hashes))
     return _band_rows(sig, num_hashes, rows_per_band)
@@ -441,8 +427,8 @@ def minhash_incremental(
     split_id``) checked against the already-ingested corpus's MinHash
     band index (``doc_id < split_id``) — the append-only twin of
     ``minhash_lsh_pairs`` (which re-pairs the whole corpus). In
-    production the old side IS the stored band table (bucketed by
-    (band, h)); every ingest batch computes signatures for its own docs
+    production the old side IS the stored band table; every ingest
+    batch computes signatures for its own docs
     only, joins the index for candidates, exact-verifies, and appends
     its bands back. Cost per batch: O(batch) signatures + an index
     probe — never a corpus re-scan.
@@ -452,7 +438,7 @@ def minhash_incremental(
     Jaccard, ties → lowest id).
 
     ``index``: a pre-built/loaded band index for the ingested side
-    (``build_band_index``, persisted bucketed by (band, h)); when
+    (``build_band_index``, persisted as parquet); when
     given, only the NEW batch's signatures are computed and the old
     side is the stored table — the true production shape. Exact verify
     still reads both sides' shingle sets from ``df``.

@@ -465,7 +465,7 @@ def current_version(
 _FORMAT_VERSION = 1  # manifest protocol this reader/writer speaks
 # format-1 keys of removed features: a table that still uses one is
 # refused rather than read without them
-_REMOVED_KEYS = ("tags", "branches", "constraints")
+_REMOVED_KEYS = ("tags", "branches", "constraints", "retention")
 
 
 class UnsupportedFormatError(RuntimeError):
@@ -473,10 +473,11 @@ class UnsupportedFormatError(RuntimeError):
     beats silently misreading. Two directions: a NEWER protocol (a
     higher ``format_version`` may rely on features, e.g. a new delete
     encoding, whose absence from this reader's resolution would return
-    WRONG rows), and an OLDER shape no writer produces any more (keys
-    of removed features, pre-history or inline-file manifests, entries
+    WRONG rows), and an OLDER shape no writer produces any more: keys
+    of removed features (tags, branches, CHECK constraints, a stored
+    retention policy), pre-history or inline-file manifests, entries
     without field ids or file/byte counters, unstamped segments,
-    position-list or row-per-position delete vectors). The table has
+    position-list or row-per-position delete vectors. The table has
     ONE on-disk format:
     segmented snapshot entries carrying ``field_ids``, segments stamped
     with their field names, and bitmap delete-vector sidecars."""
@@ -505,10 +506,12 @@ def _read_manifest(table_dir: str, fs) -> Optional[dict]:
     for key in _REMOVED_KEYS:
         if man.get(key):
             raise UnsupportedFormatError(
-                "table at %s carries manifest key %r (tags, branches and "
-                "CHECK constraints are no longer supported); reading it "
-                "would skip its constraints and let vacuum delete the "
-                "files its refs pin" % (table_dir, key)
+                "table at %s carries manifest key %r (tags, branches, "
+                "CHECK constraints and stored retention policies are no "
+                "longer supported); reading it would skip its "
+                "constraints, let vacuum delete the files its refs pin "
+                "or let a bare vacuum ignore its retention policy"
+                % (table_dir, key)
             )
     if not man.get("snapshots"):
         raise _refuse(table_dir, "has a pre-history manifest (no "
@@ -2057,7 +2060,7 @@ def _commit(
     # which reset it — a rewrite leaves nothing to resurrect)
     for k in (
         "field_ids", "next_field_id", "schema_evolved", "retired_names",
-        "index_cols", "retention",
+        "index_cols",
     ):
         if entry.get(k) is None and prev and prev.get(k) is not None:
             entry[k] = prev[k]
@@ -2569,7 +2572,7 @@ def describe_table(
     Returns ``{"version", "committed_at_ms", "operation", "n_rows",
     "n_files", "size_bytes", "partition_by", "partition_spec"
     (hidden-partitioning transforms), "schema" (DDL string),
-    "schema_evolved", "retired_names", "index_cols", "retention",
+    "schema_evolved", "retired_names", "index_cols",
     "meta", "dv_files" (files carrying
     delete vectors), "dv_rows" (masked row count), "n_snapshots",
     "external_refs" (shallow-clone refs), "format_version"}``."""
@@ -2597,7 +2600,6 @@ def describe_table(
         "schema_evolved": bool(m.get("schema_evolved")),
         "retired_names": list(m.get("retired_names") or []),
         "index_cols": dict(m.get("index_cols") or {}),
-        "retention": dict(m.get("retention") or {}),
         "meta": dict(m.get("meta") or {}),
         "dv_files": sum(1 for v in dvmap.values() if _dv_val_n(v)),
         "dv_rows": _dv_nrows(dvmap),
@@ -3682,7 +3684,7 @@ def _metadata_commit(
     """Commit a PURE-METADATA snapshot: every segment carried by
     reference, counters unchanged. ``mutate(manifest) -> extra`` runs
     INSIDE the commit lease against the freshly re-read manifest —
-    single-key mutations of shared dicts (retention, index columns) apply to
+    single-key mutations of shared dicts (the index columns) apply to
     the state another writer may have just committed, instead of
     last-writer-winning a dict computed from a stale read. The lease is
     WAITED for (these commits are milliseconds): concurrent metadata
@@ -3776,103 +3778,6 @@ def set_index_columns(
     )
 
 
-def set_retention(
-    table_dir: str,
-    keep: Optional[int] = None,
-    older_than_ms: Optional[int] = None,
-    spark: Optional[SparkSession] = None,
-    lease_ttl_ms: int = 300_000,
-) -> int:
-    """Persist the table's RETENTION POLICY — the ``keep`` snapshot
-    count and/or ``older_than_ms`` time horizon a bare :func:`vacuum`
-    call applies (Delta's deletedFileRetentionDuration /
-    logRetentionDuration as table properties): the policy lives with
-    the table, so every maintenance caller — a scheduled
-    ``vacuum(t)``, an operator who doesn't know this table's
-    compliance rules — enforces the same horizon instead of each
-    passing (or forgetting) its own. Explicit vacuum args still
-    override per-call. ``None`` leaves a side unchanged; a metadata
-    commit like every property change.
-
-    Compliance shape: ``set_retention(t, keep=1,
-    older_than_ms=7*86400_000)`` = "current plus a week of undo" —
-    after that, `vacuum(t)` everywhere honors it."""
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    fs = _fs_for(table_dir, spark)
-    if _read_manifest(table_dir, fs) is None:
-        raise ValueError("set_retention: no committed table here")
-    if keep is not None and int(keep) < 0:
-        raise ValueError("set_retention: keep must be >= 0")
-
-    def _mutate(fresh: dict) -> dict:
-        cur = dict(fresh.get("retention") or {})
-        if keep is not None:
-            cur["keep"] = int(keep)
-        if older_than_ms is not None:
-            cur["older_than_ms"] = int(older_than_ms)
-        return {"retention": cur}
-
-    return _metadata_commit(
-        table_dir, spark, lease_ttl_ms, "set_retention", _mutate
-    )
-
-
-def restore_table(
-    table_dir: str,
-    version: int,
-    spark: Optional[SparkSession] = None,
-    lease_ttl_ms: int = 300_000,
-) -> int:
-    """RESTORE (rollback-by-commit): publish a NEW version whose
-    content is exactly retained snapshot ``version`` — history moves
-    only forward (the bad versions stay readable for the post-mortem
-    until ``vacuum``), and with a segmented manifest the restore is
-    PURE METADATA: the new entry re-cites the old snapshot's segments
-    by reference, no data moves at any table size. The undo button for
-    a bad merge/delete/compaction."""
-    fs = _fs_for(table_dir, spark)
-    with _Lease(fs, table_dir, ttl_ms=lease_ttl_ms).acquire_wait(
-        wait_ms=_COMMIT_WAIT_MS
-    ) as lease:
-        manifest = _read_manifest(table_dir, fs)
-        if manifest is None:
-            raise ValueError("restore_table: no committed table here")
-        snaps = manifest.get("snapshots", {})
-        if str(version) not in snaps:
-            raise KeyError(
-                "version %s is not a retained snapshot (have: %s)"
-                % (version, sorted(int(v) for v in snaps))
-            )
-        src = snaps[str(version)]
-        entry = {
-            k: src[k]
-            for k in (
-                "segments", "removed", "n_rows", "n_files", "size_bytes",
-                "schema", "partition_by", "partition_spec", "dv",
-                "dv_rows",
-            )
-            if src.get(k) is not None
-        }
-        # the restored snapshot's SCHEMA-EVOLUTION state rides with its
-        # schema (its field ids name its columns) — set EXPLICITLY so
-        # the _commit carry can't graft the abandoned head's ids onto
-        # the restored schema; next_field_id stays table-lifetime-max
-        # so ids are never reused across divergent histories.
-        # retired_names keeps its current, widest value (carried).
-        fids, src_nxt = _field_ids_of(src)
-        entry["field_ids"] = fids
-        entry["next_field_id"] = max(
-            src_nxt, _field_ids_of(manifest)[1]
-        )
-        entry["schema_evolved"] = bool(src.get("schema_evolved", False))
-        entry["restored_from"] = int(version)
-        entry["operation"] = "restore"
-        new_version = int(manifest["version"]) + 1
-        _commit(fs, table_dir, manifest, new_version, entry, lease=lease)
-        return new_version
-
-
 def clone_table(
     spark: SparkSession,
     src_dir: str,
@@ -3940,13 +3845,11 @@ def clone_table(
     }
     # schema-evolution state forks with the snapshot: the clone's reads
     # resolve renamed/dropped columns exactly as the source's. Layout
-    # (partition_spec) and table properties (index_cols, retention —
-    # Delta CLONE copies table properties) ride along: a clone that
-    # silently dropped the retention policy would give a bare vacuum on
-    # it the default horizon instead of the declared compliance one.
+    # (partition_spec) and the index spec (index_cols — Delta CLONE
+    # copies table properties) ride along.
     for k in (
         "field_ids", "next_field_id", "schema_evolved", "retired_names",
-        "index_cols", "partition_spec", "retention",
+        "index_cols", "partition_spec",
     ):
         if entry.get(k) is not None:
             new_entry[k] = entry[k]
@@ -3997,7 +3900,7 @@ def read_appends(
 
     With a segmented manifest this is exact metadata algebra: appended
     rows = the files in ``to``'s segments that are not in ``from``'s
-    live set. Compaction/restore versions re-cite existing ROWS in new
+    live set. Compaction versions re-cite existing ROWS in new
     files; their rewritten files are excluded when the snapshot's
     counters show no row growth (pure-rewrite commits contribute
     nothing). Raises if ``from_version`` is no longer retained —
@@ -4763,10 +4666,9 @@ def table_history(
     ``DESCRIBE HISTORY`` shape (Delta Lake's table history, reduced to
     the manifest's own facts): one row per RETAINED snapshot with the
     commit's version, wall-clock timestamp, operation label
-    (append/overwrite/merge/compact/delete/restore/...), row/file/byte
-    counters, whether the commit changed data (``data_change=False``
-    marks pure rewrites incremental readers skip), and the restore
-    source when the commit was a rollback. Pure metadata — one manifest
+    (append/overwrite/merge/compact/delete/...), row/file/byte
+    counters and whether the commit changed data (``data_change=False``
+    marks pure rewrites incremental readers skip). Pure metadata — one manifest
     read, no data IO at any table size; ``vacuum`` prunes history rows
     together with the snapshots they describe.
 
@@ -4792,11 +4694,6 @@ def table_history(
                 "n_files": int(e["n_files"]),
                 "size_bytes": int(e["size_bytes"]),
                 "data_change": bool(e.get("data_change", True)),
-                "restored_from": (
-                    int(e["restored_from"])
-                    if e.get("restored_from") is not None
-                    else None
-                ),
                 "is_current": int(v) == cur,
             }
         )
@@ -4811,7 +4708,6 @@ def table_history(
             T.StructField("n_files", T.LongType(), False),
             T.StructField("size_bytes", T.LongType(), False),
             T.StructField("data_change", T.BooleanType(), False),
-            T.StructField("restored_from", T.LongType(), True),
             T.StructField("is_current", T.BooleanType(), False),
         ]
     )
@@ -4828,7 +4724,7 @@ def published_rows(
 
 def vacuum(
     table_dir: str,
-    keep: Optional[int] = None,
+    keep: int = 2,
     spark: Optional[SparkSession] = None,
     lease_ttl_ms: int = 300_000,
     older_than_ms: Optional[int] = None,
@@ -4859,13 +4755,7 @@ def vacuum(
 
     ``dry_run=True`` reports the directories this call WOULD remove —
     history prune simulated, nothing written or deleted — so a
-    retention change can be reviewed before the bytes go.
-
-    ``keep``/``older_than_ms`` default from the table's persisted
-    retention policy (:func:`set_retention`) when unset — a bare
-    ``vacuum(t)`` enforces the policy the table owner declared; with
-    no policy either, ``keep`` falls back to 2. Explicit args always
-    win."""
+    retention change can be reviewed before the bytes go."""
     fs = _fs_for(table_dir, spark)
     # the manifest rewrite (history prune) is a table mutation like any
     # other: without the lease, a publish committing between our read
@@ -4877,11 +4767,6 @@ def vacuum(
         manifest = _read_manifest(table_dir, fs)
         if manifest is None:
             return []
-        policy = manifest.get("retention") or {}
-        if keep is None:
-            keep = int(policy.get("keep", 2))
-        if older_than_ms is None and policy.get("older_than_ms") is not None:
-            older_than_ms = int(policy["older_than_ms"])
         committed = int(manifest["version"])
         snaps = manifest.get("snapshots") or {}
         by_v = sorted(int(v) for v in snaps)
@@ -4994,7 +4879,7 @@ def fsck_table(
     unreferenced ``_v<N>`` dir as in-flight (fresh claim — an
     optimistic writer staging) or orphan (vacuum candidate); and lists
     stray claim markers. Nothing is mutated — repair is ``vacuum``'s
-    job (orphans) or ``restore_table``'s (bad head).
+    job (orphans).
 
     Returns ``{"ok": bool, "version": int, "snapshots_checked": int,
     "files_checked": int, "missing_files": [...], "hidden_files": [...],
@@ -5191,7 +5076,7 @@ def compact(
     external files are copied in; and the new files get stats and
     blooms at write time from the persisted ``index_cols``, so
     ``set_index_columns`` followed by ``compact`` is the index
-    backfill. ``meta``, ``index_cols`` and ``retention`` carry forward.
+    backfill. ``meta`` and ``index_cols`` carry forward.
 
     Sizing at scale: a fixed file count is wrong in both directions —
     1 file funnels a large snapshot through ONE task (a single-task

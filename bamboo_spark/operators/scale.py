@@ -1,10 +1,10 @@
-"""Scale utilities: skew-salted joins and partitioned parquet sinks.
+"""Scale utilities: scan fan-out, per-key heads, partitioned parquet
+sinks, snapshot diffs and z-order keys.
 
 These are the knobs a 100 TB deployment reaches for when AQE's
-automatic handling isn't enough: AQE skew-join splits oversized
-*partitions* after the shuffle, but a single pathological key still
-lands every row on one reducer — salting spreads one key across
-``salt`` reducers at the cost of replicating the other side.
+automatic handling isn't enough: a scan with too few splits runs its
+whole stage on one core, and a window over one pathological key lands
+every row on one reducer.
 """
 
 from __future__ import annotations
@@ -16,8 +16,6 @@ from typing import List, Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from bamboo_spark.operators._cache import tracked_persist
-
-SALT = "__bamboo_salt"
 
 
 def fan_out(
@@ -216,72 +214,6 @@ def hash_head_prefilter(
         .where(F.col("_cut").isNull() | (F.col("_bkt") <= F.col("_cut")))
         .drop("_bkt", "_cut")
     )
-
-
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: Union[str, Sequence[str]],
-    salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join resilient to hot keys on the ``skewed`` side.
-
-    Each skewed-side row gets a deterministic salt in [0, salt) derived
-    from a whole-row hash (so one hot key fans out over ``salt``
-    reducers), and ``other`` is replicated ``salt`` times with every
-    salt value. The join keys become (key..., salt), then the salt
-    column is dropped — result rows are identical to the unsalted join.
-
-    Cost model: shuffle volume grows by (salt × |other|); pick
-    ``salt`` ≈ (hot-key row count) / (target rows per reducer) and keep
-    ``other`` the smaller side. For broadcast-able ``other`` prefer
-    ``F.broadcast`` — salting is for the mid-size case where neither
-    broadcast nor AQE saves you.
-    """
-    keys: List[str] = [on] if isinstance(on, str) else list(on)
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left; got %r" % how)
-    salted = skewed.withColumn(
-        SALT, F.pmod(F.xxhash64(*[F.col(c) for c in skewed.columns]), F.lit(salt))
-    )
-    replicated = other.withColumn(
-        SALT, F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    )
-    out = salted.join(replicated, keys + [SALT], how)
-    return out.drop(SALT)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_by: Union[str, Sequence[str]],
-    num_buckets: int = 32,
-    sort_by: Optional[Union[str, Sequence[str]]] = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Bucketed managed-table sink — the co-located-join primitive.
-
-    Both sides of a recurring big join written with the SAME
-    (bucket_by, num_buckets) hash-partition their data at WRITE time;
-    a later join on the bucket keys then reads bucket i against bucket
-    i directly — NO Exchange on either side at read time (the shuffle
-    was paid once, at ingest). ``sort_by`` additionally orders rows
-    within each bucket so the join can sort-merge without sorting.
-    tests/test_scale.py pins the exchange-free plan.
-
-    Bucketing goes through the catalog (``saveAsTable``): bucket
-    metadata lives in the table definition, which is what lets the
-    planner trust the layout. Pick num_buckets so one bucket of the
-    BIGGER table fits an executor core's working set (~100-500 MB).
-    """
-    keys: List[str] = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by)
-    w = df.write.format(fmt).mode(mode).bucketBy(num_buckets, *keys)
-    if sort_by is not None:
-        sorts: List[str] = [sort_by] if isinstance(sort_by, str) else list(sort_by)
-        w = w.sortBy(*sorts)
-    w.saveAsTable(table)
 
 
 def write_partitioned(
@@ -621,104 +553,6 @@ def zorder_key_duck(
             "for i in range(0, {b})])".format(q=q, n=n, ci=ci, b=bits)
         )
     return "(" + " + ".join(terms) + ")"
-
-
-def suggest_shuffle_partitions(
-    df: DataFrame,
-    target_partition_bytes: int = 128 << 20,
-    sample_rows: int = 1000,
-    row_count: Optional[int] = None,
-) -> int:
-    """Estimate the shuffle-partition count that lands post-shuffle
-    partitions near ``target_partition_bytes`` — the knob
-    (`spark.sql.shuffle.partitions` / a pre-write `repartition(n)`)
-    every deployment sizes by hand today.
-
-    Method: sample ``sample_rows`` rows, measure their Tungsten-ish
-    footprint via the serialized-plan row size (here: the sum of
-    column in-memory widths from the schema plus measured
-    variable-width bytes), multiply by the row count (one `count()` if
-    not supplied), divide by the target. Driver traffic is the sample
-    only; the count is a metadata-cheap aggregate.
-
-    The estimate is a STARTING point — AQE's coalescing still adapts at
-    runtime; this sets the upper bound high enough that no partition
-    exceeds executor memory on the first attempt (the failure AQE
-    cannot fix after the fact)."""
-    from pyspark.sql import types as T
-
-    n = row_count if row_count is not None else df.count()
-    if n == 0:
-        return 1
-    sample = df.limit(sample_rows).collect()
-    if not sample:
-        return 1
-
-    fixed = 0
-    var_cols = []
-    for f in df.schema.fields:
-        t = f.dataType
-        if isinstance(t, (T.LongType, T.DoubleType, T.TimestampType,
-                          T.TimestampNTZType, T.DateType)):
-            fixed += 8
-        elif isinstance(t, (T.IntegerType, T.FloatType)):
-            fixed += 4
-        elif isinstance(t, (T.ShortType,)):
-            fixed += 2
-        elif isinstance(t, (T.BooleanType, T.ByteType)):
-            fixed += 1
-        else:
-            var_cols.append(f.name)
-    var = 0
-    if var_cols:
-        for r in sample:
-            for c in var_cols:
-                v = r[c]
-                if v is None:
-                    continue
-                if isinstance(v, str):
-                    var += len(v.encode("utf-8"))
-                elif isinstance(v, (bytes, bytearray)):
-                    var += len(v)
-                elif isinstance(v, (list, tuple)):
-                    var += 8 * len(v) + 16
-                else:
-                    var += 16
-    per_row = fixed + (var / len(sample) if sample else 0) + 8  # row overhead
-    total = per_row * n
-    import math as _math
-
-    return max(1, int(_math.ceil(total / float(target_partition_bytes))))
-
-
-def suggest_salt(
-    df: DataFrame,
-    key_cols,
-    target_rows_per_task: int = 5_000_000,
-    top_n: int = 20,
-) -> "List[tuple]":
-    """Skew diagnosis for a planned join/agg key: per hot key, the row
-    count and the salt factor that would spread it to
-    ``target_rows_per_task``-sized tasks. Returns [(key..., n_rows,
-    salt)] for the ``top_n`` heaviest keys with salt > 1 — feed the max
-    into :func:`salted_join`, or keep AQE if the list comes back empty.
-
-    One map-combined count aggregate + a partial top-k; driver traffic
-    is ``top_n`` rows."""
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    counts = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), *[F.col(k).asc() for k in keys])
-        .limit(top_n)
-    )
-    out = []
-    for r in counts.collect():
-        n = r["n"]
-        salt = -(-n // target_rows_per_task)  # ceil
-        if salt > 1:
-            out.append(tuple(r[k] for k in keys) + (n, int(salt)))
-    return out
 
 
 def sharded_prefix_sums(

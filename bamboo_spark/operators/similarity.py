@@ -7,7 +7,7 @@ the result bit-identical to the DuckDB oracle's ``list_dot_product`` on
 absorbs any platform ulp noise.
 
 Scale paths:
-* ``cosine_pairs`` / ``topk_neighbors``: exact. The pairwise join is
+* ``cosine_pairs_gemm`` / ``topk_neighbors``: exact. The pairwise join is
   O(n²) — right for modest candidate sets (post-LSH verify, dedup within
   a bucket) or a broadcast-able query side. For the all-pairs case at
   scale use ``hyperplane_buckets`` first.
@@ -46,24 +46,6 @@ def _dot_expr(a: str, b: str) -> F.Column:
 
 def with_norm(df: DataFrame, vec: str = "embedding") -> DataFrame:
     return df.withColumn("_norm", _norm_expr(vec))
-
-
-def cosine_pairs(
-    df: DataFrame, threshold: float = 0.4, id_col: str = "vec_id", vec: str = "embedding"
-) -> DataFrame:
-    """Exact all-pairs cosine ≥ threshold (doc_a < doc_b)."""
-    e = with_norm(df.select(id_col, vec))
-    a = e.select(
-        F.col(id_col).alias("id_a"), F.col(vec).alias("va"), F.col("_norm").alias("na")
-    )
-    b = e.select(
-        F.col(id_col).alias("id_b"), F.col(vec).alias("vb"), F.col("_norm").alias("nb")
-    )
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    cos = F.round(_dot_expr("va", "vb") / (F.col("na") * F.col("nb")), 6)
-    return pairs.select("id_a", "id_b", cos.alias("cosine")).where(
-        F.col("cosine") >= threshold
-    )
 
 
 def cosine_pairs_duck(threshold: float = 0.4) -> str:
@@ -824,59 +806,6 @@ def kmeans_train(
             )
         c_mat = new_mat
     return c_mat
-
-
-def save_centroids(spark, centroids: "np.ndarray", path: str) -> None:
-    """Persist a trained quantizer as a (cid, pos, val) parquet table —
-    the build-once-probe-many deployment shape: train on one corpus
-    snapshot, then every ingest/query job loads the frozen index and
-    assigns against it (no retrain, stable bucket ids across runs)."""
-    cm = np.asarray(centroids, dtype=np.float64)
-    rows = [
-        (int(c), int(p), float(cm[c, p]))
-        for c in range(cm.shape[0])
-        for p in range(cm.shape[1])
-    ]
-    _local_df(spark, rows, "cid int, pos int, val double").write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def load_centroids(spark, path: str) -> "np.ndarray":
-    rows = spark.read.parquet(path).collect()
-    k = max(r["cid"] for r in rows) + 1
-    dim = max(r["pos"] for r in rows) + 1
-    cm = np.zeros((k, dim), dtype=np.float64)
-    for r in rows:
-        cm[r["cid"], r["pos"]] = r["val"]
-    return cm
-
-
-def save_codebooks(spark, codebooks: list, path: str) -> None:
-    """Persist trained PQ codebooks as one (sub, cid, pos, val) parquet
-    table — same build-once-probe-many deployment shape as
-    ``save_centroids``: encode/ADC jobs load the frozen codebooks, so
-    codes stay stable across runs and engines."""
-    rows = [
-        (int(s), int(c), int(p), float(cb[c, p]))
-        for s, cb in enumerate(codebooks)
-        for c in range(cb.shape[0])
-        for p in range(cb.shape[1])
-    ]
-    _local_df(
-        spark, rows, "sub int, cid int, pos int, val double"
-    ).write.mode("overwrite").parquet(path)
-
-
-def load_codebooks(spark, path: str) -> list:
-    rows = spark.read.parquet(path).collect()
-    m = max(r["sub"] for r in rows) + 1
-    k = max(r["cid"] for r in rows) + 1
-    d = max(r["pos"] for r in rows) + 1
-    books = [np.zeros((k, d), dtype=np.float64) for _ in range(m)]
-    for r in rows:
-        books[r["sub"]][r["cid"], r["pos"]] = r["val"]
-    return books
 
 
 def pq_train(
@@ -1695,9 +1624,9 @@ def ivf_pairs(
     from pyspark.sql import types as T
 
     if centroids is None:
-        # build-once-probe-many: pass a persisted quantizer
-        # (save_centroids/load_centroids) to skip the Lloyd jobs;
-        # training is deterministic, so the output is identical
+        # build-once-probe-many: pass a trained quantizer to skip the
+        # Lloyd jobs; training is deterministic, so the output is
+        # identical
         centroids = kmeans_train(df, n_centroids, iterations, id_col, vec)
     assign = ivf_assign(df, centroids, id_col, vec, n_probe=n_probe)
     if bucket_cap is not None:
@@ -2037,8 +1966,7 @@ def near_dup_pairs(
     ``exact=True`` is the escape hatch for the all-pairs O(n²) kernel
     (broadcast GEMM) — the right tool only for modest n or as a
     post-candidate verify. ``centroids`` takes a pre-trained quantizer
-    (see :func:`save_centroids`/:func:`load_centroids`) instead of
-    retraining."""
+    (:func:`kmeans_train`) instead of retraining."""
     if exact:
         return cosine_pairs_gemm(df, threshold, id_col, vec)
     return ivf_pairs(
@@ -2051,27 +1979,6 @@ def near_dup_pairs(
         n_probe=n_probe,
         bucket_cap=bucket_cap,
         centroids=centroids,
-    )
-
-
-def embedding_moments(
-    df: DataFrame, vec: str = "embedding"
-) -> DataFrame:
-    """Per-dimension exact moments of an embedding column: (dim, n, s,
-    ss) over integer micro-units (s, ss carried as double AFTER exact
-    decimal summation — order-independent, overflow-proof). This is the
-    broadcastable baseline profile the drift monitors compare against
-    (batch: q_embedding_drift; streaming: drift_stream)."""
-    exp = df.select(F.posexplode(vec).alias("dim", "v")).select(
-        "dim",
-        F.round(F.col("v").cast("double") * 1e6, 0).cast("long").alias("m"),
-    )
-    return exp.groupBy("dim").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.col("m").cast("decimal(38,0)")).cast("double").alias("s"),
-        F.sum(F.col("m").cast("decimal(38,0)") * F.col("m"))
-        .cast("double")
-        .alias("ss"),
     )
 
 
@@ -2251,126 +2158,3 @@ def pca_project(
     return df.select(
         id_col, F.explode(F.expr("array(%s)" % rows)).alias("r")
     ).select(id_col, "r.pc", "r.val")
-
-
-def publish_ann_index(
-    spark,
-    table_dir: str,
-    centroids: "np.ndarray",
-    codebooks: Optional[list] = None,
-    coded: Optional[DataFrame] = None,
-) -> int:
-    """Version a trained ANN index — coarse centroids, optional PQ
-    codebooks, optional coded corpus — as ONE atomically published
-    table (``operators.publish``): an ingest or query fleet loads a
-    consistent (centroids, codebooks, codes) triple by construction
-    because all three components ride the same manifest commit, and a
-    retrain is just the next version (readers mid-flight keep the old
-    snapshot; time travel audits exactly which index scored yesterday's
-    batch).
-
-    Layout: one long-format table hive-partitioned by ``component``
-    (``centroid`` / ``codebook`` / ``coded``), so loading the
-    driver-sized model tensors PRUNES to their partitions and never
-    scans the corpus-sized codes. Returns the committed version.
-
-    Scale: the model rows are k·dim + m·k·(dim/m) = 2·k·dim — driver-
-    sized by the √n IVF sizing; only ``coded`` is corpus-sized and it
-    stays a distributed write. Republish cost is therefore one codes
-    rewrite, which a retrain requires anyway (codes change with the
-    codebooks)."""
-    from pyspark.sql import functions as FN
-
-    from bamboo_spark.operators.publish import atomic_publish
-
-    cm = np.asarray(centroids, dtype=np.float64)
-    rows = [
-        ("centroid", -1, int(c), int(p), float(cm[c, p]))
-        for c in range(cm.shape[0])
-        for p in range(cm.shape[1])
-    ]
-    for s, cb in enumerate(codebooks or []):
-        cb = np.asarray(cb, dtype=np.float64)
-        rows.extend(
-            ("codebook", int(s), int(c), int(p), float(cb[c, p]))
-            for c in range(cb.shape[0])
-            for p in range(cb.shape[1])
-        )
-    model = _local_df(
-        spark, rows, "component string, sub int, cid int, pos int, val double"
-    ).select(
-        "component",
-        "sub",
-        "cid",
-        "pos",
-        "val",
-        FN.lit(None).cast("long").alias("vec_id"),
-        FN.lit(None).cast("long").alias("bucket"),
-        FN.lit(None).cast("array<int>").alias("codes"),
-    )
-    full = model
-    if coded is not None:
-        cd = coded.select(
-            FN.lit("coded").alias("component"),
-            FN.lit(None).cast("int").alias("sub"),
-            FN.lit(None).cast("int").alias("cid"),
-            FN.lit(None).cast("int").alias("pos"),
-            FN.lit(None).cast("double").alias("val"),
-            FN.col("vec_id").cast("long").alias("vec_id"),
-            (
-                FN.col("bucket").cast("long")
-                if "bucket" in coded.columns
-                else FN.lit(None).cast("long")
-            ).alias("bucket"),
-            (
-                FN.col("codes").cast("array<int>")
-                if "codes" in coded.columns
-                else FN.lit(None).cast("array<int>")
-            ).alias("codes"),
-        )
-        full = model.unionByName(cd)
-    return atomic_publish(full, table_dir, partition_by="component")
-
-
-def load_ann_index(
-    spark, table_dir: str, version: Optional[int] = None
-) -> dict:
-    """Load a :func:`publish_ann_index` snapshot (latest, or any
-    retained ``version``): ``{"centroids": ndarray, "codebooks":
-    list[ndarray] | None, "coded": DataFrame | None, "version": int}``.
-    The model tensors collect from their pruned hive partitions
-    (driver-sized); ``coded`` stays a lazy DataFrame with columns
-    (vec_id, bucket, codes)."""
-    from bamboo_spark.operators.publish import current_version, read_published
-
-    snap = read_published(spark, table_dir, version=version)
-    cent_rows = snap.where("component = 'centroid'").select(
-        "cid", "pos", "val"
-    ).collect()
-    k = max(r["cid"] for r in cent_rows) + 1
-    dim = max(r["pos"] for r in cent_rows) + 1
-    cm = np.zeros((k, dim), dtype=np.float64)
-    for r in cent_rows:
-        cm[r["cid"], r["pos"]] = r["val"]
-    cb_rows = snap.where("component = 'codebook'").select(
-        "sub", "cid", "pos", "val"
-    ).collect()
-    books = None
-    if cb_rows:
-        m = max(r["sub"] for r in cb_rows) + 1
-        kk = max(r["cid"] for r in cb_rows) + 1
-        d = max(r["pos"] for r in cb_rows) + 1
-        books = [np.zeros((kk, d), dtype=np.float64) for _ in range(m)]
-        for r in cb_rows:
-            books[r["sub"]][r["cid"], r["pos"]] = r["val"]
-    coded = snap.where("component = 'coded'").select(
-        "vec_id", "bucket", "codes"
-    )
-    has_coded = coded.limit(1).count() > 0
-    return {
-        "centroids": cm,
-        "codebooks": books,
-        "coded": coded if has_coded else None,
-        "version": int(version) if version is not None
-        else current_version(table_dir, spark),
-    }

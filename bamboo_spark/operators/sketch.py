@@ -66,7 +66,7 @@ def cms_build(
     Null and empty-string items are dropped — the SAME rule as the
     streaming ``cms_stream`` — so a batch grid and a stream-replay grid
     of the same corpus are unconditionally equal cell-for-cell and safe
-    to ``cms_merge`` without callers having to pre-filter.
+    to merge (cell-wise sum) without callers having to pre-filter.
 
     Scale shape: pre-aggregate occurrences to DISTINCT items first (a
     wordcount-shaped shuffle, map-combined so a hot item leaves each
@@ -104,21 +104,6 @@ def cms_build(
         .groupBy("hash_row", "bucket")
         .agg(F.sum("_w").alias("n"))
         .select(F.col("hash_row").cast("int"), "bucket", F.col("n").cast("bigint"))
-    )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge sketches built with the SAME (depth, width): cell-wise sum.
-    The result equals the sketch of the concatenated inputs exactly."""
-    if not sketches:
-        raise ValueError("cms_merge needs at least one sketch")
-    acc = sketches[0]
-    for s in sketches[1:]:
-        acc = acc.unionByName(s)
-    return (
-        acc.groupBy("hash_row", "bucket")
-        .agg(F.sum("n").alias("n"))
-        .select("hash_row", "bucket", F.col("n").cast("bigint"))
     )
 
 
@@ -200,17 +185,6 @@ def hll_build(df: DataFrame, item_col: str, p: int = 12) -> DataFrame:
         .groupBy("idx")
         .agg(F.max("rho").cast("int").alias("r"))
     )
-
-
-def hll_merge(*states: DataFrame) -> DataFrame:
-    """Merge register states (same p): cell-wise max — equals the
-    build over the concatenated inputs exactly."""
-    if not states:
-        raise ValueError("hll_merge needs at least one state")
-    acc = states[0]
-    for s in states[1:]:
-        acc = acc.unionByName(s)
-    return acc.groupBy("idx").agg(F.max("r").cast("int").alias("r"))
 
 
 def hll_estimate(state: DataFrame, p: int = 12, out_col: str = "hll_est") -> DataFrame:
@@ -387,7 +361,7 @@ def hll_build_grouped(
     """Per-group HLL registers: (group_cols..., idx, r) with at most
     2^p rows PER GROUP — the distinct-count standing state for a keyed
     dimension (distinct users per source/day/experiment), mergeable per
-    group with :func:`hll_merge_grouped`. Same one-aggregate shape as
+    group by cell-wise max. Same one-aggregate shape as
     the global build; the group key simply joins the grid key."""
     if not 4 <= p <= 18:
         raise ValueError("p must be in [4, 18]")
@@ -400,18 +374,6 @@ def hll_build_grouped(
         .groupBy(*groups, "idx")
         .agg(F.max("rho").cast("int").alias("r"))
     )
-
-
-def hll_merge_grouped(states, group_cols) -> DataFrame:
-    """Merge per-group register states (same p): cell-wise max within
-    each group."""
-    groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    if not states:
-        raise ValueError("hll_merge_grouped needs at least one state")
-    acc = states[0]
-    for s in states[1:]:
-        acc = acc.unionByName(s)
-    return acc.groupBy(*groups, "idx").agg(F.max("r").cast("int").alias("r"))
 
 
 def hll_estimate_grouped(
@@ -440,34 +402,6 @@ def hll_estimate_grouped(
     )
 
 
-def kmv_distinct_estimate(
-    kmv: DataFrame, set_col: str, k: int = 256, out_col: str = "kmv_distinct"
-) -> DataFrame:
-    """Per-set distinct-cardinality estimate from the bottom-k synopsis
-    alone: with hashes uniform on [0, 2^60), the k-th smallest hash
-    h_(k) estimates density — D ≈ (k-1) * 2^60 / h_(k) (the unbiased
-    KMV estimator). Sets whose synopsis holds fewer than k hashes are
-    EXACT (their distinct count is the synopsis size). One max + count
-    aggregate per set over the k-row synopses."""
-    agg = kmv.groupBy(set_col).agg(
-        F.count(F.lit(1)).alias("_n"), F.max("h").alias("_hk")
-    )
-    space = float(1 << _HLL_BITS)
-    return agg.select(
-        set_col,
-        F.when(F.col("_n") < k, F.col("_n").cast("double"))
-        .otherwise(
-            F.round(
-                (F.col("_n").cast("double") - 1.0)
-                * F.lit(space)
-                / F.col("_hk").cast("double"),
-                4,
-            )
-        )
-        .alias(out_col),
-    )
-
-
 # ------------------------------------------------- deterministic samples
 #
 # The quantile/debug twin of KMV: a UNIFORM row sample selected by hash
@@ -490,8 +424,8 @@ def hash_sample(
 ) -> DataFrame:
     """The ``k`` rows with the smallest 60-bit md5 rank of ``id_col``
     (ids must be unique for exact mergeability). Keeps all columns and
-    adds ``rank_col`` so downstream merges can re-trim with
-    ``merge_samples``.
+    adds ``rank_col`` so downstream merges can re-trim: bottom-k of a
+    union of samples is the sample of the concatenated inputs.
 
     Scale shape: orderBy+limit plans TakeOrderedAndProject — a k-row
     heap per partition, k rows to the driver merge — never a global
@@ -506,17 +440,6 @@ def hash_sample(
         .orderBy(rank_col, id_col)
         .limit(k)
     )
-
-
-def merge_samples(k: int, *samples: DataFrame, rank_col: str = "_rk") -> DataFrame:
-    """Bottom-k of a union of :func:`hash_sample` outputs == the sample
-    of the concatenated inputs, exactly (the mergeability contract)."""
-    if not samples:
-        raise ValueError("merge_samples needs at least one sample")
-    acc = samples[0]
-    for s in samples[1:]:
-        acc = acc.unionByName(s)
-    return acc.orderBy(rank_col).limit(k)
 
 
 def hash_sample_duck(rows_sql: str, id_sql: str, k: int = 1024) -> str:

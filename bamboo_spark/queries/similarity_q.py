@@ -39,8 +39,7 @@ def ivf_quantizer(spark: SparkSession, sf_dir: str):
     """The shared IVF coarse quantizer for the ANN registry queries
     (default geometry: √n centroids, 2 Lloyd iterations), trained ONCE
     per embeddings table and memoized — the in-session analogue of the
-    production build-once-probe-many shape (``save_centroids`` /
-    ``load_centroids`` is the cross-job version). ``kmeans_train`` is
+    production build-once-probe-many shape. ``kmeans_train`` is
     fully deterministic (hash-ranked init, integer partial sums), so
     reuse is result-invisible: every consumer gets bit-identical
     centroids to a fresh retrain, and the DuckDB oracle's Lloyd replay

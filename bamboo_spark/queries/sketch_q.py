@@ -123,7 +123,7 @@ def q_distinct_hll_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     row (n_exact, hll_est, rel_err). Spark's built-in
     approx_count_distinct answers the one-shot question; this operator
     exists for the cross-job shapes: persisted registers merge with
-    tomorrow's batch by cell-wise max (`sketch.hll_merge`) and estimate
+    tomorrow's batch by cell-wise max and estimate
     any union of slices WITHOUT rescanning them — the distinct-count
     twin of the CMS grid.
 

@@ -795,35 +795,6 @@ def compile_decoder(
     return decode
 
 
-def decode_block(
-    payload: bytes,
-    n: int,
-    codec: str,
-    schema: Any,
-    fltr: Any = None,
-    implicit_root: bool = True,
-) -> List[Any]:
-    """Decode one block's records — the executor-side kernel. A decode
-    task compiles once (``compile_decoder``) and reuses it per block."""
-    decode = compile_decoder(schema, None, fltr, implicit_root)
-    return decode(decompress_block(payload, codec), n)
-
-
-def decode_block_resolved(
-    payload: bytes,
-    n: int,
-    codec: str,
-    writer_schema: Any,
-    reader_schema: Any,
-    fltr: Any = None,
-    implicit_root: bool = True,
-) -> List[Any]:
-    """Executor-side kernel for a block written under an evolved schema."""
-    decode = compile_decoder(reader_schema, writer_schema, fltr, implicit_root)
-    return decode(decompress_block(payload, codec), n)
-
-
-
 def _nullable(schema: Any) -> Any:
     if isinstance(schema, list):
         return schema if "null" in schema else ["null"] + schema

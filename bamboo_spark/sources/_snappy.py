@@ -1,5 +1,4 @@
-"""Pure-Python Snappy block-format codec (decompress + a literal-only
-compressor for tests/writers).
+"""Pure-Python Snappy block-format decompressor.
 
 Implemented from the public Snappy format description
 (https://github.com/google/snappy/blob/main/format_description.txt):
@@ -94,31 +93,4 @@ def snappy_uncompress(data: bytes) -> bytes:
         raise SnappyError(
             "Snappy length mismatch: header %d, decoded %d" % (ulen, len(out))
         )
-    return bytes(out)
-
-
-def snappy_compress(data: bytes) -> bytes:
-    """Literal-only snappy encoding — always valid, never smaller than
-    the input; enough for writing test fixtures without the C library."""
-    out = bytearray()
-    ulen = len(data)
-    while True:
-        b = ulen & 0x7F
-        ulen >>= 7
-        out.append(b | (0x80 if ulen else 0))
-        if not ulen:
-            break
-    pos = 0
-    while pos < len(data):
-        chunk = data[pos : pos + 65536]
-        length = len(chunk) - 1
-        if length < 60:
-            out.append(length << 2)
-        else:
-            out.append(62 << 2)  # 3-byte length follows... 61 → 2 bytes
-            # use the 2-byte form (chunk ≤ 65536 → length ≤ 65535)
-            out[-1] = 61 << 2
-            out += length.to_bytes(2, "little")
-        out += chunk
-        pos += len(chunk)
     return bytes(out)

@@ -1241,8 +1241,8 @@ def drift_stream(
     """Streaming embedding-drift monitor — the streaming twin of the
     batch ``q_embedding_drift``: per event-time window and embedding
     DIMENSION, a Welch z of the window's mean against a static baseline
-    profile (built once with
-    :func:`bamboo_spark.operators.similarity.embedding_moments`).
+    profile: one (dim, n, s, ss) row per dimension, the count, sum and
+    sum of squares of ``round(v * 1e6)`` summed as decimal(38,0).
     The encoder-regression alarm, live at ingest: a silently
     re-versioned encoder trips ``is_drifted`` dimensions within one
     window of arriving.
@@ -1379,7 +1379,7 @@ def cms_stream(
     the exact hash family of the batch ``sketch.cms_build``, so a
     stream replay of a corpus equals the batch sketch cell-for-cell
     (complete/update output), and a snapshot of this stream's output
-    merges with any batch-built sketch via ``sketch.cms_merge`` — the
+    merges with any batch-built sketch by cell-wise sum — the
     continuous-ingest frequency monitor over yesterday's stored grid.
 
     Stateless per-row work (explode to depth rows + one md5 bucket
@@ -1413,7 +1413,7 @@ def hll_stream(
     register cells (state cannot grow past that; no watermark needed).
     Same hash family as the batch ``sketch.hll_build``, so a stream
     replay equals the batch registers cell-for-cell and a snapshot
-    merges with stored batch registers via ``sketch.hll_merge`` —
+    merges with stored batch registers by cell-wise max —
     "distinct users ever" maintained incrementally, without a distinct
     over history."""
     from bamboo_spark.operators.sketch import _hll_parts
@@ -1534,8 +1534,8 @@ def sample_stream(
     seen SO FAR, emitted as a full snapshot each micro-batch (update
     mode). Because membership is a pure function of the id set, a
     stream replay of a corpus ends on EXACTLY the batch sample, and the
-    snapshot merges with stored batch samples via
-    ``sketch.merge_samples`` — the standing uniform sample a quantile/
+    snapshot merges with stored batch samples (bottom-k of the union)
+    — the standing uniform sample a quantile/
     debug monitor reads without ever rescanning the stream.
 
     State is k (rank, id[, payload]) triples — bounded by construction,

@@ -56,15 +56,10 @@ def main() -> None:
         recall = len(got & exact) / float(len(exact))
         print("%-16s %8.3f %8.2f" % (name, recall, dt))
 
-    # the frozen-index deployment shape: train once, persist, reload
-    import tempfile
-
+    # the frozen-index deployment shape: train once, encode many times
     books = similarity.pq_train(e, m=8, n_codes=16)
-    path = os.path.join(tempfile.mkdtemp(), "codebooks")
-    similarity.save_codebooks(spark, books, path)
-    reloaded = similarity.load_codebooks(spark, path)
-    n_codes = similarity.pq_encode(e, reloaded).count()
-    print("frozen codebooks -> %s (%d vectors encoded on reload)" % (path, n_codes))
+    n_codes = similarity.pq_encode(e, books).count()
+    print("frozen codebooks: %d vectors encoded" % n_codes)
 
 
 if __name__ == "__main__":

@@ -45,7 +45,12 @@ def main() -> None:
         toks.where(F.crc32("t") % 2 == i) for i in (0, 1)
     ]
     grids = [sketch.cms_build(h, "t", depth=4, width=2048) for h in halves]
-    merged = sketch.cms_merge(*grids)
+    # merge = cell-wise sum of grids built with the same depth/width
+    merged = (
+        grids[0].unionByName(grids[1])
+        .groupBy("hash_row", "bucket")
+        .agg(F.sum("n").alias("n"))
+    )
     print("merged CMS cells:", merged.count())
     regs = sketch.hll_build(d.select("doc_id"), "doc_id", p=10)
     est = sketch.hll_estimate(regs, p=10).collect()[0].hll_est

@@ -137,7 +137,6 @@ def main() -> None:
 
     # --- CDC materializer + fuzzy-key ingest guard + drift monitor ----
     from bamboo_spark.streaming import cdc_upsert_stream, drift_stream, linkage_stream
-    from bamboo_spark.operators.similarity import embedding_moments
 
     from bamboo_spark import queries as _q
 
@@ -188,7 +187,18 @@ def main() -> None:
         q7.stop()
 
     emb = spark.read.parquet("%s/embeddings.parquet" % sf_dir)
-    base = embedding_moments(emb.where(F.col("vec_id") % 2 == 0))
+    # baseline profile: per-dimension exact moments of the µ-units
+    m = F.round(F.col("v").cast("double") * 1e6, 0).cast("long")
+    base = (
+        emb.where(F.col("vec_id") % 2 == 0)
+        .select(F.posexplode("embedding").alias("dim", "v"))
+        .groupBy("dim")
+        .agg(
+            F.count(F.lit(1)).cast("double").alias("n"),
+            F.sum(m.cast("decimal(38,0)")).cast("double").alias("s"),
+            F.sum(m.cast("decimal(38,0)") * m).cast("double").alias("ss"),
+        )
+    )
     emb_dir = os.path.join(tempfile.mkdtemp(), "emb")
     (
         emb.where(F.col("vec_id") % 2 == 1)

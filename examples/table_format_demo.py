@@ -15,7 +15,7 @@ Walks one table through the protocol end to end:
 5. maintenance: ``set_index_columns`` + ``compact`` (one byte-sized
    rewrite that indexes every file from the table's index spec) +
    ``vacuum``
-6. time travel + ``restore_table`` (metadata-only rollback)
+6. time travel (read any retained snapshot)
 7. the table as a Spark DATA SOURCE: batch read, opt-in pushdown, and
    the version-offset streaming source delivering exactly the appended
    rows per micro-batch
@@ -43,7 +43,6 @@ from bamboo_spark.operators.publish import (  # noqa: E402
     delete_publish,
     live_files,
     read_published,
-    restore_table,
     set_index_columns,
     snapshots,
     table_meta,
@@ -132,10 +131,10 @@ def main() -> None:
         )
     )
 
-    # 6. time travel + restore
+    # 6. time travel
     print("snapshots:", [(s["version"], s["n_rows"]) for s in snapshots(t, spark)])
-    v = restore_table(t, snapshots(t, spark)[0]["version"], spark)
-    print("restored as v%d -> rows=%d" % (v, read_published(spark, t).count()))
+    v = snapshots(t, spark)[0]["version"]
+    print("v%d -> rows=%d" % (v, read_published(spark, t, version=v).count()))
 
     # 7. data source
     b = spark.read.format("bamboo_published").load(t)
@@ -288,24 +287,18 @@ def round12_surface() -> None:
         )
     )
 
-    # table-owned policy: retention drives bare vacuum; the property
-    # sheet shows everything an operator needs in one call
-    from bamboo_spark.operators.publish import (
-        describe_table,
-        set_retention,
-        vacuum,
-    )
+    # the property sheet shows everything an operator needs in one
+    # call; a dry-run vacuum shows what keep=2 would reclaim
+    from bamboo_spark.operators.publish import describe_table, vacuum
 
-    set_retention(t, keep=2, spark=spark)
-    would = vacuum(t, spark=spark, dry_run=True)
+    would = vacuum(t, keep=2, spark=spark, dry_run=True)
     det = describe_table(t, spark=spark)
     print(
-        "describe: v%d rows=%d files=%d dv_rows=%d index=%s "
-        "retention=%s; bare vacuum would reclaim %d dirs"
+        "describe: v%d rows=%d files=%d dv_rows=%d index=%s; "
+        "vacuum(keep=2) would reclaim %d dirs"
         % (
             det["version"], det["n_rows"], det["n_files"],
-            det["dv_rows"], det["index_cols"], det["retention"],
-            len(would),
+            det["dv_rows"], det["index_cols"], len(would),
         )
     )
 

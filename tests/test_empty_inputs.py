@@ -71,7 +71,6 @@ def test_similarity_empty(spark):
     from bamboo_spark.operators import similarity
 
     e = spark.createDataFrame([], "vec_id long, embedding array<double>, label string")
-    assert similarity.embedding_moments(e).count() == 0
     with pytest.raises(ValueError, match="empty"):
         similarity.embedding_covariance(e)
 

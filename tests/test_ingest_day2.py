@@ -77,18 +77,23 @@ def test_day2_incremental_ingest_equals_full_recompute(spark, tmp_path):
             F.col("t") != ""
         )
 
-    cms_merged = sketch.cms_merge(
-        sketch.cms_build(toks(day1), "t", depth=3, width=1024),
-        sketch.cms_build(toks(day2), "t", depth=3, width=1024),
+    # merges are plain cell-wise sums (CMS) and maxima (HLL)
+    cms_merged = (
+        sketch.cms_build(toks(day1), "t", depth=3, width=1024)
+        .unionByName(sketch.cms_build(toks(day2), "t", depth=3, width=1024))
+        .groupBy("hash_row", "bucket")
+        .agg(F.sum("n").alias("n"))
     )
     cms_full = sketch.cms_build(toks(docs), "t", depth=3, width=1024)
     assert {
         (r.hash_row, r.bucket): r.n for r in cms_merged.collect()
     } == {(r.hash_row, r.bucket): r.n for r in cms_full.collect()}
 
-    hll_merged = sketch.hll_merge(
-        sketch.hll_build(day1, "doc_id", p=10),
-        sketch.hll_build(day2, "doc_id", p=10),
+    hll_merged = (
+        sketch.hll_build(day1, "doc_id", p=10)
+        .unionByName(sketch.hll_build(day2, "doc_id", p=10))
+        .groupBy("idx")
+        .agg(F.max("r").alias("r"))
     )
     assert {
         (r.idx, r.r) for r in hll_merged.collect()

@@ -121,12 +121,17 @@ def _compiled(line: str) -> bool:
 def test_wide_stages_stay_in_codegen(spark):
     # spark.sql.codegen.maxFields (session.py): past it a stage silently
     # falls back to interpreted evaluation; the 129-field minhash
-    # signature aggregate is over Spark's default of 100
-    from bamboo_spark.operators.dedup import minhash_signatures
+    # signature aggregate is over Spark's default of 100. minhash_lsh_pairs
+    # is the path dedup_minhash runs; the signature aggregate's two
+    # HashAggregates are the ones over min(pmod(...)) lanes
+    from bamboo_spark.operators.dedup import minhash_lsh_pairs
     from bamboo_spark.queries._core import load
 
-    sig = minhash_signatures(load(spark, SF, "documents"))
-    aggs = [l for l in _final_plan(sig).splitlines() if "HashAggregate(" in l]
+    pairs = minhash_lsh_pairs(load(spark, SF, "documents"))
+    aggs = [
+        l for l in _final_plan(pairs).splitlines()
+        if "HashAggregate(" in l and "min(pmod(" in l
+    ]
     assert len(aggs) == 2 and all(map(_compiled, aggs)), aggs
     wide = q.queries()["q_flatten_lineitem_wide"](spark, SF)
     ops = [l for l in _final_plan(wide).splitlines() if "Generate " in l or "Project " in l]

@@ -1,10 +1,10 @@
 """Randomized LEDGER test for the table format: a seeded walk over the
 full op mix — append, dv-delete, rewrite-delete, compaction,
-restore, vacuum — tracking the expected row multiset
+time travel, vacuum — tracking the expected row multiset
 in plain Python after every commit and asserting the committed
 snapshot reads back EXACTLY that multiset (and that the manifest's
 n_rows agrees). This is the bookkeeping differential: any drift in
-n_rows math, dv carry/fold, segment shadowing, or restore/vacuum
+n_rows math, dv carry/fold, segment shadowing, or time-travel/vacuum
 interaction shows up as a multiset mismatch at the op that broke it."""
 
 import random
@@ -22,7 +22,6 @@ from bamboo_spark.operators.publish import (
     delete_publish,
     published_rows,
     read_published,
-    restore_table,
     vacuum,
 )
 
@@ -63,7 +62,7 @@ def test_random_op_walk_ledger_exact(spark, tmp_path, seed, partitioned):
         assert published_rows(t) == sum(expected.values()), tag
 
     check("init")
-    ops = ["append", "dv_delete", "rw_delete", "compact", "restore"]
+    ops = ["append", "dv_delete", "rw_delete", "compact", "time_travel"]
     for step in range(14):
         op = rng.choice(ops)
         if op == "append":
@@ -89,8 +88,9 @@ def test_random_op_walk_ledger_exact(spark, tmp_path, seed, partitioned):
             del expected[(k, v)]
         elif op == "compact":
             compact(spark, t)
-        elif op == "restore":
-            # only versions still retained (vacuum may have pruned)
+        elif op == "time_travel":
+            # any retained older snapshot reads back exactly as it was
+            # committed (vacuum may have pruned some)
             retained = [
                 ver for ver in history if ver != current_version(t)
             ]
@@ -98,17 +98,18 @@ def test_random_op_walk_ledger_exact(spark, tmp_path, seed, partitioned):
                 continue
             target = rng.choice(retained)
             try:
-                restore_table(t, target)
+                old = read_published(spark, t, version=target).collect()
             except KeyError:
                 history.pop(target, None)  # pruned by a vacuum below
                 continue
-            expected = Counter(history[target])
+            got = Counter((r["k"], r["v"]) for r in old)
+            assert got == history[target], ("time travel", target)
         history[current_version(t)] = Counter(expected)
         check("step %d %s" % (step, op))
         if rng.random() < 0.25:
             vacuum(t, keep=3)
             # versions may have left history; our map can keep stale
-            # entries (restore handles KeyError) — reads must be exact
+            # entries (time travel handles KeyError) — reads must be exact
             check("step %d vacuum" % step)
     # final: compaction folds everything and the ledger still holds
     compact(spark, t)

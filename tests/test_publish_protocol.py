@@ -345,7 +345,6 @@ def test_every_writer_writes_one_table_format(spark, tmp_path):
         rows([(k, k) for k in range(20)]), t, partition_by="p",
         stats_cols=["k"], bloom_cols=["k"],
     )
-    P.set_retention(t, keep=100, spark=spark)  # history for the checks
     append_publish(rows([(k, k) for k in range(20, 30)]), t)
     P.merge_into(
         rows([(1, 100), (40, 40)]), t, "k",
@@ -371,9 +370,8 @@ def test_every_writer_writes_one_table_format(spark, tmp_path):
         rows([(k, k) for k in range(1, 30, 2)]), t, values=["p1"],
         partition_col="p",
     )
-    vacuum(t, spark=spark)
+    vacuum(t, keep=100, spark=spark)  # history for the checks
     delete_publish(spark, t, "k = 10", delete_vectors=True)
-    dv_version = current_version(t)
     P.rename_column(t, "v", "w", spark=spark)
     P.drop_column(t, "x", spark=spark)
     P.set_partition_layout(t, ["p", "bucket(2, k)"], spark=spark)
@@ -382,14 +380,14 @@ def test_every_writer_writes_one_table_format(spark, tmp_path):
         t,
     )
     compact(spark, t)
-    P.restore_table(t, dv_version, spark=spark)
+    delete_publish(spark, t, "k = 14", delete_vectors=True)
     P.clone_table(spark, t, c)
     delete_publish(spark, c, "k = 12", delete_vectors=True)
 
     ops = {r.operation for r in P.table_history(spark, t).collect()}
-    assert {"delete", "compact", "rename_column", "restore"} <= ops
-    # the restore brought back a snapshot with delete vectors, and the
-    # clone externalized them
+    assert {"delete", "compact", "rename_column"} <= ops
+    # the head carries delete vectors after the compact, and the clone
+    # externalized them
     assert json.load(open(os.path.join(t, "manifest.json"))).get("dv")
     assert any(
         os.path.isdir(os.path.join(root, "_dvp", "dvp"))
@@ -398,7 +396,7 @@ def test_every_writer_writes_one_table_format(spark, tmp_path):
     assert _refused_shapes(t) == []
     assert _refused_shapes(c) == []
     got = {r.k for r in read_published(spark, c).collect()}
-    assert not got & {4, 8, 10, 12, 60} and {3, 50} <= got
+    assert not got & {4, 8, 10, 12, 14} and {3, 50, 60} <= got
 
 
 def test_compact_is_the_maintenance_writer(spark, tmp_path):
@@ -912,28 +910,7 @@ def test_optimize_table_refreshes_blooms(spark, tmp_path):
     assert pruned.where("user_id = 5").count() == 1
 
 
-# -------------------------------------------------- restore / read_appends
-
-
-def test_restore_table_is_metadata_only_rollback(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    atomic_publish(spark.range(10).selectExpr("id", "id as v"), t)   # v1
-    append_publish(spark.range(10, 15).selectExpr("id", "id as v"), t)  # v2
-    delete_publish(spark, t, "id < 3")                               # v3
-    assert read_published(spark, t).count() == 12
-    from bamboo_spark.operators.publish import restore_table
-
-    v4 = restore_table(t, 2, spark)
-    assert v4 == 4
-    got = read_published(spark, t)
-    assert got.count() == 15  # pre-delete content, re-cited by reference
-    # the bad version stays readable for the post-mortem
-    assert read_published(spark, t, version=3).count() == 12
-    # restore wrote no data files: the restored entry's segments are a
-    # subset of dirs that already existed
-    man = P._read_manifest(t, P._PosixFS())
-    assert man.get("restored_from") == 2
-    assert set(man["segments"]) <= {"_v1", "_v2", "_v3"}
+# ------------------------------------------------------------ read_appends
 
 
 def test_read_appends_exact_delta(spark, tmp_path):
@@ -1011,27 +988,6 @@ def test_read_appends_across_schema_merge(spark, tmp_path):
     d = read_appends(spark, t, from_version=1)
     assert sorted(d.columns) == ["extra", "id"]
     assert d.count() == 3 and d.where("extra is null").count() == 0
-
-
-def test_restore_then_append_continues(spark, tmp_path):
-    """Life after a rollback: the restored snapshot is an ordinary
-    version — appends continue, deltas stay exact, vacuum keeps every
-    dir the restored snapshot cites."""
-    from bamboo_spark.operators.publish import read_appends, restore_table
-
-    t = str(tmp_path / "tbl")
-    atomic_publish(spark.range(10).selectExpr("id"), t)           # v1
-    append_publish(spark.range(10, 14).selectExpr("id"), t)       # v2
-    restore_table(t, 1, spark)                                    # v3 = v1
-    append_publish(spark.range(50, 53).selectExpr("id"), t)       # v4
-    got = read_published(spark, t)
-    assert sorted(r["id"] for r in got.collect()) == list(range(10)) + [
-        50, 51, 52
-    ]
-    d = read_appends(spark, t, from_version=3)
-    assert sorted(r["id"] for r in d.collect()) == [50, 51, 52]
-    vacuum(t, keep=1, spark=spark)
-    assert read_published(spark, t).count() == 13  # v1's dir survived
 
 
 def test_skip_and_skip_eq_compose(spark, tmp_path):

@@ -21,7 +21,6 @@ from bamboo_spark.operators.publish import (
     compact,
     delete_publish,
     read_published,
-    restore_table,
     table_history,
 )
 
@@ -38,7 +37,7 @@ def test_table_history_labels_every_flavor(spark, tmp_path):
     append_publish(_rows(spark, 10, 15), d)                   # v2 append
     compact(spark, d)                                   # v3 compact
     delete_publish(spark, d, "k = 3")                         # v4 delete
-    restore_table(d, 2, spark=spark)                        # v5 restore
+    P.set_index_columns(d, stats_cols=["k"], spark=spark)     # v5 metadata
 
     h = table_history(spark, d).collect()
     assert [r.version for r in h] == [5, 4, 3, 2, 1]
@@ -48,15 +47,15 @@ def test_table_history_labels_every_flavor(spark, tmp_path):
         2: "append",
         3: "compact",
         4: "delete",
-        5: "restore",
+        5: "set_index_columns",
     }
     by_v = {r.version: r for r in h}
     assert by_v[5].is_current and not by_v[4].is_current
-    assert by_v[5].restored_from == 2
     assert by_v[3].data_change is False  # pure rewrite
+    assert by_v[5].data_change is False  # metadata only
     assert by_v[4].data_change is True
     # counters line up with the snapshots they describe
-    assert by_v[2].n_rows == 15 and by_v[4].n_rows == 14
+    assert by_v[2].n_rows == 15 and by_v[4].n_rows == by_v[5].n_rows == 14
     # commit timestamps are present and monotone over the sequence
     ts = [by_v[v].committed_at_ms for v in (1, 2, 3, 4, 5)]
     assert all(t is not None for t in ts)
@@ -442,13 +441,13 @@ def test_rename_with_delete_vectors_and_restore(spark, tmp_path):
     v3 = P.rename_column(d, "v", "amount", spark=spark)       # v3
     got = {r.k: r.amount for r in read_published(spark, d).collect()}
     assert got == {1: 10, 3: 30}
-    # restore to the pre-rename snapshot: old names, dv still applied
-    restore_table(d, v3 - 1, spark=spark)
-    out = read_published(spark, d)
+    # the pre-rename snapshot reads back with its old names, dv still
+    # applied
+    out = read_published(spark, d, version=v3 - 1)
     assert out.columns == ["k", "v"]
     assert {r.k: r.v for r in out.collect()} == {1: 10, 3: 30}
-    # evolve again after the restore — the id space stays consistent
-    P.rename_column(d, "v", "w", spark=spark)
+    # evolve again after the time travel — the id space stays consistent
+    P.rename_column(d, "amount", "w", spark=spark)
     assert {r.k: r.w for r in read_published(spark, d).collect()} == {
         1: 10,
         3: 30,
@@ -835,6 +834,9 @@ _LEGACY_SHAPES = {
         lambda s, d, m: m.update(constraints={"v_pos": "v > 0"}),
         "'constraints'",
     ),
+    "retention": (
+        lambda s, d, m: m.update(retention={"keep": 10}), "'retention'"
+    ),
     "pre_history": (
         lambda s, d, m: m.pop("snapshots"), "pre-history manifest"
     ),
@@ -857,7 +859,8 @@ _LEGACY_SHAPES = {
 
 @pytest.mark.parametrize("key", list(_LEGACY_SHAPES))
 def test_manifest_with_removed_feature_is_refused(spark, tmp_path, key):
-    """Tags, branches and CHECK constraints are gone, and so are the
+    """Tags, branches, CHECK constraints and stored retention policies
+    are gone, and so are the
     table shapes no writer produces any more (pre-history and inline
     manifests, entries without field ids or file/byte counters,
     unstamped segments, position
@@ -865,7 +868,8 @@ def test_manifest_with_removed_feature_is_refused(spark, tmp_path, key):
     but tables written before may still carry them: every reader and
     writer refuses such a table by name rather than misreading it
     (unenforced constraints, a vacuum that deletes a branch head's
-    files, columns resolved by name after a rename)."""
+    files, a bare vacuum that keeps 2 snapshots where the stored
+    policy kept 10, columns resolved by name after a rename)."""
     from bamboo_spark.operators.publish import UnsupportedFormatError
     from bamboo_spark.sources.published import register
 

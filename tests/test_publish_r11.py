@@ -397,8 +397,7 @@ def test_concurrent_metadata_ops_compose(spark, tmp_path):
     atomic_publish(_rows(spark, 0, 10), d)
     errs = []
     ops = [
-        lambda: P.set_retention(d, keep=5, spark=spark),
-        lambda: P.set_retention(d, older_than_ms=60_000, spark=spark),
+        lambda: P.rename_column(d, "v", "amount", spark=spark),
         lambda: P.set_index_columns(d, stats_cols=["k"], spark=spark),
         lambda: P.set_index_columns(d, bloom_cols=["k"], spark=spark),
     ]
@@ -415,27 +414,25 @@ def test_concurrent_metadata_ops_compose(spark, tmp_path):
     assert not any(t.is_alive() for t in ts) and not errs
     man = P._read_manifest(d, _fs())
     assert int(man["version"]) == 1 + len(ops)
-    assert man["retention"] == {"keep": 5, "older_than_ms": 60_000}
-    assert man["index_cols"] == {"stats": ["k"], "bloom": ["k"]}
-    # a schema change interleaves without clobbering either dict
-    P.rename_column(d, "v", "amount", spark=spark)
-    P.set_retention(d, keep=3, spark=spark)
-    man = P._read_manifest(d, _fs())
-    assert man["retention"] == {"keep": 3, "older_than_ms": 60_000}
     assert man["index_cols"] == {"stats": ["k"], "bloom": ["k"]}
     assert read_published(spark, d).columns == ["k", "amount"]
+    # a later schema change and single-key mutation keep the other key
+    P.rename_column(d, "amount", "total", spark=spark)
+    P.set_index_columns(d, stats_cols=["k", "total"], spark=spark)
+    man = P._read_manifest(d, _fs())
+    assert man["index_cols"] == {"stats": ["k", "total"], "bloom": ["k"]}
+    assert read_published(spark, d).columns == ["k", "total"]
 
 
 @pytest.mark.parametrize(
     "op",
     [
-        "rename_column", "set_partition_layout", "restore_table", "vacuum",
-        "compact",
+        "rename_column", "set_partition_layout", "vacuum", "compact",
     ],
 )
 def test_metadata_writers_queue_for_the_lease(spark, tmp_path, op):
-    """Schema, layout, restore and vacuum commits are milliseconds of
-    manifest work: like set_retention, they WAIT for a lease another
+    """Schema, layout and vacuum commits are milliseconds of manifest
+    work: like set_index_columns, they WAIT for a lease another
     writer holds briefly, then commit, instead of raising at once. So
     does compact, the one maintenance writer."""
     import threading
@@ -449,7 +446,6 @@ def test_metadata_writers_queue_for_the_lease(spark, tmp_path, op):
         "set_partition_layout": lambda: P.set_partition_layout(
             d, "bucket(2, k)", spark=spark
         ),
-        "restore_table": lambda: P.restore_table(d, 1, spark=spark),
         "vacuum": lambda: P.vacuum(d, keep=1, spark=spark),
         "compact": lambda: P.compact(spark, d),
     }[op]
@@ -467,9 +463,7 @@ def test_metadata_writers_queue_for_the_lease(spark, tmp_path, op):
     if op == "vacuum":
         assert sorted(man["snapshots"]) == ["2"]
     else:
-        assert man["version"] == 3 and man["operation"] == {
-            "restore_table": "restore"
-        }.get(op, op)
+        assert man["version"] == 3 and man["operation"] == op
 
 
 def test_backfill_stats_and_blooms_on_evolved_table(spark, tmp_path):

@@ -1586,43 +1586,6 @@ def test_overwrite_partitions_refuses_null_partition_values(
         P.overwrite_partitions_publish(withnull, d)
 
 
-# --------------------------------------------------------- retention policy
-
-
-def test_set_retention_policy_drives_bare_vacuum(spark, tmp_path):
-    """A bare vacuum(t) enforces the table's persisted policy; explicit
-    args still override; the policy survives unrelated commits."""
-    d = str(tmp_path / "t")
-    atomic_publish(_rows(spark, 0, 10).coalesce(1), d)        # v1
-    P.set_retention(d, keep=3, spark=spark)                   # v2
-    atomic_publish(_rows(spark, 0, 20).coalesce(1), d)        # v3
-    atomic_publish(_rows(spark, 0, 30).coalesce(1), d)        # v4
-    atomic_publish(_rows(spark, 0, 40).coalesce(1), d)        # v5
-    # policy keep=3 retains v3,v4,v5 -> only v1's dir is garbage
-    would = P.vacuum(d, spark=spark, dry_run=True)
-    assert would == ["_v1"], would
-    # explicit override beats policy
-    would2 = P.vacuum(d, keep=1, spark=spark, dry_run=True)
-    assert set(would2) >= {"_v1", "_v3"}
-    # real bare vacuum applies the policy
-    assert P.vacuum(d, spark=spark) == ["_v1"]
-    assert read_published(spark, d, version=3).count() == 20
-
-
-def test_retention_time_horizon_from_policy(spark, tmp_path):
-    d = str(tmp_path / "t")
-    atomic_publish(_rows(spark, 0, 10).coalesce(1), d)
-    atomic_publish(_rows(spark, 0, 20).coalesce(1), d)
-    atomic_publish(_rows(spark, 0, 30).coalesce(1), d)
-    # keep=1 but everything is younger than the 1h horizon -> nothing
-    P.set_retention(d, keep=1, older_than_ms=3_600_000, spark=spark)
-    assert P.vacuum(d, spark=spark, dry_run=True) == []
-    # shrink the horizon to 0 via explicit arg: count rule alone
-    assert P.vacuum(
-        d, older_than_ms=0, spark=spark, dry_run=True
-    ) == ["_v1", "_v2"]
-
-
 # ---------------------------------------------------------- describe_table
 
 
@@ -1631,14 +1594,14 @@ def test_describe_table_property_sheet(spark, tmp_path):
     atomic_publish(
         _rows(spark, 0, 50).coalesce(1), d, bloom_cols=["k"]
     )
-    P.set_retention(d, keep=3, spark=spark)
+    P.set_index_columns(d, stats_cols=["k"], spark=spark)
     delete_publish(spark, d, "k = 7", delete_vectors=True)
     det = P.describe_table(d, spark=spark)
-    # v1 publish, v2 retention, v3 dv delete
+    # v1 publish, v2 index spec, v3 dv delete
     assert det["version"] == 3 and det["n_rows"] == 49
     assert det["partition_by"] == []
     assert det["schema"].startswith("struct<k:bigint")
-    assert det["retention"] == {"keep": 3}
+    assert det["index_cols"]["stats"] == ["k"]
     assert det["index_cols"]["bloom"] == ["k"]
     assert det["dv_files"] == 1 and det["dv_rows"] == 1
     assert det["operation"] == "delete"

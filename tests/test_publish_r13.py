@@ -3,10 +3,10 @@ partition transforms reduced to the hive case) — days/months/years/
 hours/bucket/truncate specs as manifest metadata, derived columns
 materialized inside every write flavor and dropped on read,
 transform-aware read-time directory pruning, spec evolution /
-rename / widen / drop interactions, clone+restore carry — plus the
+rename / widen / drop interactions, clone carry — plus the
 r12 ADVICE fixes (streaming overwrite_partitions setup validation,
 explicit first-batch existence probe, ClaimBeat join-before-delete,
-clone retention carry) and rename_column following the persisted
+clone property carry) and rename_column following the persisted
 index spec.
 
 Reference parity: the reference (mvilim/bamboo) has no table format;
@@ -430,35 +430,25 @@ def test_concurrent_spec_change_refuses_rebase(spark, tmp_path):
         P._check_rebase(base, cur, "test")
 
 
-# ------------------------------------------------------- clone and retention
+# ------------------------------------------------ clone and table properties
 
 
 def test_clone_carries_spec_and_retention(spark, tmp_path):
     """ADVICE r12: clone copies table PROPERTIES (Delta CLONE
-    semantics) — retention included, so a bare vacuum on the clone
-    honors the source's declared horizon."""
+    semantics) — the index spec included, so writes on the clone keep
+    indexing what the source declared."""
     src = str(tmp_path / "src")
     df = _ts_rows(spark)
     atomic_publish(df, src, partition_by=["days(ts)"])
-    P.set_retention(src, keep=7, spark=spark)
+    P.set_index_columns(src, stats_cols=["k"], spark=spark)
     dst = str(tmp_path / "dst")
     P.clone_table(spark, src, dst)
     d = P.describe_table(dst, spark)
     assert d["partition_spec"][0]["transform"] == "days"
-    assert d["retention"] == {"keep": 7}
+    assert d["index_cols"] == {"stats": ["k"]}
     # clone writes land under the derived layout
     append_publish(df.limit(5), dst)
     assert read_published(spark, dst).count() == 65
-
-
-def test_restore_restores_spec(spark, tmp_path):
-    t = str(tmp_path / "t")
-    atomic_publish(_ts_rows(spark), t, partition_by=["days(ts)"])
-    P.set_partition_layout(t, ["tag"], spark=spark)
-    P.restore_table(t, 1, spark=spark)
-    d = P.describe_table(t, spark)
-    assert d["partition_by"] == ["ts_day"]
-    assert d["partition_spec"][0]["transform"] == "days"
 
 
 # ----------------------------------------------------------- streaming fixes

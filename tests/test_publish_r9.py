@@ -25,7 +25,6 @@ from bamboo_spark.operators.publish import (
     delete_publish,
     live_files,
     read_published,
-    restore_table,
     vacuum,
 )
 
@@ -385,15 +384,17 @@ def test_dv_restore_and_vacuum_keep_dv_dirs(spark, tmp_path):
     atomic_publish(spark.range(10).selectExpr("id"), t)            # v1
     delete_publish(spark, t, "id = 2", delete_vectors=True)        # v2
     append_publish(spark.range(30, 33).selectExpr("id"), t)        # v3
-    restore_table(t, 2)                                            # v4
     got = read_published(spark, t)
     assert sorted(r["id"] for r in got.collect()) == [
-        0, 1, 3, 4, 5, 6, 7, 8, 9,
+        0, 1, 3, 4, 5, 6, 7, 8, 9, 30, 31, 32,
     ]
-    # vacuum keeps the dir hosting the restored snapshot's dv file
-    vacuum(t, keep=2)
+    # time travel to the dv delete's snapshot
+    old = read_published(spark, t, version=2)
+    assert sorted(r["id"] for r in old.collect()) == [0, 1, 3, 4, 5, 6, 7, 8, 9]
+    # vacuum keeps the dir hosting the dv file the head carries forward
+    vacuum(t, keep=1)
     got = read_published(spark, t)
-    assert got.count() == 9
+    assert got.count() == 12
 
 
 def test_read_appends_refuses_dv_deletes(spark, tmp_path):

@@ -1,43 +1,11 @@
-"""Scale utilities: salted join correctness (vs plain join) and
-partitioned sink layout/round-trip."""
+"""Scale utilities: partitioned sink layout/round-trip, per-key heads,
+snapshot diffs, CDC apply, z-order keys and sharded prefix sums."""
 
 import os
 
 from pyspark.sql import functions as F
 
-from bamboo_spark.operators.scale import salted_join, write_partitioned
-
-
-def test_salted_join_matches_plain_join(spark):
-    # heavy skew: 90% of left rows share key 7
-    left = spark.range(0, 2000).select(
-        F.when(F.col("id") % 10 < 9, F.lit(7)).otherwise(F.col("id") % 100).alias("k"),
-        F.col("id").alias("lv"),
-    )
-    right = spark.range(0, 100).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("rv")
-    )
-    plain = left.join(right, "k").select("k", "lv", "rv")
-    salted = salted_join(left, right, "k", salt=8).select("k", "lv", "rv")
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    left = spark.createDataFrame([(1, "a"), (2, "b"), (99, "c")], "k long, v string")
-    right = spark.createDataFrame([(1, 10), (2, 20)], "k long, w long")
-    out = salted_join(left, right, "k", salt=4, how="left").collect()
-    by_k = {r.k: r.w for r in out}
-    assert by_k == {1: 10, 2: 20, 99: None}
-    assert len(out) == 3  # replication must not duplicate unmatched rows
-
-
-def test_salted_join_rejects_unsupported_how(spark):
-    df = spark.range(1).select(F.col("id").alias("k"))
-    try:
-        salted_join(df, df, "k", how="full_outer")
-        raise AssertionError("expected ValueError")
-    except ValueError as e:
-        assert "full_outer" in str(e)
+from bamboo_spark.operators.scale import write_partitioned
 
 
 def test_write_partitioned_layout_and_roundtrip(spark, tmp_path):
@@ -54,47 +22,6 @@ def test_write_partitioned_layout_and_roundtrip(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == 1000
     assert back.groupBy("part").count().where(F.col("count") != 250).count() == 0
-
-
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    # both sides bucketed on the join key with the same bucket count →
-    # the join plan must contain NO Exchange (shuffle was paid at write
-    # time); with sortBy, no Sort either. This is the co-located join
-    # the 100 TB recurring-join pipeline relies on.
-    from pyspark.sql import functions as F
-
-    from bamboo_spark.operators.scale import write_bucketed
-
-    spark.sql("drop table if exists bkt_orders")
-    spark.sql("drop table if exists bkt_cust")
-    orders = spark.range(1000).select(
-        F.col("id").alias("o_id"),
-        (F.col("id") % 100).alias("custkey"),
-        (F.col("id") * 2).alias("amount"),
-    )
-    cust = spark.range(100).select(
-        F.col("id").alias("custkey"), F.concat(F.lit("c"), F.col("id")).alias("name")
-    )
-    write_bucketed(orders, "bkt_orders", "custkey", num_buckets=8, sort_by="custkey")
-    write_bucketed(cust, "bkt_cust", "custkey", num_buckets=8, sort_by="custkey")
-    try:
-        a = spark.table("bkt_orders")
-        b = spark.table("bkt_cust")
-        # disable auto-broadcast so the test exercises the bucketed path
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = a.join(b, "custkey")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan
-            assert joined.count() == 1000
-            total = joined.agg(F.sum("amount")).collect()[0][0]
-            assert total == sum(i * 2 for i in range(1000))
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("drop table if exists bkt_orders")
-        spark.sql("drop table if exists bkt_cust")
 
 
 def _skewed_hashed(spark):
@@ -380,28 +307,6 @@ def test_zorder_layout_files_cover_tight_rectangles(spark):
         assert med_u <= 0.5 and med_t <= 0.5, (med_u, med_t)
 
 
-def test_suggest_shuffle_partitions(spark):
-    from bamboo_spark.operators.scale import suggest_shuffle_partitions
-
-    # empty -> 1
-    e = spark.createDataFrame([], "a long, s string")
-    assert suggest_shuffle_partitions(e) == 1
-
-    # 10k rows of ~58 bytes -> well under one 128 MiB partition
-    df = spark.range(10_000).selectExpr(
-        "id", "repeat('x', 42) as s"
-    )
-    assert suggest_shuffle_partitions(df) == 1
-
-    # force a tiny target: the estimate must scale ~linearly with rows
-    small = suggest_shuffle_partitions(df, target_partition_bytes=10_000)
-    big = suggest_shuffle_partitions(
-        df.union(df), target_partition_bytes=10_000
-    )
-    assert small >= 10
-    assert 1.5 * small <= big <= 2.5 * small
-
-
 def test_zorder_layout_improves_file_locality(spark, tmp_path):
     # end-to-end proof of the layout win: the same events written (a)
     # time-ordered and (b) z-ordered on (user, time); a narrow user
@@ -454,23 +359,6 @@ def test_zorder_layout_improves_file_locality(spark, tmp_path):
     # z-layout confines it to a fraction
     assert fz < ft, (fz, ft)
     assert fz <= ft // 2, (fz, ft)
-
-
-def test_suggest_salt_flags_hot_keys(spark):
-    from pyspark.sql import functions as F
-
-    from bamboo_spark.operators.scale import suggest_salt
-
-    # one pathological key with 10k rows, the rest tiny
-    df = spark.range(11_000).select(
-        F.when(F.col("id") < 10_000, "hot").otherwise(
-            F.concat(F.lit("k"), F.col("id"))
-        ).alias("k")
-    )
-    got = suggest_salt(df, "k", target_rows_per_task=1_000)
-    assert got == [("hot", 10_000, 10)]
-    # uniform keys -> nothing to salt
-    assert suggest_salt(df.where("k <> 'hot'"), "k", 1_000) == []
 
 
 def test_zorder_key_three_columns(spark):

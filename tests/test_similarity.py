@@ -75,21 +75,6 @@ def test_blocked_gemm_matches_broadcast(spark):
     assert {key(r): r["cosine"] for r in bcast} == {key(r): r["cosine"] for r in blocked}
 
 
-def test_centroid_save_load_roundtrip(spark, tmp_path):
-    # build-once-probe-many: a frozen quantizer must assign identically
-    # after a parquet round-trip
-    rng = np.random.RandomState(3)
-    df = _vec_df(spark, rng.normal(size=(40, 8)).tolist())
-    cm = similarity.kmeans_train(df, n_centroids=4, iterations=2)
-    path = str(tmp_path / "ivf_index")
-    similarity.save_centroids(spark, cm, path)
-    cm2 = similarity.load_centroids(spark, path)
-    np.testing.assert_array_equal(cm, cm2)
-    a1 = {(r["vec_id"], r["centroid"]) for r in similarity.ivf_assign(df, cm).collect()}
-    a2 = {(r["vec_id"], r["centroid"]) for r in similarity.ivf_assign(df, cm2).collect()}
-    assert a1 == a2 and len(a1) == 40
-
-
 def test_topk_ivf_empty_query_slice(spark):
     from bamboo_spark.operators.similarity import topk_neighbors_ivf
 
@@ -102,21 +87,17 @@ def test_topk_ivf_empty_query_slice(spark):
 
 
 def test_persisted_quantizer_identical_results(spark, tmp_path):
-    # save/load round-trip of the trained quantizer, then ivf_pairs with
-    # the persisted centroids must equal a fresh retrain bit-for-bit
+    # a trained quantizer stored as a plain numpy file and loaded back:
+    # ivf_pairs with those centroids must equal a fresh retrain
+    # bit-for-bit
     from bamboo_spark import queries as q
-    from bamboo_spark.operators.similarity import (
-        ivf_pairs, kmeans_train, load_centroids, save_centroids,
-    )
+    from bamboo_spark.operators.similarity import ivf_pairs, kmeans_train
 
     e = q.load(spark, "/root/testdata/sf0.001", "embeddings")
     cm = kmeans_train(e)
-    path = str(tmp_path / "quantizer")
-    save_centroids(spark, cm, path)
-    loaded = load_centroids(spark, path)
-    import numpy as np
-
-    assert np.array_equal(cm, loaded)
+    path = str(tmp_path / "quantizer.npy")
+    np.save(path, cm)
+    loaded = np.load(path)
     fresh = {tuple(r) for r in ivf_pairs(e, threshold=0.4).collect()}
     persisted = {tuple(r) for r in ivf_pairs(e, threshold=0.4, centroids=loaded).collect()}
     assert fresh == persisted and len(fresh) > 0
@@ -179,32 +160,6 @@ def test_embedding_norms_flags_outliers(spark, tmp_path):
     assert out[9]["is_outlier"] == 1 and out[9]["z"] > 2
     for i in range(9):
         assert out[i]["is_outlier"] == 0 and out[i]["z"] < 0
-
-
-def test_pq_codebooks_roundtrip_and_stable_codes(spark, tmp_path):
-    # frozen-codebook deployment: save -> load must reproduce the
-    # matrices exactly, and encoding against the loaded books must give
-    # identical codes to the fresh-trained ones
-    import numpy as np
-
-    from bamboo_spark.operators.similarity import (
-        load_codebooks,
-        pq_encode,
-        pq_train,
-        save_codebooks,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    books = pq_train(e, m=4, n_codes=8, iterations=1)
-    p = str(tmp_path / "books")
-    save_codebooks(spark, books, p)
-    loaded = load_codebooks(spark, p)
-    assert len(loaded) == len(books)
-    for a, b in zip(books, loaded):
-        assert np.array_equal(a, b)
-    fresh = {r["vec_id"]: list(r["codes"]) for r in pq_encode(e, books).collect()}
-    frozen = {r["vec_id"]: list(r["codes"]) for r in pq_encode(e, loaded).collect()}
-    assert fresh == frozen
 
 
 def test_pca_matches_numpy_reference(spark):
@@ -290,93 +245,21 @@ def test_embedding_covariance_half_boundary_rounding(spark, tmp_path):
     assert got == want
 
 
-def test_published_ann_index_round_trip_bit_identical(spark, tmp_path):
-    # train -> publish -> load: post-load ann results must be
-    # BIT-identical to pre-save (the build-once-probe-many contract,
-    # now with atomic versioning + time travel via operators.publish)
-    from bamboo_spark import queries as q
-
-    e = q.load(spark, "/root/testdata/sf0.001", "embeddings")
-    cm = similarity.kmeans_train(e, n_centroids=4, iterations=2)
-    books = similarity.pq_train(e, m=4, n_codes=8, iterations=1)
-    coded = similarity.pq_encode(e, books).join(
-        similarity.ivf_assign(e, cm).withColumnRenamed("centroid", "bucket"),
-        "vec_id",
-    )
-    before_pairs = sorted(
-        tuple(r)
-        for r in similarity.ivf_pairs(e, threshold=0.4, centroids=cm).collect()
-    )
-    before_topk = sorted(
-        tuple(r)
-        for r in similarity.topk_neighbors_ivfpq(
-            e, k=3, m=4, n_codes=8, centroids=cm, codebooks=books
-        ).collect()
-    )
-
-    t = str(tmp_path / "ann_idx")
-    v1 = similarity.publish_ann_index(spark, t, cm, books, coded)
-    idx = similarity.load_ann_index(spark, t)
-    assert idx["version"] == v1
-    np.testing.assert_array_equal(idx["centroids"], cm)
-    assert len(idx["codebooks"]) == len(books)
-    for a, b in zip(idx["codebooks"], books):
-        np.testing.assert_array_equal(a, b)
-    # the coded corpus survives with bucket + codes intact
-    got_coded = {
-        r["vec_id"]: (r["bucket"], tuple(r["codes"]))
-        for r in idx["coded"].collect()
-    }
-    want_coded = {
-        r["vec_id"]: (r["bucket"], tuple(r["codes"]))
-        for r in coded.collect()
-    }
-    assert got_coded == want_coded
-
-    after_pairs = sorted(
-        tuple(r)
-        for r in similarity.ivf_pairs(
-            e, threshold=0.4, centroids=idx["centroids"]
-        ).collect()
-    )
-    after_topk = sorted(
-        tuple(r)
-        for r in similarity.topk_neighbors_ivfpq(
-            e, k=3, m=4, n_codes=8,
-            centroids=idx["centroids"], codebooks=idx["codebooks"],
-        ).collect()
-    )
-    assert after_pairs == before_pairs
-    assert after_topk == before_topk
-
-    # retrain publishes the next version; time travel keeps v1 exact
-    cm2 = similarity.kmeans_train(e, n_centroids=3, iterations=1)
-    v2 = similarity.publish_ann_index(spark, t, cm2)
-    assert v2 == v1 + 1
-    old = similarity.load_ann_index(spark, t, version=v1)
-    np.testing.assert_array_equal(old["centroids"], cm)
-    new = similarity.load_ann_index(spark, t)
-    assert new["centroids"].shape == cm2.shape and new["coded"] is None
-
-
 def test_streaming_ingest_probes_published_index(spark, tmp_path):
-    # the ANN ingest loop surviving a restart: vectors stream in and
-    # each micro-batch assigns buckets against the PUBLISHED index
-    # (loaded once, broadcast) — assignments equal the batch twin's
+    # the ANN ingest loop: vectors stream in and each micro-batch
+    # assigns buckets against a quantizer trained once (broadcast) —
+    # assignments equal the batch twin's
     from bamboo_spark import queries as q
 
     e = q.load(spark, "/root/testdata/sf0.001", "embeddings")
     cm = similarity.kmeans_train(e, n_centroids=4, iterations=1)
-    t = str(tmp_path / "ann_idx")
-    similarity.publish_ann_index(spark, t, cm)
 
     d = str(tmp_path / "vec_replay")
     e.select("vec_id", "embedding").coalesce(2).write.parquet(d)
-    idx = similarity.load_ann_index(spark, t)
     stream = spark.readStream.schema(
         "vec_id long, embedding array<float>"
     ).option("maxFilesPerTrigger", "1").parquet(d)
-    out = similarity.ivf_assign(stream, idx["centroids"])
+    out = similarity.ivf_assign(stream, cm)
     assert out.isStreaming
     qy = (
         out.writeStream.format("memory")

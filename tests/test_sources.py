@@ -211,10 +211,11 @@ def _avro_bytes(
             c = zlib.compressobj(wbits=-15)
             return c.compress(payload) + c.flush()
         if codec == "snappy":
-            from bamboo_spark.sources._snappy import snappy_compress
+            import pyarrow
 
             crc = zlib.crc32(payload) & 0xFFFFFFFF
-            return snappy_compress(payload) + crc.to_bytes(4, "big")
+            snappy = pyarrow.compress(payload, codec="snappy", asbytes=True)
+            return snappy + crc.to_bytes(4, "big")
         return payload
 
     sync = bytes(random.Random(0).randrange(256) for _ in range(16))
@@ -480,7 +481,7 @@ def test_avro_decimal_keeps_all_38_digits():
     # a decimal(38, 2) value past the default 28-digit decimal context
     import decimal
 
-    from bamboo_spark.sources._avro_py import decode_block
+    from bamboo_spark.sources._avro_py import compile_decoder
 
     unscaled = -12345678901234567890123456789012345678
     raw = unscaled.to_bytes(16, "big", signed=True)
@@ -500,7 +501,7 @@ def test_avro_decimal_keeps_all_38_digits():
         ],
     }
     payload = bytes([len(raw) << 1]) + raw  # zigzag length, then the bytes
-    (row,) = decode_block(payload, 1, "null", schema)
+    (row,) = compile_decoder(schema)(payload, 1)
     assert row["d"] == decimal.Decimal("-123456789012345678901234567890123456.78")
 
 
@@ -606,7 +607,7 @@ def test_avro_pruning_costs_schema_not_records(monkeypatch):
     # the clusion filter is resolved once per decode, not per record:
     # ColumnFilter.child runs as often for 1,000 records as for one
     from bamboo_spark.clusions import ColumnFilter
-    from bamboo_spark.sources._avro_py import decode_block, encode_value
+    from bamboo_spark.sources._avro_py import compile_decoder, encode_value
 
     schema = {
         "type": "record",
@@ -663,7 +664,7 @@ def test_avro_pruning_costs_schema_not_records(monkeypatch):
             encode_value(payload, schema, record, names)
         fltr = ColumnFilter.parse(None, ["payload", "items.tags"])
         del calls[:]
-        out = decode_block(bytes(payload), n, "null", schema, fltr, True)
+        out = compile_decoder(schema, None, fltr, True)(bytes(payload), n)
         assert len(out) == n
         assert out[-1] == {"id": 1, "user": record["user"], "items": [{"sku": "k"}]}
         return len(calls)
@@ -977,11 +978,9 @@ def test_avro_snappy_codec(spark, tmp_path):
 def test_snappy_pure_python_codec():
     # Decode elements straight from the public format description:
     # literals, 1/2-byte-offset copies, overlapping (run) copies.
-    from bamboo_spark.sources._snappy import (
-        SnappyError,
-        snappy_compress,
-        snappy_uncompress,
-    )
+    import pyarrow
+
+    from bamboo_spark.sources._snappy import SnappyError, snappy_uncompress
 
     # hand-built: varint(11), literal "ab", copy offset=2 len=9 (run)
     block = bytes([11]) + bytes([(2 - 1) << 2]) + b"ab" + bytes(
@@ -989,13 +988,19 @@ def test_snappy_pure_python_codec():
     )
     assert snappy_uncompress(block) == b"ababababab" + b"a"
 
-    # round-trip through the literal-only compressor at several sizes
+    # round-trip through Arrow's snappy compressor at several sizes;
+    # repetitive input makes it emit copies as well as literals
     import random as _r
 
     rnd = _r.Random(7)
     for size in (0, 1, 59, 60, 61, 1000, 70000, 200000):
         raw = bytes(rnd.randrange(256) for _ in range(size))
-        assert snappy_uncompress(snappy_compress(raw)) == raw
+        packed = pyarrow.compress(raw, codec="snappy", asbytes=True)
+        assert snappy_uncompress(packed) == raw
+    text = b"".join(b"record %d field value " % (i % 37) for i in range(600))
+    packed = pyarrow.compress(text, codec="snappy", asbytes=True)
+    assert len(packed) < len(text) // 4  # copies, not just literals
+    assert snappy_uncompress(packed) == text
 
     for bad in (b"", bytes([200, 200, 200, 200, 200, 200]), bytes([4, 0xFC])):
         with pytest.raises(SnappyError):
@@ -1685,7 +1690,11 @@ def test_avro_writer_multibranch_union_and_named_reuse(spark, tmp_path):
     # unions stay un-readable as Spark schemas (reference parity), so
     # verify at the container-decode level; named-enum reuse by
     # reference must encode and round-trip through the full read path
-    from bamboo_spark.sources._avro_py import decode_block, write_container
+    from bamboo_spark.sources._avro_py import (
+        compile_decoder,
+        decompress_block,
+        write_container,
+    )
     from bamboo_spark.sources.avro import read_avro_py
 
     gen_schema = {
@@ -1707,8 +1716,9 @@ def test_avro_writer_multibranch_union_and_named_reuse(spark, tmp_path):
     data = open(p, "rb").read()
     schema, codec, blocks = _avro_blocks(data)
     vals = []
+    decode = compile_decoder(schema)
     for n, payload in blocks:
-        vals.extend(decode_block(payload, n, codec, schema))
+        vals.extend(decode(decompress_block(payload, codec), n))
     by_k = {v["k"]: v for v in vals}
     assert by_k[0]["sl"] == "txt" and by_k[0]["ls"] is None
     assert by_k[1]["sl"] == 42 and by_k[1]["ls"] == 7      # NOT "42"

@@ -21,8 +21,8 @@ import pytest
 from bamboo_spark.clusions import ColumnFilter
 from bamboo_spark.sources._avro_py import (
     AvroDecodeError,
-    decode_block,
-    decode_block_resolved,
+    compile_decoder,
+    decompress_block,
     read_blocks,
     scan_blocks_stream,
     scan_header_stream,
@@ -316,10 +316,15 @@ def test_avro_corrupt_bytes_raise_only_avro_decode_error():
             {"name": "extra", "type": "long", "default": 7},
         ],
     }
+    # as a decode task runs them: compiled once, then per block
+    # decode(decompress_block(payload, codec), n)
     decodes = [
-        lambda payload, n: decode_block(payload, n, codec, schema),
-        lambda payload, n: decode_block(payload, n, codec, schema, pruned, True),
-        lambda payload, n: decode_block_resolved(payload, n, codec, schema, evolved),
+        lambda payload, n, d=d: d(decompress_block(payload, codec), n)
+        for d in (
+            compile_decoder(schema),
+            compile_decoder(schema, None, pruned, True),
+            compile_decoder(evolved, schema),
+        )
     ]
 
     @settings(max_examples=200, deadline=None)
@@ -371,7 +376,7 @@ def test_avro_negative_length_in_skipped_field_raises():
     pruned = ColumnFilter.parse(None, ["s"])
     # i = 5 (zigzag 0x0a), then a string length of -2 (zigzag 0x03)
     with pytest.raises(AvroDecodeError):
-        decode_block(b"\x0a\x03", 1, "null", schema, pruned, True)
+        compile_decoder(schema, None, pruned, True)(b"\x0a\x03", 1)
 
 
 def test_spill_requires_shared_dir_on_cluster_master():

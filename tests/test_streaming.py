@@ -1191,7 +1191,6 @@ def test_stream_batch_parity_drift(spark, tmp_path):
     # baseline = even vec_ids, stream = odd vec_ids (the batch
     # q_embedding_drift split)
     from bamboo_spark import queries as q
-    from bamboo_spark.operators.similarity import embedding_moments
     from bamboo_spark.streaming import drift_stream
 
     batch = {
@@ -1201,7 +1200,18 @@ def test_stream_batch_parity_drift(spark, tmp_path):
     assert batch
 
     e = spark.read.parquet(SF_DIR + "/embeddings.parquet")
-    baseline = embedding_moments(e.where(F.col("vec_id") % 2 == 0))
+    # the baseline profile: per dimension, exact moments of the µ-units
+    m = F.round(F.col("v").cast("double") * 1e6, 0).cast("long")
+    baseline = (
+        e.where(F.col("vec_id") % 2 == 0)
+        .select(F.posexplode("embedding").alias("dim", "v"))
+        .groupBy("dim")
+        .agg(
+            F.count(F.lit(1)).cast("double").alias("n"),
+            F.sum(m.cast("decimal(38,0)")).cast("double").alias("s"),
+            F.sum(m.cast("decimal(38,0)") * m).cast("double").alias("ss"),
+        )
+    )
     d = str(tmp_path / "drift_replay")
     (
         e.where(F.col("vec_id") % 2 == 1)
@@ -1578,7 +1588,7 @@ def test_debounce_stream_keeps_one_per_gap(spark, tmp_path):
 def test_sample_stream_equals_batch_sample(spark, tmp_path):
     # stream-replay of an id file ends on EXACTLY the batch
     # hash_sample bottom-k (same md5 rank family), and the emitted
-    # snapshot carries the ranks needed for sketch.merge_samples
+    # snapshot carries the ranks a later bottom-k merge needs
     import json
     import os
 
